@@ -731,8 +731,9 @@ def _tfidf_weights(
     doc's tokens. df(t) is a vocab-sized groupBy-count joined back on
     the token (:func:`_doc_frequencies` — the hot-token-skew-safe form)
     over the exchange-free Arrow tf extraction
-    (:func:`term_frequencies`); the corpus-size scalar broadcasts as a
-    one-row aggregate."""
+    (:func:`term_frequencies`). EAGER at call time: the persisted tf
+    pass is materialized and the corpus size N counted on the driver
+    (two jobs), and N enters the weight expression as a literal."""
     # The Arrow tokenize pass is opaque to Catalyst (guide §4.1), so its
     # four consumers (df rollup, weights join, query projections, norms)
     # would each re-run it — no exchange sits between the pass and most
@@ -749,10 +750,10 @@ def _tfidf_weights(
     # Round 12 (guide §5/§2.6): materialize the persist EAGERLY — the
     # consumer plan's concurrent broadcast builds (df(t) rollup, query
     # weights/norms) otherwise race the lazy cache and each re-run the
-    # Arrow pass from parquet (the bm25_topk stage-profile finding; see
-    # OPTIMIZATION_r12.md). One count() action pins exactly one
-    # materialization. N enters the idf as a literal: bigint/bigint in
-    # Spark is the same double division either way, so _w is unchanged.
+    # Arrow pass from parquet (the bm25_topk finding measured below).
+    # One count() action pins exactly one materialization. N enters the
+    # idf as a literal: bigint/bigint in Spark is the same double
+    # division either way, so _w is unchanged.
     n_docs = df.count()
     tf.count()
     wts = (
@@ -793,7 +794,8 @@ def tfidf_topk(
     Cosine is rounded to 6 decimals BEFORE ranking with ties broken by
     neighbor id — deterministic across engines and summation orders
     (the brute_force_topk contract). Returns ``(query_id, neighbor_id,
-    cos_sim, rank)``.
+    cos_sim, rank)``. Not lazy: the call runs :func:`_tfidf_weights`'
+    materializing jobs even if the result is never consumed.
     """
     from pyspark import StorageLevel
 
@@ -1528,7 +1530,9 @@ def bm25_topk(
     contract; the two-stage partial top-k caps what the global rank sees
     at k rows per (query, partition). Scores are rounded to 6 decimals
     BEFORE ranking, ties broken by neighbor id — deterministic across
-    engines and summation orders.
+    engines and summation orders. Not lazy: the call materializes the
+    persisted tf pass and collects N and Σtf (the corpus scalars) on
+    the driver before the scored plan is built.
 
     Returns ``(query_id, neighbor_id, bm25, rank)``.
     """
@@ -1551,9 +1555,10 @@ def bm25_topk(
     # builds (query terms, the AQE-broadcast df(t) rollup, the scalars)
     # run as CONCURRENT jobs, and a lazily-persisted relation is raced:
     # each build that starts before the first materialization finishes
-    # recomputes the whole Arrow pass from parquet (measured at zipf100:
-    # 3 extra full passes, ~600 core-s each, stage profile in
-    # OPTIMIZATION_r12.md). The materializing action doubles as the
+    # recomputes the whole Arrow pass from parquet (the lazy form ran 3
+    # more jobs and over twice the executor time per q83 call on the
+    # corpus_batch benchmark bed, wall not faster; at zipf100 each extra
+    # pass costs ~600 core-s). The materializing action doubles as the
     # scalar computation: Σtf and N collect driver-side and enter the
     # weight expression as LITERALS — the long→double conversions and
     # the division are the same IEEE-754 operations Spark's

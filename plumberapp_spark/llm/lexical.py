@@ -197,43 +197,24 @@ def ensure_lexical_index(
     and is rebuilt when its marker is missing or the source mtime
     RECORDED AT BUILD TIME differs from the current one (sidecar
     comparison — immune to same-granule in-place rewrites)."""
-    import re
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"lex_{table}_{tag}")
+    path = fixture_path(spark, sf_dir, "lex", table)
     # postings is the LAST relation the build writes, so its marker is
     # the build-complete signal (norms alone would accept a build that
-    # died before the denormalized postings landed)
-    marker = os.path.join(path, "postings", "_SUCCESS")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1]) if len(parts) > 1 else 1
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    stale = (
-        not os.path.exists(marker)
-        or recorded is None
-        or recorded != source_mtime
-        # an index built by an older layout (e.g. pre-denormalized-norm
-        # postings) must rebuild, not AnalysisException at serve time
-        or rec_format != INDEX_FORMAT
-    )
-    if stale:
-        build_lexical_index(
+    # died before the denormalized postings landed); an index built by
+    # an older layout (e.g. pre-denormalized-norm postings) must
+    # rebuild, not AnalysisException at serve time
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        lambda: build_lexical_index(
             load_table(spark, sf_dir, table), path, text_col, id_col
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {INDEX_FORMAT}")
-    return path
+        ),
+        fields=(INDEX_FORMAT,),
+        complete=lambda: os.path.exists(os.path.join(path, "postings", "_SUCCESS")),
+    )
 
 
 def _query_postings(

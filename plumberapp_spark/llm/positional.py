@@ -121,37 +121,19 @@ def ensure_positional_index(
     """Build-once path contract — ``ensure_lexical_index``'s sidecar
     pattern verbatim: rebuilt when the marker is missing, the recorded
     source mtime differs, or the recorded layout format differs."""
-    import re
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"pos_{table}_{tag}")
-    marker = os.path.join(path, "positions", "_SUCCESS")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1]) if len(parts) > 1 else 1
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        not os.path.exists(marker)
-        or recorded is None
-        or recorded != source_mtime
-        or rec_format != POS_FORMAT
-    ):
-        build_positional_index(
+    path = fixture_path(spark, sf_dir, "pos", table)
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        lambda: build_positional_index(
             load_table(spark, sf_dir, table), path, text_col, id_col
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {POS_FORMAT}")
-    return path
+        ),
+        fields=(POS_FORMAT,),
+        complete=lambda: os.path.exists(os.path.join(path, "positions", "_SUCCESS")),
+    )
 
 
 def _pos_scalars(spark, path: str) -> int:

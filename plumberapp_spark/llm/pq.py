@@ -1,14 +1,16 @@
-"""Product quantization (PQ) over the IVF layout — the compression
-step past int8 scalar quantization (round 12).
+"""Product quantization (PQ): the IVF index codec past int8 scalar
+quantization (round 12).
 
-:mod:`plumberapp_spark.llm.similarity`'s SQ tier (q125-q128) stores one
-byte per DIMENSION (4x over float32). Production vector stores go a
-tier further: FAISS-style IVF-PQ stores one byte per SUBSPACE — the
-vector is split into ``m_sub`` contiguous subvectors, each encoded as
-the id of its nearest entry in a per-subspace codebook of ``ks``
-entries, so a 64-dim float32 vector becomes ``m_sub`` bytes
-(m_sub=8 -> 8 bytes, 32x compression) and probe scoring collapses to
-table lookups (ADC — asymmetric distance computation):
+The IVF lifecycle in :mod:`plumberapp_spark.llm.similarity` is one
+build / append / delete / compact / serve path parametrized by a codec.
+Raw cells store the vectors; the SQ codec (q125-q128) stores one byte
+per DIMENSION (4x over float32). :class:`PQCodec` goes a tier further,
+FAISS-style IVF-PQ: one byte per SUBSPACE — the vector is split into
+``m_sub`` contiguous subvectors, each encoded as the id of its nearest
+entry in a per-subspace codebook of ``ks`` entries, so a 64-dim
+float32 vector becomes ``m_sub`` bytes (m_sub=8 -> 8 bytes, 32x
+compression) and probe scoring collapses to table lookups (ADC —
+asymmetric distance computation):
 
   q . reconstruct(code) == sum_s  q_s . cb[s][code_s]      (exact identity)
   ||reconstruct(code)||^2 == sum_s ||cb[s][code_s]||^2
@@ -17,37 +19,27 @@ so a query precomputes one ``m_sub x ks`` lookup table of subvector
 dots and scores every code in a probed cell with ``m_sub`` gathers and
 an add — O(m_sub) per candidate instead of O(dim), on 1/8th the bytes.
 
-Design decisions, mirrored from the SQ tier so the two families stay
-twins:
+What the codec decides (everything else — cell geometry, deltas,
+tombstones, compaction, the exact rerank — is the shared lifecycle):
 
-* **Codebook = md5-sampled anchors, frozen at build.** Each
-  subspace's ``ks`` entries are the subvectors of the same ``ks``
-  corpus vectors, chosen by ``md5('pq' || id)`` order — the IVF
-  centroid derivation with a salt, so codebook and centroids draw
-  different vectors. Deterministic and oracle-replayable (a k-means
-  codebook — :func:`plumberapp_spark.llm.clustering.kmeans_fit` per
-  subspace — drops in wherever ``cb`` is consumed, at the price of a
-  non-SQL-expressible oracle; the sampled codebook is the parity
-  form, exactly like the md5-seeded IVF centroids).
-* **Assignment on round-6 distances, ties to the smaller code** —
+* **Codebook = md5-sampled anchors, frozen at build** (``codebook``
+  side relation, ``(s, j, sub)`` rows). Each subspace's ``ks`` entries
+  are the subvectors of the same ``ks`` corpus vectors, chosen by
+  ``md5('pq' || id)`` order — the IVF centroid draw with a salt, so
+  codebook and centroids draw different vectors. Deterministic and
+  oracle-replayable (a k-means codebook —
+  :func:`plumberapp_spark.llm.clustering.kmeans_fit` per subspace —
+  drops in wherever ``cb`` is consumed, at the price of a
+  non-SQL-expressible oracle; the sampled codebook is the parity form,
+  exactly like the md5-seeded IVF centroids).
+* **Encoding on round-6 distances, ties to the smaller code** —
   ``argmin round(||v_s - cb||^2, 6)`` with ``||a||^2 - 2ab + ||b||^2``
   expanded the same way the DuckDB oracle expands it, the family's
-  standard float-bridge.
-* **Cell geometry is full-precision and UNCHANGED**: cells come from
-  :func:`~plumberapp_spark.llm.similarity._assign_to_cells` against
-  the same md5-seeded centroids, so the probe reaches exactly the
-  cells the uncompressed index would probe — only the stored bytes
-  and the scoring arithmetic shrink.
-* **Exact rerank**: each query's top-``rerank`` ADC candidates join
-  back to the full-precision corpus by id and re-score with the
-  Catalyst cosine — approximation error is confined to shortlist
-  selection, the q125 contract.
-* **Lifecycle parity**: tombstone deletes share the IVF ``tomb_*``
-  contract verbatim; appends encode under the FROZEN codebook and
-  land as immutable ``delta_*/cells_pq`` segments; compaction merges
-  and physically drops tombstoned codes without re-encoding. Codebook
-  drift under appends is the same monitored-rebuild story as frozen
-  centroids (:func:`~plumberapp_spark.llm.similarity.codebook_drift_advice`).
+  standard float-bridge. Appends encode under the FROZEN codebook (an
+  out-of-distribution delta lands on its nearest frozen entry — drift
+  is the monitored-rebuild story, never a silent re-train).
+* **Candidate scoring = the ADC sum** above, the reconstructed-vector
+  cosine computed without reconstructing.
 
 100 TB posture: index bytes are ``n x m_sub`` — a 100 TB float32
 corpus serves from a ~3 TB code store; a probe reads
@@ -60,24 +52,10 @@ bounded, id-keyed, never a scan.
 
 from __future__ import annotations
 
-import json
-import os
-import re as _re
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from plumberapp_spark.functions.vectors import cosine
-from plumberapp_spark.llm.similarity import (
-    _assign_to_cells,
-    _ivf_absorbed,
-    _ivf_tomb_dirs,
-    _load_centroids,
-    _minus_tombstones,
-    _probe_coalesce,
-    _probed_cell_dirs,
-    delete_from_ivf_index,
-)
+from plumberapp_spark.llm.similarity import CodedCodec, _md5_draw
 
 PQ_SALT = "pq"
 PQ_IVF_FORMAT = 1
@@ -90,13 +68,7 @@ def _pq_anchor_codebook(narrow: DataFrame, id_col: str, vec_col: str, m_sub: int
     bounded collect (ks rows)."""
     import numpy as np
 
-    rows = (
-        narrow.orderBy(
-            F.md5(F.concat(F.lit(PQ_SALT), F.col(id_col).cast("string"))), id_col
-        )
-        .limit(ks)
-        .collect()
-    )
+    rows = _md5_draw(narrow, ks, id_col, salt=PQ_SALT)
     mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
     dim = mat.shape[1]
     if dim % m_sub:
@@ -136,419 +108,88 @@ def pq_reconstruct(codes, cb):
     )
 
 
-def build_pq_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    m_sub: int = 8,
-    ks: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize ``{path}/centroids`` (the md5-seeded IVF centroid
-    derivation, :func:`build_sq_ivf_index`'s verbatim),
-    ``{path}/codebook`` — ``(s, j, sub)`` rows, the frozen per-subspace
-    entries — and ``{path}/cells_pq`` — ``(id, m_sub int8 codes,
-    cell)`` PARTITIONED BY the cell. Assignment runs on full-precision
-    vectors; encoding is one broadcast-codebook Arrow pass."""
-    import numpy as np
+class PQCodec(CodedCodec):
+    """IVF-PQ cells: ``cells_pq`` holds ``m_sub`` int8 codes per vector
+    under the frozen ``codebook``; candidates score by the ADC
+    lookup-table sum. ``m_sub``/``ks`` matter only at build — an index
+    on disk carries its codebook, and with it its shape."""
 
-    spark = corpus.sparkSession
-    narrow = corpus.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    )
-    cent_rows = (
-        narrow.orderBy(F.md5(F.col(id_col).cast("string")), id_col)
-        .limit(n_centroids)
-        .collect()
-    )
-    order = np.argsort(np.array([r[0] for r in cent_rows]))
-    c_mat = np.array([list(cent_rows[i][1]) for i in order], dtype=np.float64)
-    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-    spark.createDataFrame(
-        [cent_rows[i] for i in order], schema=narrow.schema
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    cells = "cells_pq"
+    sides = ("codebook",)
+    prefix = "pq"
+    format = PQ_IVF_FORMAT
 
-    cb = _pq_anchor_codebook(narrow, id_col, vec_col, m_sub, ks)
-    spark.createDataFrame(
-        [
-            (s, j, cb[s][j].tolist())
-            for s in range(m_sub)
-            for j in range(ks)
-        ],
-        "s int, j int, sub array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
+    def __init__(self, m_sub: int = 8, ks: int = 16):
+        self.m_sub, self.ks = m_sub, ks
 
-    _encode_into(
-        _assign_to_cells(narrow, c_mat, c_norm, id_col, vec_col),
-        cb,
-        f"{path}/cells_pq",
-        id_col,
-        vec_col,
-        empty_ok=False,
-    )
+    @property
+    def params(self) -> tuple:
+        return (self.m_sub, self.ks)
 
+    def fit(self, narrow: DataFrame, path: str, id_col: str, vec_col: str):
+        cb = _pq_anchor_codebook(narrow, id_col, vec_col, self.m_sub, self.ks)
+        narrow.sparkSession.createDataFrame(
+            [
+                (s, j, cb[s][j].tolist())
+                for s in range(self.m_sub)
+                for j in range(self.ks)
+            ],
+            "s int, j int, sub array<double>",
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
+        return cb
 
-def _encode_into(
-    assigned: DataFrame, cb, out: str, id_col: str, vec_col: str, empty_ok: bool
-) -> None:
-    """Shared encode-and-write tail for build and append: one Arrow
-    pass under the broadcast codebook, one partitioned write (plain
-    write when a zero-row delta must keep its schema readable — the
-    ADVICE-r9 empty-delta guard)."""
-    import numpy as np
-    import pandas as pd
+    def load(self, spark, path: str):
+        import numpy as np
 
-    spark = assigned.sparkSession
-    bc = spark.sparkContext.broadcast(cb)
-    id_ddl = assigned.schema[id_col].dataType.simpleString()
+        from plumberapp_spark.session import local_parquet_rows, read_parquet_cached
 
-    def encode(batches):
-        cb_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = pq_encode(vecs, cb_)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "_code": [c for c in codes],
-                    "_cell": pdf["_cell"].to_numpy(),
-                }
-            )
+        rows = local_parquet_rows(f"{path}/codebook", max_rows=1 << 20)
+        if rows is None:
+            rows = read_parquet_cached(spark, f"{path}/codebook").collect()
+        m_sub = max(r["s"] for r in rows) + 1
+        ks = max(r["j"] for r in rows) + 1
+        sub = len(rows[0]["sub"])
+        cb = np.zeros((m_sub, ks, sub), dtype=np.float64)
+        for r in rows:
+            cb[r["s"]][r["j"]] = list(r["sub"])
+        return cb
 
-    coded = assigned.mapInPandas(
-        encode, f"{id_col} {id_ddl}, _code array<tinyint>, _cell int"
-    )
-    if empty_ok and assigned.limit(1).count() == 0:
-        coded.coalesce(1).write.mode("overwrite").parquet(out)
-    else:
-        coded.write.partitionBy("_cell").mode("overwrite").parquet(out)
+    def encode(self, vecs, cb):
+        return pq_encode(vecs, cb)
 
+    def query_state(self, cb, q_mat, q_norm):
+        import numpy as np
 
-def _load_pq_codebook(spark, path: str):
-    import numpy as np
+        m_sub, ks, sub = cb.shape
+        # the per-query LUTs: (|Q|, m_sub, ks) subvector dots — the whole
+        # ADC state each executor needs, ~1 KB/query at the defaults —
+        # plus the per-entry squared norms ||reconstruct(code)||^2
+        # gathers from
+        q_lut = np.einsum("qsd,skd->qsk", q_mat.reshape(len(q_mat), m_sub, sub), cb)
+        return q_lut, q_norm, (cb * cb).sum(axis=2)
 
-    from plumberapp_spark.session import local_parquet_rows, read_parquet_cached
+    def batch_scorer(self, pdf, vec_col: str, qstate):
+        import numpy as np
 
-    rows = local_parquet_rows(f"{path}/codebook", max_rows=1 << 20)
-    if rows is None:
-        rows = read_parquet_cached(spark, f"{path}/codebook").collect()
-    m_sub = max(r["s"] for r in rows) + 1
-    ks = max(r["j"] for r in rows) + 1
-    sub = len(rows[0]["sub"])
-    cb = np.zeros((m_sub, ks, sub), dtype=np.float64)
-    for r in rows:
-        cb[r["s"]][r["j"]] = list(r["sub"])
-    return cb
+        q_lut, q_norm, cb_n2 = qstate
+        s_idx = np.arange(cb_n2.shape[0])
+        codes = np.array(pdf["_code"].tolist(), dtype=np.int64)  # (n, m)
+        # ||de||: one gather, query-independent
+        d_norm = np.sqrt(cb_n2[s_idx[None, :], codes].sum(axis=1))
 
+        def score(rows, qpos):
+            c_rows, dn = codes[rows], d_norm[rows]
+            out = np.empty((len(rows), len(qpos)))
+            for j, qi in enumerate(qpos):
+                # q . de == LUT gathers summed over subspaces
+                dots = q_lut[qi][s_idx[None, :], c_rows].sum(axis=1)
+                denom = q_norm[qi] * dn
+                sims = np.zeros(len(rows))
+                np.divide(dots, denom, out=sims, where=denom > 0)
+                out[:, j] = np.round(sims, 6)
+            return out
 
-def _pq_delta_dirs(path: str) -> list[str]:
-    """Complete delta segments (``delta_*`` with a ``cells_pq``
-    marker) — the SQ helper on the PQ layout."""
-    try:
-        names = sorted(
-            n for n in os.listdir(path) if _re.match(r"^delta_[0-9A-Za-z]+$", n)
-        )
-    except OSError:
-        return []
-    return [
-        os.path.join(path, n)
-        for n in names
-        if os.path.exists(os.path.join(path, n, "cells_pq", "_SUCCESS"))
-    ]
-
-
-def _read_pq_cells(spark, path: str) -> DataFrame:
-    """Servable codes: base plus complete deltas, minus tombstoned ids
-    (broadcast anti-join). ``_cell`` partition pruning pushes through
-    the union to every segment scan."""
-    from plumberapp_spark.llm.segments import _recover_swap
-
-    from plumberapp_spark.session import read_parquet_cached
-
-    _recover_swap(path)
-    cells = read_parquet_cached(spark, f"{path}/cells_pq")
-    for d in _pq_delta_dirs(path):
-        cells = cells.unionByName(read_parquet_cached(spark, f"{d}/cells_pq"))
-    return _minus_tombstones(spark, path, cells)
-
-
-def delete_from_pq_ivf_index(
-    spark, path: str, ids: DataFrame, id_col: str = "vec_id"
-) -> str:
-    """Tombstone delete — the shared ``tomb_*`` contract, verbatim
-    :func:`~plumberapp_spark.llm.similarity.delete_from_ivf_index`."""
-    return delete_from_ivf_index(spark, path, ids, id_col)
-
-
-def append_to_pq_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    name: str | None = None,
-    skip_if_complete: bool = False,
-) -> str:
-    """Absorb new vectors WITHOUT rebuilding: assign against the frozen
-    centroids, encode under the FROZEN codebook (an out-of-distribution
-    delta simply lands on its nearest frozen entry — drift is the
-    monitored-rebuild story, never a silent re-train), land as one
-    immutable ``delta_*/cells_pq`` segment with the segments-module
-    idempotency contract (``name``/``skip_if_complete``)."""
-    from plumberapp_spark.llm.segments import _recover_swap
-
-    spark = new_vectors.sparkSession
-    _recover_swap(path)
-    if name is not None:
-        if not _re.match(r"^delta_[0-9A-Za-z]+$", name):
-            raise ValueError(f"delta name {name!r} must match delta_[0-9A-Za-z]+")
-        delta = os.path.join(path, name)
-        if skip_if_complete and (
-            os.path.exists(os.path.join(delta, "cells_pq", "_SUCCESS"))
-            or name in _ivf_absorbed(path)
-        ):
-            return delta
-    else:
-        existing = {os.path.basename(d) for d in _pq_delta_dirs(path)}
-        n = 0
-        while f"delta_{n:05d}" in existing:
-            n += 1
-        delta = os.path.join(path, f"delta_{n:05d}")
-    c_mat, c_norm = _load_centroids(spark, path)
-    cb = _load_pq_codebook(spark, path)
-    narrow = new_vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    )
-    _encode_into(
-        _assign_to_cells(narrow, c_mat, c_norm, id_col, vec_col),
-        cb,
-        f"{delta}/cells_pq",
-        id_col,
-        vec_col,
-        empty_ok=True,
-    )
-    return delta
-
-
-def compact_pq_ivf_index(spark, path: str, out_path: str) -> str:
-    """Merge base + deltas into ONE cells_pq relation, physically
-    dropping tombstoned codes. Codes are NOT re-encoded (the frozen
-    codebook moved for nobody); centroids and codebook copy through
-    Spark I/O; absorbed deltas go to the ledger so epoch replays stay
-    no-ops."""
-    cells = _read_pq_cells(spark, path)
-    if cells.limit(1).count() == 0:
-        cells.coalesce(1).write.mode("overwrite").parquet(f"{out_path}/cells_pq")
-    else:
-        cells.write.partitionBy("_cell").mode("overwrite").parquet(
-            f"{out_path}/cells_pq"
-        )
-    for side in ("centroids", "codebook"):
-        spark.read.parquet(f"{path}/{side}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{out_path}/{side}")
-    absorbed = sorted(
-        _ivf_absorbed(path) | {os.path.basename(d) for d in _pq_delta_dirs(path)}
-    )
-    with open(os.path.join(out_path, "absorbed.json"), "w") as fh:
-        json.dump(absorbed, fh)
-    return out_path
-
-
-def maybe_compact_pq_ivf(
-    spark, path: str, max_deltas: int = 16, swap=None
-) -> str | None:
-    """Size-bounded compaction policy — ``maybe_compact_ivf``'s
-    crash-recoverable swap contract on the PQ layout."""
-    import shutil
-
-    from plumberapp_spark.llm.segments import _recover_swap, _swap_compacted
-
-    _recover_swap(path)
-    if len(_pq_delta_dirs(path)) <= max_deltas and not _ivf_tomb_dirs(path):
-        return None
-    tmp = f"{path}.compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    compact_pq_ivf_index(spark, path, tmp)
-    if swap is not None:
-        return swap(tmp, path)
-    return _swap_compacted(path)
-
-
-def pq_ivf_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    nprobe: int = 2,
-    rerank: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_broadcast_queries: int = 100_000,
-    id_filter: DataFrame | None = None,
-) -> DataFrame:
-    """Two-stage ADC search over a :func:`build_pq_ivf_index` index:
-
-    1. ADC PROBE — each query's ``m_sub x ks`` lookup table of
-       subvector dots is built once from the broadcast codebook;
-       every code in a probed cell scores with ``m_sub`` gathers + an
-       add (the reconstructed-vector cosine, computed WITHOUT
-       reconstructing); top-``rerank`` approximate candidates kept
-       per query. Probe IO is ``nprobe/n_centroids`` of an
-       ``m_sub``-bytes-per-vector relation.
-    2. EXACT RERANK — the |Q| x rerank shortlist joins the
-       full-precision corpus by id and re-scores with the Catalyst
-       cosine; final top-k by (exact cosine desc, id asc).
-
-    Serves the full segmented index (base + deltas - tombstones) and
-    honors the ``id_filter`` filtered-ANN contract, both verbatim from
-    the SQ twin."""
-    import numpy as np
-    import pandas as pd
-
-    def _cos_matrix(a, a_norm, b, b_norm):
-        denom = a_norm[:, None] * b_norm[None, :]
-        out = np.zeros((a.shape[0], b.shape[0]))
-        np.divide(a @ b.T, denom, out=out, where=denom > 0)
-        return np.round(out, 6)
-
-    c_mat, c_norm = _load_centroids(spark, path)
-    cb = _load_pq_codebook(spark, path)
-    m_sub, ks, sub = cb.shape
-    # per-entry squared norms: ||reconstruct(code)||^2 gathers from this
-    cb_n2 = (cb * cb).sum(axis=2)  # (m_sub, ks)
-
-    q_rows = (
-        queries.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .limit(max_broadcast_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_broadcast_queries:
-        raise ValueError(
-            f"pq_ivf_topk_indexed: query side exceeds the broadcastable "
-            f"contract (> {max_broadcast_queries} rows); swap sides or "
-            f"pre-partition"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    q_cell_sims = _cos_matrix(q_mat, q_norm, c_mat, c_norm)
-    cell_to_qpos: dict = {}
-    for qi in range(len(q_ids)):
-        for ci in np.argsort(-q_cell_sims[qi], kind="stable")[:nprobe]:
-            cell_to_qpos.setdefault(int(ci), []).append(qi)
-    probed = sorted(cell_to_qpos)
-
-    codes_df = _read_pq_cells(spark, path).filter(
-        F.col("_cell").isin([int(c) for c in probed])
-    )
-    if id_filter is not None:
-        allowed = id_filter.select(
-            F.col(id_filter.columns[0]).alias(id_col)
-        ).distinct()
-        codes_df = codes_df.join(allowed, id_col, "left_semi")
-    codes_df = _probe_coalesce(
-        codes_df, _probed_cell_dirs(path, "cells_pq", _pq_delta_dirs(path), probed)
-    )
-    # the per-query LUTs: (|Q|, m_sub, ks) subvector dots — the whole
-    # ADC state each executor needs, ~1 KB/query at the defaults
-    q_lut = np.einsum(
-        "qsd,skd->qsk", q_mat.reshape(len(q_ids), m_sub, sub), cb
-    )
-    bc = spark.sparkContext.broadcast(
-        (q_lut, q_norm, q_ids, cell_to_qpos, cb_n2, int(rerank))
-    )
-    id_ddl = codes_df.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {id_ddl}, neighbor_id {id_ddl}, approx_sim double"
-
-    def probe(batches):
-        q_lut_, q_norm_, q_ids_, cell_to_qpos_, cb_n2_, rerank_ = bc.value
-        m_ = cb_n2_.shape[0]
-        s_idx = np.arange(m_)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.array(pdf["_code"].tolist(), dtype=np.int64)  # (n, m)
-            ids = pdf[id_col].to_numpy()
-            # ||de||: one gather, query-independent
-            d_norm = np.sqrt(cb_n2_[s_idx[None, :], codes].sum(axis=1))
-            cells = pdf["_cell"].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for ci, qpos in cell_to_qpos_.items():
-                rows = np.nonzero(cells == ci)[0]
-                if not len(rows):
-                    continue
-                c_rows = codes[rows]
-                dn = d_norm[rows]
-                for qi in qpos:
-                    # q . de == LUT gathers summed over subspaces
-                    dots = q_lut_[qi][s_idx[None, :], c_rows].sum(axis=1)
-                    denom = q_norm_[qi] * dn
-                    sims = np.zeros(len(rows))
-                    np.divide(dots, denom, out=sims, where=denom > 0)
-                    sims = np.round(sims, 6)
-                    mask = ids[rows] != q_ids_[qi]
-                    cand_ids = ids[rows][mask]
-                    cand_sims = sims[mask]
-                    if not len(cand_ids):
-                        continue
-                    top = np.lexsort((cand_ids, -cand_sims))[:rerank_]
-                    out_q.append(np.full(len(top), q_ids_[qi]))
-                    out_n.append(cand_ids[top])
-                    out_s.append(cand_sims[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "approx_sim": np.concatenate(out_s),
-                    }
-                )
-
-    partial = codes_df.mapInPandas(probe, out_schema)
-    w_short = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        partial.withColumn("_rn", F.row_number().over(w_short))
-        .filter(F.col("_rn") <= rerank)
-        .select(query_id_col, "neighbor_id")
-    )
-
-    from plumberapp_spark.session import local_relation
-
-    qvec_df = local_relation(
-        spark,
-        [(r[0], list(r[1])) for r in q_rows],
-        f"{query_id_col} {id_ddl}, _qvec array<double>",
-    )
-    full = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_nvec"),
-    )
-    rescored = (
-        shortlist.join(full, "neighbor_id")
-        .join(F.broadcast(qvec_df), query_id_col)
-        .withColumn("cos_sim", F.round(cosine(F.col("_qvec"), F.col("_nvec")), 6))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            "cos_sim",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+        return score
 
 
 def pq_compression_stats(
@@ -603,139 +244,3 @@ def pq_compression_stats(
         F.round(F.max("_mx"), 6).alias("max_abs_err"),
         F.round(F.sum("_sq") / (F.sum("_n") * F.max("_dim")), 10).alias("mse"),
     )
-
-
-# ---- driver fixtures (ensure_* contracts, SQ-twin shapes) ------------
-
-
-def _read_sidecar(sidecar: str) -> tuple:
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            return float(parts[0]), int(parts[1])
-    except (OSError, ValueError, IndexError):
-        return None, None
-
-
-def ensure_pq_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-    m_sub: int = 8,
-    ks: int = 16,
-) -> str:
-    """Build-once fixture for the PQ serving query."""
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"pqivf_{table}_{tag}_{n_centroids}_{m_sub}_{ks}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = _read_sidecar(sidecar)
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != PQ_IVF_FORMAT
-        or not os.path.exists(os.path.join(path, "cells_pq", "_SUCCESS"))
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        build_pq_ivf_index(
-            load_table(spark, sf_dir, table), path, n_centroids, m_sub, ks
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {PQ_IVF_FORMAT}")
-    return path
-
-
-def ensure_deleted_pq_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-    m_sub: int = 8,
-    ks: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Lifecycle fixture — the SQ shape verbatim: 80 % build (codebook
-    and centroids frozen from that base), 20 % delta append encoded
-    under the frozen codebook, then a takedown of every
-    ``vec_id % 7 == 3`` cutting across base and delta."""
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"pqivfdel_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = _read_sidecar(sidecar)
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != PQ_IVF_FORMAT
-        or not _pq_delta_dirs(path)
-        or not _ivf_tomb_dirs(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        vecs = load_table(spark, sf_dir, table)
-        build_pq_ivf_index(
-            vecs.filter(F.col(id_col) % 5 != 0), path, n_centroids, m_sub, ks,
-            id_col, vec_col,
-        )
-        append_to_pq_ivf_index(
-            vecs.filter(F.col(id_col) % 5 == 0), path, id_col, vec_col
-        )
-        delete_from_pq_ivf_index(
-            spark, path, vecs.filter(F.col(id_col) % 7 == 3).select(id_col), id_col
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {PQ_IVF_FORMAT}")
-    return path
-
-
-def ensure_compacted_pq_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-) -> str:
-    """Compacted twin of :func:`ensure_deleted_pq_ivf_index` — shares
-    its oracle; the hash proves compaction changes nothing a probe can
-    observe."""
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime
-
-    src = ensure_deleted_pq_ivf_index(spark, sf_dir, table, n_centroids)
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"pqivfdelc_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = _read_sidecar(sidecar)
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != PQ_IVF_FORMAT
-        or not os.path.exists(os.path.join(path, "cells_pq", "_SUCCESS"))
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        compact_pq_ivf_index(spark, src, path)
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {PQ_IVF_FORMAT}")
-    return path

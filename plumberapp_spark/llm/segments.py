@@ -1037,44 +1037,25 @@ def ensure_segmented_index(
     Rebuilt when the marker is missing, the recorded source mtime
     differs, or the recorded layout format differs (sidecar contract
     shared with ensure_lexical_index)."""
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
+    path = fixture_path(spark, sf_dir, "seglex", table)
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"seglex_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format, rec_nseg = None, None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-            rec_nseg = int(parts[2])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    segs = _list_segments(path)
-    stale = (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != SEG_FORMAT
-        or rec_nseg != len(segs)
-        or len(segs) < 2
-    )
-    if stale:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build():
         docs = load_table(spark, sf_dir, table)
         build_segmented_index(
             docs.filter(F.col(id_col) % 5 != 0), path, text_col, id_col
         )
         append_segment(docs.filter(F.col(id_col) % 5 == 0), path, text_col, id_col)
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {SEG_FORMAT} {len(_list_segments(path))}")
-    return path
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=lambda: (SEG_FORMAT, len(_list_segments(path))),
+        complete=lambda: len(_list_segments(path)) >= 2,
+    )
 
 
 def maybe_compact(
@@ -1135,32 +1116,11 @@ def ensure_streamed_index(
     checkpoint lives inside the index dir and is wiped with it: a
     rebuild must re-deliver every file, not trust the dead index's
     progress log."""
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, ensure_read_confs, fixture_path
 
-    from plumberapp_spark.session import _path_mtime, ensure_read_confs
+    path = fixture_path(spark, sf_dir, "seglexst", table)
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"seglexst_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != SEG_FORMAT
-        or not _list_segments(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build():
         ensure_read_confs(spark)
         schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
         # FileStreamSource needs a directory base; the glob scopes it to
@@ -1174,9 +1134,15 @@ def ensure_streamed_index(
             stream, path, os.path.join(path, "_checkpoint"), text_col, id_col
         )
         q.awaitTermination()
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {SEG_FORMAT}")
-    return path
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(SEG_FORMAT,),
+        complete=lambda: bool(_list_segments(path)),
+    )
 
 
 def ensure_deleted_segmented_index(
@@ -1193,33 +1159,11 @@ def ensure_deleted_segmented_index(
     anti-join, the counted df corrections, and the signed scalars on a
     real multi-segment index; the oracle is the full derivation over
     ``documents WHERE doc_id % 7 != 3``."""
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
+    path = fixture_path(spark, sf_dir, "seglexdel", table)
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"seglexdel_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != SEG_FORMAT
-        or len(_list_segments(path)) < 2
-        or not _list_tombstones(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build():
         docs = load_table(spark, sf_dir, table)
         build_segmented_index(
             docs.filter(F.col(id_col) % 5 != 0), path, text_col, id_col
@@ -1228,9 +1172,16 @@ def ensure_deleted_segmented_index(
         delete_docs(
             spark, path, docs.filter(F.col(id_col) % 7 == 3).select(id_col), id_col
         )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {SEG_FORMAT}")
-    return path
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(SEG_FORMAT,),
+        complete=lambda: len(_list_segments(path)) >= 2
+        and bool(_list_tombstones(path)),
+    )
 
 
 def ensure_deleted_compacted_index(
@@ -1240,35 +1191,18 @@ def ensure_deleted_compacted_index(
     tombstoned docs are dropped PHYSICALLY, so the compacted index
     serves corpus-minus-deleted with zero correction terms (and the
     registered query's hash proves the physical drop is exact)."""
-    from plumberapp_spark.session import _path_mtime
+    from plumberapp_spark.session import ensure_fixture, fixture_path
 
     src = ensure_deleted_segmented_index(spark, sf_dir, table)
-    wh = os.path.dirname(src)
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"seglexdelc_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != SEG_FORMAT
-        or not _list_segments(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        compact_segments(spark, src, path)
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {SEG_FORMAT}")
-    return path
+    path = fixture_path(spark, sf_dir, "seglexdelc", table)
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        lambda: compact_segments(spark, src, path),
+        fields=(SEG_FORMAT,),
+        complete=lambda: bool(_list_segments(path)),
+    )
 
 
 def ensure_compacted_index(spark, sf_dir: str, table: str = "documents") -> str:
@@ -1276,32 +1210,15 @@ def ensure_compacted_index(spark, sf_dir: str, table: str = "documents") -> str:
     compacts the segmented index into ``seglexc_{table}_{sfdir}``,
     keyed on the same source mtime + format so a source change flows
     through both tiers."""
-    from plumberapp_spark.session import _path_mtime
+    from plumberapp_spark.session import ensure_fixture, fixture_path
 
     src = ensure_segmented_index(spark, sf_dir, table)
-    wh = os.path.dirname(src)
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"seglexc_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != SEG_FORMAT
-        or not _list_segments(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        compact_segments(spark, src, path)
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {SEG_FORMAT}")
-    return path
+    path = fixture_path(spark, sf_dir, "seglexc", table)
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        lambda: compact_segments(spark, src, path),
+        fields=(SEG_FORMAT,),
+        complete=lambda: bool(_list_segments(path)),
+    )

@@ -681,23 +681,9 @@ def _ivf_topk_vectorized(
     import pandas as pd
 
     spark = corpus.sparkSession
-
-    def _cos_matrix(a: "np.ndarray", a_norm: "np.ndarray", b: "np.ndarray", b_norm: "np.ndarray"):
-        denom = a_norm[:, None] * b_norm[None, :]
-        out = np.zeros((a.shape[0], b.shape[0]))
-        np.divide(a @ b.T, denom, out=out, where=denom > 0)  # cosine()=0 for zero vectors
-        return np.round(out, 6)
-
-    cent_rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), id_col)
-        .limit(n_centroids)
-        .collect()
+    _, c_mat, c_norm = _centroid_matrix(
+        _md5_draw(corpus.select(F.col(id_col), F.col(vec_col)), n_centroids, id_col)
     )
-    order = np.argsort(np.array([r[0] for r in cent_rows]))
-    c_ids = np.array([cent_rows[i][0] for i in order])
-    c_mat = np.array([list(cent_rows[i][1]) for i in order], dtype=np.float64)
-    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
 
     # Enforced contract (not just assumed): queries are the SMALL side —
     # they are collected and broadcast. limit(n+1) keeps the probe itself
@@ -1064,16 +1050,10 @@ def semantic_dedup(
     import pandas as pd
 
     spark = corpus.sparkSession
-    cent_rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), id_col)
-        .limit(n_centroids)
-        .collect()
+    cent_rows, c_mat, c_norm = _centroid_matrix(
+        _md5_draw(corpus.select(F.col(id_col), F.col(vec_col)), n_centroids, id_col)
     )
-    order = np.argsort(np.array([r[0] for r in cent_rows]))
-    c_ids = np.array([cent_rows[i][0] for i in order])
-    c_mat = np.array([list(cent_rows[i][1]) for i in order], dtype=np.float64)
-    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
+    c_ids = np.array([r[0] for r in cent_rows])
     bc = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
     id_ddl = corpus.schema[id_col].dataType.simpleString()
 
@@ -1084,14 +1064,13 @@ def semantic_dedup(
                 continue
             vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             v_norm = np.sqrt((vecs * vecs).sum(axis=1))
-            denom = v_norm[:, None] * c_norm_[None, :]
-            sims = np.zeros((len(vecs), len(c_mat_)))
-            np.divide(vecs @ c_mat_.T, denom, out=sims, where=denom > 0)
             out = pdf[[id_col, vec_col]].copy()
             # argmax over the c_id-ascending matrix = cell ties to the
             # SMALLER centroid id; emit the centroid's own id (the
             # expression form's and the oracle's cell label)
-            out["cell"] = c_ids_[np.argmax(np.round(sims, 6), axis=1)]
+            out["cell"] = c_ids_[
+                np.argmax(_cos_matrix(vecs, v_norm, c_mat_, c_norm_), axis=1)
+            ]
             yield out
 
     cells = corpus.select(id_col, vec_col).mapInPandas(
@@ -1126,52 +1105,65 @@ def semantic_dedup(
     )
 
 
+# ---------------------------------------------------------------------------
+# The persisted IVF index: ONE lifecycle (build, append, delete, compact,
+# maybe-compact, rebuild, serve, fixtures) for every cell encoding. A codec
+# object supplies only what differs between encodings:
+#
+# * the cells relation name and its frozen side relations;
+# * ``encode_cells`` (identity for full-precision cells);
+# * per-cell candidate scoring from the stored columns;
+# * whether an exact rerank against the full-precision corpus follows.
+#
+# Everything else — the md5 centroid draw, delta listing, tombstones, the
+# absorbed ledger, the crash-recoverable swap, probe coalescing and cell
+# pruning — exists once below. An index on disk names its own codec (the
+# cells relation it holds), so callers pass the codec only at build time.
+# ---------------------------------------------------------------------------
+
 # bumped whenever the IVF on-disk layout (centroids/cells relations)
 # changes; recorded in ensure_ivf_index's sidecar so an index built under
 # an older layout rebuilds instead of failing or mis-serving (VERDICT r8
 # #4 — the same contract lexical.INDEX_FORMAT gives the postings index)
 IVF_INDEX_FORMAT = 1
+SQ_IVF_FORMAT = 1
+
+_DELTA_NAME = r"^delta_[0-9A-Za-z]+$"
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize an IVF index on disk: ``{path}/centroids`` (n rows)
-    plus ``{path}/cells`` — the corpus with its argmax-cosine cell
-    assignment, PARTITIONED BY the cell — so that a later
-    :func:`ivf_topk_indexed` probe reads only the probed cells'
-    partitions: ``nprobe / n_centroids`` of the corpus touches IO,
-    enforced by parquet partition pruning rather than a runtime filter.
-    This is the index-once-query-many serving contract (the ANN
-    counterpart of ``sources.bucketing.ensure_bucketed_tables``).
-
-    Assignment rule is bit-identical to :func:`ivf_topk`'s (argmax of
-    round-6 cosines over the c_id-ascending centroid matrix, ties to the
-    first/smaller id), so the indexed search returns exactly what the
-    direct operator returns."""
+def _cos_matrix(a, a_norm, b, b_norm):
+    """Round-6 cosines between the rows of ``a`` and ``b`` (norms
+    precomputed), 0 where either norm is 0 (the ``cosine()`` rule) —
+    the value every IVF choice ranks on: cell assignment, probe order
+    and the per-cell candidate cut."""
     import numpy as np
 
-    spark = corpus.sparkSession
-    narrow = corpus.select(F.col(id_col), F.col(vec_col))
-    cent_rows = (
-        narrow.orderBy(F.md5(F.col(id_col).cast("string")), id_col)
-        .limit(n_centroids)
-        .collect()
-    )
-    order = np.argsort(np.array([r[0] for r in cent_rows]))
-    c_mat = np.array([list(cent_rows[i][1]) for i in order], dtype=np.float64)
-    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-    spark.createDataFrame(
-        [cent_rows[i] for i in order], schema=narrow.schema
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    denom = a_norm[:, None] * b_norm[None, :]
+    out = np.zeros((a.shape[0], b.shape[0]))
+    np.divide(a @ b.T, denom, out=out, where=denom > 0)
+    return np.round(out, 6)
 
-    _assign_to_cells(narrow, c_mat, c_norm, id_col, vec_col).write.partitionBy(
-        "_cell"
-    ).mode("overwrite").parquet(f"{path}/cells")
+
+def _md5_draw(narrow: DataFrame, n: int, id_col: str, salt: str = "") -> list:
+    """The first ``n`` rows of ``narrow`` in ``md5(salt || id)`` order,
+    ties to the smaller id — the deterministic, oracle-replayable sample
+    behind the IVF centroids (no salt) and the PQ codebook anchors
+    (salted, so the two draw different vectors). One bounded collect."""
+    key = F.col(id_col).cast("string")
+    if salt:
+        key = F.concat(F.lit(salt), key)
+    return narrow.orderBy(F.md5(key), id_col).limit(n).collect()
+
+
+def _centroid_matrix(rows):
+    """``(rows, c_mat, c_norm)`` with the centroid rows c_id-ascending —
+    the matrix every assignment and probe ranks against, so a cell tie
+    (np.argmax's first max) goes to the smaller centroid id."""
+    import numpy as np
+
+    rows = [rows[i] for i in np.argsort(np.array([r[0] for r in rows]))]
+    c_mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    return rows, c_mat, np.sqrt((c_mat * c_mat).sum(axis=1))
 
 
 def _assign_to_cells(
@@ -1197,10 +1189,7 @@ def _assign_to_cells(
                 continue
             vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             v_norm = np.sqrt((vecs * vecs).sum(axis=1))
-            denom = v_norm[:, None] * c_norm_[None, :]
-            sims = np.zeros((vecs.shape[0], c_mat_.shape[0]))
-            np.divide(vecs @ c_mat_.T, denom, out=sims, where=denom > 0)
-            cells = np.argmax(np.round(sims, 6), axis=1)
+            cells = np.argmax(_cos_matrix(vecs, v_norm, c_mat_, c_norm_), axis=1)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
@@ -1214,6 +1203,317 @@ def _assign_to_cells(
     )
 
 
+def _vector_scorer(vecs, q_mat, q_norm):
+    """Per-batch candidate scorer over decoded vectors: ``score(rows,
+    qpos)`` is the round-6 cosine matrix of the batch rows ``rows``
+    against the queries at positions ``qpos``."""
+    import numpy as np
+
+    v_norm = np.sqrt((vecs * vecs).sum(axis=1))
+
+    def score(rows, qpos):
+        return _cos_matrix(vecs[rows], v_norm[rows], q_mat[qpos], q_norm[qpos])
+
+    return score
+
+
+class RawCodec:
+    """Full-precision cells: ``cells`` holds (id, vector, ``_cell``) —
+    the corpus vectors themselves, in their source type. Candidates
+    score by exact cosine and the probe's per-query top-k IS the answer:
+    no shortlist, no rerank join. The reference codec every compressed
+    one is pinned against (``rerank`` covering every probed cell makes
+    a coded search bit-identical to this one)."""
+
+    cells = "cells"
+    sides: tuple = ()
+    rerank = False
+    prefix = ""
+    params: tuple = ()
+    format = IVF_INDEX_FORMAT
+
+    def narrow(self, corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+        return corpus.select(F.col(id_col), F.col(vec_col))
+
+    def fit(self, narrow: DataFrame, path: str, id_col: str, vec_col: str):
+        """Train the frozen codec state from the build corpus and persist
+        it as the side relations; returns what :meth:`load` reads back."""
+        return None
+
+    def load(self, spark, path: str):
+        return None
+
+    def encode_cells(self, assigned: DataFrame, state, id_col: str, vec_col: str):
+        return assigned
+
+    def query_state(self, state, q_mat, q_norm):
+        """What the executors need to score candidates for these queries
+        (broadcast once per search)."""
+        return q_mat, q_norm
+
+    def batch_scorer(self, pdf, vec_col: str, qstate):
+        """``score(rows, qpos) -> (len(rows), len(qpos))`` round-6
+        similarities for one Arrow batch of stored cells."""
+        import numpy as np
+
+        vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+        return _vector_scorer(vecs, *qstate)
+
+
+class CodedCodec(RawCodec):
+    """Compressed cells: (id, ``_code`` int8 array, ``_cell``). Cell
+    assignment still runs on the full-precision vectors (build and
+    append time have them), so the probe reaches exactly the cells the
+    raw index would probe — only the stored bytes and the candidate
+    arithmetic shrink. The probe keeps a per-query top-``rerank``
+    shortlist, which an exact rescore against the full-precision corpus
+    cuts to k (the standard two-stage compressed-probe / exact-rerank
+    ANN)."""
+
+    rerank = True
+
+    def narrow(self, corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+        return corpus.select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
+        )
+
+    def encode(self, vecs, state):
+        """``(n, code_len)`` int8 codes for a float64 matrix."""
+        raise NotImplementedError
+
+    def encode_cells(self, assigned: DataFrame, state, id_col: str, vec_col: str):
+        import numpy as np
+        import pandas as pd
+
+        bc = assigned.sparkSession.sparkContext.broadcast(state)
+        id_ddl = assigned.schema[id_col].dataType.simpleString()
+        to_codes = self.encode
+
+        def encode(batches):
+            state_ = bc.value
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                codes = to_codes(np.array(pdf[vec_col].tolist(), dtype=np.float64), state_)
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf[id_col].to_numpy(),
+                        "_code": [c for c in codes],
+                        "_cell": pdf["_cell"].to_numpy(),
+                    }
+                )
+
+        return assigned.mapInPandas(
+            encode, f"{id_col} {id_ddl}, _code array<tinyint>, _cell int"
+        )
+
+
+# ---------------------------------------------------------------------------
+# Scalar quantization (round 11, VERDICT r10 "What's missing" #5): cells
+# store int8 codes, one byte per dimension — 4x smaller than the float32
+# source, so at 100 TB the probe IO and the index footprint shrink by the
+# same factor while the exact rerank keeps served scores exact. The rule
+# is deliberately oracle-replayable: per-dimension symmetric max-|v|
+# scales, code = floor(v/s*127 + 0.5) — every step is IEEE-deterministic
+# and SQL-expressible, so DuckDB replays the whole derivation (scales,
+# codes, dequantized probe scores, shortlist cut, exact rerank).
+# ---------------------------------------------------------------------------
+
+
+def _sq_scales(narrow: DataFrame, vec_col: str):
+    """Per-dimension max-|v| over the corpus: one mapInPandas partial-max
+    per partition (each emits a single dim-length row) folded on the
+    driver. Max is associative and commutative, so the result is
+    bit-exact under any partitioning; the exchange is n_partitions x dim
+    doubles — no corpus-wide explode, no shuffle."""
+    import numpy as np
+    import pandas as pd
+
+    def partial(batches):
+        acc = None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            m = np.abs(np.array(pdf[vec_col].tolist(), dtype=np.float64)).max(axis=0)
+            acc = m if acc is None else np.maximum(acc, m)
+        if acc is not None:
+            yield pd.DataFrame({"_m": [acc.tolist()]})
+
+    rows = narrow.select(vec_col).mapInPandas(partial, "_m array<double>").collect()
+    scales = np.array(rows[0][0], dtype=np.float64)
+    for r in rows[1:]:
+        scales = np.maximum(scales, np.array(r[0], dtype=np.float64))
+    return scales
+
+
+def quantize_codes(vecs, scales):
+    """int8 codes for a float64 matrix under per-dim symmetric scales:
+    ``clip(floor(v/s*127 + 0.5), -127, 127)`` (0 where s == 0).
+    floor(x+0.5) — not round() — so Spark, numpy, and the DuckDB oracle
+    share one half-up rule with no banker's-rounding divergence. The
+    clip is a mathematical no-op at build time (scales ARE the corpus
+    max-|v|) and the documented saturation rule for APPENDS: a delta
+    vector outside the frozen scale range quantizes to ±127, the same
+    codebook-doesn't-move drift semantics as frozen IVF centroids —
+    drift shows up in the q72-style recall monitor and the fix is a
+    deliberate rebuild."""
+    import numpy as np
+
+    ratio = np.divide(
+        vecs, scales[None, :], out=np.zeros_like(vecs), where=scales[None, :] != 0
+    )
+    return np.clip(np.floor(ratio * 127 + 0.5), -127, 127).astype(np.int8)
+
+
+def dequantize_codes(codes, scales):
+    """The served approximation: ``code * s / 127`` as float64 — the
+    exact inverse expression the oracle replays."""
+    return codes.astype("float64") * scales[None, :] / 127.0
+
+
+class SQCodec(CodedCodec):
+    """int8 scalar quantization: ``scales`` (ONE row, the per-dim
+    max-|v| vector) frozen at build, ``cells_sq`` codes one byte per
+    dimension, candidates scored as the cosine of the dequantized
+    vectors."""
+
+    cells = "cells_sq"
+    sides = ("scales",)
+    prefix = "sq"
+    format = SQ_IVF_FORMAT
+
+    def fit(self, narrow: DataFrame, path: str, id_col: str, vec_col: str):
+        scales = _sq_scales(narrow, vec_col)
+        narrow.sparkSession.createDataFrame(
+            [(scales.tolist(),)], "scales array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/scales")
+        return scales
+
+    def load(self, spark, path: str):
+        import numpy as np
+
+        from plumberapp_spark.session import local_parquet_rows, read_parquet_cached
+
+        local = local_parquet_rows(f"{path}/scales")
+        if local is not None:
+            return np.array(list(next(iter(local[0].values()))), dtype=np.float64)
+        row = read_parquet_cached(spark, f"{path}/scales").collect()[0]
+        return np.array(list(row[0]), dtype=np.float64)
+
+    def encode(self, vecs, scales):
+        return quantize_codes(vecs, scales)
+
+    def query_state(self, scales, q_mat, q_norm):
+        return q_mat, q_norm, scales
+
+    def batch_scorer(self, pdf, vec_col: str, qstate):
+        import numpy as np
+
+        q_mat, q_norm, scales = qstate
+        codes = np.array(pdf["_code"].tolist(), dtype=np.int8)
+        return _vector_scorer(dequantize_codes(codes, scales), q_mat, q_norm)
+
+
+RAW = RawCodec()
+SQ = SQCodec()
+
+
+def _index_codec(path: str) -> RawCodec:
+    """The codec of the index at ``path``, read from the cells relation
+    it holds (raw when it holds none yet)."""
+    import os
+
+    from plumberapp_spark.llm.pq import PQCodec
+
+    for codec in (SQ, PQCodec()):
+        if os.path.isdir(os.path.join(path, codec.cells)):
+            return codec
+    return RAW
+
+
+def _open_index(path: str) -> RawCodec:
+    """First step of every lifecycle call: roll an interrupted
+    compaction swap forward or back (segments._recover_swap — a probe,
+    append or compaction must never see the half-swapped path), then
+    read the index's codec."""
+    from plumberapp_spark.llm.segments import _recover_swap
+
+    _recover_swap(path)
+    return _index_codec(path)
+
+
+def _require_raw(codec: RawCodec, what: str) -> None:
+    """Guard for the operators that need full-precision vectors FROM
+    the cells (a codebook re-train, the exact recall pass)."""
+    if codec.cells != RawCodec.cells:
+        raise ValueError(
+            f"{what} reads full-precision vectors from the cells, but this "
+            f"index stores {codec.cells} codes; rebuild it from its source "
+            f"table with build_ivf_index(..., codec=...) instead"
+        )
+
+
+def _write_cells(cells: DataFrame, out: str, empty: bool) -> None:
+    """Write one cells relation PARTITIONED BY ``_cell``, so a probe
+    reads only its cells' directories. An EMPTY relation (a zero-row
+    delta, a fully tombstoned compaction) takes a plain write instead:
+    partitionBy would emit no data files while ``_SUCCESS`` still lands,
+    and the dataless directory's read-back dies on schema inference,
+    poisoning every later read of the index (ADVICE r9/r10). The plain
+    write keeps the schema in a parquet footer; a probe's ``_cell``
+    filter still applies as a column filter over zero rows."""
+    if empty:
+        cells.coalesce(1).write.mode("overwrite").parquet(out)
+    else:
+        cells.write.partitionBy("_cell").mode("overwrite").parquet(out)
+
+
+def build_ivf_index(
+    corpus: DataFrame,
+    path: str,
+    n_centroids: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    codec: RawCodec | None = None,
+) -> None:
+    """Materialize an IVF index on disk: ``{path}/centroids`` (n rows),
+    the codec's frozen side relations, and ``{path}/{codec.cells}`` —
+    the corpus (or its codes) with its argmax-cosine cell assignment,
+    PARTITIONED BY the cell — so that a later :func:`ivf_topk_indexed`
+    probe reads only the probed cells' partitions: ``nprobe /
+    n_centroids`` of the corpus touches IO, enforced by parquet
+    partition pruning rather than a runtime filter. This is the
+    index-once-query-many serving contract (the ANN counterpart of
+    ``sources.bucketing.ensure_bucketed_tables``).
+
+    Assignment rule is bit-identical to :func:`ivf_topk`'s (argmax of
+    round-6 cosines over the c_id-ascending centroid matrix, ties to the
+    first/smaller id) and always runs on full-precision vectors, so the
+    raw indexed search returns exactly what the direct operator returns
+    and a coded index probes exactly the same cells.
+
+    ``codec`` (default :data:`RAW`) picks the cell encoding: :data:`SQ`
+    (int8 per dimension, ``cells_sq`` + ``scales``) or
+    ``pq.PQCodec(m_sub, ks)`` (one byte per subspace, ``cells_pq`` +
+    ``codebook``). At 100 TB SQ reads 4x less probe IO than float32
+    cells and PQ (m_sub=8 on 64 dims) 32x; the full-precision table is
+    touched only by the |Q| x rerank shortlist fetch."""
+    codec = codec or RAW
+    spark = corpus.sparkSession
+    narrow = codec.narrow(corpus, id_col, vec_col)
+    rows, c_mat, c_norm = _centroid_matrix(_md5_draw(narrow, n_centroids, id_col))
+    spark.createDataFrame(rows, schema=narrow.schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/centroids")
+    state = codec.fit(narrow, path, id_col, vec_col)
+    assigned = _assign_to_cells(narrow, c_mat, c_norm, id_col, vec_col)
+    _write_cells(
+        codec.encode_cells(assigned, state, id_col, vec_col),
+        f"{path}/{codec.cells}",
+        empty=False,
+    )
+
+
 def _load_centroids(spark, path: str):
     """(c_mat, c_norm) from the index's persisted centroid relation,
     c_id-ascending — the matrix every assignment and probe ranks
@@ -1221,8 +1521,6 @@ def _load_centroids(spark, path: str):
     probe matrix); the pyarrow fast path just skips the Spark collect
     job (round 11, guide §7.3 driver-side floor) — column order is the
     file's own, the same order the positional Spark collect assumed."""
-    import numpy as np
-
     from plumberapp_spark.session import local_parquet_rows, read_parquet_cached
 
     local = local_parquet_rows(f"{path}/centroids", max_rows=1 << 20)
@@ -1230,13 +1528,10 @@ def _load_centroids(spark, path: str):
         cent_rows = [tuple(r.values()) for r in local]
     else:
         cent_rows = read_parquet_cached(spark, f"{path}/centroids").collect()
-    order = np.argsort(np.array([r[0] for r in cent_rows]))
-    c_mat = np.array([list(cent_rows[i][1]) for i in order], dtype=np.float64)
-    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-    return c_mat, c_norm
+    return _centroid_matrix(cent_rows)[1:]
 
 
-def _ivf_delta_dirs(path: str) -> list[str]:
+def _ivf_delta_dirs(path: str, codec: RawCodec | None = None) -> list[str]:
     """Complete delta segments under an IVF index, in name order — a
     delta is visible to serving iff its cells marker landed (the
     half-written-append invisibility contract, shared with
@@ -1244,16 +1539,15 @@ def _ivf_delta_dirs(path: str) -> list[str]:
     import os
     import re as _re
 
+    codec = codec or _index_codec(path)
     try:
-        names = sorted(
-            n for n in os.listdir(path) if _re.match(r"^delta_[0-9A-Za-z]+$", n)
-        )
+        names = sorted(n for n in os.listdir(path) if _re.match(_DELTA_NAME, n))
     except OSError:
         return []
     return [
         os.path.join(path, n)
         for n in names
-        if os.path.exists(os.path.join(path, n, "cells", "_SUCCESS"))
+        if os.path.exists(os.path.join(path, n, codec.cells, "_SUCCESS"))
     ]
 
 
@@ -1343,34 +1637,29 @@ def _minus_tombstones(spark, path: str, cells: DataFrame) -> DataFrame:
     return cells
 
 
-def _probe_coalesce(
-    df: DataFrame, dirs: list[str], rows_per_task: int | None = None
-) -> DataFrame:
-    """Coalesce a pruned cells scan so each task sees ~rows_per_task
-    rows (guide §2.2/§6): at test scale a probe reads a handful of KB
+# rows per probe task: ≈ a few MB of codes — small enough that one
+# task's numpy batch stays cache-friendly, large enough to amortize the
+# per-task Python boundary
+_PROBE_ROWS_PER_TASK = 65536
+
+
+def _probe_coalesce(df: DataFrame, dirs: list[str]) -> DataFrame:
+    """Coalesce a pruned cells scan so each task sees
+    ~``_PROBE_ROWS_PER_TASK`` rows (guide §2.2/§6): at test scale a probe reads a handful of KB
     spread over one tiny file per cell, and the filesystem split rules
     (min-parallelism floor) hand every file its own task — each paying
     the Python-worker round trip of the Arrow probe. The target is
     derived from the probed partitions' parquet FOOTER row counts
     (driver-side metadata only), so the same code keeps full scan
     parallelism on a big index — ``coalesce`` only ever merges, never
-    splits, and an unreadable/remote path skips the merge entirely.
-    ``SPARK_GRAFT_PROBE_ROWS_PER_TASK`` overrides the per-task target
-    (default 65536 ≈ a few MB of codes — small enough that one task's
-    numpy batch stays cache-friendly, large enough to amortize the
-    per-task Python boundary)."""
-    import os as _os
-
+    splits, and an unreadable/remote path skips the merge entirely."""
     from plumberapp_spark.session import parquet_dir_rows
 
-    if rows_per_task is None:
-        rows_per_task = int(
-            _os.environ.get("SPARK_GRAFT_PROBE_ROWS_PER_TASK", "65536") or 65536
-        )
     rows = parquet_dir_rows(*dirs)
     if rows is None:
         return df
-    return df.coalesce(max(1, (rows + rows_per_task - 1) // rows_per_task))
+    per_task = _PROBE_ROWS_PER_TASK
+    return df.coalesce(max(1, (rows + per_task - 1) // per_task))
 
 
 def _probed_cell_dirs(path: str, rel: str, delta_dirs: list[str], probed) -> list[str]:
@@ -1391,9 +1680,11 @@ def delete_from_ivf_index(
     cells: write one immutable tombstone (ids only — IVF has no
     corpus-global scalars to correct, so a tombstone is just an
     anti-join set). Serving excludes tombstoned ids inside
-    _read_ivf_cells; compact_ivf_index drops them physically.
-    Unlike the lexical tier, overlapping/unknown ids need no dedup —
-    the anti-join is idempotent and absent ids match nothing."""
+    _read_ivf_cells; compact_ivf_index drops them physically. Codec
+    state (centroids, scales, codebook) is untouched — a takedown moves
+    neither the codebook nor the quantizer. Unlike the lexical tier,
+    overlapping/unknown ids need no dedup — the anti-join is idempotent
+    and absent ids match nothing."""
     import os
 
     from plumberapp_spark.llm.segments import _recover_swap
@@ -1412,21 +1703,22 @@ def delete_from_ivf_index(
     return tomb
 
 
-def _read_ivf_cells(spark, path: str) -> DataFrame:
-    """The index's corpus: base cells plus every COMPLETE delta segment
-    (appends land as immutable ``delta_*`` directories, never touching
-    the base), MINUS every tombstoned id (broadcast anti-join — the
-    deletion tier's serving splice). Each underlying scan keeps its own
-    ``_cell`` partition layout, and a probe's IN filter pushes through
-    the union to every scan — partition pruning holds across
-    segments; the anti-join runs on the pruned survivors only."""
+def _read_ivf_cells(spark, path: str, codec: RawCodec | None = None) -> DataFrame:
+    """The index's servable cells: base cells plus every COMPLETE delta
+    segment (appends land as immutable ``delta_*`` directories, never
+    touching the base), MINUS every tombstoned id (the deletion tier's
+    serving splice). Each underlying scan keeps its own ``_cell``
+    partition layout, and a probe's IN filter pushes through the union
+    to every scan — partition pruning holds across segments; the
+    tombstone filter runs on the pruned survivors only."""
     from plumberapp_spark.llm.segments import _recover_swap
     from plumberapp_spark.session import read_parquet_cached
 
     _recover_swap(path)
-    cells = read_parquet_cached(spark, f"{path}/cells")
-    for d in _ivf_delta_dirs(path):
-        cells = cells.unionByName(read_parquet_cached(spark, f"{d}/cells"))
+    codec = codec or _index_codec(path)
+    cells = read_parquet_cached(spark, f"{path}/{codec.cells}")
+    for d in _ivf_delta_dirs(path, codec):
+        cells = cells.unionByName(read_parquet_cached(spark, f"{d}/{codec.cells}"))
     return _minus_tombstones(spark, path, cells)
 
 
@@ -1445,47 +1737,46 @@ def _ivf_absorbed(path: str) -> set[str]:
         return set()
 
 
+def _write_absorbed(path: str, out_path: str, codec: RawCodec) -> None:
+    """Carry the exactly-once ledger into a compacted or rebuilt index:
+    every delta it folded in, plus what ``path`` had already absorbed."""
+    import json
+    import os
+
+    absorbed = sorted(
+        _ivf_absorbed(path)
+        | {os.path.basename(d) for d in _ivf_delta_dirs(path, codec)}
+    )
+    with open(os.path.join(out_path, "absorbed.json"), "w") as fh:
+        json.dump(absorbed, fh)
+
+
 def compact_ivf_index(spark, path: str, out_path: str) -> str:
     """Merge base + every delta into ONE cells relation, dropping
     tombstoned vectors physically — the bound on q112's per-query delta
     fan-out (`_read_ivf_cells` otherwise unions every delta forever).
     Cells are disjoint by id across segments, so the merge is a union +
-    one partitioned rewrite; assignments are NOT recomputed (the frozen
-    codebook moved for nobody). Centroids are copied verbatim. The
-    output has no deltas and no tombstones; serving it is bit-identical
-    to serving the segmented index (pinned by test + q117's shared
-    oracle). Runs beside serving; swap is the caller's problem —
+    one partitioned rewrite; assignments and codes are NOT recomputed
+    (the frozen codebook and quantizer moved for nobody). Centroids and
+    the codec's side relations are copied verbatim. The output has no
+    deltas and no tombstones; serving it is bit-identical to serving
+    the segmented index (pinned by test + q117/q128/q134's shared
+    oracles). Runs beside serving; swap is the caller's problem —
     :func:`maybe_compact_ivf` carries the same swap contract as
     segments.maybe_compact."""
-    import json
-    import os
-
-    cells = _read_ivf_cells(spark, path)
-    if cells.limit(1).count() == 0:
-        # every vector tombstoned: partitionBy would emit a dataless
-        # directory whose read-back dies on schema inference (the exact
-        # poison append_to_ivf_index guards against — ADVICE r10), and
-        # maybe_compact_ivf would swap the unreadable index in. The
-        # plain write keeps the schema in a parquet footer; a probe's
-        # _cell filter still applies as a column filter over zero rows.
-        cells.coalesce(1).write.mode("overwrite").parquet(f"{out_path}/cells")
-    else:
-        cells.write.partitionBy("_cell").mode("overwrite").parquet(
-            f"{out_path}/cells"
-        )
-    # centroid copy through Spark I/O, not shutil (ADVICE r10 / VERDICT
+    codec = _open_index(path)
+    cells = _read_ivf_cells(spark, path, codec)
+    _write_cells(cells, f"{out_path}/{codec.cells}", cells.limit(1).count() == 0)
+    # side copies through Spark I/O, not shutil (ADVICE r10 / VERDICT
     # "what's wrong" #5): compaction must not assume a local filesystem
     # when everything else in the index round-trips the object store.
-    # Row order is irrelevant — _load_centroids re-sorts by id — and
-    # float64 values survive a parquet round-trip bit-exactly.
-    spark.read.parquet(f"{path}/centroids").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{out_path}/centroids")
-    absorbed = sorted(
-        _ivf_absorbed(path) | {os.path.basename(d) for d in _ivf_delta_dirs(path)}
-    )
-    with open(os.path.join(out_path, "absorbed.json"), "w") as fh:
-        json.dump(absorbed, fh)
+    # Row order is irrelevant — every loader re-sorts by key — and
+    # float64/int8 values survive a parquet round-trip bit-exactly.
+    for side in ("centroids", *codec.sides):
+        spark.read.parquet(f"{path}/{side}").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{out_path}/{side}")
+    _write_absorbed(path, out_path, codec)
     return out_path
 
 
@@ -1501,14 +1792,13 @@ def maybe_compact_ivf(
     retired_path`` there; see segments.maybe_compact's contract), made
     crash-recoverable by the shared intent marker (ADVICE r10): a death
     between the renames rolls forward on the next index touch via
-    segments._recover_swap — which _read_ivf_cells, the append path and
-    this function all run first."""
+    segments._recover_swap — which every lifecycle call runs first."""
     import shutil
 
-    from plumberapp_spark.llm.segments import _recover_swap, _swap_compacted
+    from plumberapp_spark.llm.segments import _swap_compacted
 
-    _recover_swap(path)
-    if len(_ivf_delta_dirs(path)) <= max_deltas and not _ivf_tomb_dirs(path):
+    codec = _open_index(path)
+    if len(_ivf_delta_dirs(path, codec)) <= max_deltas and not _ivf_tomb_dirs(path):
         return None
     tmp = f"{path}.compact"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -1530,50 +1820,44 @@ def append_to_ivf_index(
     assign them against the index's FROZEN centroid matrix (standard
     IVF append semantics — the codebook does not move; distribution
     drift shows up in the q72-style recall monitor, and a re-train is a
-    deliberate rebuild) and land them as one immutable ``delta_*``
-    segment. The base cells and prior deltas are never read or
-    rewritten — append cost is assignment over the delta plus one
-    bucket-partitioned write. ``name``/``skip_if_complete`` carry the
-    segments-module idempotency contract (epoch-keyed replays are
-    no-ops), so a streaming foreachBatch sink can feed this directly."""
+    deliberate rebuild), encode them under the index codec's FROZEN
+    state (an SQ value outside the frozen scales saturates to ±127, a
+    PQ subvector lands on its nearest frozen entry) and land them as
+    one immutable ``delta_*`` segment. The base cells and prior deltas
+    are never read or rewritten — append cost is assignment over the
+    delta plus one bucket-partitioned write. ``name``/``skip_if_complete``
+    carry the segments-module idempotency contract (epoch-keyed replays
+    are no-ops), so a streaming foreachBatch sink can feed this
+    directly."""
     import os
     import re as _re
 
-    from plumberapp_spark.llm.segments import _recover_swap
-
     spark = new_vectors.sparkSession
-    _recover_swap(path)
+    codec = _open_index(path)
     if name is not None:
-        if not _re.match(r"^delta_[0-9A-Za-z]+$", name):
+        if not _re.match(_DELTA_NAME, name):
             raise ValueError(f"delta name {name!r} must match delta_[0-9A-Za-z]+")
         delta = os.path.join(path, name)
         if skip_if_complete and (
-            os.path.exists(os.path.join(delta, "cells", "_SUCCESS"))
+            os.path.exists(os.path.join(delta, codec.cells, "_SUCCESS"))
             or name in _ivf_absorbed(path)
         ):
             return delta
     else:
-        existing = {os.path.basename(d) for d in _ivf_delta_dirs(path)}
+        existing = {os.path.basename(d) for d in _ivf_delta_dirs(path, codec)}
         n = 0
         while f"delta_{n:05d}" in existing:
             n += 1
         delta = os.path.join(path, f"delta_{n:05d}")
     c_mat, c_norm = _load_centroids(spark, path)
-    narrow = new_vectors.select(F.col(id_col), F.col(vec_col))
+    state = codec.load(spark, path)
+    narrow = codec.narrow(new_vectors, id_col, vec_col)
     assigned = _assign_to_cells(narrow, c_mat, c_norm, id_col, vec_col)
-    if narrow.limit(1).count() == 0:
-        # zero-row delta: partitionBy emits no data files but cells/_SUCCESS
-        # still lands, so _ivf_delta_dirs would include a dataless segment
-        # whose read-back dies on schema inference — poisoning every
-        # subsequent _read_ivf_cells (ADVICE r9). The plain write keeps the
-        # schema in a parquet footer (segments._write_bucketed's zero-row
-        # fallback, mirrored here); the probe's _cell filter still applies
-        # as an ordinary column filter over zero rows.
-        assigned.coalesce(1).write.mode("overwrite").parquet(f"{delta}/cells")
-    else:
-        assigned.write.partitionBy("_cell").mode("overwrite").parquet(
-            f"{delta}/cells"
-        )
+    _write_cells(
+        codec.encode_cells(assigned, state, id_col, vec_col),
+        f"{delta}/{codec.cells}",
+        narrow.limit(1).count() == 0,
+    )
     return delta
 
 
@@ -1589,7 +1873,8 @@ def rebuild_ivf_index(
     :func:`_read_ivf_cells`, never the (possibly long-gone) original
     source table — followed by reassignment and a fresh single-segment
     index, swapped in under the same crash-recoverable contract as
-    compaction.
+    compaction. Raw indexes only: a coded index holds codes, not the
+    vectors a re-train needs (ValueError — rebuild it from its source).
 
     Semantics: rebuild ≡ :func:`build_ivf_index` over the live corpus
     (pinned hash-equal in tests) — the codebook re-draws from the
@@ -1610,25 +1895,20 @@ def rebuild_ivf_index(
     :func:`maybe_compact_ivf` ledger contract). ``n_centroids``
     defaults to the current codebook's size. Returns the retired path
     (or ``swap``'s return on object stores)."""
-    import json
-    import os
     import shutil
 
-    from plumberapp_spark.llm.segments import _recover_swap, _swap_compacted
+    from plumberapp_spark.llm.segments import _swap_compacted
 
-    _recover_swap(path)
-    live = _read_ivf_cells(spark, path).drop("_cell")
+    codec = _open_index(path)
+    _require_raw(codec, "rebuild_ivf_index")
+    live = _read_ivf_cells(spark, path, codec).drop("_cell")
     id_col, vec_col = live.columns[0], live.columns[1]
     if n_centroids is None:
         n_centroids = spark.read.parquet(f"{path}/centroids").count()
     tmp = f"{path}.compact"
     shutil.rmtree(tmp, ignore_errors=True)
     build_ivf_index(live, tmp, int(n_centroids), id_col, vec_col)
-    absorbed = sorted(
-        _ivf_absorbed(path) | {os.path.basename(d) for d in _ivf_delta_dirs(path)}
-    )
-    with open(os.path.join(tmp, "absorbed.json"), "w") as fh:
-        json.dump(absorbed, fh)
+    _write_absorbed(path, tmp, codec)
     if swap is not None:
         return swap(tmp, path)
     return _swap_compacted(path)
@@ -1651,7 +1931,9 @@ def codebook_drift_advice(
     the q72 recall measurement, run against the INDEX'S OWN live
     content (base ∪ deltas − tombstones) over a bounded sampled query
     set, is the signal; this turns it into an actionable row, the
-    optimizer/advisor pattern applied to the index tier.
+    optimizer/advisor pattern applied to the index tier. Raw indexes
+    only (the exact pass needs full-precision cells — ValueError on a
+    coded index).
 
     One row: (k, nprobe, n_deltas, n_true, n_hit, recall,
     recommend_rebuild, advice). ``recommend_rebuild`` is True when
@@ -1662,7 +1944,9 @@ def codebook_drift_advice(
     broadcast-query contract) + one probed search — the same two
     routes q72 compares, so running this after every N appends is the
     documented maintenance cadence."""
-    corpus = _read_ivf_cells(spark, path).drop("_cell")
+    codec = _open_index(path)
+    _require_raw(codec, "codebook_drift_advice")
+    corpus = _read_ivf_cells(spark, path, codec).drop("_cell")
     exact = brute_force_topk(
         corpus, queries, k, id_col, vec_col, query_id_col
     ).select(query_id_col, "neighbor_id")
@@ -1675,7 +1959,7 @@ def codebook_drift_advice(
         .groupBy()
         .agg(F.count("*").alias("n_hit"))
     )
-    n_deltas = len(_ivf_delta_dirs(path))
+    n_deltas = len(_ivf_delta_dirs(path, codec))
     recall = F.round(F.col("n_hit") / F.greatest(F.col("n_true"), F.lit(1)), 6)
     return (
         n_true.crossJoin(n_hit)
@@ -1701,65 +1985,6 @@ def codebook_drift_advice(
     )
 
 
-def ensure_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Build-once path contract for :func:`build_ivf_index`, keyed like
-    ``sources.bucketing.bucketed_name``: the index lives under the
-    session warehouse as ``ivf_{table}_{sfdir}_{n}`` and is rebuilt when
-    its cells' ``_SUCCESS`` marker is missing OR older than the source
-    table (``session._path_mtime``, which catches in-place part-file
-    rewrites) — a regenerated embeddings table never serves a stale
-    index (ADVICE r6)."""
-    import os
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"ivf_{table}_{tag}_{n_centroids}")
-    marker = os.path.join(path, "cells", "_SUCCESS")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    # the sidecar records the source mtime OBSERVED AT BUILD TIME plus the
-    # layout format the index was written under (the ensure_lexical_index
-    # hardening applied here too — VERDICT r8 #4). Comparing
-    # recorded-vs-current mtime (not marker-mtime < source-mtime) is
-    # immune to 1s-granularity filesystems where a rewrite lands in the
-    # same mtime granule as the marker (ADVICE r7); comparing
-    # recorded-vs-current format makes a layout change rebuild instead of
-    # AnalysisException-ing at serve time (pre-format sidecars — a bare
-    # mtime with no second field — parse as format 1).
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1]) if len(parts) > 1 else 1
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    stale = (
-        not os.path.exists(marker)
-        or recorded is None
-        or recorded != source_mtime
-        or rec_format != IVF_INDEX_FORMAT
-    )
-    if stale:
-        build_ivf_index(
-            load_table(spark, sf_dir, table), path, n_centroids, id_col, vec_col
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {IVF_INDEX_FORMAT}")
-    return path
-
-
 def ivf_topk_indexed(
     spark,
     path: str,
@@ -1771,18 +1996,38 @@ def ivf_topk_indexed(
     query_id_col: str = "query_id",
     max_broadcast_queries: int = 100_000,
     id_filter: DataFrame | None = None,
+    corpus: DataFrame | None = None,
+    rerank: int = 20,
 ) -> DataFrame:
-    """IVF search over a :func:`build_ivf_index` on-disk index:
-    output-identical to :func:`ivf_topk` on the same corpus/params, but
-    the corpus scan touches ONLY the probed cells' parquet partitions
+    """IVF search over a :func:`build_ivf_index` on-disk index. The
+    corpus scan touches ONLY the probed cells' parquet partitions
     (partition pruning on ``_cell``) — at 100 TB with n_centroids sized
     to the cluster that is the difference between scanning everything
-    per query batch and scanning ``nprobe/n_centroids`` of it.
+    per query batch and scanning ``nprobe/n_centroids`` of it. The scan
+    serves the FULL segmented index: base cells plus every complete
+    ``delta_*`` append minus tombstoned ids (:func:`_read_ivf_cells`).
+
+    * Raw index: one stage, output-identical to :func:`ivf_topk` on the
+      same corpus/params — each probed cell's candidates score by exact
+      cosine and the per-query top-k is the answer.
+    * Coded index (SQ/PQ): two stages. The COMPRESSED PROBE scores the
+      stored codes (dequantized cosine for SQ; for PQ the ADC lookup
+      table sum — the reconstructed-vector cosine computed WITHOUT
+      reconstructing) and keeps each query's top-``rerank`` candidates;
+      the EXACT RERANK joins that |Q| x rerank shortlist back to the
+      full-precision ``corpus`` by id (a shortlist-sized fetch, never a
+      scan), re-scores with the Catalyst cosine and cuts to k. With
+      ``rerank`` >= the largest probed cell the result is bit-identical
+      to the raw index (pinned by test); at production rerank the
+      approximation error is confined to shortlist selection.
+      ``corpus`` must cover the index's live ids — deleted ids never
+      reach the fetch (tombstones apply at the probe), appended ids must
+      be present.
 
     ``id_filter`` (round 11 — FILTERED ANN, the production predicated
     search: "nearest English documents", "vectors from source X"): a
     slim one-column relation of servable vector ids, semi-joined
-    against the probed cells' survivors BEFORE the per-cell top-k — the
+    against the probed cells' survivors BEFORE the per-cell cut — the
     filter rides the pruned scan (pre-k, so a query still returns up to
     k FILTERED neighbors, never a post-rank subset that comes up
     short). Probe cell selection and the codebook are untouched — a
@@ -1793,13 +2038,14 @@ def ivf_topk_indexed(
     import numpy as np
     import pandas as pd
 
-    def _cos_matrix(a, a_norm, b, b_norm):
-        denom = a_norm[:, None] * b_norm[None, :]
-        out = np.zeros((a.shape[0], b.shape[0]))
-        np.divide(a @ b.T, denom, out=out, where=denom > 0)
-        return np.round(out, 6)
-
+    codec = _open_index(path)
+    if codec.rerank and corpus is None:
+        raise ValueError(
+            f"ivf_topk_indexed: a {codec.cells} index reranks exactly against "
+            f"the full-precision store; pass corpus="
+        )
     c_mat, c_norm = _load_centroids(spark, path)
+    state = codec.load(spark, path)
 
     q_rows = (
         queries.select(F.col(id_col), F.col(vec_col))
@@ -1824,7 +2070,7 @@ def ivf_topk_indexed(
 
     # base + complete delta segments; the IN filter pushes through the
     # union to every scan, so partition pruning holds across segments
-    cells_df = _read_ivf_cells(spark, path).filter(
+    cells_df = _read_ivf_cells(spark, path, codec).filter(
         F.col("_cell").isin([int(c) for c in probed])
     )
     if id_filter is not None:
@@ -1833,34 +2079,40 @@ def ivf_topk_indexed(
         ).distinct()
         cells_df = cells_df.join(allowed, id_col, "left_semi")
     cells_df = _probe_coalesce(
-        cells_df, _probed_cell_dirs(path, "cells", _ivf_delta_dirs(path), probed)
+        cells_df,
+        _probed_cell_dirs(path, codec.cells, _ivf_delta_dirs(path, codec), probed),
     )
-    bc = spark.sparkContext.broadcast((q_mat, q_norm, q_ids, cell_to_qpos))
+    # a raw probe's per-query top-k is final; a coded probe's cut is the
+    # rerank shortlist, scored approximately
+    cut = int(rerank) if codec.rerank else int(k)
+    score_col = "approx_sim" if codec.rerank else "cos_sim"
+    bc = spark.sparkContext.broadcast(
+        (codec.query_state(state, q_mat, q_norm), q_ids, cell_to_qpos)
+    )
     id_ddl = cells_df.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {id_ddl}, neighbor_id {id_ddl}, cos_sim double"
+    out_schema = f"{query_id_col} {id_ddl}, neighbor_id {id_ddl}, {score_col} double"
 
     def search(batches):
-        q_mat_, q_norm_, q_ids_, cell_to_qpos_ = bc.value
+        qstate_, q_ids_, cell_to_qpos_ = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            score = codec.batch_scorer(pdf, vec_col, qstate_)
             ids = pdf[id_col].to_numpy()
-            v_norm = np.sqrt((vecs * vecs).sum(axis=1))
             cells = pdf["_cell"].to_numpy()
             out_q, out_n, out_s = [], [], []
             for ci, qpos in cell_to_qpos_.items():
                 rows = np.nonzero(cells == ci)[0]
                 if not len(rows):
                     continue
-                sims = _cos_matrix(vecs[rows], v_norm[rows], q_mat_[qpos], q_norm_[qpos])
+                sims = score(rows, qpos)
                 for j, qi in enumerate(qpos):
                     mask = ids[rows] != q_ids_[qi]
                     cand_ids = ids[rows][mask]
                     cand_sims = sims[:, j][mask]
                     if not len(cand_ids):
                         continue
-                    top = np.lexsort((cand_ids, -cand_sims))[:k]
+                    top = np.lexsort((cand_ids, -cand_sims))[:cut]
                     out_q.append(np.full(len(top), q_ids_[qi]))
                     out_n.append(cand_ids[top])
                     out_s.append(cand_sims[top])
@@ -1869,643 +2121,41 @@ def ivf_topk_indexed(
                     {
                         query_id_col: np.concatenate(out_q),
                         "neighbor_id": np.concatenate(out_n),
-                        "cos_sim": np.concatenate(out_s),
+                        score_col: np.concatenate(out_s),
                     }
                 )
 
-    partial = cells_df.mapInPandas(search, out_schema)
+    scored = cells_df.mapInPandas(search, out_schema)
+    if codec.rerank:
+        from plumberapp_spark.session import local_relation
+
+        w_short = Window.partitionBy(query_id_col).orderBy(
+            F.col("approx_sim").desc(), F.col("neighbor_id")
+        )
+        shortlist = (
+            scored.withColumn("_rn", F.row_number().over(w_short))
+            .filter(F.col("_rn") <= rerank)
+            .select(query_id_col, "neighbor_id")
+        )
+        qvec_df = local_relation(
+            spark,
+            [(r[0], list(r[1])) for r in q_rows],
+            f"{query_id_col} {id_ddl}, _qvec array<double>",
+        )
+        full = corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).cast("array<double>").alias("_nvec"),
+        )
+        scored = (
+            shortlist.join(full, "neighbor_id")
+            .join(F.broadcast(qvec_df), query_id_col)
+            .withColumn("cos_sim", F.round(cosine(F.col("_qvec"), F.col("_nvec")), 6))
+        )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            "cos_sim",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
-
-
-def ensure_ivf_appended_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Build-then-append fixture contract for the registered query
-    (the dense twin of segments.ensure_segmented_index): the index is
-    BUILT on 80 % of the table (``id % 5 != 0`` — centroids drawn from
-    that subset only) and the remaining fifth arrives via
-    :func:`append_to_ivf_index` as a delta segment, so serving
-    exercises the real base+delta union while the oracle replays the
-    frozen-codebook approximation exactly. Sidecar staleness contract
-    shared with ensure_ivf_index."""
-    import os
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"ivfinc_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != IVF_INDEX_FORMAT
-        or not _ivf_delta_dirs(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        vecs = load_table(spark, sf_dir, table)
-        build_ivf_index(
-            vecs.filter(F.col(id_col) % 5 != 0), path, n_centroids, id_col, vec_col
-        )
-        append_to_ivf_index(
-            vecs.filter(F.col(id_col) % 5 == 0), path, id_col, vec_col
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {IVF_INDEX_FORMAT}")
-    return path
-
-
-def ensure_deleted_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Fixture for the dense DELETION query: the q109 shape (80 % build
-    + 20 % delta append) followed by a takedown of every
-    ``vec_id % 7 == 3`` as one tombstone — the deleted set cuts across
-    base AND delta, so serving exercises the anti-join over both scan
-    layouts. Sidecar staleness contract shared with the other ensure
-    paths."""
-    import os
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"ivfdel_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != IVF_INDEX_FORMAT
-        or not _ivf_delta_dirs(path)
-        or not _ivf_tomb_dirs(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        vecs = load_table(spark, sf_dir, table)
-        build_ivf_index(
-            vecs.filter(F.col(id_col) % 5 != 0), path, n_centroids, id_col, vec_col
-        )
-        append_to_ivf_index(
-            vecs.filter(F.col(id_col) % 5 == 0), path, id_col, vec_col
-        )
-        delete_from_ivf_index(
-            spark, path, vecs.filter(F.col(id_col) % 7 == 3).select(id_col), id_col
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {IVF_INDEX_FORMAT}")
-    return path
-
-
-def ensure_compacted_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-) -> str:
-    """Compacted twin of :func:`ensure_deleted_ivf_index` — base, delta
-    and tombstone all fold into one cells relation (deleted vectors
-    physically gone), proving the q117 claim that compaction changes
-    nothing a probe can observe."""
-    import os
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime
-
-    src = ensure_deleted_ivf_index(spark, sf_dir, table, n_centroids)
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"ivfdelc_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != IVF_INDEX_FORMAT
-        or not os.path.exists(os.path.join(path, "cells", "_SUCCESS"))
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        compact_ivf_index(spark, src, path)
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {IVF_INDEX_FORMAT}")
-    return path
-
-
-def ensure_rebuilt_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Fixture for the REBUILD query: a full drifted lifecycle — built
-    on 80 % (codebook frozen from that subset), the remaining fifth
-    appended as a delta, every ``id % 7 == 3`` tombstoned — then
-    :func:`rebuild_ivf_index` re-trains in place. The served index has
-    ONE segment, no tombstones, and a codebook re-drawn from the LIVE
-    corpus, so the oracle is the from-scratch derivation over
-    corpus-minus-deleted with centroids drawn from that same live set
-    (NOT the 80 % base — that is exactly what a rebuild moves)."""
-    import os
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"ivfreb_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != IVF_INDEX_FORMAT
-        or not os.path.exists(os.path.join(path, "cells", "_SUCCESS"))
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        for n in range(100):  # prior retired copies of this fixture
-            old = f"{path}.old.{n}"
-            if not os.path.exists(old):
-                break
-            shutil.rmtree(old, ignore_errors=True)
-        vecs = load_table(spark, sf_dir, table)
-        build_ivf_index(
-            vecs.filter(F.col(id_col) % 5 != 0), path, n_centroids, id_col, vec_col
-        )
-        append_to_ivf_index(
-            vecs.filter(F.col(id_col) % 5 == 0), path, id_col, vec_col
-        )
-        delete_from_ivf_index(
-            spark, path, vecs.filter(F.col(id_col) % 7 == 3).select(id_col), id_col
-        )
-        rebuild_ivf_index(spark, path, n_centroids)
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {IVF_INDEX_FORMAT}")
-    return path
-
-
-def ensure_streamed_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Streaming-ingested twin of :func:`ensure_ivf_appended_index`
-    (the q106 pattern on the dense route): the base index is built on
-    80 % of the vectors, and the remaining fifth arrives through a real
-    ``readStream`` file source whose foreachBatch sink lands each
-    micro-batch as an epoch-keyed delta segment (replays idempotent —
-    exactly-once index contents). Sidecar staleness contract shared
-    with the batch ensure paths; the checkpoint lives inside the index
-    dir and dies with it."""
-    import os
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime, ensure_read_confs, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"ivfst_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != IVF_INDEX_FORMAT
-        or not _ivf_delta_dirs(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        vecs = load_table(spark, sf_dir, table)
-        build_ivf_index(
-            vecs.filter(F.col(id_col) % 5 != 0), path, n_centroids, id_col, vec_col
-        )
-        ensure_read_confs(spark)
-        schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .load(f"{sf_dir}/{table}.*")
-        )
-
-        def _sink(batch_df, epoch_id: int) -> None:
-            delta = batch_df.filter(F.col(id_col) % 5 == 0)
-            if delta.limit(1).count() == 0:
-                return
-            append_to_ivf_index(
-                delta,
-                path,
-                id_col,
-                vec_col,
-                name=f"delta_e{epoch_id:09d}",
-                skip_if_complete=True,
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(path, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {IVF_INDEX_FORMAT}")
-    return path
-
-
-# ---------------------------------------------------------------------------
-# Scalar-quantized IVF (round 11, VERDICT r10 "What's missing" #5):
-# vector COMPRESSION for the index tier. Cells store int8 codes (one byte
-# per dimension — 4x smaller than the float32 source, 8x smaller than the
-# float64 cells of the uncompressed index), so at 100 TB the probe IO and
-# index footprint shrink by the same factor; exact ranking is recovered by
-# re-scoring a bounded shortlist against the full-precision store (the
-# standard two-stage production ANN: compressed probe -> exact rerank).
-# The quantization rule is deliberately oracle-replayable: per-dimension
-# symmetric max-|v| scales, code = floor(v/s*127 + 0.5) — every step is
-# IEEE-deterministic and SQL-expressible, so the driver can replay the
-# whole derivation (scales, codes, dequantized probe scores, shortlist
-# cut, exact rerank) in DuckDB and hash-match the served rows.
-# ---------------------------------------------------------------------------
-
-SQ_IVF_FORMAT = 1
-
-
-def _sq_scales(narrow: DataFrame, vec_col: str):
-    """Per-dimension max-|v| over the corpus: one mapInPandas partial-max
-    per partition (each emits a single dim-length row) folded on the
-    driver. Max is associative and commutative, so the result is
-    bit-exact under any partitioning; the exchange is n_partitions x dim
-    doubles — no corpus-wide explode, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    def partial(batches):
-        acc = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.abs(np.array(pdf[vec_col].tolist(), dtype=np.float64)).max(axis=0)
-            acc = m if acc is None else np.maximum(acc, m)
-        if acc is not None:
-            yield pd.DataFrame({"_m": [acc.tolist()]})
-
-    rows = narrow.select(vec_col).mapInPandas(partial, "_m array<double>").collect()
-    scales = np.array(rows[0][0], dtype=np.float64)
-    for r in rows[1:]:
-        scales = np.maximum(scales, np.array(r[0], dtype=np.float64))
-    return scales
-
-
-def quantize_codes(vecs, scales):
-    """int8 codes for a float64 matrix under per-dim symmetric scales:
-    ``clip(floor(v/s*127 + 0.5), -127, 127)`` (0 where s == 0).
-    floor(x+0.5) — not round() — so Spark, numpy, and the DuckDB oracle
-    share one half-up rule with no banker's-rounding divergence. The
-    clip is a mathematical no-op at build time (scales ARE the corpus
-    max-|v|) and the documented saturation rule for APPENDS: a delta
-    vector outside the frozen scale range quantizes to ±127, the same
-    codebook-doesn't-move drift semantics as frozen IVF centroids —
-    drift shows up in the q72-style recall monitor and the fix is a
-    deliberate rebuild."""
-    import numpy as np
-
-    ratio = np.divide(
-        vecs, scales[None, :], out=np.zeros_like(vecs), where=scales[None, :] != 0
-    )
-    return np.clip(np.floor(ratio * 127 + 0.5), -127, 127).astype(np.int8)
-
-
-def dequantize_codes(codes, scales):
-    """The served approximation: ``code * s / 127`` as float64 — the
-    exact inverse expression the oracle replays."""
-    return codes.astype("float64") * scales[None, :] / 127.0
-
-
-def build_sq_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize a scalar-quantized IVF index: ``{path}/centroids``
-    (full-precision, :func:`build_ivf_index`'s md5-seeded derivation
-    verbatim), ``{path}/scales`` (ONE row: the per-dim max-|v| vector),
-    and ``{path}/cells_sq`` — (id, int8 code array, cell) PARTITIONED BY
-    the cell. Cell assignment runs on the FULL-PRECISION vectors (build
-    time has them; quantizing before assignment would move cells), so
-    the probe geometry is bit-identical to the uncompressed index — only
-    the stored bytes shrink.
-
-    At 100 TB: the float32 corpus' 4 bytes/dim become 1 byte/dim in the
-    index, so a probe's ``nprobe/n_centroids`` slice reads 4x less IO
-    and the whole index is cold-storable at a quarter the footprint;
-    the full-precision table is touched only by the |Q| x rerank
-    shortlist fetch."""
-    import numpy as np
-
-    spark = corpus.sparkSession
-    narrow = corpus.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    )
-    cent_rows = (
-        narrow.orderBy(F.md5(F.col(id_col).cast("string")), id_col)
-        .limit(n_centroids)
-        .collect()
-    )
-    order = np.argsort(np.array([r[0] for r in cent_rows]))
-    c_mat = np.array([list(cent_rows[i][1]) for i in order], dtype=np.float64)
-    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-    spark.createDataFrame(
-        [cent_rows[i] for i in order], schema=narrow.schema
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-    scales = _sq_scales(narrow, vec_col)
-    spark.createDataFrame([(scales.tolist(),)], "scales array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/scales")
-
-    bc = spark.sparkContext.broadcast(scales)
-    id_ddl = narrow.schema[id_col].dataType.simpleString()
-
-    def quantize(batches):
-        import pandas as pd
-
-        s = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = quantize_codes(vecs, s)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "_code": [c for c in codes],
-                    "_cell": pdf["_cell"].to_numpy(),
-                }
-            )
-
-    _assign_to_cells(narrow, c_mat, c_norm, id_col, vec_col).mapInPandas(
-        quantize, f"{id_col} {id_ddl}, _code array<tinyint>, _cell int"
-    ).write.partitionBy("_cell").mode("overwrite").parquet(f"{path}/cells_sq")
-
-
-def _load_sq_scales(spark, path: str):
-    import numpy as np
-
-    from plumberapp_spark.session import local_parquet_rows, read_parquet_cached
-
-    local = local_parquet_rows(f"{path}/scales")
-    if local is not None:
-        return np.array(list(next(iter(local[0].values()))), dtype=np.float64)
-    row = read_parquet_cached(spark, f"{path}/scales").collect()[0]
-    return np.array(list(row[0]), dtype=np.float64)
-
-
-def sq_ivf_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    nprobe: int = 2,
-    rerank: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_broadcast_queries: int = 100_000,
-    id_filter: DataFrame | None = None,
-) -> DataFrame:
-    """Two-stage search over a :func:`build_sq_ivf_index` index:
-
-    1. COMPRESSED PROBE — the probed cells' int8 codes are dequantized
-       in-batch and scored against the broadcast queries (round-6
-       cosine, :func:`ivf_topk_indexed`'s probe geometry verbatim);
-       each query keeps its top-``rerank`` approximate candidates.
-       Probe IO touches only ``nprobe/n_centroids`` of the corpus AND
-       only one byte per dimension.
-    2. EXACT RERANK — the |Q| x rerank shortlist joins back to the
-       full-precision ``corpus`` relation by id (a shortlist-sized
-       fetch, never a scan) and is re-scored with the pure-Catalyst
-       cosine (``functions.vectors.cosine`` — zip_with/aggregate,
-       JVM-side); final top-k by (exact cosine desc, id asc).
-
-    With ``rerank`` >= the largest probed cell the shortlist is the
-    whole candidate set and the result is bit-identical to
-    :func:`ivf_topk_indexed` (pinned by test); at production rerank
-    the approximation error is bounded by the quantization step and
-    the recall loss is measurable via :func:`ann_recall_report`.
-
-    The scan serves the FULL segmented index — base cells plus every
-    complete ``delta_*`` append minus tombstoned ids
-    (:func:`_read_sq_cells`) — and ``id_filter`` carries
-    :func:`ivf_topk_indexed`'s filtered-ANN contract: a slim servable
-    id relation semi-joined against the pruned code scan BEFORE the
-    shortlist cut, so every query returns up to k FILTERED neighbors.
-    ``corpus`` (the full-precision store the rerank fetches from) must
-    cover the index's live ids — deleted ids never reach the fetch
-    (tombstones apply at the probe), appended ids must be present."""
-    import numpy as np
-    import pandas as pd
-
-    def _cos_matrix(a, a_norm, b, b_norm):
-        denom = a_norm[:, None] * b_norm[None, :]
-        out = np.zeros((a.shape[0], b.shape[0]))
-        np.divide(a @ b.T, denom, out=out, where=denom > 0)
-        return np.round(out, 6)
-
-    c_mat, c_norm = _load_centroids(spark, path)
-    scales = _load_sq_scales(spark, path)
-
-    q_rows = (
-        queries.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .limit(max_broadcast_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_broadcast_queries:
-        raise ValueError(
-            f"sq_ivf_topk_indexed: query side exceeds the broadcastable "
-            f"contract (> {max_broadcast_queries} rows); swap sides or "
-            f"pre-partition"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    q_cell_sims = _cos_matrix(q_mat, q_norm, c_mat, c_norm)
-    cell_to_qpos: dict = {}
-    for qi in range(len(q_ids)):
-        for ci in np.argsort(-q_cell_sims[qi], kind="stable")[:nprobe]:
-            cell_to_qpos.setdefault(int(ci), []).append(qi)
-    probed = sorted(cell_to_qpos)
-
-    codes_df = _read_sq_cells(spark, path).filter(
-        F.col("_cell").isin([int(c) for c in probed])
-    )
-    if id_filter is not None:
-        allowed = id_filter.select(
-            F.col(id_filter.columns[0]).alias(id_col)
-        ).distinct()
-        codes_df = codes_df.join(allowed, id_col, "left_semi")
-    codes_df = _probe_coalesce(
-        codes_df, _probed_cell_dirs(path, "cells_sq", _sq_delta_dirs(path), probed)
-    )
-    bc = spark.sparkContext.broadcast(
-        (q_mat, q_norm, q_ids, cell_to_qpos, scales, int(rerank))
-    )
-    id_ddl = codes_df.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {id_ddl}, neighbor_id {id_ddl}, approx_sim double"
-
-    def probe(batches):
-        q_mat_, q_norm_, q_ids_, cell_to_qpos_, scales_, rerank_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.array(pdf["_code"].tolist(), dtype=np.int8)
-            vecs = dequantize_codes(codes, scales_)
-            ids = pdf[id_col].to_numpy()
-            v_norm = np.sqrt((vecs * vecs).sum(axis=1))
-            cells = pdf["_cell"].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for ci, qpos in cell_to_qpos_.items():
-                rows = np.nonzero(cells == ci)[0]
-                if not len(rows):
-                    continue
-                sims = _cos_matrix(
-                    vecs[rows], v_norm[rows], q_mat_[qpos], q_norm_[qpos]
-                )
-                for j, qi in enumerate(qpos):
-                    mask = ids[rows] != q_ids_[qi]
-                    cand_ids = ids[rows][mask]
-                    cand_sims = sims[:, j][mask]
-                    if not len(cand_ids):
-                        continue
-                    top = np.lexsort((cand_ids, -cand_sims))[:rerank_]
-                    out_q.append(np.full(len(top), q_ids_[qi]))
-                    out_n.append(cand_ids[top])
-                    out_s.append(cand_sims[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "approx_sim": np.concatenate(out_s),
-                    }
-                )
-
-    partial = codes_df.mapInPandas(probe, out_schema)
-    w_short = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        partial.withColumn("_rn", F.row_number().over(w_short))
-        .filter(F.col("_rn") <= rerank)
-        .select(query_id_col, "neighbor_id")
-    )
-
-    from plumberapp_spark.session import local_relation
-
-    qvec_df = local_relation(
-        spark,
-        [(r[0], list(r[1])) for r in q_rows],
-        f"{query_id_col} {id_ddl}, _qvec array<double>",
-    )
-    full = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_nvec"),
-    )
-    rescored = (
-        shortlist.join(full, "neighbor_id")
-        .join(F.broadcast(qvec_df), query_id_col)
-        .withColumn("cos_sim", F.round(cosine(F.col("_qvec"), F.col("_nvec")), 6))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             query_id_col,
@@ -2582,7 +2232,55 @@ def sq_compression_stats(
     )
 
 
-def ensure_sq_ivf_index(
+# ---- driver fixtures (build-once ensure_* contracts) ----------------------
+#
+# Every fixture lives under the session warehouse and is rebuilt when its
+# completeness check fails or its sidecar (source mtime + layout format)
+# does not match exactly — session.ensure_fixture. The lifecycle shapes
+# (80 % build + 20 % delta append, a ``vec_id % 7 == 3`` takedown across
+# base and delta, its compaction) take the codec; the appended, streamed
+# and rebuilt shapes serve raw-only queries.
+
+
+def ensure_ivf_index(
+    spark,
+    sf_dir: str,
+    table: str = "embeddings",
+    n_centroids: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    codec: RawCodec | None = None,
+) -> str:
+    """Build-once path contract for :func:`build_ivf_index`, keyed like
+    ``sources.bucketing.bucketed_name``: the index lives under the
+    session warehouse as ``{prefix}ivf_{table}_{sfdir}_{n}`` (PQ appends
+    ``_{m_sub}_{ks}``) and is rebuilt when its cells' ``_SUCCESS``
+    marker is missing, the source table changed since the build
+    (``session._path_mtime``, which catches in-place part-file
+    rewrites — a regenerated embeddings table never serves a stale
+    index, ADVICE r6), or the index was written under another layout
+    format (VERDICT r8 #4)."""
+    import os
+
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
+
+    codec = codec or RAW
+    path = fixture_path(
+        spark, sf_dir, f"{codec.prefix}ivf", table, n_centroids, *codec.params
+    )
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        lambda: build_ivf_index(
+            load_table(spark, sf_dir, table), path, n_centroids, id_col, vec_col, codec
+        ),
+        fields=(codec.format,),
+        complete=lambda: os.path.exists(os.path.join(path, codec.cells, "_SUCCESS")),
+    )
+
+
+def ensure_ivf_appended_index(
     spark,
     sf_dir: str,
     table: str = "embeddings",
@@ -2590,323 +2288,229 @@ def ensure_sq_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """Build-once path contract for :func:`build_sq_ivf_index` —
-    :func:`ensure_ivf_index`'s sidecar pattern verbatim (source-mtime +
-    format recorded at build time; mismatch or missing marker
-    rebuilds)."""
-    import os
-    import re
-    from urllib.parse import urlparse
+    """Build-then-append fixture contract for the registered query
+    (the dense twin of segments.ensure_segmented_index): the index is
+    BUILT on 80 % of the table (``id % 5 != 0`` — centroids drawn from
+    that subset only) and the remaining fifth arrives via
+    :func:`append_to_ivf_index` as a delta segment, so serving
+    exercises the real base+delta union while the oracle replays the
+    frozen-codebook approximation exactly."""
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
+    path = fixture_path(spark, sf_dir, "ivfinc", table, n_centroids)
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"sqivf_{table}_{tag}_{n_centroids}")
-    marker = os.path.join(path, "cells_sq", "_SUCCESS")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1]) if len(parts) > 1 else 1
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    stale = (
-        not os.path.exists(marker)
-        or recorded is None
-        or recorded != source_mtime
-        or rec_format != SQ_IVF_FORMAT
-    )
-    if stale:
-        build_sq_ivf_index(
-            load_table(spark, sf_dir, table), path, n_centroids, id_col, vec_col
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {SQ_IVF_FORMAT}")
-    return path
-
-
-def _sq_delta_dirs(path: str) -> list[str]:
-    """Complete delta segments under an SQ index (``delta_*`` with a
-    ``cells_sq`` marker) — :func:`_ivf_delta_dirs` on the compressed
-    layout."""
-    import os
-    import re as _re
-
-    try:
-        names = sorted(
-            n for n in os.listdir(path) if _re.match(r"^delta_[0-9A-Za-z]+$", n)
-        )
-    except OSError:
-        return []
-    return [
-        os.path.join(path, n)
-        for n in names
-        if os.path.exists(os.path.join(path, n, "cells_sq", "_SUCCESS"))
-    ]
-
-
-def _read_sq_cells(spark, path: str) -> DataFrame:
-    """The SQ index's servable codes: base cells plus every complete
-    delta, minus tombstoned ids (broadcast anti-join) —
-    :func:`_read_ivf_cells` on the compressed layout. A probe's IN
-    filter pushes through the union to every scan, so ``_cell``
-    partition pruning holds across segments."""
-    from plumberapp_spark.llm.segments import _recover_swap
-    from plumberapp_spark.session import read_parquet_cached
-
-    _recover_swap(path)
-    cells = read_parquet_cached(spark, f"{path}/cells_sq")
-    for d in _sq_delta_dirs(path):
-        cells = cells.unionByName(read_parquet_cached(spark, f"{d}/cells_sq"))
-    return _minus_tombstones(spark, path, cells)
-
-
-def delete_from_sq_ivf_index(
-    spark, path: str, ids: DataFrame, id_col: str = "vec_id"
-) -> str:
-    """Tombstone delete for the compressed index — the layouts share
-    the ``tomb_*`` contract, so this IS :func:`delete_from_ivf_index`:
-    one immutable id set, anti-joined inside the pruned probe scan,
-    physically dropped at compaction. Codes, scales, and centroids are
-    untouched (a takedown moves neither the codebook nor the
-    quantizer)."""
-    return delete_from_ivf_index(spark, path, ids, id_col)
-
-
-def append_to_sq_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    name: str | None = None,
-    skip_if_complete: bool = False,
-) -> str:
-    """Absorb new vectors into an SQ index WITHOUT rebuilding: assign
-    against the FROZEN centroids and quantize under the FROZEN per-dim
-    scales (a delta value outside the frozen range saturates to ±127 —
-    :func:`quantize_codes`'s documented drift rule), landing as one
-    immutable ``delta_*/cells_sq`` segment. Base and prior deltas are
-    never read or rewritten; ``name``/``skip_if_complete`` carry the
-    segments-module idempotency contract so a streaming sink can feed
-    this directly (:func:`append_to_ivf_index`'s shape, compressed)."""
-    import numpy as np
-    import os
-    import re as _re
-
-    from plumberapp_spark.llm.segments import _recover_swap
-
-    spark = new_vectors.sparkSession
-    _recover_swap(path)
-    if name is not None:
-        if not _re.match(r"^delta_[0-9A-Za-z]+$", name):
-            raise ValueError(f"delta name {name!r} must match delta_[0-9A-Za-z]+")
-        delta = os.path.join(path, name)
-        if skip_if_complete and (
-            os.path.exists(os.path.join(delta, "cells_sq", "_SUCCESS"))
-            or name in _ivf_absorbed(path)
-        ):
-            return delta
-    else:
-        existing = {os.path.basename(d) for d in _sq_delta_dirs(path)}
-        n = 0
-        while f"delta_{n:05d}" in existing:
-            n += 1
-        delta = os.path.join(path, f"delta_{n:05d}")
-    c_mat, c_norm = _load_centroids(spark, path)
-    scales = _load_sq_scales(spark, path)
-    narrow = new_vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    )
-    bc = spark.sparkContext.broadcast(scales)
-    id_ddl = narrow.schema[id_col].dataType.simpleString()
-
-    def quantize(batches):
-        import pandas as pd
-
-        s = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = quantize_codes(vecs, s)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "_code": [c for c in codes],
-                    "_cell": pdf["_cell"].to_numpy(),
-                }
-            )
-
-    assigned = _assign_to_cells(narrow, c_mat, c_norm, id_col, vec_col).mapInPandas(
-        quantize, f"{id_col} {id_ddl}, _code array<tinyint>, _cell int"
-    )
-    if narrow.limit(1).count() == 0:
-        # zero-row delta: plain write keeps the schema in a parquet
-        # footer (append_to_ivf_index's ADVICE-r9 guard, mirrored)
-        assigned.coalesce(1).write.mode("overwrite").parquet(f"{delta}/cells_sq")
-    else:
-        assigned.write.partitionBy("_cell").mode("overwrite").parquet(
-            f"{delta}/cells_sq"
-        )
-    return delta
-
-
-def compact_sq_ivf_index(spark, path: str, out_path: str) -> str:
-    """Merge base + deltas into ONE cells_sq relation, dropping
-    tombstoned codes physically — :func:`compact_ivf_index` on the
-    compressed layout. Codes are NOT requantized (the frozen quantizer
-    moved for nobody); centroids AND scales copy through Spark I/O
-    (object-store-safe, int8/float64 survive a parquet round-trip
-    bit-exactly). Absorbed deltas go to the ledger so epoch replays
-    stay no-ops."""
-    import json
-    import os
-
-    cells = _read_sq_cells(spark, path)
-    if cells.limit(1).count() == 0:
-        # every code tombstoned: plain write keeps the schema readable
-        # (compact_ivf_index's ADVICE-r10 guard, mirrored)
-        cells.coalesce(1).write.mode("overwrite").parquet(f"{out_path}/cells_sq")
-    else:
-        cells.write.partitionBy("_cell").mode("overwrite").parquet(
-            f"{out_path}/cells_sq"
-        )
-    for side in ("centroids", "scales"):
-        spark.read.parquet(f"{path}/{side}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{out_path}/{side}")
-    absorbed = sorted(
-        _ivf_absorbed(path) | {os.path.basename(d) for d in _sq_delta_dirs(path)}
-    )
-    with open(os.path.join(out_path, "absorbed.json"), "w") as fh:
-        json.dump(absorbed, fh)
-    return out_path
-
-
-def maybe_compact_sq_ivf(
-    spark, path: str, max_deltas: int = 16, swap=None
-) -> str | None:
-    """Size-bounded compaction policy for the SQ index —
-    :func:`maybe_compact_ivf`'s contract (crash-recoverable two-rename
-    swap via the shared intent marker; pass ``swap`` on object
-    stores)."""
-    import shutil
-
-    from plumberapp_spark.llm.segments import _recover_swap, _swap_compacted
-
-    _recover_swap(path)
-    if len(_sq_delta_dirs(path)) <= max_deltas and not _ivf_tomb_dirs(path):
-        return None
-    tmp = f"{path}.compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    compact_sq_ivf_index(spark, path, tmp)
-    if swap is not None:
-        return swap(tmp, path)
-    return _swap_compacted(path)
-
-
-def ensure_deleted_sq_ivf_index(
-    spark,
-    sf_dir: str,
-    table: str = "embeddings",
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Fixture for the compressed DELETION query — the
-    :func:`ensure_deleted_ivf_index` shape on the SQ layout: 80 % build
-    (scales and centroids frozen from that base), 20 % delta append
-    (quantized under the FROZEN scales, saturating where the delta
-    exceeds the base range), then a takedown of every
-    ``vec_id % 7 == 3`` cutting across base and delta."""
-    import os
-    import re
-    from urllib.parse import urlparse
-
-    from plumberapp_spark.session import _path_mtime, load_table
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"sqivfdel_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != SQ_IVF_FORMAT
-        or not _sq_delta_dirs(path)
-        or not _ivf_tomb_dirs(path)
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build():
         vecs = load_table(spark, sf_dir, table)
-        build_sq_ivf_index(
+        build_ivf_index(
             vecs.filter(F.col(id_col) % 5 != 0), path, n_centroids, id_col, vec_col
         )
-        append_to_sq_ivf_index(
+        append_to_ivf_index(
             vecs.filter(F.col(id_col) % 5 == 0), path, id_col, vec_col
         )
-        delete_from_sq_ivf_index(
-            spark, path, vecs.filter(F.col(id_col) % 7 == 3).select(id_col), id_col
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {SQ_IVF_FORMAT}")
-    return path
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(IVF_INDEX_FORMAT,),
+        complete=lambda: bool(_ivf_delta_dirs(path, RAW)),
+    )
 
 
-def ensure_compacted_sq_ivf_index(
+def ensure_deleted_ivf_index(
     spark,
     sf_dir: str,
     table: str = "embeddings",
     n_centroids: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    codec: RawCodec | None = None,
 ) -> str:
-    """Compacted twin of :func:`ensure_deleted_sq_ivf_index`: base,
-    delta and tombstone fold into one cells_sq relation — the proof
-    (shared oracle) that SQ compaction changes nothing a probe can
+    """Fixture for the DELETION queries (q116/q127/q133): 80 % build
+    (centroids and codec state frozen from that base), 20 % delta
+    append (encoded under the FROZEN state — SQ saturates where the
+    delta exceeds the base range), then a takedown of every ``vec_id %
+    7 == 3`` as one tombstone — the deleted set cuts across base AND
+    delta, so serving exercises the tombstone splice over both scan
+    layouts."""
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
+
+    codec = codec or RAW
+    path = fixture_path(spark, sf_dir, f"{codec.prefix}ivfdel", table, n_centroids)
+
+    def build():
+        vecs = load_table(spark, sf_dir, table)
+        build_ivf_index(
+            vecs.filter(F.col(id_col) % 5 != 0),
+            path,
+            n_centroids,
+            id_col,
+            vec_col,
+            codec,
+        )
+        append_to_ivf_index(
+            vecs.filter(F.col(id_col) % 5 == 0), path, id_col, vec_col
+        )
+        delete_from_ivf_index(
+            spark, path, vecs.filter(F.col(id_col) % 7 == 3).select(id_col), id_col
+        )
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(codec.format,),
+        complete=lambda: bool(_ivf_delta_dirs(path, codec) and _ivf_tomb_dirs(path)),
+    )
+
+
+def ensure_compacted_ivf_index(
+    spark,
+    sf_dir: str,
+    table: str = "embeddings",
+    n_centroids: int = 16,
+    codec: RawCodec | None = None,
+) -> str:
+    """Compacted twin of :func:`ensure_deleted_ivf_index` (q117/q128/
+    q134) — base, delta and tombstone all fold into one cells relation
+    (deleted vectors physically gone). Each shares its deletion query's
+    oracle: the hash proves compaction changes nothing a probe can
     observe."""
     import os
-    import re
-    from urllib.parse import urlparse
 
-    from plumberapp_spark.session import _path_mtime
+    from plumberapp_spark.session import ensure_fixture, fixture_path
 
-    src = ensure_deleted_sq_ivf_index(spark, sf_dir, table, n_centroids)
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"sqivfdelc_{table}_{tag}_{n_centroids}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != SQ_IVF_FORMAT
-        or not os.path.exists(os.path.join(path, "cells_sq", "_SUCCESS"))
-    ):
-        import shutil
+    codec = codec or RAW
+    src = ensure_deleted_ivf_index(spark, sf_dir, table, n_centroids, codec=codec)
+    path = fixture_path(spark, sf_dir, f"{codec.prefix}ivfdelc", table, n_centroids)
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        lambda: compact_ivf_index(spark, src, path),
+        fields=(codec.format,),
+        complete=lambda: os.path.exists(os.path.join(path, codec.cells, "_SUCCESS")),
+    )
 
-        shutil.rmtree(path, ignore_errors=True)
-        compact_sq_ivf_index(spark, src, path)
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {SQ_IVF_FORMAT}")
-    return path
+
+def ensure_rebuilt_ivf_index(
+    spark,
+    sf_dir: str,
+    table: str = "embeddings",
+    n_centroids: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> str:
+    """Fixture for the REBUILD query: a full drifted lifecycle — built
+    on 80 % (codebook frozen from that subset), the remaining fifth
+    appended as a delta, every ``id % 7 == 3`` tombstoned — then
+    :func:`rebuild_ivf_index` re-trains in place. The served index has
+    ONE segment, no tombstones, and a codebook re-drawn from the LIVE
+    corpus, so the oracle is the from-scratch derivation over
+    corpus-minus-deleted with centroids drawn from that same live set
+    (NOT the 80 % base — that is exactly what a rebuild moves)."""
+    import os
+    import shutil
+
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
+
+    path = fixture_path(spark, sf_dir, "ivfreb", table, n_centroids)
+
+    def build():
+        for n in range(100):  # prior retired copies of this fixture
+            old = f"{path}.old.{n}"
+            if not os.path.exists(old):
+                break
+            shutil.rmtree(old, ignore_errors=True)
+        vecs = load_table(spark, sf_dir, table)
+        build_ivf_index(
+            vecs.filter(F.col(id_col) % 5 != 0), path, n_centroids, id_col, vec_col
+        )
+        append_to_ivf_index(
+            vecs.filter(F.col(id_col) % 5 == 0), path, id_col, vec_col
+        )
+        delete_from_ivf_index(
+            spark, path, vecs.filter(F.col(id_col) % 7 == 3).select(id_col), id_col
+        )
+        rebuild_ivf_index(spark, path, n_centroids)
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(IVF_INDEX_FORMAT,),
+        complete=lambda: os.path.exists(os.path.join(path, "cells", "_SUCCESS")),
+    )
+
+
+def ensure_streamed_ivf_index(
+    spark,
+    sf_dir: str,
+    table: str = "embeddings",
+    n_centroids: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> str:
+    """Streaming-ingested twin of :func:`ensure_ivf_appended_index`
+    (the q106 pattern on the dense route): the base index is built on
+    80 % of the vectors, and the remaining fifth arrives through a real
+    ``readStream`` file source whose foreachBatch sink lands each
+    micro-batch as an epoch-keyed delta segment (replays idempotent —
+    exactly-once index contents). The checkpoint lives inside the index
+    dir and dies with it."""
+    import os
+
+    from plumberapp_spark.session import (
+        ensure_fixture,
+        ensure_read_confs,
+        fixture_path,
+        load_table,
+    )
+
+    path = fixture_path(spark, sf_dir, "ivfst", table, n_centroids)
+
+    def build():
+        vecs = load_table(spark, sf_dir, table)
+        build_ivf_index(
+            vecs.filter(F.col(id_col) % 5 != 0), path, n_centroids, id_col, vec_col
+        )
+        ensure_read_confs(spark)
+        schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+        stream = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .load(f"{sf_dir}/{table}.*")
+        )
+
+        def _sink(batch_df, epoch_id: int) -> None:
+            delta = batch_df.filter(F.col(id_col) % 5 == 0)
+            if delta.limit(1).count() == 0:
+                return
+            append_to_ivf_index(
+                delta,
+                path,
+                id_col,
+                vec_col,
+                name=f"delta_e{epoch_id:09d}",
+                skip_if_complete=True,
+            )
+
+        q = (
+            stream.writeStream.foreachBatch(_sink)
+            .option("checkpointLocation", os.path.join(path, "_checkpoint"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(IVF_INDEX_FORMAT,),
+        complete=lambda: bool(_ivf_delta_dirs(path, RAW)),
+    )

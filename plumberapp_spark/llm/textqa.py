@@ -824,30 +824,19 @@ def ensure_unigram_lm(
     differs from the current one (sidecar comparison — immune to
     same-granule in-place rewrites)."""
     import os
-    import re
-    from urllib.parse import urlparse
 
-    from plumberapp_spark.session import _path_mtime, load_table
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"unigram_{table}_{tag}_{vocab_size}")
-    marker = os.path.join(path, "scalars", "_SUCCESS")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded = None
-    try:
-        with open(sidecar) as fh:
-            recorded = float(fh.read().strip())
-    except (OSError, ValueError):
-        recorded = None
-    if not os.path.exists(marker) or recorded is None or recorded != source_mtime:
-        build_unigram_lm(
+    path = fixture_path(spark, sf_dir, "unigram", table, vocab_size)
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        lambda: build_unigram_lm(
             load_table(spark, sf_dir, table), path, text_col, vocab_size
-        )
-        with open(sidecar, "w") as fh:
-            fh.write(repr(source_mtime))
-    return path
+        ),
+        complete=lambda: os.path.exists(os.path.join(path, "scalars", "_SUCCESS")),
+    )
 
 
 def _load_unigram_lm(spark, path: str) -> tuple[dict[str, int], int, int]:
@@ -1336,34 +1325,11 @@ def ensure_deleted_bigram_lm(
     ``doc_id % 7 == 3`` as one NEGATIVE segment — the deleted set cuts
     across both positive segments, so the merge exercises real
     cancellation (counts reaching zero must vanish)."""
-    import os
-    import re as _re
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
+    path = fixture_path(spark, sf_dir, "bglmdel", table)
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"bglmdel_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != BIGRAM_LM_FORMAT
-        or len(_bigram_segments(path)) < 3
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build():
         docs = load_table(spark, sf_dir, table)
         build_bigram_lm(docs.filter(F.col(id_col) % 5 != 0), path, text_col, id_col)
         append_bigram_segment(
@@ -1372,9 +1338,15 @@ def ensure_deleted_bigram_lm(
         delete_bigram_docs(
             docs.filter(F.col(id_col) % 7 == 3), path, text_col, id_col
         )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {BIGRAM_LM_FORMAT}")
-    return path
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(BIGRAM_LM_FORMAT,),
+        complete=lambda: len(_bigram_segments(path)) >= 3,
+    )
 
 
 def ensure_bigram_lm(
@@ -1390,34 +1362,11 @@ def ensure_bigram_lm(
     APPENDED) so serving exercises a real multi-segment merge while
     the union is exactly the full table — q110's oracle applies
     verbatim."""
-    import os
-    import re as _re
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
+    path = fixture_path(spark, sf_dir, "bglm", table)
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"bglm_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != BIGRAM_LM_FORMAT
-        or len(_bigram_segments(path)) < 2
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build():
         docs = load_table(spark, sf_dir, table)
         build_bigram_lm(
             docs.filter(F.col(id_col) % 5 != 0), path, text_col, id_col
@@ -1425,9 +1374,15 @@ def ensure_bigram_lm(
         append_bigram_segment(
             docs.filter(F.col(id_col) % 5 == 0), path, text_col, id_col
         )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {BIGRAM_LM_FORMAT}")
-    return path
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(BIGRAM_LM_FORMAT,),
+        complete=lambda: len(_bigram_segments(path)) >= 2,
+    )
 
 
 # -- segmented unigram LM (round 11: maintenance parity, VERDICT r10 #6) ---
@@ -1632,34 +1587,11 @@ def ensure_segmented_unigram_lm(
     APPENDED) so serving exercises a real multi-segment merge while the
     union is exactly the full table — q77/q96's oracle applies
     verbatim."""
-    import os
-    import re as _re
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
+    path = fixture_path(spark, sf_dir, "uglm", table)
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"uglm_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != UNIGRAM_LM_FORMAT
-        or len(_unigram_segments(path)) < 2
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build():
         docs = load_table(spark, sf_dir, table)
         build_segmented_unigram_lm(
             docs.filter(F.col(id_col) % 5 != 0), path, text_col
@@ -1667,9 +1599,15 @@ def ensure_segmented_unigram_lm(
         append_unigram_segment(
             docs.filter(F.col(id_col) % 5 == 0), path, text_col
         )
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {UNIGRAM_LM_FORMAT}")
-    return path
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(UNIGRAM_LM_FORMAT,),
+        complete=lambda: len(_unigram_segments(path)) >= 2,
+    )
 
 
 def ensure_deleted_unigram_lm(
@@ -1683,40 +1621,23 @@ def ensure_deleted_unigram_lm(
     followed by a takedown of every ``doc_id % 7 == 3`` as one NEGATIVE
     segment — the deleted set cuts across both positive segments, so
     the merge exercises real cancellation."""
-    import os
-    import re as _re
-    from urllib.parse import urlparse
+    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
-    from plumberapp_spark.session import _path_mtime, load_table
+    path = fixture_path(spark, sf_dir, "uglmdel", table)
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    path = os.path.join(wh, f"uglmdel_{table}_{tag}")
-    sidecar = os.path.join(path, "source_mtime.txt")
-    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
-    recorded, rec_format = None, None
-    try:
-        with open(sidecar) as fh:
-            parts = fh.read().split()
-            recorded = float(parts[0])
-            rec_format = int(parts[1])
-    except (OSError, ValueError, IndexError):
-        recorded = None
-    if (
-        recorded is None
-        or recorded != source_mtime
-        or rec_format != UNIGRAM_LM_FORMAT
-        or len(_unigram_segments(path)) < 3
-    ):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build():
         docs = load_table(spark, sf_dir, table)
         build_segmented_unigram_lm(
             docs.filter(F.col(id_col) % 5 != 0), path, text_col
         )
         append_unigram_segment(docs.filter(F.col(id_col) % 5 == 0), path, text_col)
         delete_unigram_docs(docs.filter(F.col(id_col) % 7 == 3), path, text_col)
-        with open(sidecar, "w") as fh:
-            fh.write(f"{source_mtime!r} {UNIGRAM_LM_FORMAT}")
-    return path
+
+    return ensure_fixture(
+        path,
+        sf_dir,
+        table,
+        build,
+        fields=(UNIGRAM_LM_FORMAT,),
+        complete=lambda: len(_unigram_segments(path)) >= 3,
+    )

@@ -3157,6 +3157,25 @@ def q123_unigram_lm_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_logprob_score_segmented(spark, path, docs)
 
 
+def _coded_ivf_serve(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    """The coded-index serve every SQ/PQ query shares (q125, q127, q128,
+    q131, q133, q134): the q54 query sample (``vec_id % 50 == 0``), k=5
+    over nprobe=2 probed cells, a top-20 shortlist reranked exactly
+    against the full-precision table."""
+    from plumberapp_spark.llm.similarity import ivf_topk_indexed
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return ivf_topk_indexed(
+        spark,
+        path,
+        emb.filter(F.col("vec_id") % 50 == 0),
+        k=5,
+        nprobe=2,
+        corpus=emb,
+        rerank=20,
+    )
+
+
 # The scalar-quantization CTE block shared by q125/q126: per-dim
 # symmetric max-|v| scales, code = floor(v/s*127 + 0.5), dequantized
 # approximation = code*s/127. floor(x+0.5) — not round() — so numpy,
@@ -3234,22 +3253,10 @@ def q125_sq_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned scans + one window cut + a Catalyst-side rerank.
     Quantization rule (per-dim max-|v| scales, floor-half-up) is
     IEEE-deterministic, so the oracle replays the entire derivation."""
-    from plumberapp_spark.llm.similarity import (
-        ensure_sq_ivf_index,
-        sq_ivf_topk_indexed,
-    )
+    from plumberapp_spark.llm.similarity import SQ, ensure_ivf_index
 
-    path = ensure_sq_ivf_index(spark, sf_dir, "embeddings", n_centroids=16)
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sq_ivf_topk_indexed(
-        spark,
-        path,
-        emb.filter(F.col("vec_id") % 50 == 0),
-        emb,
-        k=5,
-        nprobe=2,
-        rerank=20,
-    )
+    path = ensure_ivf_index(spark, sf_dir, "embeddings", n_centroids=16, codec=SQ)
+    return _coded_ivf_serve(spark, sf_dir, path)
 
 
 _SQ_STATS_ORACLE = f"""
@@ -3357,22 +3364,12 @@ def q127_sq_serve_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shortlist cut. The oracle replays the whole frozen-quantizer
     derivation on corpus-minus-deleted — the hash proves deletes are
     exact and appends never requantize anything."""
-    from plumberapp_spark.llm.similarity import (
-        ensure_deleted_sq_ivf_index,
-        sq_ivf_topk_indexed,
-    )
+    from plumberapp_spark.llm.similarity import SQ, ensure_deleted_ivf_index
 
-    path = ensure_deleted_sq_ivf_index(spark, sf_dir, "embeddings", n_centroids=16)
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sq_ivf_topk_indexed(
-        spark,
-        path,
-        emb.filter(F.col("vec_id") % 50 == 0),
-        emb,
-        k=5,
-        nprobe=2,
-        rerank=20,
+    path = ensure_deleted_ivf_index(
+        spark, sf_dir, "embeddings", n_centroids=16, codec=SQ
     )
+    return _coded_ivf_serve(spark, sf_dir, path)
 
 
 @register("q128_sq_compact_after_delete", oracle=_SQ_DELETED_ORACLE)
@@ -3384,22 +3381,12 @@ def q128_sq_compact_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     a probe can observe, the q117/q116 twin on the SQ layout. At 100 TB
     this is what bounds delta fan-out: probe IO returns to
     nprobe/n_centroids of ONE int8 relation."""
-    from plumberapp_spark.llm.similarity import (
-        ensure_compacted_sq_ivf_index,
-        sq_ivf_topk_indexed,
-    )
+    from plumberapp_spark.llm.similarity import SQ, ensure_compacted_ivf_index
 
-    path = ensure_compacted_sq_ivf_index(spark, sf_dir, "embeddings", n_centroids=16)
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sq_ivf_topk_indexed(
-        spark,
-        path,
-        emb.filter(F.col("vec_id") % 50 == 0),
-        emb,
-        k=5,
-        nprobe=2,
-        rerank=20,
+    path = ensure_compacted_ivf_index(
+        spark, sf_dir, "embeddings", n_centroids=16, codec=SQ
     )
+    return _coded_ivf_serve(spark, sf_dir, path)
 
 
 # ---- phrase retrieval (positional index, round 12) -------------------
@@ -3619,19 +3606,13 @@ def q131_pq_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-precision table. At 100 TB the code store is ~0.8 % of the
     corpus bytes and probe IO shrinks by the same factor; recall loss
     vs SQ is the price, measured by the q72 recall monitor."""
-    from plumberapp_spark.llm.pq import ensure_pq_ivf_index, pq_ivf_topk_indexed
+    from plumberapp_spark.llm.pq import PQCodec
+    from plumberapp_spark.llm.similarity import ensure_ivf_index
 
-    path = ensure_pq_ivf_index(spark, sf_dir, "embeddings", n_centroids=16)
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ivf_topk_indexed(
-        spark,
-        path,
-        emb.filter(F.col("vec_id") % 50 == 0),
-        emb,
-        k=5,
-        nprobe=2,
-        rerank=20,
+    path = ensure_ivf_index(
+        spark, sf_dir, "embeddings", n_centroids=16, codec=PQCodec()
     )
+    return _coded_ivf_serve(spark, sf_dir, path)
 
 
 _PQ_STATS_ORACLE = f"""
@@ -3742,22 +3723,13 @@ def q133_pq_serve_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta, and serving anti-joins the tombstones inside the pruned ADC
     probe. The oracle is the full corpus-minus-deleted derivation —
     hash-green means append, delete, and ADC compose losslessly."""
-    from plumberapp_spark.llm.pq import (
-        ensure_deleted_pq_ivf_index,
-        pq_ivf_topk_indexed,
-    )
+    from plumberapp_spark.llm.pq import PQCodec
+    from plumberapp_spark.llm.similarity import ensure_deleted_ivf_index
 
-    path = ensure_deleted_pq_ivf_index(spark, sf_dir, "embeddings", n_centroids=16)
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ivf_topk_indexed(
-        spark,
-        path,
-        emb.filter(F.col("vec_id") % 50 == 0),
-        emb,
-        k=5,
-        nprobe=2,
-        rerank=20,
+    path = ensure_deleted_ivf_index(
+        spark, sf_dir, "embeddings", n_centroids=16, codec=PQCodec()
     )
+    return _coded_ivf_serve(spark, sf_dir, path)
 
 
 @register("q134_pq_compact_after_delete", oracle=_PQ_DELETED_ORACLE)
@@ -3769,19 +3741,10 @@ def q134_pq_compact_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ADC probe can observe. At 100 TB this bounds delta fan-out:
     probe IO returns to nprobe/n_centroids of ONE 8-byte-code
     relation."""
-    from plumberapp_spark.llm.pq import (
-        ensure_compacted_pq_ivf_index,
-        pq_ivf_topk_indexed,
-    )
+    from plumberapp_spark.llm.pq import PQCodec
+    from plumberapp_spark.llm.similarity import ensure_compacted_ivf_index
 
-    path = ensure_compacted_pq_ivf_index(spark, sf_dir, "embeddings", n_centroids=16)
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ivf_topk_indexed(
-        spark,
-        path,
-        emb.filter(F.col("vec_id") % 50 == 0),
-        emb,
-        k=5,
-        nprobe=2,
-        rerank=20,
+    path = ensure_compacted_ivf_index(
+        spark, sf_dir, "embeddings", n_centroids=16, codec=PQCodec()
     )
+    return _coded_ivf_serve(spark, sf_dir, path)

@@ -35,6 +35,15 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _ui_enabled(value: str | None) -> str:
+    """``SPARK_GRAFT_UI`` as the ``spark.ui.enabled`` value Spark
+    accepts: ``1``/``true``/``yes``/``on`` in any case enable the UI,
+    anything else (unset included) disables it — a typo never fails the
+    session build."""
+    on = (value or "").strip().lower() in {"1", "true", "yes", "on"}
+    return "true" if on else "false"
+
+
 def get_spark(app_name: str = "plumberapp_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -56,7 +65,7 @@ def get_spark(app_name: str = "plumberapp_spark", shuffle_partitions: int | None
         # Off for bench/driver runs (default); SPARK_GRAFT_UI=true turns
         # the UI on for ad-hoc profiling (tools/stage_profile.py reads
         # per-stage metrics from its REST API — guide §7.1)
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", _ui_enabled(os.environ.get("SPARK_GRAFT_UI")))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Managed-table warehouse (bucketed tables, sources/bucketing.py)
@@ -322,6 +331,57 @@ def _path_mtime(path: str) -> float:
         return _scan(path, 1, st.st_mtime)
     except OSError:
         return -1.0
+
+
+def fixture_path(spark, sf_dir: str, kind: str, table: str, *params) -> str:
+    """Warehouse path of a build-once fixture:
+    ``{warehouse}/{kind}_{table}_{sfdir}[_{param}...]`` — keyed by the
+    source table's scale directory, so fixtures of different scales
+    coexist in one warehouse."""
+    import re
+    from urllib.parse import urlparse
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "spark-warehouse"
+    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    return os.path.join(wh, "_".join([kind, table, tag, *map(str, params)]))
+
+
+def ensure_fixture(path: str, sf_dir: str, table: str, build, complete, fields=()) -> str:
+    """The freshness contract every ``ensure_*`` fixture shares: the
+    sidecar ``{path}/source_mtime.txt`` records the source table's mtime
+    OBSERVED AT BUILD TIME (:func:`_path_mtime`, which catches in-place
+    part-file rewrites) plus ``fields`` — a layout format, a segment
+    count. Unless the sidecar matches the current values exactly and
+    ``complete()`` (the fixture's own completeness check: a marker, a
+    delta or tombstone present) holds, the directory is wiped and
+    ``build()`` recreates it. Comparing recorded-vs-current mtime, not
+    marker-vs-source, is immune to 1 s-granularity filesystems where a
+    rewrite lands in the marker's mtime granule (ADVICE r7); recording
+    the format makes a layout change rebuild instead of failing at
+    serve time (VERDICT r8 #4). ``fields`` may be a callable: it is
+    evaluated for the check and again after the build (a segment count
+    is known only then). Returns ``path``."""
+    import shutil
+
+    source_mtime = _path_mtime(f"{sf_dir}/{table}.parquet")
+
+    def stamp() -> str:
+        vals = fields() if callable(fields) else fields
+        return " ".join([repr(source_mtime), *map(str, vals)])
+
+    sidecar = os.path.join(path, "source_mtime.txt")
+    try:
+        with open(sidecar) as fh:
+            fresh = fh.read() == stamp()
+    except OSError:
+        fresh = False
+    if fresh and complete():
+        return path
+    shutil.rmtree(path, ignore_errors=True)
+    build()
+    with open(sidecar, "w") as fh:
+        fh.write(stamp())
+    return path
 
 
 def _purge_stopped_sessions() -> None:

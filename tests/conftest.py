@@ -18,11 +18,26 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 # bench keeps the driver-contract `local[$SPARK_GRAFT_CPUS]` session —
 # this knob is test-session-only, set before any get_spark() call).
 os.environ["SPARK_GRAFT_CPUS"] = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+# The session's default driver heap (48g) exceeds a small host's RAM, and
+# with that much headroom the JVM grows instead of collecting: one full
+# suite run reached 14.5 GB RSS and was OOM-killed on a 15 GB host. The
+# fixtures are KB-sized, so the test session caps the heap.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 from plumberapp_spark import get_spark  # noqa: E402
 from plumberapp_spark.session import TABLES  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def ivf_codec(name: str):
+    """The IVF cell codec a codec-parametrized test names: ``raw``
+    float cells, ``sq`` int8 scalar quantization, or ``pq`` product
+    quantization at its defaults (8 subspaces x 16 entries)."""
+    from plumberapp_spark.llm.pq import PQCodec
+    from plumberapp_spark.llm.similarity import RAW, SQ
+
+    return {"raw": RAW, "sq": SQ, "pq": PQCodec()}[name]
 
 
 @pytest.fixture(scope="session")

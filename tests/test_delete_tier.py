@@ -212,6 +212,17 @@ def test_ivf_maybe_compact_bounds_streaming_fanout(spark, tmp_path):
     """20 epoch-keyed appends (the q112 shape) then the size-bounded
     policy: fan-out collapses to zero deltas, serving unchanged, the
     swap hook sees (compacted, live) when supplied."""
+    _check_maybe_compact_bounds(spark, tmp_path, "raw")
+
+
+@pytest.mark.parametrize("codec", ["sq", "pq"])
+def test_coded_ivf_maybe_compact_bounds_streaming_fanout(spark, tmp_path, codec):
+    """The same bound and swap hook on the compressed layouts: the
+    codec changes the cells relation, never the maintenance policy."""
+    _check_maybe_compact_bounds(spark, tmp_path, codec)
+
+
+def _check_maybe_compact_bounds(spark, tmp_path, codec):
     from plumberapp_spark.llm.similarity import (
         _ivf_delta_dirs,
         append_to_ivf_index,
@@ -219,10 +230,14 @@ def test_ivf_maybe_compact_bounds_streaming_fanout(spark, tmp_path):
         ivf_topk_indexed,
         maybe_compact_ivf,
     )
+    from tests.conftest import ivf_codec
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     path = str(tmp_path / "idx")
-    build_ivf_index(emb.filter(F.col("vec_id") % 21 == 0), path, n_centroids=4)
+    build_ivf_index(
+        emb.filter(F.col("vec_id") % 21 == 0), path, n_centroids=4,
+        codec=ivf_codec(codec),
+    )
     for epoch in range(20):
         append_to_ivf_index(
             emb.filter(F.col("vec_id") % 21 == epoch + 1),
@@ -232,17 +247,21 @@ def test_ivf_maybe_compact_bounds_streaming_fanout(spark, tmp_path):
         )
     assert len(_ivf_delta_dirs(path)) == 20
     q = emb.filter(F.col("vec_id") % 50 == 0).limit(5)
-    before = sorted(
-        tuple(r) for r in ivf_topk_indexed(spark, path, q, k=3, nprobe=2).collect()
-    )
+
+    def serve():
+        return sorted(
+            tuple(r)
+            for r in ivf_topk_indexed(
+                spark, path, q, k=3, nprobe=2, corpus=emb
+            ).collect()
+        )
+
+    before = serve()
     assert maybe_compact_ivf(spark, path, max_deltas=32) is None  # under bound
     retired = maybe_compact_ivf(spark, path, max_deltas=8)
     assert retired is not None
     assert len(_ivf_delta_dirs(path)) == 0, "fan-out must collapse"
-    after = sorted(
-        tuple(r) for r in ivf_topk_indexed(spark, path, q, k=3, nprobe=2).collect()
-    )
-    assert after == before
+    assert serve() == before
 
     # custom swap hook: no filesystem mutation by maybe_compact itself
     import os
@@ -447,6 +466,15 @@ def test_autocompact_preserves_exactly_once_across_replay(spark, tmp_path):
 
 
 def test_ivf_absorbed_ledger_preserves_exactly_once(spark, tmp_path):
+    _check_absorbed_ledger(spark, tmp_path, "raw")
+
+
+@pytest.mark.parametrize("codec", ["sq", "pq"])
+def test_coded_ivf_absorbed_ledger_preserves_exactly_once(spark, tmp_path, codec):
+    _check_absorbed_ledger(spark, tmp_path, codec)
+
+
+def _check_absorbed_ledger(spark, tmp_path, codec):
     from plumberapp_spark.llm.similarity import (
         _ivf_absorbed,
         _read_ivf_cells,
@@ -454,10 +482,14 @@ def test_ivf_absorbed_ledger_preserves_exactly_once(spark, tmp_path):
         build_ivf_index,
         maybe_compact_ivf,
     )
+    from tests.conftest import ivf_codec
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     path = str(tmp_path / "idx")
-    build_ivf_index(emb.filter(F.col("vec_id") % 3 == 0), path, n_centroids=4)
+    build_ivf_index(
+        emb.filter(F.col("vec_id") % 3 == 0), path, n_centroids=4,
+        codec=ivf_codec(codec),
+    )
     for epoch in (1, 2):
         append_to_ivf_index(
             emb.filter(F.col("vec_id") % 3 == epoch), path,

@@ -63,6 +63,14 @@ EAGER_ALLOWED = {
     "q95_bm25_indexed_search": "index materialization + bucket-list collect",
     "q96_unigram_logprob_indexed": "LM materialization + vocab collect",
     "q97_perplexity_buckets_indexed": "LM materialization + vocab collect",
+    # direct-form retrieval materializes its persisted Arrow tf pass
+    # before building the scored plan, so the plan's concurrent
+    # broadcast builds cannot race the lazy persist and re-run the pass.
+    # Measured on corpus_batch (4 seeds, interleaved): the lazy
+    # crossJoin-scalars form ran 18 jobs and ~2.5 s executor time per
+    # q83 call against 15 jobs and ~1.1 s eager, wall not faster
+    "q80_tfidf_search": "persisted tf pass materialized before the scored plan",
+    "q83_bm25_search": "persisted tf pass + corpus scalars materialized before the scored plan",
     # q98's dense route collects the bounded query matrix (ANN contract)
     "q98_hybrid_search": "query-matrix collect (bounded broadcast contract)",
     "q99_hybrid_indexed_search": "index materialization + bounded collects",

@@ -121,6 +121,17 @@ def test_ivf_swap_crash_rolls_forward(spark, tmp_path):
     """The IVF twin: _read_ivf_cells (every probe's entry point) runs
     the same recovery, so a crashed maybe_compact_ivf swap heals on the
     next probe/append instead of serving a missing path."""
+    _check_ivf_swap_crash_rolls_forward(spark, tmp_path, "raw")
+
+
+@pytest.mark.parametrize("codec", ["sq", "pq"])
+def test_coded_ivf_swap_crash_rolls_forward(spark, tmp_path, codec):
+    """Swap-intent recovery on the compressed layouts: the recovered
+    path must also name the right codec (its cells relation) again."""
+    _check_ivf_swap_crash_rolls_forward(spark, tmp_path, codec)
+
+
+def _check_ivf_swap_crash_rolls_forward(spark, tmp_path, codec):
     from plumberapp_spark.llm.similarity import (
         _read_ivf_cells,
         append_to_ivf_index,
@@ -128,15 +139,26 @@ def test_ivf_swap_crash_rolls_forward(spark, tmp_path):
         compact_ivf_index,
         ivf_topk_indexed,
     )
+    from tests.conftest import SF_DIR, ivf_codec
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     path = str(tmp_path / "ivf")
-    build_ivf_index(emb.filter(F.col("vec_id") % 5 != 0), path, n_centroids=8)
+    build_ivf_index(
+        emb.filter(F.col("vec_id") % 5 != 0), path, n_centroids=8,
+        codec=ivf_codec(codec),
+    )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 5 == 0), path)
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    before = sorted(
-        tuple(r) for r in ivf_topk_indexed(spark, path, q, k=3, nprobe=2).collect()
-    )
+
+    def serve():
+        return sorted(
+            tuple(r)
+            for r in ivf_topk_indexed(
+                spark, path, q, k=3, nprobe=2, corpus=emb
+            ).collect()
+        )
+
+    before = serve()
 
     compact_ivf_index(spark, path, f"{path}.compact")
     with open(f"{path}.swapintent", "w") as fh:
@@ -146,10 +168,7 @@ def test_ivf_swap_crash_rolls_forward(spark, tmp_path):
     n = _read_ivf_cells(spark, path).count()
     assert n == emb.count()
     assert not os.path.exists(f"{path}.swapintent")
-    after = sorted(
-        tuple(r) for r in ivf_topk_indexed(spark, path, q, k=3, nprobe=2).collect()
-    )
-    assert after == before
+    assert serve() == before
 
 
 # ---- empty-index IVF compaction (ADVICE r10, low) ------------------------
@@ -275,6 +294,30 @@ def test_vocab_above_broadcast_ceiling_fails_loudly(spark, monkeypatch):
 
 
 # ---- rebuild_ivf_index (VERDICT r10 next-round #4) -----------------------
+@pytest.mark.parametrize("codec", ["sq", "pq"])
+def test_rebuild_rejects_coded_index(spark, tmp_path, codec):
+    """rebuild_ivf_index and codebook_drift_advice re-train from
+    full-precision vectors read back out of the cells; a coded index
+    holds only codes, so both must refuse instead of silently training
+    on them — and leave the index untouched."""
+    from plumberapp_spark.llm.similarity import (
+        build_ivf_index,
+        codebook_drift_advice,
+        rebuild_ivf_index,
+    )
+    from tests.conftest import SF_DIR, ivf_codec
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    path = str(tmp_path / "ivf")
+    build_ivf_index(emb, path, n_centroids=4, codec=ivf_codec(codec))
+    with pytest.raises(ValueError, match="full-precision"):
+        rebuild_ivf_index(spark, path)
+    with pytest.raises(ValueError, match="full-precision"):
+        codebook_drift_advice(spark, path, emb.limit(5))
+    assert not os.path.exists(f"{path}.compact")
+    assert os.path.isdir(os.path.join(path, ivf_codec(codec).cells))
+
+
 
 
 def test_rebuild_recovers_drift_recall(spark, tmp_path):

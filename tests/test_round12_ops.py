@@ -33,16 +33,10 @@ import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from plumberapp_spark.llm.pq import (  # noqa: E402
-    append_to_pq_ivf_index,
-    build_pq_ivf_index,
-    ensure_compacted_pq_ivf_index,
-    ensure_deleted_pq_ivf_index,
-    ensure_pq_ivf_index,
+    PQCodec,
     pq_compression_stats,
     pq_encode,
-    pq_ivf_topk_indexed,
     pq_reconstruct,
-    _read_pq_cells,
 )
 from plumberapp_spark.llm.positional import (  # noqa: E402
     build_positional_index,
@@ -52,12 +46,17 @@ from plumberapp_spark.llm.positional import (  # noqa: E402
     phrase_topk_indexed,
 )
 from plumberapp_spark.llm.similarity import (  # noqa: E402
+    SQ,
     ensure_ivf_index,
-    ensure_sq_ivf_index,
     ivf_topk_indexed,
 )
 from plumberapp_spark.session import load_table  # noqa: E402
 from tests.conftest import SF_DIR  # noqa: E402
+from tests.test_sq_ivf import (  # noqa: E402
+    check_append_idempotent_by_name,
+    check_lifecycle_delete_and_compact_parity,
+    check_probe_scan_prunes_cell_partitions,
+)
 
 
 def _dir_bytes(p: Path) -> int:
@@ -215,12 +214,14 @@ def test_pq_adc_identity_matches_reconstruction():
 def test_pq_full_rerank_equals_uncompressed(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    pq_path = ensure_pq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
+    pq_path = ensure_ivf_index(
+        spark, SF_DIR, "embeddings", n_centroids=16, codec=PQCodec()
+    )
     fp_path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
     got = sorted(
         tuple(r)
-        for r in pq_ivf_topk_indexed(
-            spark, pq_path, queries, emb, k=5, nprobe=2, rerank=10_000
+        for r in ivf_topk_indexed(
+            spark, pq_path, queries, k=5, nprobe=2, corpus=emb, rerank=10_000
         ).collect()
     )
     want = sorted(
@@ -231,8 +232,10 @@ def test_pq_full_rerank_equals_uncompressed(spark):
 
 
 def test_pq_cells_smaller_than_sq_cells(spark):
-    pq_path = ensure_pq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
-    sq_path = ensure_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
+    pq_path = ensure_ivf_index(
+        spark, SF_DIR, "embeddings", n_centroids=16, codec=PQCodec()
+    )
+    sq_path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16, codec=SQ)
     pq_bytes = _dir_bytes(Path(pq_path) / "cells_pq")
     sq_bytes = _dir_bytes(Path(sq_path) / "cells_sq")
     # 8 bytes/vec vs 64 bytes/vec of payload; parquet framing at 500
@@ -256,70 +259,12 @@ def test_pq_stats_card(spark):
 
 
 def test_pq_lifecycle_delete_and_compact_parity(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    seg = ensure_deleted_pq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
-    cmp_ = ensure_compacted_pq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
-    a = sorted(
-        tuple(r)
-        for r in pq_ivf_topk_indexed(
-            spark, seg, queries, emb, k=5, nprobe=2, rerank=20
-        ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in pq_ivf_topk_indexed(
-            spark, cmp_, queries, emb, k=5, nprobe=2, rerank=20
-        ).collect()
-    )
-    assert a == b and len(a) > 0
-    deleted = {r[0] for r in emb.filter("vec_id % 7 = 3").select("vec_id").collect()}
-    assert not deleted & {r[1] for r in a}
-    live = spark.read.parquet(f"{cmp_}/cells_pq")
-    assert live.filter(F.col("vec_id") % 7 == 3).count() == 0
-    assert not [
-        p for p in Path(cmp_).iterdir() if p.name.startswith("tomb_")
-    ]
+    check_lifecycle_delete_and_compact_parity(spark, "pq")
 
 
 def test_pq_append_idempotent_by_name(spark, tmp_path):
-    base = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "vec_id": [0, 1, 2, 3],
-                "embedding": [
-                    [1.0, 0.0, 0.0, 0.5],
-                    [0.0, 1.0, 0.5, 0.0],
-                    [0.5, 0.0, 1.0, 0.0],
-                    [0.0, 0.5, 0.0, 1.0],
-                ],
-            }
-        )
-    )
-    path = str(tmp_path / "pq")
-    build_pq_ivf_index(base, path, n_centroids=2, m_sub=2, ks=3)
-    delta = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [9], "embedding": [[0.3, 0.3, 0.3, 0.3]]})
-    )
-    append_to_pq_ivf_index(delta, path, name="delta_e01", skip_if_complete=True)
-    append_to_pq_ivf_index(delta, path, name="delta_e01", skip_if_complete=True)
-    assert _read_pq_cells(spark, path).filter(F.col("vec_id") == 9).count() == 1
+    check_append_idempotent_by_name(spark, tmp_path, PQCodec(m_sub=2, ks=3))
 
 
 def test_pq_probe_scan_prunes_cell_partitions(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = ensure_pq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
-    df = pq_ivf_topk_indexed(
-        spark,
-        path,
-        emb.filter(F.col("vec_id") % 250 == 0),
-        emb,
-        k=3,
-        nprobe=1,
-        rerank=10,
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m is not None and "_cell" in m.group(1), plan[:2000]
+    check_probe_scan_prunes_cell_partitions(spark, "pq")

@@ -27,17 +27,19 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from plumberapp_spark.llm.similarity import (  # noqa: E402
-    build_sq_ivf_index,
+    SQ,
+    _read_ivf_cells,
+    build_ivf_index,
     dequantize_codes,
+    ensure_compacted_ivf_index,
+    ensure_deleted_ivf_index,
     ensure_ivf_index,
-    ensure_sq_ivf_index,
     ivf_topk_indexed,
     quantize_codes,
     sq_compression_stats,
-    sq_ivf_topk_indexed,
 )
 from plumberapp_spark.session import load_table  # noqa: E402
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, ivf_codec  # noqa: E402
 
 
 def _dir_bytes(p: Path) -> int:
@@ -67,15 +69,15 @@ def test_quantize_rule_matches_documented_formula():
 def test_sq_search_with_full_rerank_equals_uncompressed(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    sq_path = ensure_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
+    sq_path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16, codec=SQ)
     fp_path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
     # rerank >= the largest cell -> the shortlist is the whole candidate
     # set, so both stages collapse to exact scoring over the same
     # probed candidates: bit-identical to the uncompressed index.
     got = sorted(
         tuple(r)
-        for r in sq_ivf_topk_indexed(
-            spark, sq_path, queries, emb, k=5, nprobe=2, rerank=10_000
+        for r in ivf_topk_indexed(
+            spark, sq_path, queries, k=5, nprobe=2, corpus=emb, rerank=10_000
         ).collect()
     )
     want = sorted(
@@ -88,10 +90,10 @@ def test_sq_search_with_full_rerank_equals_uncompressed(spark):
 def test_sq_search_production_rerank_high_recall(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    sq_path = ensure_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
+    sq_path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16, codec=SQ)
     fp_path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
-    got = sq_ivf_topk_indexed(
-        spark, sq_path, queries, emb, k=5, nprobe=2, rerank=20
+    got = ivf_topk_indexed(
+        spark, sq_path, queries, k=5, nprobe=2, corpus=emb, rerank=20
     ).collect()
     want = ivf_topk_indexed(spark, fp_path, queries, k=5, nprobe=2).collect()
     got_pairs = {(r[0], r[1]) for r in got}
@@ -108,7 +110,7 @@ def test_sq_search_production_rerank_high_recall(spark):
 
 def test_code_cells_smaller_than_float_cells(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
-    sq_path = ensure_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
+    sq_path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16, codec=SQ)
     fp_path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
     sq_bytes = _dir_bytes(Path(sq_path) / "cells_sq")
     fp_bytes = _dir_bytes(Path(fp_path) / "cells")
@@ -123,21 +125,28 @@ def test_code_cells_smaller_than_float_cells(spark, tmp_path):
 
 
 def test_sq_probe_scan_prunes_cell_partitions(spark):
+    check_probe_scan_prunes_cell_partitions(spark, "sq")
+
+
+def check_probe_scan_prunes_cell_partitions(spark, codec):
+    """Shared by the SQ and PQ twins: a coded probe's scan carries the
+    ``_cell`` partition filter, so probing 1 cell per query over a
+    handful of queries never lists every cell directory."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    path = ensure_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
-    df = sq_ivf_topk_indexed(
+    path = ensure_ivf_index(
+        spark, SF_DIR, "embeddings", n_centroids=16, codec=ivf_codec(codec)
+    )
+    df = ivf_topk_indexed(
         spark,
         path,
         emb.filter(F.col("vec_id") % 250 == 0),
-        emb,
         k=3,
         nprobe=1,
+        corpus=emb,
         rerank=10,
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "_cell" in plan  # partition filter reached the scan
-    # probing 1 cell per query over a handful of queries must not list
-    # every one of the 16 cell directories in the scan's partition count
     import re
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -167,60 +176,61 @@ def test_sq_rebuild_on_source_change(spark, tmp_path):
     src.mkdir()
     for t in ("embeddings",):
         shutil.copy(f"{SF_DIR}/{t}.parquet", src / f"{t}.parquet")
-    p1 = ensure_sq_ivf_index(spark, str(src), "embeddings", n_centroids=4)
+    p1 = ensure_ivf_index(spark, str(src), "embeddings", n_centroids=4, codec=SQ)
     m1 = os.path.getmtime(os.path.join(p1, "cells_sq", "_SUCCESS"))
-    p2 = ensure_sq_ivf_index(spark, str(src), "embeddings", n_centroids=4)
+    p2 = ensure_ivf_index(spark, str(src), "embeddings", n_centroids=4, codec=SQ)
     m2 = os.path.getmtime(os.path.join(p2, "cells_sq", "_SUCCESS"))
     assert p1 == p2 and m1 == m2  # warm: no rebuild
     os.utime(src / "embeddings.parquet")
-    ensure_sq_ivf_index(spark, str(src), "embeddings", n_centroids=4)
+    ensure_ivf_index(spark, str(src), "embeddings", n_centroids=4, codec=SQ)
     m3 = os.path.getmtime(os.path.join(p1, "cells_sq", "_SUCCESS"))
     assert m3 >= m1  # stale source: rebuilt
 
 
 def test_sq_query_contract_cap(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    path = ensure_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=4)
+    path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=4, codec=SQ)
     with pytest.raises(ValueError, match="broadcastable"):
-        sq_ivf_topk_indexed(
-            spark, path, emb, emb, k=3, max_broadcast_queries=10
+        ivf_topk_indexed(
+            spark, path, emb, k=3, corpus=emb, max_broadcast_queries=10
         )
 
 
 def test_sq_lifecycle_delete_and_compact_parity(spark):
-    """Serving the segmented fixture (base + delta - tombstones) and
-    serving its compaction must be bit-identical — and both must match
-    the oracle semantics (covered by test_queries_oracle for q127/q128;
-    here we pin segmented == compacted directly)."""
-    from plumberapp_spark.llm.similarity import (
-        ensure_compacted_sq_ivf_index,
-        ensure_deleted_sq_ivf_index,
-    )
+    check_lifecycle_delete_and_compact_parity(spark, "sq")
+
+
+def check_lifecycle_delete_and_compact_parity(spark, codec):
+    """Shared by the SQ and PQ twins: serving the segmented fixture
+    (base + delta - tombstones) and serving its compaction must be
+    bit-identical — and both must match the oracle semantics (covered
+    by test_queries_oracle for q127/q128 and q133/q134; here we pin
+    segmented == compacted directly)."""
+    import pathlib
 
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    seg = ensure_deleted_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
-    cmp_ = ensure_compacted_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
-    a = sorted(
-        tuple(r)
-        for r in sq_ivf_topk_indexed(
-            spark, seg, queries, emb, k=5, nprobe=2, rerank=20
-        ).collect()
+    c = ivf_codec(codec)
+    seg = ensure_deleted_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16, codec=c)
+    cmp_ = ensure_compacted_ivf_index(
+        spark, SF_DIR, "embeddings", n_centroids=16, codec=c
     )
-    b = sorted(
-        tuple(r)
-        for r in sq_ivf_topk_indexed(
-            spark, cmp_, queries, emb, k=5, nprobe=2, rerank=20
-        ).collect()
-    )
+
+    def serve(path):
+        return sorted(
+            tuple(r)
+            for r in ivf_topk_indexed(
+                spark, path, queries, k=5, nprobe=2, corpus=emb, rerank=20
+            ).collect()
+        )
+
+    a, b = serve(seg), serve(cmp_)
     assert a == b and len(a) > 0
     # no deleted id is ever served
     deleted = {r[0] for r in emb.filter("vec_id % 7 = 3").select("vec_id").collect()}
     assert not deleted & {r[1] for r in a}
     # compaction physically dropped the tombstoned codes
-    import pathlib
-
-    live = spark.read.parquet(f"{cmp_}/cells_sq")
+    live = spark.read.parquet(f"{cmp_}/{c.cells}")
     assert live.filter(F.col("vec_id") % 7 == 3).count() == 0
     assert not [p for p in pathlib.Path(cmp_).iterdir() if p.name.startswith("tomb_")]
 
@@ -230,10 +240,7 @@ def test_sq_append_saturates_outside_frozen_scales(spark, tmp_path):
     ±127 (the documented saturation/drift rule), not overflow int8."""
     import pandas as pd
 
-    from plumberapp_spark.llm.similarity import (
-        append_to_sq_ivf_index,
-        _read_sq_cells,
-    )
+    from plumberapp_spark.llm.similarity import append_to_ivf_index
 
     base = spark.createDataFrame(
         pd.DataFrame(
@@ -244,13 +251,13 @@ def test_sq_append_saturates_outside_frozen_scales(spark, tmp_path):
         )
     )
     path = str(tmp_path / "sq")
-    build_sq_ivf_index(base, path, n_centroids=2)
+    build_ivf_index(base, path, n_centroids=2, codec=SQ)
     delta = spark.createDataFrame(
         pd.DataFrame({"vec_id": [10], "embedding": [[5.0, -5.0]]})
     )
-    append_to_sq_ivf_index(delta, path)
+    append_to_ivf_index(delta, path)
     row = (
-        _read_sq_cells(spark, path)
+        _read_ivf_cells(spark, path)
         .filter(F.col("vec_id") == 10)
         .select("_code")
         .collect()[0]
@@ -259,24 +266,37 @@ def test_sq_append_saturates_outside_frozen_scales(spark, tmp_path):
 
 
 def test_sq_append_idempotent_by_name(spark, tmp_path):
+    check_append_idempotent_by_name(spark, tmp_path, SQ)
+
+
+def check_append_idempotent_by_name(spark, tmp_path, codec):
+    """Shared by the SQ and PQ twins: a replayed epoch-named append is
+    a no-op on a coded index too."""
     import pandas as pd
 
-    from plumberapp_spark.llm.similarity import (
-        append_to_sq_ivf_index,
-        _read_sq_cells,
-    )
+    from plumberapp_spark.llm.similarity import append_to_ivf_index
 
     base = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [0, 1], "embedding": [[1.0, 0.0], [0.0, 1.0]]})
+        pd.DataFrame(
+            {
+                "vec_id": [0, 1, 2, 3],
+                "embedding": [
+                    [1.0, 0.0, 0.0, 0.5],
+                    [0.0, 1.0, 0.5, 0.0],
+                    [0.5, 0.0, 1.0, 0.0],
+                    [0.0, 0.5, 0.0, 1.0],
+                ],
+            }
+        )
     )
-    path = str(tmp_path / "sq")
-    build_sq_ivf_index(base, path, n_centroids=2)
+    path = str(tmp_path / "coded")
+    build_ivf_index(base, path, n_centroids=2, codec=codec)
     delta = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [5], "embedding": [[0.5, 0.5]]})
+        pd.DataFrame({"vec_id": [9], "embedding": [[0.3, 0.3, 0.3, 0.3]]})
     )
-    append_to_sq_ivf_index(delta, path, name="delta_e01", skip_if_complete=True)
-    append_to_sq_ivf_index(delta, path, name="delta_e01", skip_if_complete=True)
-    assert _read_sq_cells(spark, path).filter(F.col("vec_id") == 5).count() == 1
+    append_to_ivf_index(delta, path, name="delta_e01", skip_if_complete=True)
+    append_to_ivf_index(delta, path, name="delta_e01", skip_if_complete=True)
+    assert _read_ivf_cells(spark, path).filter(F.col("vec_id") == 9).count() == 1
 
 
 def test_sq_filtered_search_pre_k(spark):
@@ -284,15 +304,15 @@ def test_sq_filtered_search_pre_k(spark):
     served neighbor satisfies the predicate and queries still get up to
     k filtered hits."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    path = ensure_sq_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16)
+    path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=16, codec=SQ)
     allowed = emb.filter(F.col("label") % 4 == 0).select("vec_id")
-    got = sq_ivf_topk_indexed(
+    got = ivf_topk_indexed(
         spark,
         path,
         emb.filter(F.col("vec_id") % 50 == 0),
-        emb,
         k=5,
         nprobe=2,
+        corpus=emb,
         rerank=20,
         id_filter=allowed,
     ).collect()
