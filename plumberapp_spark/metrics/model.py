@@ -30,9 +30,9 @@ class NodeStats:
     is_random_udf: bool
     is_random_udf_downstream: bool
     cached: bool
-    observed_rate: float  # elements/sec out of this node's prefix
-    processing_time: float  # cumulative prefix wall seconds
-    self_processing_time: float  # prefix minus slowest input prefix
+    observed_rate: float  # elements produced / processing_time
+    processing_time: float  # self time + slowest input's processing_time (critical path)
+    self_processing_time: float  # measured: count() of this node over its inputs' cached frames
     p_busy: float  # self time / pipeline total
     expected_per_core_max_rate: float
     expected_parallel_max_rate: float

@@ -1,21 +1,32 @@
-"""Pipeline profiler: runs each plan prefix under a timer and assembles
-the per-operator :class:`MetricsModel`.
+"""Pipeline profiler: materializes each plan stage once, in topological
+order, and assembles the per-operator :class:`MetricsModel`.
 
-The reference gets per-op counters from the tf.data runtime's stats dump
-(pa/gen_util.py:61-78 → stats.pb); Spark exposes no per-operator clock, so
-we profile the way the reference's *benchmark* layer does — timed
-consumption of each prefix (pa/gen_util.py:253-506), attributing
-self-time as prefix minus slowest input prefix. O(nodes) actions; at real
-scale run it on a sampled prefix (``sample_rows``), which is exactly the
-reference's take(n)-sandwich benchmarking trick
-(pa/pipeline_optimizer.py:151-192).
+The reference gets per-op counters from one instrumented run of the
+pipeline (the tf.data runtime's stats dump, pa/gen_util.py:61-78 →
+stats.pb). Spark exposes no per-operator clock, so the profiler makes the
+stage boundaries real instead: it builds each node from its inputs'
+already-materialized frames (the same build rule as ``Pipeline.to_df``),
+persists it and times its ``count()``. That time is the node's self time,
+measured directly; its processing time is the self time plus the slowest
+input's processing time (the critical path), so the sink's processing
+time is the pipeline's duration. Each stage is computed once — one
+``count()`` per node — and a node's frame is unpersisted as soon as its
+last consumer has been counted, so at most the frontier stays cached.
+
+``sample_rows`` limits each node's output to that many rows before it is
+persisted, so every downstream stage is profiled on the sample its inputs
+kept: the reference's take(n)-sandwich benchmarking trick
+(pa/pipeline_optimizer.py:151-192), applied at every stage. Rates and
+ratios are then those of the sampled stream.
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 from plumberapp_spark.plans.nodes import PARALLELIZABLE_OPS, Pipeline, PlanNode
 from plumberapp_spark.metrics.model import MetricsModel, NodeStats
@@ -50,48 +61,74 @@ class PipelineProfiler:
         consumers: dict[str, str] = {}
         for child, parent in pipeline.edges():
             consumers[child] = parent
+        # consumers of each node not yet counted; a node's frame is
+        # released when this reaches zero (the sink's starts at zero)
+        pending: Counter[int] = Counter(id(i) for n in nodes for i in n.inputs)
 
         tainted = pipeline.random_tainted()
-        prefix_time: dict[str, float] = {}
-        prefix_rows: dict[str, int] = {}
+        default_par = self.spark.sparkContext.defaultParallelism
+        processing: dict[int, float] = {}
+        rows: dict[int, int] = {}
         stats: list[NodeStats] = []
-        # every persist the prefix builders perform is collected and
-        # unpersisted after the final prefix is timed — profiling must not
-        # leave MEMORY_AND_DISK entries behind in the session (the same
-        # hygiene node_bench.py applies per sweep cell)
-        own_caches: list = []
+        # Frames this profile persisted (by id), how many unreleased nodes
+        # hold each, and the one each node holds. ``cache``/``prefetch``
+        # nodes return their input's frame, so a frame is unpersisted
+        # only when its last holder is released. The build's own
+        # persists at ``cached`` nodes, and whatever is left if profiling
+        # stops early, are unpersisted at the end.
+        ours: dict[int, DataFrame] = {}
+        refs: Counter[int] = Counter()
+        holds: dict[int, int] = {}
+        built: list = []
 
-        for topo_idx, node in enumerate(nodes):
-            sub = Pipeline(node, pipeline._counter)
-            df = sub.to_df(self.spark, persisted_out=own_caches)
+        def release(node: PlanNode) -> None:
+            key = holds.pop(id(node), None)
+            if key is not None:
+                refs[key] -= 1
+                if refs[key] == 0:
+                    ours.pop(key).unpersist()
+
+        def measure(node: PlanNode, df: DataFrame) -> DataFrame:
             if sample_rows is not None:
                 df = df.limit(sample_rows)
             size_bytes = _plan_size_bytes(df)
+            if df.storageLevel == StorageLevel.NONE:
+                df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                ours[id(df)] = df
+            if id(df) in ours:
+                refs[id(df)] += 1
+                holds[id(node)] = id(df)
+
             t0 = time.perf_counter()
             n_rows = df.count()
-            dt = max(time.perf_counter() - t0, 1e-6)
-            prefix_time[node.name] = dt
-            prefix_rows[node.name] = n_rows
+            self_time = max(time.perf_counter() - t0, 1e-6)
+            processing[id(node)] = self_time + max(
+                (processing[id(i)] for i in node.inputs), default=0.0
+            )
+            rows[id(node)] = n_rows
+            for i in node.inputs:
+                pending[id(i)] -= 1
+                if pending[id(i)] == 0:
+                    release(i)
+            if pending[id(node)] == 0:
+                release(node)
 
-            in_rows = sum(prefix_rows[i.name] for i in node.inputs)
-            slowest_input = max((prefix_time[i.name] for i in node.inputs), default=0.0)
-            self_time = max(dt - slowest_input, 1e-6)
-            parallelism = node.parallelism or self.spark.sparkContext.defaultParallelism
-            rate = n_rows / dt
-            per_core = (n_rows / self_time) / parallelism if parallelism else 0.0
+            in_rows = sum(rows[id(i)] for i in node.inputs)
+            parallelism = node.parallelism or default_par
+            per_core = (n_rows / self_time) / parallelism
             stats.append(
                 NodeStats(
                     name=node.name,
                     op=node.op,
                     parent_name=consumers.get(node.name, ""),
-                    topo_idx=topo_idx,
+                    topo_idx=len(stats),
                     parallelism=parallelism,
                     is_parallel=node.op in PARALLELIZABLE_OPS,
                     is_random_udf=not node.deterministic,
                     is_random_udf_downstream=node.name in tainted,
                     cached=node.cached,
-                    observed_rate=rate,
-                    processing_time=dt,
+                    observed_rate=n_rows / processing[id(node)],
+                    processing_time=processing[id(node)],
                     self_processing_time=self_time,
                     p_busy=0.0,  # filled below once total known
                     expected_per_core_max_rate=per_core,
@@ -104,12 +141,13 @@ class PipelineProfiler:
                     num_cores_used=0.0,
                 )
             )
+            return df
 
-        for cached_df in own_caches:
-            try:
-                cached_df.unpersist()
-            except Exception:  # noqa: BLE001 — hygiene only
-                pass
+        try:
+            pipeline.to_df(self.spark, persisted_out=built, visit=measure)
+        finally:
+            for f in [*ours.values(), *built]:
+                f.unpersist()
 
         total_self = sum(s.self_processing_time for s in stats) or 1.0
         sink = stats[-1]

@@ -149,7 +149,7 @@ class Optimizer:
         pa/pipeline_optimizer_wrapper.py:365-459 → convex_solver): run
         the per-node ceiling sweep, convert cells to per-core service
         rates, and solve the Q2 LP on the MEASURED rates instead of the
-        profiler's prefix-difference estimates. The profiler still
+        profiler's one-pass self-time estimates. The profiler still
         supplies structure (topology, parallelizability, cache taint);
         only the rate column is overridden."""
         from plumberapp_spark.metrics.node_bench import (
@@ -262,20 +262,22 @@ class Optimizer:
         0.87× on the curation pipeline). Only overrides that RAISE an
         op's width above the session default (disk-underutilization
         scaling, skew spreading) actuate; sub-width θs stay visible in
-        ``advice.thetas``/``advice.lp``."""
-        out = pipeline
-        if advice.partitions:
-            width = self.spark.sparkContext.defaultParallelism
-            raises = {
-                n: float(p) for n, p in advice.partitions.items() if p > width
-            }
-            if raises:
-                out = rewrites.apply_parallelism(out, raises, self.spark)
+        ``advice.thetas``/``advice.lp``.
+
+        Every edit lands on one clone, so the schema is checked once per
+        call; advice with nothing to actuate returns ``pipeline`` itself."""
+        width = self.spark.sparkContext.defaultParallelism
+        raises = {n: float(p) for n, p in advice.partitions.items() if p > width}
+        prefetch = bool(advice.prefetch_at and advice.prefetch_buffer)
+        if not (raises or advice.cache_at or prefetch):
+            return pipeline
+        out = rewrites._clone(pipeline)
+        rewrites._set_thetas(out, raises)
         if advice.cache_at:
-            out = rewrites.insert_cache_after(out, advice.cache_at, self.spark)
-        if advice.prefetch_at and advice.prefetch_buffer:
-            out = rewrites.set_prefetch(out, advice.prefetch_at, advice.prefetch_buffer, self.spark)
-        return out
+            out.find(advice.cache_at).cached = True
+        if prefetch:
+            out.find(advice.prefetch_at).prefetch_buffer = int(advice.prefetch_buffer)
+        return rewrites._checked(pipeline, out, self.spark)
 
     def apply_validated(
         self,

@@ -53,7 +53,7 @@ def optimize_pipeline(
     ``calibrated=True`` runs the full calibrate-then-solve flow
     (profile for structure + per-node ceiling sweep for measured rates,
     the reference's benchmark_all_nodes → convex_solver path) instead
-    of solving on the profiler's prefix-difference estimates — slower
+    of solving on the profiler's one-pass self-time estimates — slower
     to advise, sounder θs; the flow tools/optimize_curation.py records
     at Zipf scale (SCALE.md §12)."""
 

@@ -282,37 +282,43 @@ class Pipeline:
     # -- materialization ---------------------------------------------------
 
     def to_df(
-        self, spark: SparkSession, persisted_out: list | None = None
+        self,
+        spark: SparkSession,
+        persisted_out: list | None = None,
+        visit: Callable[[PlanNode, DataFrame], DataFrame] | None = None,
     ) -> DataFrame:
-        """Materialize the plan: topo-recursive build, persist at cached
-        nodes, repartition where parallelism overrides are set.
+        """Materialize the plan: build every node once, in :meth:`nodes`
+        order (inputs first). A node's frame is its builder over its
+        inputs' frames, repartitioned where a parallelism override is
+        set and persisted at cached nodes.
 
         ``persisted_out``: optional list the builder appends every
         DataFrame it persists to, so a caller can unpersist exactly its
         own caches without touching unrelated session caches.
+
+        ``visit(node, df)``: optional hook that sees each node's frame as
+        soon as it is built and returns the frame its consumers are built
+        from — how the profiler materializes and times one stage at a
+        time.
 
         This is S7 (``ResumeDataset``, ``pa/graphdef_util.py:456-483``,
         ``pa/pipeline_optimizer.py:28-41``): where the reference
         re-instantiates a pipeline from serialized GraphDef +
         element_spec after surgery, we simply rebuild the DataFrame from
         the (rewritten) plan object — no serialization round-trip."""
-        memo: dict[int, DataFrame] = {}
-
-        def build(node: PlanNode) -> DataFrame:
-            if id(node) in memo:
-                return memo[id(node)]
-            ins = [build(i) for i in node.inputs]
-            df = node.builder(spark, ins)
+        frames: dict[int, DataFrame] = {}
+        for node in self.nodes():
+            df = node.builder(spark, [frames[id(i)] for i in node.inputs])
             if node.parallelism is not None and node.op in PARALLELIZABLE_OPS:
                 df = df.repartition(node.parallelism)
             if node.cached:
                 df = df.persist(StorageLevel.MEMORY_AND_DISK)
                 if persisted_out is not None:
                     persisted_out.append(df)
-            memo[id(node)] = df
-            return df
-
-        return build(self.root)
+            if visit is not None:
+                df = visit(node, df)
+            frames[id(node)] = df
+        return frames[id(self.root)]
 
     def schema(self, spark: SparkSession):
         return self.to_df(spark).schema

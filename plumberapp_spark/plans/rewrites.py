@@ -10,7 +10,7 @@ throughput ceiling).
 
 from __future__ import annotations
 
-import copy
+import math
 
 from pyspark.sql import SparkSession
 
@@ -69,14 +69,18 @@ def set_parallelism(p: Pipeline, name: str, parallelism: int, spark: SparkSessio
 def apply_parallelism(p: Pipeline, thetas: dict[str, float], spark: SparkSession | None = None) -> Pipeline:
     """Apply LP core-shares: ceil to partition counts, min 1
     (pa/pipeline_optimizer.py:77-89)."""
-    import math
-
     out = _clone(p)
+    _set_thetas(out, thetas)
+    return _checked(p, out, spark)
+
+
+def _set_thetas(out: Pipeline, thetas: dict[str, float]) -> None:
+    """Set each parallelizable named node of ``out`` (a clone) to its
+    core share rounded up; other ops keep their width."""
     for name, theta in thetas.items():
         node = out.find(name)
         if node.op in PARALLELIZABLE_OPS:
             node.parallelism = max(1, math.ceil(theta))
-    return _checked(p, out, spark)
 
 
 def insert_cache_after(p: Pipeline, name: str, spark: SparkSession | None = None) -> Pipeline:

@@ -22,7 +22,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from plumberapp_spark import get_spark  # noqa: E402
 import plumberapp_spark.all_queries  # noqa: F401
 from plumberapp_spark.registry import REGISTRY  # noqa: E402
-from plumberapp_spark.session import TABLES  # noqa: E402
 
 
 def _get(url: str):
@@ -34,6 +33,9 @@ def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
+    # the stage table comes from the live UI's REST API, which the
+    # session leaves off unless asked
+    os.environ.setdefault("SPARK_GRAFT_UI", "true")
     spark = get_spark("stage_profile")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
