@@ -276,19 +276,20 @@ def _query_postings(
 
 
 def _two_stage_topk(scored: DataFrame, k: int, score_col: str) -> DataFrame:
-    """The family's shared ranking tail: per-(query, partition) rank
-    caps what the global rank sees at k · partitions rows per query."""
-    w_local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(
-        F.col(score_col).desc(), "neighbor_id"
-    )
-    pruned = scored.withColumn("_lr", F.row_number().over(w_local)).filter(
-        F.col("_lr") <= k
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.col(score_col).desc(), "neighbor_id"
-    )
+    """The family's shared ranking tail: top ``k`` rows per ``query_id``
+    by ``score_col`` descending, ties to the smaller ``neighbor_id``,
+    ranked 1..k. One ``row_number`` window filtered to ``rank <= k``,
+    which Spark plans in two stages around ONE exchange on
+    ``query_id``: a Partial ``WindowGroupLimit`` caps every map
+    partition at k rows per query before the shuffle, and the final
+    window ranks those survivors. That inference holds while
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)
+    is at least ``k``; every registered query asks for k = 10. Above
+    the threshold the result is the same but every scored row crosses
+    the exchange."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score_col).desc(), "neighbor_id")
     return (
-        pruned.withColumn("rank", F.row_number().over(w_global))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             "query_id",

@@ -54,11 +54,18 @@ re-expressed as parquet relations:
   bounds the per-query segment fan-out (each query run opens
   ``|segments| × |query-term buckets|`` pruned reads).
 
-100 TB posture: append = tokenize-delta + one bucket-partitioned
-write; serve = pruned scans (bucket partition filter + broadcast
-semi-join) + a query-vocab-sized df merge + one bounded aggregate; the
-only corpus-sized relation a query ever touches is the pruned postings
-subset of its own terms. Reference analog: the reference resumes /
+100 TB posture: append = ONE tokenize pass over the delta feeding
+one bucket-partitioned postings write (written first, checked for
+emptiness after, with a zero-job listing), and the other relations
+derived from the written postings by numeric reads; serve = pruned
+scans (bucket partition filter + broadcast semi-join on the query
+terms, small tombstone sets as a ``NOT IN`` scan filter) + a
+query-vocab-sized df merge + one bounded aggregate with N and avgdl
+summed on the driver and inlined as literals + a top-k tail that
+crosses one exchange. The only corpus-sized relation a query ever
+touches is the pruned postings subset of its own terms, and the fixed
+per-request cost is the handful of Spark jobs those steps need
+(pinned by ``tests/test_index_job_floor.py``). Reference analog: the reference resumes /
 extends pipelines without replaying finished work
 (plumber_analysis/src/plumber_analysis/pipeline_optimizer.py's
 ResumeDataset handling); the segment trick is that same
@@ -187,20 +194,6 @@ def _list_segments(path: str) -> list[str]:
     ]
 
 
-def _write_bucketed(df: DataFrame, out: str) -> None:
-    """Bucket-partitioned write, one file per bucket (a pruned read
-    opens |query buckets| files per segment, not |buckets| × |shuffle
-    partitions|). A ZERO-ROW frame falls back to a plain parquet write:
-    ``partitionBy`` emits no data files for an empty frame and the
-    read-back dies on schema inference — the plain write keeps the
-    schema in a footer and the serving filter on ``_b`` still applies
-    (an ordinary column filter over zero rows)."""
-    if df.limit(1).count() == 0:
-        df.coalesce(1).write.mode("overwrite").parquet(out)
-        return
-    df.repartition("_b").write.partitionBy("_b").mode("overwrite").parquet(out)
-
-
 def _write_segment(
     docs: DataFrame,
     seg_path: str,
@@ -208,32 +201,44 @@ def _write_segment(
     id_col: str,
     n_buckets: int,
 ) -> None:
-    """One segment from ONE tokenize pass: postings first (the only
-    relation that needs the text), then termstats and scalars DERIVED
-    from the written postings (numeric reads — no second tokenize),
-    scalars last as the completion marker. Raw statistics only — no
-    corpus-global enters a segment, which is what keeps old segments
-    immutable under append."""
+    """One segment from ONE tokenize pass. Postings are written first,
+    bucket-partitioned (one file per bucket, so a pruned read opens
+    |query buckets| files per segment) through
+    :func:`~plumberapp_spark.session.write_partitioned`, which writes
+    before it checks for emptiness, so nothing re-runs the Arrow
+    tokenize pass ahead of the write. Everything else derives from that
+    one materialization, read back under the schema the write used (no
+    footer-inference job): termstats count postings rows per (term,
+    bucket), aggregated before the bucket exchange so only partial
+    counts cross it; doclens joins the delta's ids to the postings'
+    lengths; scalars are one aggregate over both written relations,
+    ``_nd`` counting every doclens row (token-less docs included) and
+    ``_tt`` summing postings' ``_tf``, exact even when a delta repeats
+    a doc id. Scalars land last, as the completion marker. Raw
+    statistics only — no corpus-global enters a segment, which is what
+    keeps old segments immutable under append."""
     from plumberapp_spark.llm.dedup import term_frequencies
+    from plumberapp_spark.session import write_partitioned
 
     spark = docs.sparkSession
     tf = term_frequencies(docs, text_col, id_col, with_doc_len=True)
-    _write_bucketed(
-        tf.withColumn("_b", _bucket("tk", n_buckets).cast("int")).select(
-            "tk", F.col(id_col).alias("doc_id"), "_tf", "_dl", "_b"
-        ),
-        f"{seg_path}/postings",
+    postings = tf.withColumn("_b", _bucket("tk", n_buckets).cast("int")).select(
+        "tk", F.col(id_col).alias("doc_id"), "_tf", "_dl", "_b"
     )
-    postings = spark.read.parquet(f"{seg_path}/postings")
-    _write_bucketed(
-        postings.groupBy("tk", "_b").agg(F.count("*").alias("_df")),
+    write_partitioned(postings.repartition("_b"), f"{seg_path}/postings", "_b")
+    postings = spark.read.schema(postings.schema).parquet(f"{seg_path}/postings")
+    # aggregate first (partial counts cross the shuffle, about one row
+    # per term), then one file per bucket
+    write_partitioned(
+        postings.groupBy("tk", "_b").agg(F.count("*").alias("_df")).repartition("_b"),
         f"{seg_path}/termstats",
+        "_b",
     )
     # doclens: (doc_id, _dl) for EVERY doc of the segment — token-less
     # docs carry _dl=0 (they have no postings rows but still weight N
     # and avgdl, and a later delete must be able to see them). This is
     # the relation the deletion tier charges its scalar deltas against.
-    (
+    doclens = (
         docs.select(F.col(id_col).alias("doc_id"))
         .join(
             postings.groupBy("doc_id").agg(F.first("_dl").alias("_dl")),
@@ -241,16 +246,21 @@ def _write_segment(
             "left",
         )
         .select("doc_id", F.coalesce(F.col("_dl"), F.lit(0)).alias("_dl"))
-        .write.mode("overwrite")
-        .parquet(f"{seg_path}/doclens")
     )
-    # _nd counts ALL docs (token-less ones too — they weight avgdl),
-    # straight off the corpus frame, not the postings rows
-    nd = docs.groupBy().agg(F.count("*").alias("_nd"))
+    doclens.write.mode("overwrite").parquet(f"{seg_path}/doclens")
+    # one aggregate over both written relations: _nd counts doclens
+    # rows, _tt sums postings' _tf
+    doclens = spark.read.schema(doclens.schema).parquet(f"{seg_path}/doclens")
     (
-        postings.groupBy()
-        .agg(F.coalesce(F.sum("_tf"), F.lit(0)).alias("_tt"))
-        .crossJoin(F.broadcast(nd))
+        postings.select("_tf", F.lit(None).cast("int").alias("_n"))
+        .unionByName(
+            doclens.select(F.lit(None).cast("bigint").alias("_tf"), F.lit(1).alias("_n"))
+        )
+        .groupBy()
+        .agg(
+            F.count("_n").alias("_nd"),
+            F.coalesce(F.sum("_tf"), F.lit(0)).alias("_tt"),
+        )
         .select("_nd", "_tt", F.lit(int(n_buckets)).alias("_n_buckets"))
         .coalesce(1)
         .write.mode("overwrite")
@@ -355,20 +365,58 @@ def _require_doclens(segs: list[str]) -> None:
         )
 
 
-def _tombstone_ids(spark, tombs: list[str]) -> DataFrame | None:
-    """Union of all tombstoned doc_ids, or None when no deletes exist.
-    Takedown sets are tiny relative to the corpus — the broadcast
-    contract every consumer applies (same class as the vocab/quota
-    broadcast maps)."""
-    if not tombs:
+def _tomb_local_ids(tombs: list[str], max_ids: int = 10_000):
+    """``(id_column_name, sorted tombstoned values)`` when every
+    ``{tomb}/ids`` relation is locally readable and their union is small
+    enough for an in-plan ``NOT IN`` set — the takedown-set twin of the
+    driver-side scalar reads: a bounded id SET needs no broadcast build
+    job per read. None → callers keep the broadcast anti-join (object
+    stores, big takedowns). Both index tiers (lexical segments here, IVF
+    in ``similarity``) store tombstones as ``{tomb}/ids``."""
+    from plumberapp_spark.session import local_parquet_rows
+
+    col_name, vals = None, []
+    for t in tombs:
+        rows = local_parquet_rows(f"{t}/ids", max_rows=max_ids + 1)
+        if rows is None:
+            return None
+        if rows and col_name is None:
+            col_name = next(iter(rows[0]))
+        vals.extend(next(iter(r.values())) for r in rows)
+        if len(vals) > max_ids:
+            return None
+    if col_name is None:
         return None
+    # a NULL tomb id matches nothing under the anti-join's equality —
+    # drop it so the IN-set filter agrees exactly
+    return col_name, sorted({v for v in vals if v is not None})
+
+
+def _minus_tombstones(spark, tombs: list[str], df: DataFrame) -> DataFrame:
+    """``df`` minus every id tombstoned in ``tombs`` (matched on the
+    tombstones' own id column). Small local takedown sets apply as a
+    plan-side ``NOT IN`` filter that pushes into the parquet scan (no
+    broadcast build job); anything else keeps the broadcast anti-join.
+    NULL-keyed rows survive both forms (an anti-join keeps them because
+    NULL equals nothing). Both forms lead with the id column, as the
+    anti-join emits it, so a relation written from either has one
+    schema."""
+    if not tombs:
+        return df
+    local = _tomb_local_ids(tombs)
+    if local is not None:
+        col_name, vals = local
+        if vals:
+            df = df.filter(F.col(col_name).isNull() | ~F.col(col_name).isin(vals))
+        return df.select(col_name, *[c for c in df.columns if c != col_name])
+    from functools import reduce
+
     from plumberapp_spark.session import read_parquet_cached
 
-    out = None
-    for t in tombs:
-        df = read_parquet_cached(spark, f"{t}/ids")
-        out = df if out is None else out.unionByName(df)
-    return out
+    dead = reduce(
+        DataFrame.unionByName, [read_parquet_cached(spark, f"{t}/ids") for t in tombs]
+    )
+    return df.join(F.broadcast(dead), dead.columns[0], "left_anti")
 
 
 def delete_docs(spark, path: str, ids: DataFrame, id_col: str = "doc_id") -> str:
@@ -376,9 +424,16 @@ def delete_docs(spark, path: str, ids: DataFrame, id_col: str = "doc_id") -> str
     write one immutable tombstone. Cost is one scan of the slim doclens
     relations (two int columns, one row per doc) — never the postings,
     never a re-tokenize. Ids that are absent from the index or already
-    deleted are dropped here (the inner semi-join against live doclens),
+    deleted are dropped here (the semi-join against live doclens),
     which keeps tombstones pairwise disjoint — so the signed scalar
-    deltas stay exact under replayed or overlapping delete requests."""
+    deltas stay exact under replayed or overlapping delete requests.
+    Duplicate requested ids need no distinct: a semi-join emits each
+    live row at most once. The matched rows are materialized once and
+    both relations derive from them; the cache belongs to this call
+    and is released before it returns. The two cannot disagree even if
+    a cached block is lost: ``ids`` is evaluated once, as the broadcast
+    build side collected on the driver, and a recompute re-reads the
+    immutable doclens files against that same broadcast."""
     segs = _list_segments(path)
     if not segs:
         raise ValueError(f"no segments under {path!r} — nothing to delete from")
@@ -386,39 +441,35 @@ def delete_docs(spark, path: str, ids: DataFrame, id_col: str = "doc_id") -> str
     tombs = _list_tombstones(path)
     nums = [int(_TOMB_RE.match(os.path.basename(t)).group(1)) for t in tombs]
     tomb = os.path.join(path, f"tomb_{(max(nums, default=-1)) + 1:05d}")
-    doclens = _union_pruned(spark, segs, "doclens", [])
-    prior = _tombstone_ids(spark, tombs)
-    if prior is not None:
-        doclens = doclens.join(F.broadcast(prior), "doc_id", "left_anti")
-    req = ids.select(F.col(id_col).alias("doc_id")).distinct()
-    matched = doclens.join(F.broadcast(req), "doc_id", "left_semi")
-    matched.select("doc_id").coalesce(1).write.mode("overwrite").parquet(
-        f"{tomb}/ids"
-    )
-    # scalars last — the completion marker (read ids back so the two
-    # relations are derived from the same materialized row set)
-    (
-        doclens.join(
-            F.broadcast(spark.read.parquet(f"{tomb}/ids")), "doc_id", "left_semi"
+    doclens = _minus_tombstones(spark, tombs, _union_pruned(spark, segs, "doclens", []))
+    req = ids.select(F.col(id_col).alias("doc_id"))
+    matched = doclens.join(F.broadcast(req), "doc_id", "left_semi").persist()
+    try:
+        matched.select("doc_id").coalesce(1).write.mode("overwrite").parquet(
+            f"{tomb}/ids"
         )
-        .groupBy()
-        .agg(
-            F.count("*").alias("_nd"),
-            F.coalesce(F.sum("_dl"), F.lit(0)).alias("_tt"),
+        # scalars last — the completion marker
+        (
+            matched.groupBy()
+            .agg(
+                F.count("*").alias("_nd"),
+                F.coalesce(F.sum("_dl"), F.lit(0)).alias("_tt"),
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{tomb}/scalars")
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{tomb}/scalars")
-    )
+    finally:
+        matched.unpersist()
     return tomb
 
 
 def _apply_tombstones(
     spark, path: str, postings: DataFrame, dfreq: DataFrame
 ) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Splice deletions into a serving plan: anti-join the (broadcast)
-    tombstoned ids out of the pruned postings, and REPLACE the
-    termstats-derived df with a count over the live postings — each
+    """Splice deletions into a serving plan: drop the tombstoned ids
+    from the pruned postings (:func:`_minus_tombstones`), and REPLACE
+    the termstats-derived df with a count over the live postings — each
     (doc, term) posting row is one df unit, so ``count(live rows per
     tk)`` IS ``Σ termstats − removed`` exactly (the q101 free-text
     trick: the postings are their own df relation). That costs one
@@ -427,10 +478,9 @@ def _apply_tombstones(
     cheaper summed-termstats ``dfreq`` passes through untouched.
     Returns (live postings, effective dfreq, tombs)."""
     tombs = _list_tombstones(path)
-    dead_ids = _tombstone_ids(spark, tombs)
-    if dead_ids is None:
+    if not tombs:
         return postings, dfreq, tombs
-    live = postings.join(F.broadcast(dead_ids), "doc_id", "left_anti")
+    live = _minus_tombstones(spark, tombs, postings)
     return live, live.groupBy("tk").agg(F.count("*").alias("_df")), tombs
 
 
@@ -521,46 +571,56 @@ def _union_pruned(spark, segs: list[str], rel: str, buckets: list[int]) -> DataF
     return out
 
 
-def _global_scalars(spark, segs: list[str], tombs: list[str] = ()) -> DataFrame:
-    """One-row union-corpus globals: BM25's N and avgdl are ADDITIVE
-    over segments — summing the per-segment one-row scalars relations
-    reconstructs them exactly, which is the algebraic fact the whole
-    module stands on. Tombstones are the same fact WITH SIGN: each
-    contributes its (_nd, _tt) negatively, so the sum is exactly the
-    globals of corpus-minus-deleted.
+def _local_scalars(segs: list[str], tombs: list[str] = ()):
+    """``(N, avgdl)`` of the union corpus summed on the driver, or None
+    when any scalars relation is not locally readable. BM25's N and
+    avgdl are ADDITIVE over segments — summing the per-segment one-row
+    scalars relations reconstructs them exactly, which is the algebraic
+    fact the whole module stands on. Tombstones are the same fact WITH
+    SIGN: each contributes its (_nd, _tt) negatively, so the sum is
+    exactly the globals of corpus-minus-deleted. The sums are exact
+    integer adds, and the float division ``Σtt / Σnd`` is the same IEEE
+    double Spark's long/long division produces."""
+    from plumberapp_spark.session import local_parquet_rows
 
-    Fast path (round 11): every input is a one-row parquet relation, so
-    when all of them are locally readable the sums happen on the driver
-    (exact integer adds; the float division ``Σtt / Σnd`` is the same
-    IEEE double Spark's long/long division produces) and the result
-    ships as a one-row local relation — removing one distributed
-    aggregate + its scan jobs from EVERY serve. Falls back to the
-    distributed form whenever any path isn't locally readable."""
-    from plumberapp_spark.session import local_parquet_rows, one_row_relation
-
-    acc_nd, acc_tt, ok = 0, 0, True
-    for s in segs:
-        rows = local_parquet_rows(f"{s}/scalars")
+    acc_nd, acc_tt = 0, 0
+    for rel, sign in [(s, 1) for s in segs] + [(t, -1) for t in tombs]:
+        rows = local_parquet_rows(f"{rel}/scalars")
         if not rows:
-            ok = False
-            break
-        acc_nd += int(rows[0]["_nd"])
-        acc_tt += int(rows[0]["_tt"])
-    if ok:
-        for t in tombs:
-            rows = local_parquet_rows(f"{t}/scalars")
-            if not rows:
-                ok = False
-                break
-            acc_nd -= int(rows[0]["_nd"])
-            acc_tt -= int(rows[0]["_tt"])
-    if ok:
-        avgdl = (acc_tt / acc_nd) if acc_nd else None
-        return one_row_relation(spark, "_nd bigint, _avgdl double", acc_nd, avgdl)
+            return None
+        acc_nd += sign * int(rows[0]["_nd"])
+        acc_tt += sign * int(rows[0]["_tt"])
+    return acc_nd, (acc_tt / acc_nd) if acc_nd else None
+
+
+def _global_scalars(spark, segs: list[str], tombs: list[str] = ()) -> DataFrame:
+    """One-row union-corpus globals ``(_nd, _avgdl)``: the distributed
+    sum over :func:`_signed_scalars`, which :func:`_with_globals` joins
+    in when any scalars path isn't locally readable."""
     return _signed_scalars(spark, segs, tombs).groupBy().agg(
         F.sum("_nd").alias("_nd"),
         (F.sum("_tt") / F.sum("_nd")).alias("_avgdl"),
     )
+
+
+def _with_globals(
+    spark, df: DataFrame, segs: list[str], tombs: list[str], cols=("_nd", "_avgdl")
+) -> DataFrame:
+    """``df`` plus the union-corpus globals ``cols`` as columns. When
+    the driver-side sums succeed they enter the plan as typed literals,
+    which the optimizer folds into the scoring expression — no one-row
+    relation, no broadcast nested-loop join, no job. Otherwise the
+    distributed :func:`_global_scalars` is cross-joined in as a
+    broadcast. Either way the scoring expression reads the same
+    ``_nd``/``_avgdl`` values."""
+    local = _local_scalars(segs, tombs)
+    if local is None:
+        return df.crossJoin(
+            F.broadcast(_global_scalars(spark, segs, tombs).select(*cols))
+        )
+    nd, avgdl = local
+    lits = {"_nd": F.lit(nd).cast("bigint"), "_avgdl": F.lit(avgdl).cast("double")}
+    return df.withColumns({c: lits[c] for c in cols})
 
 
 def _signed_scalars(spark, segs: list[str], tombs: list[str]) -> DataFrame:
@@ -575,6 +635,21 @@ def _signed_scalars(spark, segs: list[str], tombs: list[str]) -> DataFrame:
             )
         )
     return sc
+
+
+def _query_terms(spark, q_rows, n_buckets: int) -> tuple[DataFrame, list[int]]:
+    """The distinct query terms of already-collected (query, term) rows
+    as a local one-column relation, plus the buckets they hash into
+    under the index's RECORDED modulus (zlib.crc32 == Spark's crc32,
+    both CRC-32/zlib over the utf-8 bytes). Deduplicated on the driver,
+    so no plan spends an exchange on a distinct over a LocalTableScan."""
+    import zlib
+
+    from plumberapp_spark.session import local_relation
+
+    tks = sorted({r["tk"] for r in q_rows})
+    buckets = sorted({zlib.crc32(tk.encode("utf-8")) % n_buckets for tk in tks})
+    return local_relation(spark, [(tk,) for tk in tks], "tk string"), buckets
 
 
 def bm25_topk_segmented(
@@ -595,10 +670,13 @@ def bm25_topk_segmented(
     oracle is the full-corpus q102 oracle verbatim).
 
     Per query run: one pruned postings scan per segment (bucket
-    partition filter + broadcast semi-join on the query's terms), a
-    query-vocab-sized df merge from the pruned termstats scans, the
-    per-row weight arithmetic, one bounded aggregate, and the family's
-    shared two-stage top-k. Nothing corpus-sized is recomputed.
+    partition filter + broadcast semi-join on the query's distinct
+    terms, built on the driver from the collected (query, term) pairs),
+    tombstoned ids dropped by :func:`_minus_tombstones` inside that scan,
+    a query-vocab-sized df merge, the per-row weight arithmetic with N
+    and avgdl inlined as literals (:func:`_with_globals`), one bounded
+    aggregate, and the family's shared top-k tail. Nothing corpus-sized
+    is recomputed.
 
     ``doc_filter`` (round 11 — FILTERED retrieval, the production shape
     where results are predicated on metadata: lang, source, date
@@ -624,13 +702,12 @@ def bm25_topk_segmented(
     n_buckets = _seg_buckets(spark, segs[0])
     # ONE bounded collect of the (query, term) pairs (the same
     # small-side contract as the ANN query-matrix collects, guarded);
-    # everything query-sided then serves from a LOCAL relation — the
-    # pruning buckets compute driver-side under the index's RECORDED
-    # modulus (zlib.crc32 == Spark's crc32, both CRC-32/zlib over the
-    # utf-8 bytes), and the three broadcast joins of qterms ship a
+    # everything query-sided then serves from LOCAL relations — the
+    # pairs, and the distinct terms and their pruning buckets computed
+    # driver-side (_query_terms) — so every broadcast join ships a
     # LocalTableScan instead of re-executing tokenize+distinct per
-    # branch (round 11: 3 fewer jobs per serve, identical rows by
-    # construction — they ARE the collected output of the old plan).
+    # branch (identical rows by construction — they ARE the collected
+    # output of the old plan).
     qterms_plan = queries.select(
         F.col(id_col).alias("query_id"),
         F.explode(tokenize(F.col(text_col))).alias("tk"),
@@ -642,31 +719,21 @@ def bm25_topk_segmented(
             "contract (> 100000 (query, term) pairs); batch the queries"
         )
     qterms = local_relation(spark, q_rows, qterms_plan.schema)
-    import zlib
-
-    buckets = sorted(
-        {zlib.crc32(r["tk"].encode("utf-8")) % n_buckets for r in q_rows}
-    )
-    dfreq = (
-        _union_pruned(spark, segs, "termstats", buckets)
-        .join(F.broadcast(qterms.select("tk").distinct()), "tk", "left_semi")
-        .groupBy("tk")
-        .agg(F.sum("_df").alias("_df"))
-    )
+    terms, buckets = _query_terms(spark, q_rows, n_buckets)
     postings = _union_pruned(spark, segs, "postings", buckets).join(
-        F.broadcast(qterms.select("tk").distinct()), "tk", "left_semi"
+        F.broadcast(terms), "tk", "left_semi"
     )
-    postings, dfreq, tombs = _apply_tombstones(spark, path, postings, dfreq)
+    tombs = _list_tombstones(path)
     if tombs:
         # BM25 needs df only per posting row, so on a tombstoned index
-        # it rides a window COUNT over the single live pruned scan —
-        # the separate dfreq relation would re-execute that scan (its
-        # termstats shortcut is invalid once deletes shift df). One
-        # Zipf-hot query term makes one fat window partition; that
-        # beats doubling the scan (measured at zipf100: 6.7 s → 4.9 s).
+        # it rides a window COUNT over the single live pruned scan — a
+        # separate df relation would re-execute that scan (the termstats
+        # shortcut is invalid once deletes shift df). One Zipf-hot query
+        # term makes one fat window partition; that beats doubling the
+        # scan (measured at zipf100: 6.7 s → 4.9 s).
         from pyspark.sql import Window
 
-        postings = postings.withColumn(
+        postings = _minus_tombstones(spark, tombs, postings).withColumn(
             "_df", F.count("*").over(Window.partitionBy("tk"))
         )
     if doc_filter is not None:
@@ -676,15 +743,17 @@ def bm25_topk_segmented(
             F.col(doc_filter.columns[0]).alias("doc_id")
         ).distinct()
         postings = postings.join(allowed, "doc_id", "left_semi")
-    if tombs:
-        weighted = postings.join(F.broadcast(qterms), "tk")
-    else:
-        weighted = postings.join(F.broadcast(qterms), "tk").join(
-            F.broadcast(dfreq), "tk"
+    weighted = postings.join(F.broadcast(qterms), "tk")
+    if not tombs:
+        dfreq = (
+            _union_pruned(spark, segs, "termstats", buckets)
+            .join(F.broadcast(terms), "tk", "left_semi")
+            .groupBy("tk")
+            .agg(F.sum("_df").alias("_df"))
         )
+        weighted = weighted.join(F.broadcast(dfreq), "tk")
     scored = (
-        weighted
-        .crossJoin(F.broadcast(_global_scalars(spark, segs, tombs)))
+        _with_globals(spark, weighted, segs, tombs)
         .select(
             "query_id",
             "doc_id",
@@ -735,10 +804,8 @@ def refresh_tfidf_norms(spark, path: str) -> str:
     # same way serving does (anti-join + counted corrections), so the
     # norms it writes are those of corpus-minus-deleted
     postings, dfreq, tombs = _apply_tombstones(spark, path, postings, dfreq)
-    nd = _global_scalars(spark, segs, tombs).select("_nd")
     (
-        postings.join(dfreq, "tk")
-        .crossJoin(F.broadcast(nd))
+        _with_globals(spark, postings.join(dfreq, "tk"), segs, tombs, ("_nd",))
         .select(
             "doc_id",
             (F.col("_tf") * F.log(F.col("_nd") / F.col("_df"))).alias("_w"),
@@ -813,7 +880,6 @@ def tfidf_topk_segmented(
     extra relation is the refreshed norms, joined against the bounded
     scored frame (one slim doc-keyed scan per run)."""
     from plumberapp_spark.functions.text import tokenize
-    from plumberapp_spark.llm.lexical import _two_stage_topk
     from plumberapp_spark.session import local_relation
 
     segs = _list_segments(path)
@@ -822,7 +888,7 @@ def tfidf_topk_segmented(
     norms = _covered_norms(spark, path, segs)
     n_buckets = _seg_buckets(spark, segs[0])
     # one bounded collect; local query relations thereafter (see
-    # bm25_topk_segmented — same contract, same crc32 parity)
+    # bm25_topk_segmented — same contract, same _query_terms)
     qtf_plan = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -838,12 +904,7 @@ def tfidf_topk_segmented(
             "contract (> 100000 (query, term) pairs); batch the queries"
         )
     qtf = local_relation(spark, q_rows, qtf_plan.schema)
-    import zlib
-
-    buckets = sorted(
-        {zlib.crc32(r["tk"].encode("utf-8")) % n_buckets for r in q_rows}
-    )
-    qterms = qtf.select("tk").distinct()
+    qterms, buckets = _query_terms(spark, q_rows, n_buckets)
     dfreq = (
         _union_pruned(spark, segs, "termstats", buckets)
         .join(F.broadcast(qterms), "tk", "left_semi")
@@ -854,10 +915,8 @@ def tfidf_topk_segmented(
         F.broadcast(qterms), "tk", "left_semi"
     )
     postings, dfreq, tombs = _apply_tombstones(spark, path, postings, dfreq)
-    nd = _global_scalars(spark, segs, tombs).select("_nd")
     qw = (
-        qtf.join(dfreq, "tk")
-        .crossJoin(F.broadcast(nd))
+        _with_globals(spark, qtf.join(dfreq, "tk"), segs, tombs, ("_nd",))
         .select(
             "query_id",
             "tk",
@@ -868,8 +927,9 @@ def tfidf_topk_segmented(
         F.sqrt(F.sum(F.col("_qw") * F.col("_qw"))).alias("_qn")
     )
     scored = (
-        postings.join(F.broadcast(dfreq), "tk")
-        .crossJoin(F.broadcast(nd))
+        _with_globals(
+            spark, postings.join(F.broadcast(dfreq), "tk"), segs, tombs, ("_nd",)
+        )
         .select(
             "tk",
             "doc_id",
@@ -913,33 +973,31 @@ def compact_segments(spark, path: str, out_path: str) -> str:
     segs = _list_segments(path)
     if not segs:
         raise ValueError(f"no segments under {path!r} — nothing to compact")
+    from plumberapp_spark.session import write_partitioned
+
     _require_doclens(segs)
     n_buckets = _seg_buckets(spark, segs[0])
     tombs = _list_tombstones(path)
-    dead = _tombstone_ids(spark, tombs)
     seg = os.path.join(out_path, "seg_00000")
-    postings = _union_pruned(spark, segs, "postings", [])
-    if dead is not None:
-        postings = postings.join(F.broadcast(dead), "doc_id", "left_anti")
-    _write_bucketed(postings, f"{seg}/postings")
-    if dead is None:
+    postings = _minus_tombstones(spark, tombs, _union_pruned(spark, segs, "postings", []))
+    write_partitioned(postings.repartition("_b"), f"{seg}/postings", "_b")
+    if tombs:
+        # deletes shift df — recount from the SURVIVING postings (read
+        # back, so the counts come from exactly what was written)
+        termstats = (
+            spark.read.schema(postings.schema)
+            .parquet(f"{seg}/postings")
+            .groupBy("tk", "_b")
+            .agg(F.count("*").alias("_df"))
+        )
+    else:
         termstats = (
             _union_pruned(spark, segs, "termstats", [])
             .groupBy("tk", "_b")
             .agg(F.sum("_df").alias("_df"))
         )
-    else:
-        # deletes shift df — recount from the SURVIVING postings (read
-        # back, so the counts come from exactly what was written)
-        termstats = (
-            spark.read.parquet(f"{seg}/postings")
-            .groupBy("tk", "_b")
-            .agg(F.count("*").alias("_df"))
-        )
-    _write_bucketed(termstats, f"{seg}/termstats")
-    doclens = _union_pruned(spark, segs, "doclens", [])
-    if dead is not None:
-        doclens = doclens.join(F.broadcast(dead), "doc_id", "left_anti")
+    write_partitioned(termstats.repartition("_b"), f"{seg}/termstats", "_b")
+    doclens = _minus_tombstones(spark, tombs, _union_pruned(spark, segs, "doclens", []))
     doclens.write.mode("overwrite").parquet(f"{seg}/doclens")
     # scalars last — the completion marker
     (

@@ -437,9 +437,45 @@ def read_parquet_cached(spark: SparkSession, *paths: str):
     _purge_stopped_sessions()
     for k in [k for k in _TABLE_CACHE if k[:2] == key[:2]]:
         del _TABLE_CACHE[k]
-    df = spark.read.parquet(*paths)
+    schema = _footer_schema(paths[0])
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(*paths)
     _TABLE_CACHE[key] = (spark, df)
     return df
+
+
+def _footer_schema(path: str):
+    """The data schema Spark records in the footer of the first data file
+    under a local ``path``, read on the driver. Spark's own inference
+    reads one footer too when ``mergeSchema`` is off, but it spends a
+    Spark job on it. Partition columns are not in the files; Spark
+    still infers them from the directory names when a data schema is
+    given. None (Spark infers) when ``path`` is not local, holds no data
+    file, or its file carries no recorded Spark schema. Names Spark
+    skips are skipped: a leading ``.``, or a leading ``_`` outside a
+    ``key=value`` partition directory."""
+    import json
+
+    try:
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        first = path if os.path.isfile(path) else None
+        for root, dirs, files in os.walk(path):
+            dirs[:] = sorted(
+                d for d in dirs if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+            )
+            data = sorted(f for f in files if not f.startswith(("_", ".")))
+            if data:
+                first = os.path.join(root, data[0])
+                break
+        if first is None:
+            return None
+        recorded = (pq.read_schema(first).metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        return None if recorded is None else StructType.fromJson(json.loads(recorded))
+    except (ImportError, OSError, ValueError, KeyError, TypeError):
+        return None
 
 
 def local_parquet_rows(
@@ -513,6 +549,29 @@ def parquet_dir_rows(*paths: str) -> int | None:
         return total
     except Exception:  # noqa: BLE001 — callers keep natural partitioning
         return None
+
+
+def write_partitioned(df, out: str, col: str) -> None:
+    """``df`` written to ``out`` partitioned by ``col``, so a reader that
+    filters on ``col`` opens only the matching directories (index buckets,
+    IVF cells). Write first, then check: ``partitionBy`` lands no data
+    file for an empty frame, and a directory holding only ``_SUCCESS``
+    fails schema inference on every later read. A driver-side listing
+    through the Hadoop FileSystem API (so object stores work too; zero
+    Spark jobs) finds that case, and only then is the frame rewritten
+    plain, one file carrying the schema in its footer; a reader's filter
+    on ``col`` is then an ordinary column filter over zero rows. A
+    non-empty frame is computed once, with no probe ahead of the write.
+    Callers pass ``df`` already laid out the way they want its files
+    (``repartition(col)`` for one file per partition value)."""
+    df.write.partitionBy(col).mode("overwrite").parquet(out)
+    spark = df.sparkSession
+    root = spark._jvm.org.apache.hadoop.fs.Path(out)
+    files = root.getFileSystem(spark._jsc.hadoopConfiguration()).listFiles(root, True)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            return
+    df.coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def local_relation(spark: SparkSession, rows, schema):

@@ -326,6 +326,25 @@ def test_empty_and_tokenless_segments_serve(spark, tmp_path):
     assert all(r[1] < 990001 for r in got)
 
 
+def test_segment_scalars_exact_with_repeated_doc_id(spark, tmp_path):
+    """A delta that repeats a doc id still gets exact scalars: _nd counts
+    every delta row and _tt every token, whichever copy's length the
+    doclens row keeps. Built twice, the segment gives the same values."""
+    from plumberapp_spark.llm.segments import _list_segments, append_segment
+
+    idx = str(tmp_path / "idx")
+    delta = spark.createDataFrame(
+        [(7, "alpha beta gamma"), (7, "delta epsilon"), (8, "zeta")],
+        "doc_id bigint, text string",
+    )
+    got = []
+    for _ in range(2):
+        append_segment(delta, idx)
+        sc = spark.read.parquet(f"{_list_segments(idx)[-1]}/scalars").first()
+        got.append((sc["_nd"], sc["_tt"]))
+    assert got == [(3, 6), (3, 6)]
+
+
 def test_maybe_compact_swaps_when_over_budget(spark, tmp_path):
     """Above max_segments the policy compacts into a sibling and swaps
     it in atomically; serving results are unchanged and the retired
