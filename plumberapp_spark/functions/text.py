@@ -23,19 +23,30 @@ LANG_MARKERS = {
 
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 
-_WS = r"\s+"
+# The whitespace rule, spelled out once for every tokenizer in the
+# engine. The DuckDB oracles split on RE2's \s, which is exactly
+# [ \t\n\f\r]. Java's \s (F.split, regexp_replace) and Python's \s
+# (even under re.ASCII) ALSO match U+000B (vertical tab), and Python's
+# default \s is Unicode-aware besides (NBSP, U+2028, ideographic
+# space). So neither engine's \s is used: both sides match this
+# explicit class. Parity on U+000B and non-ASCII whitespace is pinned
+# against DuckDB in tests/test_textops_vectorized.py.
+WS_CHARS = r" \t\n\f\r"
+_WS = f"[{WS_CHARS}]+"
+# one punctuation character: neither an ASCII word character (Java's and
+# RE2's \w; Python needs re.ASCII) nor whitespace
+PUNCT = f"[^\\w{WS_CHARS}]"
 
-# The Python-side splitter every Arrow mapInPandas path must use.
-# Java's \s (what the F.split expression forms above and DuckDB's RE2
-# oracles match) is the ASCII set [ \t\n\x0B\f\r]; Python's default \s
-# is Unicode-aware and ADDITIONALLY splits on NBSP/U+2028/ideographic
-# space — common in web corpora — so an un-flagged re.compile(r"\s+")
-# silently diverges from its own pinned oracle (ADVICE r4). re.ASCII
-# makes Python's \s exactly Java's set; parity on non-ASCII whitespace
-# is pinned in tests/test_textops_vectorized.py.
 import re as _re_mod  # noqa: E402  (kept local to avoid polluting the API)
 
-WS_SPLIT = _re_mod.compile(r"\s+", _re_mod.ASCII)
+WS_SPLIT = _re_mod.compile(_WS)
+
+
+def split_tokens(text: str | None) -> list[str]:
+    """The Python-side twin of :func:`tokenize` for Arrow
+    ``mapInPandas`` paths: whitespace tokens, empty tokens removed,
+    ``[]`` for a NULL text."""
+    return [t for t in WS_SPLIT.split(text) if t] if text is not None else []
 
 
 def tokenize(col: Column) -> Column:
@@ -82,7 +93,7 @@ def quality_features(col: Column) -> dict[str, Column]:
     toks = tokenize(col)
     n_tok = F.size(toks)
     n_chars = F.length(col)
-    punct = n_chars - F.length(F.regexp_replace(col, r"[^\w\s]", ""))
+    punct = n_chars - F.length(F.regexp_replace(col, PUNCT, ""))
     stop_hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(STOPWORDS)))
     return {
         "n_chars": n_chars.cast("bigint"),

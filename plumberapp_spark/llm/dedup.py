@@ -34,6 +34,7 @@ from plumberapp_spark.functions.hashing import (
     minhash_signature_column,
 )
 from plumberapp_spark.functions.text import tokenize, word_ngrams
+from plumberapp_spark.llm.scoring import bm25_weight, tfidf_weight
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -93,7 +94,7 @@ def simhash_table(
     import pandas as pd
 
     id_ddl = df.schema[id_col].dataType.simpleString()
-    from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+    from plumberapp_spark.functions.text import split_tokens
     js = np.arange(bits, dtype=np.uint64)
     weights = (np.uint64(1) << js).astype(np.int64)
 
@@ -101,7 +102,7 @@ def simhash_table(
         for pdf in batches:
             ids, out = [], []
             for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in ws.split(text) if t] if text is not None else []
+                toks = split_tokens(text)
                 n = len(toks)
                 if n == 0:
                     ids.append(row_id)
@@ -270,7 +271,7 @@ def _signature_arrays(
         [minhash_perm_params(p)[1] for p in range(num_perm)], dtype=np.uint64
     )
     m61 = np.uint64(MERSENNE61)
-    from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+    from plumberapp_spark.functions.text import split_tokens
 
     def sig_batches(batches):
         # md5 is the dominant per-shingle cost; real corpora repeat
@@ -284,7 +285,7 @@ def _signature_arrays(
             md5 = hashlib.md5
             ids, sigs = [], []
             for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in ws.split(text) if t] if text is not None else []
+                toks = split_tokens(text)
                 n = len(toks) - (ngram - 1)
                 if n < 1:
                     ids.append(row_id)
@@ -502,13 +503,13 @@ def ngram_jaccard_pairs(
         import pandas as pd
 
         id_ddl = df.schema[id_col].dataType.simpleString()
-        from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+        from plumberapp_spark.functions.text import split_tokens
 
         def shingle_rows(batches):
             for pdf in batches:
                 ids, ns, shs = [], [], []
                 for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = [t for t in ws.split(text) if t] if text is not None else []
+                    toks = split_tokens(text)
                     cnt = len(toks) - (ngram - 1)
                     if cnt < 1:
                         continue  # empty shingle array: explode drops the row
@@ -660,7 +661,7 @@ def term_frequencies(
 
     import pandas as pd
 
-    from plumberapp_spark.functions.text import WS_SPLIT as ws
+    from plumberapp_spark.functions.text import split_tokens
 
     id_ddl = df.schema[id_col].dataType.simpleString()
 
@@ -668,7 +669,7 @@ def term_frequencies(
         for pdf in batches:
             ids, tks, cs, dls = [], [], [], []
             for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in ws.split(text) if t] if text is not None else []
+                toks = split_tokens(text)
                 for tk, n in Counter(toks).items():
                     ids.append(row_id)
                     tks.append(tk)
@@ -758,7 +759,7 @@ def _tfidf_weights(
     tf.count()
     wts = (
         tf.join(_doc_frequencies(tf), "tk")
-        .withColumn("_w", F.col("_tf") * F.log(F.lit(n_docs) / F.col("_df")))
+        .withColumn("_w", tfidf_weight(F.col("_tf"), F.col("_df"), F.lit(n_docs)))
     )
     norms = wts.groupBy(id_col).agg(
         F.sqrt(F.sum(F.col("_w") * F.col("_w"))).alias("_nrm")
@@ -1128,14 +1129,14 @@ def decontaminate(
 
         import pandas as pd
 
-        from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+        from plumberapp_spark.functions.text import split_tokens
         id_ddl = df.schema[id_col].dataType.simpleString()
 
         def gen(batches):
             for pdf in batches:
                 ids, shs = [], []
                 for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = [t for t in ws.split(text) if t] if text is not None else []
+                    toks = split_tokens(text)
                     seen = {
                         " ".join(toks[i : i + ngram]) for i in range(len(toks) - ngram + 1)
                     }
@@ -1327,7 +1328,7 @@ def bloom_decontaminate(
 
         import pandas as pd
 
-        from plumberapp_spark.functions.text import WS_SPLIT as ws
+        from plumberapp_spark.functions.text import split_tokens
 
         bits = bytearray(n_bits // 8 + 1)
         for row in positions.collect():  # bounded: eval-set sized
@@ -1340,7 +1341,7 @@ def bloom_decontaminate(
             for pdf in batches:
                 ids, counts = [], []
                 for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = [t for t in ws.split(text) if t] if text is not None else []
+                    toks = split_tokens(text)
                     seen = {
                         " ".join(toks[i : i + ngram])
                         for i in range(len(toks) - ngram + 1)
@@ -1438,7 +1439,7 @@ def duplicate_spans(
 
         import pandas as pd
 
-        from plumberapp_spark.functions.text import WS_SPLIT as ws
+        from plumberapp_spark.functions.text import split_tokens
 
         id_ddl = df.schema[id_col].dataType.simpleString()
 
@@ -1446,7 +1447,7 @@ def duplicate_spans(
             for pdf in batches:
                 ids, ps, hs = [], [], []
                 for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    tk = [t for t in ws.split(text) if t] if text is not None else []
+                    tk = split_tokens(text)
                     for i in range(len(tk) - ngram + 1):
                         g = " ".join(tk[i : i + ngram])
                         ids.append(row_id)
@@ -1572,11 +1573,8 @@ def bm25_topk(
         tf.join(_doc_frequencies(tf), "tk")
         .withColumn(
             "_w",
-            F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("_df") + 0.5) / (F.col("_df") + 0.5))
-            * (F.col("_tf") * (k1 + 1))
-            / (
-                F.col("_tf")
-                + k1 * (1 - b + b * F.col("_dl") / F.lit(avgdl))
+            bm25_weight(
+                F.col("_tf"), F.col("_df"), F.col("_dl"), F.lit(n_docs), F.lit(avgdl), k1, b
             ),
         )
     )
@@ -1641,7 +1639,7 @@ def remove_duplicate_spans(
 
     import pandas as pd
 
-    from plumberapp_spark.functions.text import WS_SPLIT as ws
+    from plumberapp_spark.functions.text import split_tokens
 
     id_ddl = df.schema[id_col].dataType.simpleString()
 
@@ -1649,7 +1647,7 @@ def remove_duplicate_spans(
         for pdf in batches:
             ids, ps, hs = [], [], []
             for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                tk = [t for t in ws.split(text) if t] if text is not None else []
+                tk = split_tokens(text)
                 for i in range(len(tk) - ngram + 1):
                     g = " ".join(tk[i : i + ngram])
                     ids.append(row_id)
@@ -1688,7 +1686,7 @@ def remove_duplicate_spans(
         for pdf in batches:
             ids, cleans, n_toks, n_rems = [], [], [], []
             for row_id, text, rem in zip(pdf[id_col], pdf[text_col], pdf["_rem"]):
-                tk = [t for t in ws.split(text) if t] if text is not None else []
+                tk = split_tokens(text)
                 cut = set(int(i) for i in rem) if rem is not None else set()
                 kept = [t for i, t in enumerate(tk, 1) if i not in cut]
                 ids.append(row_id)

@@ -4,11 +4,15 @@ standard production shape for LLM retrieval/curation stacks (every
 major search system fuses a sparse and a dense ranker this way; RRF is
 the fusion that needs no score calibration between routes).
 
-Scale shape: each route is one of the engine's existing bounded
-retrieval operators (``dedup.bm25_topk`` / ``lexical.bm25_topk_indexed``
-for sparse, ``similarity.brute_force_topk`` or the IVF paths for
-dense), so the fusion input is AT MOST ``|queries| x k_route`` rows per
-route — plan-bounded, never corpus-sized. The fusion itself is one
+A hybrid is ``rrf_fuse([lexical_route, dense_route])``: each route is
+one of the engine's existing bounded retrieval operators
+(``dedup.bm25_topk`` or ``segments.bm25_topk_segmented`` for sparse,
+``similarity.brute_force_topk`` or ``ivf_topk_indexed`` for dense), so
+the fusion input is AT MOST ``|queries| x k_route`` rows per route —
+plan-bounded, never corpus-sized. Both routes exclude a query's own
+doc (``neighbor_id != query_id``); free-text query ids live in their
+own id space. :func:`query_vectors` builds the dense route's query
+side for query docs drawn from the corpus. The fusion itself is one
 union + one aggregate + the family's shared two-stage top-k. Nothing
 here adds a corpus-sized exchange to what the routes already pay.
 
@@ -25,7 +29,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from plumberapp_spark.llm.lexical import _two_stage_topk
+from plumberapp_spark.llm.scoring import _two_stage_topk
 
 
 def rrf_fuse(
@@ -60,175 +64,13 @@ def rrf_fuse(
     return _two_stage_topk(scored, k, "rrf_score")
 
 
-def hybrid_search(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    k_route: int = 10,
-    k_rrf: int = 60,
-    text_col: str = "text",
-    doc_id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """BM25 + embedding-cosine hybrid top-k over a shared id space
-    (``documents.doc_id`` == ``embeddings.vec_id``, the q92 cross-modal
-    convention). ``queries`` carries query doc ids (+ text); each route
-    retrieves its own top ``k_route`` (self excluded) and RRF fuses
-    them. Both routes are the engine's bounded operators — broadcast
-    query sides, two-stage ranking — so the composition inherits their
-    scale contracts unchanged."""
-    from plumberapp_spark.llm.dedup import bm25_topk
-    from plumberapp_spark.llm.similarity import brute_force_topk
-
-    sparse = bm25_topk(docs, queries, k=k_route, text_col=text_col, id_col=doc_id_col)
-    qids = queries.select(F.col(doc_id_col).alias("_qid")).distinct()
-    qvecs = embeddings.join(
-        F.broadcast(qids), embeddings[vec_id_col] == F.col("_qid")
-    ).select(vec_id_col, vec_col)
-    dense = brute_force_topk(
-        embeddings, qvecs, k=k_route, id_col=vec_id_col, vec_col=vec_col
-    )
-    return rrf_fuse([sparse, dense], k=k, k_rrf=k_rrf)
-
-
-def hybrid_search_indexed(
-    spark,
-    lex_path: str,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    k_route: int = 10,
-    k_rrf: int = 60,
-    text_col: str = "text",
-    doc_id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`hybrid_search` with the sparse route served from a
-    persisted :func:`~plumberapp_spark.llm.lexical.build_lexical_index`
-    — the BM25 weights lineage is paid once at build, a query run
-    partition-prunes to its terms' buckets. The dense route stays the
-    EXACT brute-force operator (not IVF) so the fused output is
-    bit-identical to :func:`hybrid_search` on the same corpus and the
-    two share one oracle; swap in ``ivf_topk_indexed`` when approximate
-    dense recall is acceptable and the corpus outgrows the exact arm."""
-    from plumberapp_spark.llm.lexical import bm25_topk_indexed
-    from plumberapp_spark.llm.similarity import brute_force_topk
-
-    sparse = bm25_topk_indexed(
-        spark, lex_path, queries, k=k_route, text_col=text_col, id_col=doc_id_col
-    )
-    qids = queries.select(F.col(doc_id_col).alias("_qid")).distinct()
-    qvecs = embeddings.join(
-        F.broadcast(qids), embeddings[vec_id_col] == F.col("_qid")
-    ).select(vec_id_col, vec_col)
-    dense = brute_force_topk(
-        embeddings, qvecs, k=k_route, id_col=vec_id_col, vec_col=vec_col
-    )
-    return rrf_fuse([sparse, dense], k=k, k_rrf=k_rrf)
-
-
-def hybrid_search_ivf(
-    spark,
-    lex_path: str,
-    ivf_path: str,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    k_route: int = 10,
-    nprobe: int = 2,
-    k_rrf: int = 60,
-    text_col: str = "text",
-    doc_id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The fully index-served hybrid: BM25 from the persisted lexical
-    index AND the dense route from the persisted IVF index — the shape
-    a 100 TB retrieval deployment actually runs (neither route touches
-    a corpus-sized lineage at query time; the dense arm reads only the
-    probed cells' partitions). The dense route is IVF-approximate, so
-    this is NOT output-identical to :func:`hybrid_search`; its oracle
-    replays the IVF assignment exactly (the q54/q89 derivation), making
-    the approximation itself deterministic and hash-checkable."""
-    from plumberapp_spark.llm.lexical import bm25_topk_indexed
-    from plumberapp_spark.llm.similarity import ivf_topk_indexed
-
-    sparse = bm25_topk_indexed(
-        spark, lex_path, queries, k=k_route, text_col=text_col, id_col=doc_id_col
-    )
-    qids = queries.select(F.col(doc_id_col).alias("_qid")).distinct()
-    qvecs = embeddings.join(
-        F.broadcast(qids), embeddings[vec_id_col] == F.col("_qid")
-    ).select(vec_id_col, vec_col)
-    dense = ivf_topk_indexed(
-        spark, ivf_path, qvecs, k=k_route, nprobe=nprobe,
-        id_col=vec_id_col, vec_col=vec_col,
-    )
-    return rrf_fuse([sparse, dense], k=k, k_rrf=k_rrf)
-
-
-def hybrid_search_freetext(
-    spark,
-    lex_path: str,
-    ivf_path: str,
-    queries: DataFrame,
-    k: int = 10,
-    k_route: int = 10,
-    nprobe: int = 2,
-    k_rrf: int = 60,
-    text_col: str = "q_text",
-    vec_col: str = "q_vec",
-    id_col: str = "query_id",
-) -> DataFrame:
-    """The production serving shape end-to-end: a FREE-TEXT query (never
-    seen at index build) with a PROVIDED dense query vector, served
-    entirely from the two persisted indexes — BM25 from the pruned
-    lexical postings (``lexical.bm25_topk_freetext``, OOV terms drop),
-    dense from the probed IVF cells (``similarity.ivf_topk_indexed``,
-    which already takes arbitrary query vectors), RRF-fused. Embedding
-    the text into the vector is out of scope (no model in the engine);
-    the caller provides it, which is exactly where a deployment's
-    encoder hands off to the index layer.
-
-    ``queries`` carries ``(query_id, q_text, q_vec)``; ids live in
-    their own space (no self-exclusion applies — an id collision with a
-    corpus doc would wrongly exclude that doc from the dense arm, so
-    keep them disjoint). Scale posture is the two routes' unchanged:
-    pruned postings subset + probed cells only."""
-    from plumberapp_spark.llm.lexical import bm25_topk_freetext
-    from plumberapp_spark.llm.similarity import ivf_topk_indexed
-
-    # BOTH routes collect from the query frame (term pairs / the query
-    # matrix), each executing its full lineage — for a derived frame
-    # (e.g. vectors assembled by joins) that doubles the query-side
-    # work. Materialize it once as a local relation under the same
-    # bounded contract ivf_topk_indexed enforces anyway (round 11).
-    q_rows = queries.limit(100_001).collect()
-    if len(q_rows) > 100_000:
-        raise ValueError(
-            "hybrid_search_freetext: query side exceeds the broadcastable "
-            "contract (> 100000 rows); batch the queries"
-        )
-    from plumberapp_spark.session import local_relation
-
-    queries = local_relation(spark, q_rows, queries.schema)
-
-    sparse = bm25_topk_freetext(
-        spark, lex_path, queries, k=k_route, text_col=text_col, id_col=id_col
-    )
-    # ivf_topk_indexed's id_col/vec_col name the INDEXED corpus columns
-    # (it reads the cells parquet with them) and the query frame must
-    # match — rename the provided vector frame into the index's space
-    dense = ivf_topk_indexed(
-        spark,
-        ivf_path,
-        queries.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ),
-        k=k_route,
-        nprobe=nprobe,
-    )
-    return rrf_fuse([sparse, dense], k=k, k_rrf=k_rrf)
+def query_vectors(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """The dense-route query side for query docs drawn from the corpus:
+    the ``(vec_id, embedding)`` rows of ``embeddings`` whose id is a
+    query ``doc_id`` (the shared id space ``documents.doc_id`` ==
+    ``embeddings.vec_id``), joined against the broadcast distinct query
+    ids."""
+    qids = queries.select(F.col("doc_id").alias("_qid")).distinct()
+    return embeddings.join(
+        F.broadcast(qids), embeddings["vec_id"] == F.col("_qid")
+    ).select("vec_id", "embedding")

@@ -1,12 +1,12 @@
 """Positional postings + phrase retrieval — the lexical tier's
 exact-phrase feature (round 12).
 
-The persisted lexical index (:mod:`plumberapp_spark.llm.lexical`)
-serves bag-of-words rankings: postings are (term, doc, weight) rows
-with no record of WHERE a term sits inside its document, so "exact
-phrase" — the other half of every production search box, Lucene's
-``PhraseQuery`` next to its term queries — cannot be answered. This
-module adds the missing relation and the serving path on top of it:
+The lexical index (:mod:`plumberapp_spark.llm.segments`) serves
+bag-of-words rankings: postings are (term, doc, tf) rows with no record
+of WHERE a term sits inside its document, so "exact phrase" — the
+other half of every production search box, Lucene's ``PhraseQuery``
+next to its term queries — cannot be answered. This module adds the
+missing relation and the serving path on top of it:
 
 * **build once** (:func:`build_positional_index`): one tokenize pass
   (``posexplode`` — the same whitespace tokenizer as every lexical
@@ -34,12 +34,12 @@ module adds the missing relation and the serving path on top of it:
 
 * **phrase-constrained ranking** (:func:`phrase_bm25_topk`): the
   production composition "match the phrase exactly, rank matches by
-  relevance". Phrase matches come from the positional relation;
-  BM25 scores come from the weights index's pruned postings —
-  candidates are semi-joined against the (broadcast) phrase-match
-  pairs BEFORE the dot aggregate, so the scoring aggregation's input
-  shrinks to the phrase survivors instead of every doc sharing any
-  query term.
+  relevance". Phrase matches come from the positional relation; BM25
+  scores come from the segmented index's serving core, with the
+  phrase-match pairs as its candidate relation — semi-joined into the
+  pruned postings BEFORE the dot aggregate, so the scoring
+  aggregation's input shrinks to the phrase survivors instead of every
+  doc sharing any query term.
 
 100 TB posture: positions are ~doc-length rows where weight postings
 are ~distinct-term rows (a constant small factor on the same layout —
@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from plumberapp_spark.llm.lexical import (
+from plumberapp_spark.llm.scoring import (
     DEFAULT_BUCKETS,
     _bucket,
     _two_stage_topk,
@@ -118,9 +118,10 @@ def ensure_positional_index(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> str:
-    """Build-once path contract — ``ensure_lexical_index``'s sidecar
-    pattern verbatim: rebuilt when the marker is missing, the recorded
-    source mtime differs, or the recorded layout format differs."""
+    """Build-once path contract — the ``session.ensure_fixture`` sidecar
+    pattern every index fixture uses: rebuilt when the marker is
+    missing, the recorded source mtime differs, or the recorded layout
+    format differs."""
     from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
     path = fixture_path(spark, sf_dir, "pos", table)
@@ -169,7 +170,11 @@ def phrase_matches(
     uses it as a candidate filter."""
     import zlib
 
-    from plumberapp_spark.session import local_relation, read_parquet_cached
+    from plumberapp_spark.session import (
+        collect_bounded,
+        local_relation,
+        read_parquet_cached,
+    )
 
     n_buckets = _pos_scalars(spark, path)
     # ONE bounded collect of the (query, off, term) pairs (the
@@ -177,12 +182,7 @@ def phrase_matches(
     # under the index's recorded modulus (zlib.crc32 == Spark crc32 over
     # utf-8 bytes — parity pinned by test).
     qt_plan = _phrase_pairs(queries)
-    qt_rows = qt_plan.limit(100_001).collect()
-    if len(qt_rows) > 100_000:
-        raise ValueError(
-            "phrase_matches: query phrase set exceeds the broadcastable "
-            "contract (> 100000 (query, off, term) pairs); batch the queries"
-        )
+    qt_rows = collect_bounded(qt_plan, "phrase_matches: (query, off, term) pairs")
     # Round-11 restructure (guide §1.2 step 1, §2.3): the old plan
     # joined every pruned position row against every (query, off, term)
     # pair sharing its term, so a zipf-head phrase term was replicated
@@ -360,74 +360,38 @@ def phrase_topk_indexed(
 
 def phrase_bm25_topk(
     spark,
-    lex_path: str,
+    seg_path: str,
     pos_path: str,
     queries: DataFrame,
     k: int = 10,
 ) -> DataFrame:
     """Phrase-constrained BM25: candidates must contain the query's
     exact phrase (positional index); survivors are ranked by the BM25
-    dot of the query's full term set against the weights index.
+    of the query's full term set over the segmented index at
+    ``seg_path``.
 
-    ``queries`` carries ``(query_id, phrase array<string>,
-    terms array<string>)`` — the phrase that must match and the term
-    set to rank by (for a search box these coincide; the fixture ranks
-    by the source doc's full text so scores are discriminative).
+    ``queries`` carries ``(query_id, phrase array<string>, text string)``
+    — the phrase that must match and the text whose term set ranks
+    (for a search box these coincide; the fixture ranks by the source
+    doc's full text so scores are discriminative).
 
     The phrase-match pair set is per-query tiny (exact phrases are
-    rare), so it broadcasts INTO the postings scan: the BM25 aggregate
-    only ever sees rows for docs that already matched the phrase —
-    scoring cost scales with match count, not with term popularity."""
-    from plumberapp_spark.llm.lexical import _index_scalars, _query_postings
-    from plumberapp_spark.session import local_relation
+    rare), so it enters the BM25 core as its ``(query_id, doc_id)``
+    candidate relation and broadcasts INTO the postings scan: the BM25
+    aggregate only ever sees rows for docs that already matched the
+    phrase — scoring cost scales with match count, not with term
+    popularity (join order: ``segments._match``)."""
+    from plumberapp_spark.llm.segments import bm25_topk_segmented
+    from plumberapp_spark.session import collect_bounded, local_relation
 
     # the query frame feeds two bounded collects (phrase pairs + term
     # set), each executing its full lineage — for a doc-derived fixture
     # that is two corpus-side tokenize scans. Materialize it once as a
     # local relation under the same 100k contract (round 11).
-    q_raw = queries.limit(100_001).collect()
-    if len(q_raw) > 100_000:
-        raise ValueError(
-            "phrase_bm25_topk: query side exceeds the broadcastable "
-            "contract (> 100000 rows); batch the queries"
-        )
-    queries = local_relation(spark, q_raw, queries.schema)
-
-    pairs = phrase_matches(spark, pos_path, queries).select(
-        "query_id", "doc_id"
+    queries = local_relation(
+        spark, collect_bounded(queries, "phrase_bm25_topk: query side"), queries.schema
     )
-    _, n_buckets = _index_scalars(spark, lex_path)
-    # one bounded collect; the (query, term) relation broadcasts as a
-    # LocalTableScan and _query_postings receives the already-local term
-    # set instead of re-running the explode per consumer (see
-    # phrase_matches / bm25_topk_segmented — same contract)
-    qterms_plan = (
-        queries.select("query_id", F.explode("terms").alias("tk")).distinct()
+    pairs = phrase_matches(spark, pos_path, queries).select("query_id", "doc_id")
+    return bm25_topk_segmented(
+        spark, seg_path, queries, k, "text", "query_id", candidates=pairs
     )
-    q_rows = qterms_plan.limit(100_001).collect()
-    if len(q_rows) > 100_000:
-        raise ValueError(
-            "phrase_bm25_topk: query term set exceeds the broadcastable "
-            "contract (> 100000 (query, term) pairs); batch the queries"
-        )
-    qterms = local_relation(spark, q_rows, qterms_plan.schema)
-    cand = _query_postings(
-        spark, lex_path, None, n_buckets, tk_rows=[r["tk"] for r in q_rows]
-    )
-    # join ORDER matters (guide §3.4): probing the tiny distinct
-    # phrase-match pair set FIRST (on doc_id) keeps the pipelined
-    # intermediate at |postings-of-matched-docs × matching-queries|;
-    # probing qterms first fans every common-term posting row out to
-    # every query sharing that term before the semi-join can cut it.
-    # pairs is distinct (query, doc) by construction (phrase_matches
-    # ends in a groupBy on exactly those keys), so the inner join
-    # duplicates nothing; the qterms semi-join then applies the same
-    # t ∈ terms(q) predicate — identical (q, d, t) triples either way.
-    scored = (
-        cand.join(F.broadcast(pairs), "doc_id")
-        .join(F.broadcast(qterms), ["query_id", "tk"], "left_semi")
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("w_bm25"), 6).alias("bm25"))
-        .select("query_id", F.col("doc_id").alias("neighbor_id"), "bm25")
-    )
-    return _two_stage_topk(scored, k, "bm25")

@@ -293,7 +293,7 @@ def dsir_importance(
 
         import pandas as pd
 
-        from plumberapp_spark.functions.text import WS_SPLIT as ws
+        from plumberapp_spark.functions.text import split_tokens
 
         pre = f"s{seed}:"
         id_ddl = frame.schema[id_col].dataType.simpleString()
@@ -307,7 +307,7 @@ def dsir_importance(
                     else ((None, t) for t in pdf[text_col])
                 )
                 for row_id, text in rows:
-                    toks = [t for t in ws.split(text) if t] if text is not None else []
+                    toks = split_tokens(text)
                     feats = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
                     counts = Counter(
                         int(hashlib.md5((pre + f).encode()).hexdigest()[:14], 16)

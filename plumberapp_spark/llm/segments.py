@@ -1,13 +1,14 @@
-"""Segment-based INCREMENTAL lexical index — append new documents
-without touching (or re-reading) what is already indexed.
+"""The engine's lexical index: segment-based and INCREMENTAL — append
+new documents without touching (or re-reading) what is already indexed,
+and serve every lexical query (BM25 and tf-idf, in-corpus query docs
+and free text, filtered, after deletes, phrase-constrained) through
+one core.
 
-The persisted index in :mod:`plumberapp_spark.llm.lexical` is
-build-once/serve-many: adding even one document means rebuilding the
-whole thing, because its postings store FINAL weights (tf-idf, BM25)
-that bake in the corpus globals ``N`` / ``df(t)`` / ``avgdl`` — and an
-append shifts every one of those, staling every stored weight. At
-100 TB a full rebuild to absorb a 1 % crawl delta re-tokenizes 100 TB
-of text; that is the cost this module removes.
+A build-once index that stored FINAL weights (tf-idf, BM25) would bake
+the corpus globals ``N`` / ``df(t)`` / ``avgdl`` into every posting, so
+absorbing even one document would mean a rebuild: at 100 TB, a 1 %
+crawl delta would re-tokenize 100 TB of text. Segments store raw
+statistics instead, and serving computes the weights.
 
 The design is the classic segmented (Lucene-style) inverted index,
 re-expressed as parquet relations:
@@ -17,7 +18,7 @@ re-expressed as parquet relations:
 
   - ``postings`` — ``(tk, doc_id, _tf, _dl, _b)``: RAW statistics only
     (in-doc term frequency and doc length), partitioned by
-    ``_b = crc32(tk) % n_buckets`` exactly like the lexical index so a
+    ``_b = crc32(tk) % n_buckets`` (``scoring._bucket``) so a
     query prunes its scan to the buckets its terms hash into;
   - ``termstats`` — ``(tk, _df, _b)``: the segment's per-term document
     frequency, same bucket layout (a query reads df for ITS terms via
@@ -40,13 +41,19 @@ re-expressed as parquet relations:
   row on the fly. The scores are bit-identical to a from-scratch build
   over the union corpus (q104's oracle IS q102's full-corpus oracle).
 
-  tf-idf **cosine** is deliberately NOT served incrementally: a doc's
-  L2 norm ``sqrt(Σ_t (tf·idf_t)²)`` is NOT additive — it shifts with
-  every df/N change, and recomputing it needs all of the doc's terms,
-  not just the query's. That is precisely why production incremental
-  indexes score BM25; callers who need the cosine family compact first
-  (:func:`compact_segments`) and build the weighted index from the
-  merged corpus.
+  tf-idf **cosine** needs one maintenance step: a doc's L2 norm
+  ``sqrt(Σ_t (tf·idf_t)²)`` is NOT additive — it shifts with every
+  df/N change, and recomputing it needs all of the doc's terms, not
+  just the query's. :func:`refresh_tfidf_norms` recomputes the norms
+  relation over the current segments (a numeric pass, no
+  re-tokenization) and :func:`tfidf_topk_segmented` refuses to serve
+  over norms that do not cover the current segment set.
+
+* every serve runs one core: :func:`_query_postings` (one bounded
+  collect of the query side, pruned postings scans) → score (one
+  :mod:`~plumberapp_spark.llm.scoring` weight expression per ranking
+  function, with :func:`_match`'s optional candidate relation and
+  self-exclusion) → ``scoring._two_stage_topk``.
 
 * :func:`compact_segments` merges all segments into one — a pure
   numeric pass over the raw postings (union + df re-roll), with NO
@@ -80,15 +87,17 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from plumberapp_spark.llm.lexical import (
+from plumberapp_spark.llm.scoring import (
     DEFAULT_BUCKETS,
     _bucket,
     _two_stage_topk,
+    bm25_weight,
+    tfidf_weight,
 )
 
 # bumped whenever the on-disk segment layout changes; recorded in the
 # ensure-path sidecar so a layout change rebuilds instead of serving an
-# incompatible schema (same contract as lexical.INDEX_FORMAT).
+# incompatible schema.
 # 2: completion marker moved from postings to scalars — postings is
 # written FIRST (the only relation needing the tokenize pass) and
 # termstats/scalars are derived by reading it back, so a segment costs
@@ -471,8 +480,8 @@ def _apply_tombstones(
     from the pruned postings (:func:`_minus_tombstones`), and REPLACE
     the termstats-derived df with a count over the live postings — each
     (doc, term) posting row is one df unit, so ``count(live rows per
-    tk)`` IS ``Σ termstats − removed`` exactly (the q101 free-text
-    trick: the postings are their own df relation). That costs one
+    tk)`` IS ``Σ termstats − removed`` exactly (the postings are their
+    own df relation). That costs one
     aggregate over rows the scoring scan touches anyway and saves both
     the termstats scans and a correction join; with no tombstones the
     cheaper summed-termstats ``dfreq`` passes through untouched.
@@ -652,6 +661,99 @@ def _query_terms(spark, q_rows, n_buckets: int) -> tuple[DataFrame, list[int]]:
     return local_relation(spark, [(tk,) for tk in tks], "tk string"), buckets
 
 
+def _query_postings(
+    spark, path: str, queries: DataFrame, text_col: str, id_col: str, qtf: bool
+):
+    """The serving core's read side, shared by both ranking functions:
+    ``(segs, qterms, terms, buckets, postings)``.
+
+    ONE bounded collect of the query side: the (query, term) pairs —
+    with their in-query counts ``_qtf`` when ``qtf`` — under the same
+    small-side contract as the ANN query-matrix collects. Everything
+    query-sided then serves from LOCAL relations: ``qterms`` (the
+    collected rows) and ``terms`` (the distinct terms, with the
+    pruning ``buckets`` computed driver-side by :func:`_query_terms`),
+    so every broadcast join ships a LocalTableScan instead of
+    re-executing tokenize + distinct per branch. ``postings`` is the
+    union of every segment's postings, each scan pruned to the query
+    terms' buckets and semi-joined on the terms themselves. Query docs
+    drawn from the corpus and free-text strings enter the same way:
+    ``text_col`` is tokenized with the engine's one tokenizer."""
+    from plumberapp_spark.functions.text import tokenize
+    from plumberapp_spark.session import collect_bounded, local_relation
+
+    segs = _list_segments(path)
+    if not segs:
+        raise ValueError(f"no segments under {path!r} — build or append first")
+    pairs = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.explode(tokenize(F.col(text_col))).alias("tk"),
+    )
+    plan = (
+        pairs.groupBy("query_id", "tk").agg(F.count("*").alias("_qtf"))
+        if qtf
+        else pairs.distinct()
+    )
+    q_rows = collect_bounded(plan, "query term set ((query, term) pairs)")
+    terms, buckets = _query_terms(spark, q_rows, _seg_buckets(spark, segs[0]))
+    postings = _union_pruned(spark, segs, "postings", buckets).join(
+        F.broadcast(terms), "tk", "left_semi"
+    )
+    return segs, local_relation(spark, q_rows, plan.schema), terms, buckets, postings
+
+
+def _summed_df(spark, segs: list[str], buckets: list[int], terms=None) -> DataFrame:
+    """``(tk, _df)`` of the union corpus before deletes: per-segment
+    termstats summed (df is additive over segments), pruned to
+    ``buckets`` and semi-joined on ``terms`` when given."""
+    ts = _union_pruned(spark, segs, "termstats", buckets)
+    if terms is not None:
+        ts = ts.join(F.broadcast(terms), "tk", "left_semi")
+    return ts.groupBy("tk").agg(F.sum("_df").alias("_df"))
+
+
+def _match(postings: DataFrame, query_side: DataFrame, candidates) -> DataFrame:
+    """Pair every posting with the queries that ask for its term: the
+    join with ``query_side`` (keyed ``(query_id, tk)``), restricted to
+    ``candidates`` and with each query's own doc excluded.
+
+    ``candidates`` is an optional relation of servable docs, semi-joined
+    on whichever of ``(query_id, doc_id)`` it carries:
+
+    * ``doc_id`` only — FILTERED retrieval (lang, source, date range):
+      the allowed docs of every query, semi-joined against the pruned
+      postings before any query fan-out, without a forced broadcast, so
+      AQE picks broadcast for small filters and a shuffled semi-join for
+      wide ones;
+    * ``(query_id, doc_id)`` — per-query candidates such as phrase
+      matches, assumed distinct on those keys. Join ORDER matters here:
+      probing the small pair set FIRST (on doc_id) keeps the pipelined
+      intermediate at |postings of matched docs × matching queries|;
+      probing the query terms first would fan every common-term posting
+      row out to every query sharing that term before the pairs could
+      cut it. The pairs are distinct, so the inner join duplicates
+      nothing, and the (query_id, tk) join then applies the same
+      t ∈ terms(q) predicate.
+
+    Either way a filter restricts CANDIDATES only: callers compute df
+    over the whole live corpus before this step (Lucene/ES filtered-
+    query semantics). Self-exclusion is the family's one rule,
+    ``neighbor_id != query_id``: free-text query ids live in their own
+    id space (the registered fixtures use 9000001+), so it only ever
+    drops an in-corpus query doc's match with itself."""
+    if candidates is not None and "query_id" in candidates.columns:
+        matched = postings.join(
+            F.broadcast(candidates.select("query_id", "doc_id")), "doc_id"
+        ).join(F.broadcast(query_side), ["query_id", "tk"])
+    else:
+        if candidates is not None:
+            postings = postings.join(
+                candidates.select("doc_id").distinct(), "doc_id", "left_semi"
+            )
+        matched = postings.join(F.broadcast(query_side), "tk")
+    return matched.filter(F.col("doc_id") != F.col("query_id"))
+
+
 def bm25_topk_segmented(
     spark,
     path: str,
@@ -661,67 +763,26 @@ def bm25_topk_segmented(
     id_col: str = "query_id",
     k1: float = 1.2,
     b: float = 0.75,
-    doc_filter: DataFrame | None = None,
+    candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact BM25 top-k for free-text queries over ALL segments —
-    score-identical to a from-scratch index over the union corpus
-    (same Robertson/Lucene formula as ``dedup.bm25_topk``, 6-decimal
-    rounding before rank, neighbor-id tie-break; the registered query's
-    oracle is the full-corpus q102 oracle verbatim).
+    """Exact BM25 top-k over ALL segments — score-identical to a
+    from-scratch index over the union corpus and to ``dedup.bm25_topk``
+    on it (one :func:`~plumberapp_spark.llm.scoring.bm25_weight`,
+    6-decimal rounding before rank, neighbor-id tie-break). The query is
+    the distinct term SET of ``text_col``: a free-text string, or the
+    text of query docs drawn from the corpus (q95 passes its query
+    docs' ``text``/``doc_id`` and shares q83's oracle).
 
-    Per query run: one pruned postings scan per segment (bucket
-    partition filter + broadcast semi-join on the query's distinct
-    terms, built on the driver from the collected (query, term) pairs),
-    tombstoned ids dropped by :func:`_minus_tombstones` inside that scan,
-    a query-vocab-sized df merge, the per-row weight arithmetic with N
-    and avgdl inlined as literals (:func:`_with_globals`), one bounded
-    aggregate, and the family's shared top-k tail. Nothing corpus-sized
-    is recomputed.
-
-    ``doc_filter`` (round 11 — FILTERED retrieval, the production shape
-    where results are predicated on metadata: lang, source, date
-    range): a slim one-column relation of servable doc ids, semi-joined
-    against the pruned postings BEFORE scoring/top-k — so the filter
-    rides the rows the scan already touches, inside partition pruning,
-    never a post-rank re-query that could return fewer than k hits.
-    Corpus statistics (df, N, avgdl) deliberately stay those of the
-    whole live corpus — Lucene/ES filtered-query semantics: a filter
-    restricts CANDIDATES, it does not re-weigh the collection (that
-    would be a different index; deletes are the operation that moves
-    the stats, and they do). Build the relation by projecting doc_id
-    from any attribute predicate (e.g. ``docs.filter("lang='en'")
-    .select("doc_id")``); the plan semi-joins it without a forced
-    broadcast, so AQE picks broadcast for small filters and a shuffled
-    semi-join for wide ones."""
-    from plumberapp_spark.functions.text import tokenize
-    from plumberapp_spark.session import local_relation
-
-    segs = _list_segments(path)
-    if not segs:
-        raise ValueError(f"no segments under {path!r} — build or append first")
-    n_buckets = _seg_buckets(spark, segs[0])
-    # ONE bounded collect of the (query, term) pairs (the same
-    # small-side contract as the ANN query-matrix collects, guarded);
-    # everything query-sided then serves from LOCAL relations — the
-    # pairs, and the distinct terms and their pruning buckets computed
-    # driver-side (_query_terms) — so every broadcast join ships a
-    # LocalTableScan instead of re-executing tokenize+distinct per
-    # branch (identical rows by construction — they ARE the collected
-    # output of the old plan).
-    qterms_plan = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(tokenize(F.col(text_col))).alias("tk"),
-    ).distinct()
-    q_rows = qterms_plan.limit(100_001).collect()
-    if len(q_rows) > 100_000:
-        raise ValueError(
-            "bm25_topk_segmented: query term set exceeds the broadcastable "
-            "contract (> 100000 (query, term) pairs); batch the queries"
-        )
-    qterms = local_relation(spark, q_rows, qterms_plan.schema)
-    terms, buckets = _query_terms(spark, q_rows, n_buckets)
-    postings = _union_pruned(spark, segs, "postings", buckets).join(
-        F.broadcast(terms), "tk", "left_semi"
+    Per query run: :func:`_query_postings`' pruned scans, tombstoned ids
+    dropped by :func:`_minus_tombstones` inside them, a
+    query-vocab-sized df merge, :func:`_match`'s candidate restriction
+    and self-exclusion, the per-row weight with N and avgdl inlined as
+    literals (:func:`_with_globals`), one bounded aggregate, and the
+    family's shared top-k tail. Nothing corpus-sized is recomputed.
+    ``candidates``: see :func:`_match` (q120 passes a doc filter, q130
+    its phrase-match pairs)."""
+    segs, qterms, terms, buckets, postings = _query_postings(
+        spark, path, queries, text_col, id_col, qtf=False
     )
     tombs = _list_tombstones(path)
     if tombs:
@@ -736,39 +797,15 @@ def bm25_topk_segmented(
         postings = _minus_tombstones(spark, tombs, postings).withColumn(
             "_df", F.count("*").over(Window.partitionBy("tk"))
         )
-    if doc_filter is not None:
-        # AFTER df settles (stats are corpus-level by contract), BEFORE
-        # weighting (don't score rows the filter will drop)
-        allowed = doc_filter.select(
-            F.col(doc_filter.columns[0]).alias("doc_id")
-        ).distinct()
-        postings = postings.join(allowed, "doc_id", "left_semi")
-    weighted = postings.join(F.broadcast(qterms), "tk")
+    weighted = _match(postings, qterms, candidates)
     if not tombs:
-        dfreq = (
-            _union_pruned(spark, segs, "termstats", buckets)
-            .join(F.broadcast(terms), "tk", "left_semi")
-            .groupBy("tk")
-            .agg(F.sum("_df").alias("_df"))
-        )
-        weighted = weighted.join(F.broadcast(dfreq), "tk")
+        weighted = weighted.join(F.broadcast(_summed_df(spark, segs, buckets, terms)), "tk")
+    w = bm25_weight(
+        F.col("_tf"), F.col("_df"), F.col("_dl"), F.col("_nd"), F.col("_avgdl"), k1, b
+    )
     scored = (
         _with_globals(spark, weighted, segs, tombs)
-        .select(
-            "query_id",
-            "doc_id",
-            (
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("_nd") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
-                )
-                * (F.col("_tf") * (k1 + 1))
-                / (
-                    F.col("_tf")
-                    + k1 * (1 - b + b * F.col("_dl") / F.col("_avgdl"))
-                )
-            ).alias("_w"),
-        )
+        .select("query_id", "doc_id", w.alias("_w"))
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("_w"), 6).alias("bm25"))
         .select("query_id", F.col("doc_id").alias("neighbor_id"), "bm25")
@@ -794,21 +831,17 @@ def refresh_tfidf_norms(spark, path: str) -> str:
     segs = _list_segments(path)
     if not segs:
         raise ValueError(f"no segments under {path!r} — nothing to refresh")
-    postings = _union_pruned(spark, segs, "postings", [])
-    dfreq = (
-        _union_pruned(spark, segs, "termstats", [])
-        .groupBy("tk")
-        .agg(F.sum("_df").alias("_df"))
-    )
     # deletions shift every df and N too — the refresh applies them the
     # same way serving does (anti-join + counted corrections), so the
     # norms it writes are those of corpus-minus-deleted
-    postings, dfreq, tombs = _apply_tombstones(spark, path, postings, dfreq)
+    postings, dfreq, tombs = _apply_tombstones(
+        spark, path, _union_pruned(spark, segs, "postings", []), _summed_df(spark, segs, [])
+    )
     (
         _with_globals(spark, postings.join(dfreq, "tk"), segs, tombs, ("_nd",))
         .select(
             "doc_id",
-            (F.col("_tf") * F.log(F.col("_nd") / F.col("_df"))).alias("_w"),
+            tfidf_weight(F.col("_tf"), F.col("_df"), F.col("_nd")).alias("_w"),
         )
         .groupBy("doc_id")
         .agg(F.sqrt(F.sum(F.col("_w") * F.col("_w"))).alias("nrm"))
@@ -871,71 +904,37 @@ def tfidf_topk_segmented(
     text_col: str = "q_text",
     id_col: str = "query_id",
 ) -> DataFrame:
-    """Free-text tf-idf cosine top-k over the segmented index —
-    output-identical to ``lexical.tfidf_topk_freetext`` on the union
-    corpus (q111 shares q101's full-corpus oracle). Doc-side weights
-    compute at serve time from the pruned scans (every SCORED posting
-    carries a query term, so its df is already in the pruned df
-    relation); the query vector weights from the same df; the only
-    extra relation is the refreshed norms, joined against the bounded
-    scored frame (one slim doc-keyed scan per run)."""
-    from plumberapp_spark.functions.text import tokenize
-    from plumberapp_spark.session import local_relation
-
-    segs = _list_segments(path)
-    if not segs:
-        raise ValueError(f"no segments under {path!r} — build or append first")
+    """tf-idf cosine top-k over the segmented index — output-identical
+    to ``dedup.tfidf_topk`` on the union corpus for query docs drawn
+    from it (q94 shares q80's oracle) and to the full-corpus free-text
+    derivation for novel strings (q111 shares q101's oracle). The query
+    vector is ``qtf(t) · ln(N/df(t))`` over the terms the corpus knows:
+    OOV terms have no df, so they drop from the dot AND the query norm
+    (for an in-corpus query doc that norm is the doc's own). Doc-side
+    weights compute at serve time from the pruned scans (every SCORED
+    posting carries a query term, so its df is already in the pruned df
+    relation); the only extra relation is the refreshed norms, joined
+    against the bounded scored frame (one slim doc-keyed scan per run).
+    Self-exclusion: see :func:`_match`."""
+    segs, qtf, terms, buckets, postings = _query_postings(
+        spark, path, queries, text_col, id_col, qtf=True
+    )
     norms = _covered_norms(spark, path, segs)
-    n_buckets = _seg_buckets(spark, segs[0])
-    # one bounded collect; local query relations thereafter (see
-    # bm25_topk_segmented — same contract, same _query_terms)
-    qtf_plan = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(tokenize(F.col(text_col))).alias("tk"),
-        )
-        .groupBy("query_id", "tk")
-        .agg(F.count("*").alias("_qtf"))
+    postings, dfreq, tombs = _apply_tombstones(
+        spark, path, postings, _summed_df(spark, segs, buckets, terms)
     )
-    q_rows = qtf_plan.limit(100_001).collect()
-    if len(q_rows) > 100_000:
-        raise ValueError(
-            "tfidf_topk_segmented: query term set exceeds the broadcastable "
-            "contract (> 100000 (query, term) pairs); batch the queries"
-        )
-    qtf = local_relation(spark, q_rows, qtf_plan.schema)
-    qterms, buckets = _query_terms(spark, q_rows, n_buckets)
-    dfreq = (
-        _union_pruned(spark, segs, "termstats", buckets)
-        .join(F.broadcast(qterms), "tk", "left_semi")
-        .groupBy("tk")
-        .agg(F.sum("_df").alias("_df"))
-    )
-    postings = _union_pruned(spark, segs, "postings", buckets).join(
-        F.broadcast(qterms), "tk", "left_semi"
-    )
-    postings, dfreq, tombs = _apply_tombstones(spark, path, postings, dfreq)
-    qw = (
-        _with_globals(spark, qtf.join(dfreq, "tk"), segs, tombs, ("_nd",))
-        .select(
-            "query_id",
-            "tk",
-            (F.col("_qtf") * F.log(F.col("_nd") / F.col("_df"))).alias("_qw"),
-        )
+    nd = F.col("_nd")
+    qw = _with_globals(spark, qtf.join(dfreq, "tk"), segs, tombs, ("_nd",)).select(
+        "query_id", "tk", tfidf_weight(F.col("_qtf"), F.col("_df"), nd).alias("_qw")
     )
     qn = qw.groupBy("query_id").agg(
         F.sqrt(F.sum(F.col("_qw") * F.col("_qw"))).alias("_qn")
     )
+    weighted = _with_globals(
+        spark, postings.join(F.broadcast(dfreq), "tk"), segs, tombs, ("_nd",)
+    ).select("tk", "doc_id", tfidf_weight(F.col("_tf"), F.col("_df"), nd).alias("_w"))
     scored = (
-        _with_globals(
-            spark, postings.join(F.broadcast(dfreq), "tk"), segs, tombs, ("_nd",)
-        )
-        .select(
-            "tk",
-            "doc_id",
-            (F.col("_tf") * F.log(F.col("_nd") / F.col("_df"))).alias("_w"),
-        )
-        .join(F.broadcast(qw.join(qn, "query_id")), "tk")
+        _match(weighted, qw.join(qn, "query_id"), None)
         .groupBy("query_id", "doc_id")
         .agg(
             F.sum(F.col("_w") * F.col("_qw")).alias("_dot"),
@@ -1093,8 +1092,9 @@ def ensure_segmented_index(
     seg_00001 — so serving exercises real multi-segment merge while the
     union is exactly the full table (q102's oracle applies verbatim).
     Rebuilt when the marker is missing, the recorded source mtime
-    differs, or the recorded layout format differs (sidecar contract
-    shared with ensure_lexical_index)."""
+    differs, or the recorded layout format differs (the
+    ``session.ensure_fixture`` sidecar contract). Every registered
+    lexical query on the full table serves this fixture."""
     from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
 
     path = fixture_path(spark, sf_dir, "seglex", table)

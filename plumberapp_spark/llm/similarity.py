@@ -1125,7 +1125,7 @@ def semantic_dedup(
 # bumped whenever the IVF on-disk layout (centroids/cells relations)
 # changes; recorded in ensure_ivf_index's sidecar so an index built under
 # an older layout rebuilds instead of failing or mis-serving (VERDICT r8
-# #4 — the same contract lexical.INDEX_FORMAT gives the postings index)
+# #4 — the same contract segments.SEG_FORMAT gives the lexical index)
 IVF_INDEX_FORMAT = 1
 SQ_IVF_FORMAT = 1
 

@@ -91,17 +91,16 @@ def language_id(
 
     import pandas as pd
 
-    from plumberapp_spark.functions.text import LANG_MARKERS
+    from plumberapp_spark.functions.text import LANG_MARKERS, split_tokens
 
     id_ddl = df.schema[id_col].dataType.simpleString()
-    from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
     markers = {lang: frozenset(LANG_MARKERS[lang]) for lang in sorted(LANG_MARKERS)}
 
     def lang_batches(batches):
         for pdf in batches:
             ids, preds = [], []
             for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in ws.split(text.lower()) if t] if text is not None else []
+                toks = split_tokens(None if text is None else text.lower())
                 best_lang, best_score = None, -1
                 for lang, marks in markers.items():
                     score = sum(1 for t in toks if t in marks)
@@ -136,14 +135,14 @@ def token_stats(
 
         import pandas as pd
 
-        from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+        from plumberapp_spark.functions.text import split_tokens
         id_ddl = df.schema[id_col].dataType.simpleString()
 
         def stats(batches):
             for pdf in batches:
                 n_tok, n_dist, n_sub = [], [], []
                 for text in pdf[text_col]:
-                    toks = [t for t in ws.split(text) if t] if text is not None else []
+                    toks = split_tokens(text)
                     n_tok.append(len(toks))
                     n_dist.append(len(set(toks)))
                     n_sub.append(sum((len(t) + 3) // 4 for t in toks))
@@ -239,14 +238,14 @@ def repetition_stats(
 
     import pandas as pd
 
-    from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+    from plumberapp_spark.functions.text import split_tokens
     id_ddl = df.schema[id_col].dataType.simpleString()
 
     def rep_batches(batches):
         for pdf in batches:
             n_tok, dup_w, dup_g, top_w = [], [], [], []
             for text in pdf[text_col]:
-                toks = [t for t in ws.split(text) if t] if text is not None else []
+                toks = split_tokens(text)
                 n = len(toks)
                 n_tok.append(n)
                 if n == 0:
@@ -332,11 +331,15 @@ def quality_filter(
 
     import pandas as pd
 
-    from plumberapp_spark.functions.text import LANG_MARKERS, STOPWORDS
+    from plumberapp_spark.functions.text import (
+        LANG_MARKERS,
+        PUNCT,
+        STOPWORDS,
+        split_tokens,
+    )
 
     id_ddl = df.schema[id_col].dataType.simpleString()
-    from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
-    non_punct = _re.compile(r"[^\w\s]", _re.ASCII)  # Java \w is ASCII
+    non_punct = _re.compile(PUNCT, _re.ASCII)
     stops = frozenset(STOPWORDS)
     markers = {lang: frozenset(LANG_MARKERS[lang]) for lang in sorted(LANG_MARKERS)}
 
@@ -346,7 +349,7 @@ def quality_filter(
             for text in pdf[text_col]:
                 if text is None:
                     text = ""
-                toks = [t for t in ws.split(text) if t]
+                toks = split_tokens(text)
                 n = len(toks)
                 n_chars = len(text)
                 if n < min_tokens:
@@ -364,7 +367,7 @@ def quality_filter(
                 if 1 - len(set(toks)) / n > max_dup_word:
                     reasons.append("repetition")
                     continue
-                ltoks = [t for t in ws.split(text.lower()) if t]
+                ltoks = split_tokens(text.lower())
                 best = -1
                 for marks in markers.values():  # sorted-lang order, strict >
                     score = sum(1 for t in ltoks if t in marks)
@@ -416,13 +419,13 @@ def top_ngrams(
 
     import pandas as pd
 
-    from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+    from plumberapp_spark.functions.text import split_tokens
 
     def gram_partials(batches):
         for pdf in batches:
             counts: Counter = Counter()
             for text in pdf[text_col]:
-                toks = [t for t in ws.split(text) if t] if text is not None else []
+                toks = split_tokens(text)
                 for i in range(len(toks) - n + 1):
                     counts[" ".join(toks[i : i + n])] += 1
             if counts:
@@ -469,14 +472,14 @@ def chunk_documents(
 
         import pandas as pd
 
-        from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+        from plumberapp_spark.functions.text import split_tokens
         id_ddl = df.schema[id_col].dataType.simpleString()
 
         def gen(batches):
             for pdf in batches:
                 ids, cids, texts, ns = [], [], [], []
                 for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = [t for t in ws.split(text) if t] if text is not None else []
+                    toks = split_tokens(text)
                     n = len(toks)
                     for cid, start in enumerate(range(0, n, stride)):
                         window = toks[start : start + max_tokens]
@@ -660,7 +663,7 @@ def _score_with_unigram_lm(
     scores expressed as data, not closure."""
     import pandas as pd
 
-    from plumberapp_spark.functions.text import WS_SPLIT as ws  # ASCII \\s == Java/RE2
+    from plumberapp_spark.functions.text import split_tokens
 
     if len(vocab) > _VOCAB_BROADCAST_CEILING:
         raise ValueError(
@@ -688,7 +691,7 @@ def _score_with_unigram_lm(
         for pdf in batches:
             n_tok, mean_lp = [], []
             for doc_text in pdf[text_col]:
-                toks = [t for t in ws.split(doc_text) if t] if doc_text is not None else []
+                toks = split_tokens(doc_text)
                 n_tok.append(len(toks))
                 if toks:
                     s = sum(map(get, toks, zeros)) - len(toks) * log_denom

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from plumberapp_spark.functions.text import tokenize
 from plumberapp_spark.plans.nodes import Pipeline
 from plumberapp_spark.operators.batching import bucket_by_sequence_length
 from plumberapp_spark.operators.transforms import (
@@ -123,9 +124,9 @@ def gnmt_pipeline(
     def lookup_ids(df: DataFrame) -> DataFrame:
         # P11/J4: token→id with <unk>=2 default via broadcast map literal
         # (map-side lookup; the join form is vocab_lookup())
-        toks = F.filter(F.split(F.col("line"), r"\s+"), lambda t: t != "")
-        toks_t = F.filter(F.split(F.col("line_tgt"), r"\s+"), lambda t: t != "")
-        return df.withColumn("src_tok", toks).withColumn("tgt_tok", toks_t)
+        return df.withColumn("src_tok", tokenize(F.col("line"))).withColumn(
+            "tgt_tok", tokenize(F.col("line_tgt"))
+        )
 
     p = (
         src.zip_with(tgt)

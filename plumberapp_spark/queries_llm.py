@@ -1816,22 +1816,31 @@ from plumberapp_spark.registry import REGISTRY as _REG
     "q94_tfidf_indexed_search",
     # identical result contract to q80 (same weights, rounding, ties), so
     # the oracle is q80's verbatim — what changes is WHERE the weights
-    # come from: a persisted token-bucket-partitioned postings index
+    # come from: the persisted token-bucket-partitioned segmented index
     oracle=_REG["q80_tfidf_search"].oracle,
 )
 def q94_tfidf_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tf-idf top-10 over a PERSISTED lexical index (round 8): the
+    """tf-idf top-10 over the PERSISTED segmented index (round 8): the
     index-once-serve-many contract for sparse retrieval. The corpus
-    weights/norms lineage — q80's dominant cost, recomputed per run —
-    is paid once at build (ensure_lexical_index); a query run tokenizes
-    only the 5 query docs, partition-prunes the postings scan to the
-    query terms' crc32 buckets, and pays one bounded aggregate +
-    two-stage top-k. Output is bit-identical to q80."""
-    from plumberapp_spark.llm.lexical import ensure_lexical_index, tfidf_topk_indexed
+    tokenize pass and the norms — q80's dominant cost, recomputed per
+    run — are paid once (ensure_segmented_index + ensure_tfidf_norms);
+    a query run tokenizes only the 5 query docs' text, partition-prunes
+    the postings scans to the query terms' crc32 buckets, weighs the
+    pruned rows, and pays one bounded aggregate + two-stage top-k, each
+    query doc excluded from its own results. Output is bit-identical to
+    q80."""
+    from plumberapp_spark.llm.segments import (
+        ensure_segmented_index,
+        ensure_tfidf_norms,
+        tfidf_topk_segmented,
+    )
 
-    path = ensure_lexical_index(spark, sf_dir, "documents")
+    path = ensure_segmented_index(spark, sf_dir, "documents")
+    ensure_tfidf_norms(spark, path)
     docs = load_table(spark, sf_dir, "documents")
-    return tfidf_topk_indexed(spark, path, docs.filter(F.col("doc_id") < 5), k=10)
+    return tfidf_topk_segmented(
+        spark, path, docs.filter(F.col("doc_id") < 5), k=10, text_col="text", id_col="doc_id"
+    )
 
 
 @register(
@@ -1839,15 +1848,18 @@ def q94_tfidf_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_REG["q83_bm25_search"].oracle,
 )
 def q95_bm25_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-10 over the same persisted lexical index (round 8): the
-    postings row carries both weight columns, so one build serves both
-    ranking functions. Query runs touch only the query terms' buckets.
-    Output is bit-identical to q83."""
-    from plumberapp_spark.llm.lexical import bm25_topk_indexed, ensure_lexical_index
+    """BM25 top-10 over the same persisted segmented index (round 8):
+    postings carry raw tf and doc length, so one build serves both
+    ranking functions. The query docs' text is the query; runs touch
+    only the query terms' buckets, and each query doc is excluded from
+    its own results. Output is bit-identical to q83."""
+    from plumberapp_spark.llm.segments import bm25_topk_segmented, ensure_segmented_index
 
-    path = ensure_lexical_index(spark, sf_dir, "documents")
+    path = ensure_segmented_index(spark, sf_dir, "documents")
     docs = load_table(spark, sf_dir, "documents")
-    return bm25_topk_indexed(spark, path, docs.filter(F.col("doc_id") < 5), k=10)
+    return bm25_topk_segmented(
+        spark, path, docs.filter(F.col("doc_id") < 5), k=10, text_col="text", id_col="doc_id"
+    )
 
 
 @register(
@@ -1945,32 +1957,47 @@ def q98_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     routes are the engine's bounded operators (broadcast query sides,
     two-stage ranking); the fold touches at most |queries| x k_route
     rows per route."""
-    from plumberapp_spark.llm.hybrid import hybrid_search
+    from plumberapp_spark.llm.dedup import bm25_topk
+    from plumberapp_spark.llm.hybrid import query_vectors, rrf_fuse
+    from plumberapp_spark.llm.similarity import brute_force_topk
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    return hybrid_search(docs, emb, docs.filter(F.col("doc_id") < 5), k=10, k_route=10)
+    queries = docs.filter(F.col("doc_id") < 5)
+    return rrf_fuse(
+        [
+            bm25_topk(docs, queries, k=10),
+            brute_force_topk(emb, query_vectors(emb, queries), k=10),
+        ],
+        k=10,
+    )
 
 
 @register(
     "q99_hybrid_indexed_search",
-    # output-identical to q98 (indexed sparse route serves the SAME BM25
-    # weights; dense route stays exact), so the oracle is q98's verbatim
+    # output-identical to q98 (the indexed sparse route serves the SAME
+    # BM25 weights; the dense route stays exact), so the oracle is q98's
     oracle=_REG["q98_hybrid_search"].oracle,
 )
 def q99_hybrid_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q98's hybrid retrieval with the sparse route served from the
-    persisted lexical index (round 8) — the full index-once-serve-many
+    persisted segmented index (round 8) — the index-once-serve-many
     composition: BM25 postings partition-pruned to the query terms'
     buckets, exact dense arm, RRF fold. Bit-identical to q98."""
-    from plumberapp_spark.llm.hybrid import hybrid_search_indexed
-    from plumberapp_spark.llm.lexical import ensure_lexical_index
+    from plumberapp_spark.llm.hybrid import query_vectors, rrf_fuse
+    from plumberapp_spark.llm.segments import bm25_topk_segmented, ensure_segmented_index
+    from plumberapp_spark.llm.similarity import brute_force_topk
 
-    path = ensure_lexical_index(spark, sf_dir, "documents")
+    path = ensure_segmented_index(spark, sf_dir, "documents")
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    return hybrid_search_indexed(
-        spark, path, emb, docs.filter(F.col("doc_id") < 5), k=10, k_route=10
+    queries = docs.filter(F.col("doc_id") < 5)
+    return rrf_fuse(
+        [
+            bm25_topk_segmented(spark, path, queries, k=10, text_col="text", id_col="doc_id"),
+            brute_force_topk(emb, query_vectors(emb, queries), k=10),
+        ],
+        k=10,
     )
 
 
@@ -2044,22 +2071,26 @@ def q99_hybrid_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q100_hybrid_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fully index-served hybrid (round 8): BM25 from the persisted
-    lexical index, dense from the persisted IVF index (nprobe=2) — the
+    segmented index, dense from the persisted IVF index (nprobe=2) — the
     deployment shape where NO route touches a corpus-sized lineage at
     query time. IVF makes the dense arm approximate, but the
     approximation is deterministic (q54/q89's assignment rules), so the
     oracle replays it exactly and the result is still hash-gated."""
-    from plumberapp_spark.llm.hybrid import hybrid_search_ivf
-    from plumberapp_spark.llm.lexical import ensure_lexical_index
-    from plumberapp_spark.llm.similarity import ensure_ivf_index
+    from plumberapp_spark.llm.hybrid import query_vectors, rrf_fuse
+    from plumberapp_spark.llm.segments import bm25_topk_segmented, ensure_segmented_index
+    from plumberapp_spark.llm.similarity import ensure_ivf_index, ivf_topk_indexed
 
-    lex = ensure_lexical_index(spark, sf_dir, "documents")
+    lex = ensure_segmented_index(spark, sf_dir, "documents")
     ivf = ensure_ivf_index(spark, sf_dir, "embeddings", n_centroids=16)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    return hybrid_search_ivf(
-        spark, lex, ivf, emb, docs.filter(F.col("doc_id") < 5),
-        k=10, k_route=10, nprobe=2,
+    queries = docs.filter(F.col("doc_id") < 5)
+    return rrf_fuse(
+        [
+            bm25_topk_segmented(spark, lex, queries, k=10, text_col="text", id_col="doc_id"),
+            ivf_topk_indexed(spark, ivf, query_vectors(emb, queries), k=10, nprobe=2),
+        ],
+        k=10,
     )
 
 
@@ -2170,18 +2201,22 @@ def _freetext_query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q101_tfidf_freetext_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tf-idf retrieval for FREE-TEXT queries (round 9): strings never
-    seen at index build, served from the persisted lexical index. Query
-    term df comes from counting the term's (pruned) posting rows — the
-    postings ARE the df relation — and N from the index scalars; OOV
-    terms drop from dot and query norm. One pruned postings scan serves
-    candidates and df both; everything query-sided broadcasts.
+    seen at index build, served from the persisted segmented index.
+    Query term df is the summed per-segment termstats of the query's
+    terms and N the summed segment scalars; OOV terms have no df and
+    drop from dot and query norm. Everything query-sided broadcasts.
     Reference analog for serving-unseen-tokens:
     mb/simple_gnmt/utils/iterator_utils.py:142-153 (vocab lookup with a
     default for novel tokens)."""
-    from plumberapp_spark.llm.lexical import ensure_lexical_index, tfidf_topk_freetext
+    from plumberapp_spark.llm.segments import (
+        ensure_segmented_index,
+        ensure_tfidf_norms,
+        tfidf_topk_segmented,
+    )
 
-    path = ensure_lexical_index(spark, sf_dir, "documents")
-    return tfidf_topk_freetext(spark, path, _freetext_query_frame(spark), k=10)
+    path = ensure_segmented_index(spark, sf_dir, "documents")
+    ensure_tfidf_norms(spark, path)
+    return tfidf_topk_segmented(spark, path, _freetext_query_frame(spark), k=10)
 
 
 @register(
@@ -2214,14 +2249,14 @@ def q101_tfidf_freetext_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q102_bm25_freetext_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 retrieval for free-text queries (round 9): the query is the
-    novel string's distinct term set; each matched posting contributes
-    its stored w_bm25 (BM25's query side needs no df), so serving is
-    one pruned scan + one aggregate — the cheapest possible novel-query
-    path. OOV terms match nothing and vanish."""
-    from plumberapp_spark.llm.lexical import bm25_topk_freetext, ensure_lexical_index
+    novel string's distinct term set; each matched posting's weight
+    computes from its raw tf and doc length with the union corpus's
+    df, N and avgdl, so serving is pruned scans + one aggregate over
+    the segmented index. OOV terms match nothing and vanish."""
+    from plumberapp_spark.llm.segments import bm25_topk_segmented, ensure_segmented_index
 
-    path = ensure_lexical_index(spark, sf_dir, "documents")
-    return bm25_topk_freetext(spark, path, _freetext_query_frame(spark), k=10)
+    path = ensure_segmented_index(spark, sf_dir, "documents")
+    return bm25_topk_segmented(spark, path, _freetext_query_frame(spark), k=10)
 
 
 @register(
@@ -2314,20 +2349,39 @@ def q103_hybrid_freetext_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production retrieval endpoint end-to-end (round 9): a novel
     query STRING plus a PROVIDED dense query vector (the encoder
     hand-off), served entirely from the two persisted indexes — BM25
-    from pruned lexical postings (OOV terms drop), dense from the
-    probed IVF cells, RRF-fused. No route touches a corpus-sized
-    lineage at query time, and nothing requires the query to exist in
-    the corpus."""
-    from plumberapp_spark.llm.hybrid import hybrid_search_freetext
-    from plumberapp_spark.llm.lexical import ensure_lexical_index
-    from plumberapp_spark.llm.similarity import ensure_ivf_index
+    from the segmented index's pruned postings (OOV terms drop), dense
+    from the probed IVF cells (``ivf_topk_indexed`` takes arbitrary
+    query vectors), RRF-fused. No route touches a corpus-sized lineage
+    at query time, and nothing requires the query to exist in the
+    corpus. Embedding the text is out of scope (no model in the
+    engine): the caller provides the vector, which is where a
+    deployment's encoder hands off to the index layer."""
+    from plumberapp_spark.llm.hybrid import rrf_fuse
+    from plumberapp_spark.llm.segments import bm25_topk_segmented, ensure_segmented_index
+    from plumberapp_spark.llm.similarity import ensure_ivf_index, ivf_topk_indexed
+    from plumberapp_spark.session import collect_bounded, local_relation
 
-    lex = ensure_lexical_index(spark, sf_dir, "documents")
+    lex = ensure_segmented_index(spark, sf_dir, "documents")
     ivf = ensure_ivf_index(spark, sf_dir, "embeddings", n_centroids=16)
     q = _freetext_query_frame(spark).join(
         _freetext_query_vecs(spark, sf_dir), "query_id"
     )
-    return hybrid_search_freetext(spark, lex, ivf, q, k=10, k_route=10, nprobe=2)
+    # both routes collect from the query frame, and the vectors come
+    # from joins: materialize it once, under the bounded contract
+    q = local_relation(spark, collect_bounded(q, "q103: query side"), q.schema)
+    return rrf_fuse(
+        [
+            bm25_topk_segmented(spark, lex, q, k=10),
+            ivf_topk_indexed(
+                spark,
+                ivf,
+                q.select(F.col("query_id").alias("vec_id"), F.col("q_vec").alias("embedding")),
+                k=10,
+                nprobe=2,
+            ),
+        ],
+        k=10,
+    )
 
 
 # the full-corpus BM25 free-text derivation (q102's oracle verbatim) —
@@ -3031,7 +3085,7 @@ def q120_bm25_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     return bm25_topk_segmented(
-        spark, path, _freetext_query_frame(spark), k=10, doc_filter=allowed
+        spark, path, _freetext_query_frame(spark), k=10, candidates=allowed
     )
 
 
@@ -3394,17 +3448,17 @@ def q128_sq_compact_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _phrase_query_frame(spark: SparkSession, sf_dir: str, with_terms: bool = False):
     """Phrase fixture: every doc_id % 10 == 0 document contributes its
     leading bigram as the phrase to search for (``len(toks) >= 2``
-    guard mirrors the oracle). ``with_terms`` rides the doc's FULL
-    token list along for phrase-constrained BM25 ranking."""
+    guard mirrors the oracle). ``with_terms`` rides the doc's full
+    ``text`` along, whose term set ranks phrase-constrained BM25."""
     from plumberapp_spark.functions.text import tokenize
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.filter(F.col("doc_id") % 10 == 0).select(
-        F.col("doc_id").alias("query_id"), tokenize(F.col("text")).alias("_toks")
+        F.col("doc_id").alias("query_id"), "text", tokenize(F.col("text")).alias("_toks")
     ).filter(F.size("_toks") >= 2)
     cols = ["query_id", F.slice("_toks", 1, 2).alias("phrase")]
     if with_terms:
-        cols.append(F.col("_toks").alias("terms"))
+        cols.append("text")
     return toks.select(*cols)
 
 
@@ -3501,19 +3555,20 @@ def q130_phrase_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PHRASE-CONSTRAINED BM25 (round 12): "match the phrase exactly,
     rank the matches by relevance" — the production search-box
     composition. Candidates come from q129's positional intersection;
-    the per-query match set is tiny, so it broadcasts INTO the weights
-    postings scan as a semi-join BEFORE the BM25 dot aggregate — the
-    scoring aggregation's input scales with phrase-match count, not
-    with the query terms' posting-list lengths. Both indexes are
-    build-once (ensure_* sidecars); a serve run reads two pruned
-    bucket scans and pays two bounded aggregates."""
-    from plumberapp_spark.llm.lexical import ensure_lexical_index
+    the per-query match set is tiny, so it enters the segmented BM25
+    core as its candidate relation and broadcasts INTO the postings scan
+    BEFORE the BM25 dot aggregate — the scoring aggregation's input
+    scales with phrase-match count, not with the query terms'
+    posting-list lengths. Both indexes are build-once (ensure_*
+    sidecars); a serve run reads pruned bucket scans of each and pays
+    two bounded aggregates."""
     from plumberapp_spark.llm.positional import (
         ensure_positional_index,
         phrase_bm25_topk,
     )
+    from plumberapp_spark.llm.segments import ensure_segmented_index
 
-    lex = ensure_lexical_index(spark, sf_dir, "documents")
+    lex = ensure_segmented_index(spark, sf_dir, "documents")
     pos = ensure_positional_index(spark, sf_dir, "documents")
     return phrase_bm25_topk(
         spark, lex, pos, _phrase_query_frame(spark, sf_dir, with_terms=True), k=10

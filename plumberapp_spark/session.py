@@ -574,6 +574,20 @@ def write_partitioned(df, out: str, col: str) -> None:
     df.coalesce(1).write.mode("overwrite").parquet(out)
 
 
+def collect_bounded(df, what: str) -> list:
+    """Collect a small-side relation (query terms, phrase pairs, query
+    vectors) under the bounded-collect contract: at most 100k rows
+    reach the driver, and a larger relation raises with guidance
+    instead of collecting it."""
+    rows = df.limit(100_001).collect()
+    if len(rows) > 100_000:
+        raise ValueError(
+            f"{what} exceeds the broadcastable contract (> 100000 rows); "
+            "batch the queries"
+        )
+    return rows
+
+
 def local_relation(spark: SparkSession, rows, schema):
     """JVM-resident local relation from already-collected rows.
 

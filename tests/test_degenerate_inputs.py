@@ -119,10 +119,11 @@ def test_persisted_index_family_survives_degenerates(spark, tmp_path):
     index build must not raise, indexed results must equal the direct
     operators' exactly (including empty-query and no-match cases)."""
     from plumberapp_spark.llm.dedup import bm25_topk, tfidf_topk
-    from plumberapp_spark.llm.lexical import (
-        bm25_topk_indexed,
-        build_lexical_index,
-        tfidf_topk_indexed,
+    from plumberapp_spark.llm.segments import (
+        bm25_topk_segmented,
+        build_segmented_index,
+        refresh_tfidf_norms,
+        tfidf_topk_segmented,
     )
     from plumberapp_spark.llm.textqa import (
         build_unigram_lm,
@@ -134,7 +135,8 @@ def test_persisted_index_family_survives_degenerates(spark, tmp_path):
 
     docs = _degenerate_docs(spark)
     lex = str(tmp_path / "lex")
-    build_lexical_index(docs, lex)
+    build_segmented_index(docs, lex)
+    refresh_tfidf_norms(spark, lex)
     lm = str(tmp_path / "lm")
     build_unigram_lm(docs, lm)
 
@@ -142,18 +144,19 @@ def test_persisted_index_family_survives_degenerates(spark, tmp_path):
         return sorted(tuple(r) for r in df.collect())
 
     queries = docs.filter(F.col("doc_id").isin(0, 1, 5))  # NULL, empty, normal
-    assert rows(tfidf_topk_indexed(spark, lex, queries, k=3)) == rows(
+    kw = {"k": 3, "text_col": "text", "id_col": "doc_id"}
+    assert rows(tfidf_topk_segmented(spark, lex, queries, **kw)) == rows(
         tfidf_topk(docs, queries, k=3)
     )
-    assert rows(bm25_topk_indexed(spark, lex, queries, k=3)) == rows(
+    assert rows(bm25_topk_segmented(spark, lex, queries, **kw)) == rows(
         bm25_topk(docs, queries, k=3)
     )
     # queries with no corpus overlap at all -> empty, no raise
     ghost = spark.createDataFrame(
         [(99, "zzz qqq")], "doc_id long, text string"
     )
-    assert tfidf_topk_indexed(spark, lex, ghost, k=3).count() == 0
-    assert bm25_topk_indexed(spark, lex, ghost, k=3).count() == 0
+    assert tfidf_topk_segmented(spark, lex, ghost, **kw).count() == 0
+    assert bm25_topk_segmented(spark, lex, ghost, **kw).count() == 0
     # LM scoring: NULL/empty docs score NULL, identical to direct
     assert rows(unigram_logprob_score_indexed(spark, lm, docs)) == rows(
         unigram_logprob_score(docs)

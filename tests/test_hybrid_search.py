@@ -45,20 +45,19 @@ def test_hybrid_search_composes_both_routes(spark):
     least one route, (b) rank a both-routes neighbor above equal-rank
     single-route ones, and (c) never include the query itself."""
     from plumberapp_spark.llm.dedup import bm25_topk
-    from plumberapp_spark.llm.hybrid import hybrid_search
+    from plumberapp_spark.llm.hybrid import query_vectors, rrf_fuse
     from plumberapp_spark.llm.similarity import brute_force_topk
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     queries = docs.filter(F.col("doc_id") < 3)
 
-    fused = hybrid_search(docs, emb, queries, k=10, k_route=10).collect()
+    sparse_df = bm25_topk(docs, queries, k=10)
+    dense_df = brute_force_topk(emb, query_vectors(emb, queries), k=10)
+    fused = rrf_fuse([sparse_df, dense_df], k=10).collect()
     assert fused and all(r["neighbor_id"] != r["query_id"] for r in fused)
 
-    sparse = {
-        (r["query_id"], r["neighbor_id"])
-        for r in bm25_topk(docs, queries, k=10).collect()
-    }
+    sparse = {(r["query_id"], r["neighbor_id"]) for r in sparse_df.collect()}
     qvec = emb.join(F.broadcast(queries.select("doc_id")), emb["vec_id"] == F.col("doc_id")).select("vec_id", "embedding")
     dense = {
         (r["query_id"], r["neighbor_id"])
@@ -87,18 +86,25 @@ def test_hybrid_search_composes_both_routes(spark):
 
 
 def test_hybrid_indexed_matches_direct(spark, tmp_path):
-    """hybrid_search_indexed over a fresh lexical index == hybrid_search
-    — the indexed sparse route serves identical BM25 weights and the
-    dense arm is shared, so the fused output is bit-identical."""
-    from plumberapp_spark.llm.hybrid import hybrid_search, hybrid_search_indexed
-    from plumberapp_spark.llm.lexical import build_lexical_index
+    """The hybrid with its sparse route served from a fresh segmented
+    index == the hybrid over the direct BM25 operator — the indexed
+    route serves identical BM25 weights and the dense arm is shared, so
+    the fused output is bit-identical."""
+    from plumberapp_spark.llm.dedup import bm25_topk
+    from plumberapp_spark.llm.hybrid import query_vectors, rrf_fuse
+    from plumberapp_spark.llm.segments import bm25_topk_segmented, build_segmented_index
+    from plumberapp_spark.llm.similarity import brute_force_topk
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     queries = docs.filter(F.col("doc_id") < 3)
     path = str(tmp_path / "lex")
-    build_lexical_index(docs, path)
+    build_segmented_index(docs, path)
     cols = ["query_id", "neighbor_id", "rrf_score", "rank"]
-    direct = sorted(tuple(r) for r in hybrid_search(docs, emb, queries, k=10).select(*cols).collect())
-    indexed = sorted(tuple(r) for r in hybrid_search_indexed(spark, path, emb, queries, k=10).select(*cols).collect())
+    dense = brute_force_topk(emb, query_vectors(emb, queries), k=10)
+    sparse = bm25_topk_segmented(spark, path, queries, k=10, text_col="text", id_col="doc_id")
+    direct = sorted(
+        tuple(r) for r in rrf_fuse([bm25_topk(docs, queries, k=10), dense]).select(*cols).collect()
+    )
+    indexed = sorted(tuple(r) for r in rrf_fuse([sparse, dense]).select(*cols).collect())
     assert indexed == direct

@@ -115,7 +115,7 @@ def test_topk_tail_is_one_exchange(spark):
     """One row_number window: a Partial WindowGroupLimit caps each map
     partition at k rows per query, under the single exchange on
     query_id."""
-    from plumberapp_spark.llm.lexical import _two_stage_topk
+    from plumberapp_spark.llm.scoring import _two_stage_topk
 
     scored = spark.range(0, 2000, 1, 4).select(
         (F.col("id") % 5).alias("query_id"),

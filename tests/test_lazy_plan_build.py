@@ -56,11 +56,11 @@ EAGER_ALLOWED = {
     # persisted-IVF: index materialization (build-once, bucketed-tables
     # contract) + centroid/query-matrix collects (IVF contract)
     "q89_ivf_indexed_topk": "index materialization + bounded collects",
-    # round-8 persisted-index serving paths: index/LM materialization
+    # round-8 persisted-index serving paths: segment/LM materialization
     # (build-once warehouse contract) + bounded collects (bucket list /
     # vocab_size-row LM load)
-    "q94_tfidf_indexed_search": "index materialization + bucket-list collect",
-    "q95_bm25_indexed_search": "index materialization + bucket-list collect",
+    "q94_tfidf_indexed_search": "segment+norms materialization + bucket-list collect",
+    "q95_bm25_indexed_search": "segment materialization + bucket-list collect",
     "q96_unigram_logprob_indexed": "LM materialization + vocab collect",
     "q97_perplexity_buckets_indexed": "LM materialization + vocab collect",
     # direct-form retrieval materializes its persisted Arrow tf pass
@@ -73,15 +73,15 @@ EAGER_ALLOWED = {
     "q83_bm25_search": "persisted tf pass + corpus scalars materialized before the scored plan",
     # q98's dense route collects the bounded query matrix (ANN contract)
     "q98_hybrid_search": "query-matrix collect (bounded broadcast contract)",
-    "q99_hybrid_indexed_search": "index materialization + bounded collects",
-    "q100_hybrid_ivf_search": "index materializations + bounded collects",
+    "q99_hybrid_indexed_search": "segment materialization + bounded collects",
+    "q100_hybrid_ivf_search": "segment+IVF index materializations + bounded collects",
     # round-9 fail-fast guard: the uncapped inverted-index path probes
     # projected candidate-pair volume (one scalar) before the self-join
     "q19_ngram_jaccard_top_pairs": "candidate-volume probe (fail-fast contract)",
     # round-9 free-text serving: same build-once + bounded-collect shape
-    "q101_tfidf_freetext_search": "index materialization + bucket-list collect",
-    "q102_bm25_freetext_search": "index materialization + bucket-list collect",
-    "q103_hybrid_freetext_search": "index materializations + bounded collects",
+    "q101_tfidf_freetext_search": "segment+norms materialization + bucket-list collect",
+    "q102_bm25_freetext_search": "segment materialization + bucket-list collect",
+    "q103_hybrid_freetext_search": "segment+IVF index materializations + bounded collects",
     # round-9 maintenance tier: segment/delta materialization (build-once
     # warehouse contract) + bucket-list / scalar collects at serve
     "q104_bm25_incremental_index": "segment materialization + bucket-list collect",
@@ -126,7 +126,7 @@ EAGER_ALLOWED = {
     # (build-once warehouse contract) + the bounded phrase-pair /
     # term-set collects (the bucket-list contract)
     "q129_phrase_search": "positional index materialization + phrase-pair collect",
-    "q130_phrase_bm25_search": "positional+lexical index materialization + bounded collects",
+    "q130_phrase_bm25_search": "positional index+segment materialization + bounded collects",
     # round-12 PQ tier: same materialization shape + codebook/
     # query-matrix collects (the SQ/IVF contract)
     "q131_pq_ivf_search": "PQ index materialization + bounded collects",

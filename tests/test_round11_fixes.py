@@ -459,7 +459,7 @@ def test_bm25_filter_restricts_candidates_not_stats(spark, tmp_path):
     )
     allowed = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
     full = bm25_topk_segmented(spark, path, q, k=200).collect()
-    filt = bm25_topk_segmented(spark, path, q, k=10, doc_filter=allowed).collect()
+    filt = bm25_topk_segmented(spark, path, q, k=10, candidates=allowed).collect()
     assert filt, "filtered search must return rows"
     assert all(r["neighbor_id"] % 3 == 0 for r in filt)
     full_scores = {r["neighbor_id"]: r["bm25"] for r in full}
@@ -502,11 +502,11 @@ def test_bm25_filter_composes_with_deletes(spark, tmp_path):
     allowed = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
     got = sorted(
         tuple(r)
-        for r in bm25_topk_segmented(spark, path, q, k=10, doc_filter=allowed).collect()
+        for r in bm25_topk_segmented(spark, path, q, k=10, candidates=allowed).collect()
     )
     want = sorted(
         tuple(r)
-        for r in bm25_topk_segmented(spark, fresh, q, k=10, doc_filter=allowed).collect()
+        for r in bm25_topk_segmented(spark, fresh, q, k=10, candidates=allowed).collect()
     )
     assert got == want
 

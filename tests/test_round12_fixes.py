@@ -1,6 +1,6 @@
 """Round-12 optimization-hardening pins: the driver-side read guards,
 the tombstone IN-set fast path, the phrase extension loop's linear plan
-growth, and the oversized-term-set fallback (VERDICT/ADVICE r11)."""
+growth, and the oversized-term-set guard (VERDICT/ADVICE r11)."""
 
 from __future__ import annotations
 
@@ -111,15 +111,12 @@ def test_phrase_extension_plan_is_linear_in_length(spark, tmp_path):
     assert wall < 60, f"12-term phrase took {wall:.1f}s — plan growth regressed"
 
 
-def test_query_postings_falls_back_above_contract(spark, tmp_path):
-    """_query_postings must serve (not raise) when the distinct term
-    set exceeds the 100k bounded-collect contract (ADVICE r11) — the
-    old distributed semi-join path, no driver-side pruning."""
-    from plumberapp_spark.llm.lexical import (
-        _index_scalars,
-        _query_postings,
-        build_lexical_index,
-    )
+def test_query_postings_rejects_term_set_above_contract(spark, tmp_path):
+    """The lexical serving core collects its (query, term) pairs under
+    the 100k bounded-collect contract: a larger query side raises with
+    guidance (batch the queries) instead of collecting it, and the
+    index stays servable for a query inside the contract."""
+    from plumberapp_spark.llm.segments import bm25_topk_segmented, build_segmented_index
     from plumberapp_spark.session import local_relation
 
     docs = local_relation(
@@ -128,11 +125,13 @@ def test_query_postings_falls_back_above_contract(spark, tmp_path):
         "doc_id bigint, text string",
     )
     path = str(tmp_path / "lex")
-    build_lexical_index(docs, path)
-    _, n_buckets = _index_scalars(spark, path)
-    big_terms = spark.range(0, 100_050).select(
-        F.concat(F.lit("t"), F.col("id")).alias("tk")
-    ).unionByName(local_relation(spark, [("beta",)], "tk string"))
-    got = _query_postings(spark, path, big_terms, n_buckets)
-    assert {r["doc_id"] for r in got.select("doc_id").collect()} == {1, 2}
-    assert {r["tk"] for r in got.select("tk").collect()} == {"beta"}
+    build_segmented_index(docs, path)
+    big = spark.range(0, 100_050).select(
+        F.lit(7).cast("bigint").alias("query_id"),
+        F.concat(F.lit("t"), F.col("id")).alias("q_text"),
+    )
+    with pytest.raises(ValueError, match="broadcastable contract"):
+        bm25_topk_segmented(spark, path, big, k=5)
+    small = local_relation(spark, [(7, "beta")], "query_id bigint, q_text string")
+    got = bm25_topk_segmented(spark, path, small, k=5).collect()
+    assert {r["neighbor_id"] for r in got} == {1, 2}

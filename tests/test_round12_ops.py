@@ -138,9 +138,9 @@ def test_phrase_scan_prunes_buckets(spark):
 
 
 def test_phrase_bm25_candidates_are_phrase_matches(spark):
-    from plumberapp_spark.llm.lexical import ensure_lexical_index
+    from plumberapp_spark.llm.segments import ensure_segmented_index
 
-    lex = ensure_lexical_index(spark, SF_DIR, "documents")
+    lex = ensure_segmented_index(spark, SF_DIR, "documents")
     pos = ensure_positional_index(spark, SF_DIR, "documents")
     docs = load_table(spark, SF_DIR, "documents")
     from plumberapp_spark.functions.text import tokenize
@@ -149,14 +149,11 @@ def test_phrase_bm25_candidates_are_phrase_matches(spark):
         docs.filter(F.col("doc_id") % 100 == 0)
         .select(
             F.col("doc_id").alias("query_id"),
+            "text",
             tokenize(F.col("text")).alias("_t"),
         )
         .filter(F.size("_t") >= 2)
-        .select(
-            "query_id",
-            F.slice("_t", 1, 2).alias("phrase"),
-            F.col("_t").alias("terms"),
-        )
+        .select("query_id", F.slice("_t", 1, 2).alias("phrase"), "text")
     )
     ranked = phrase_bm25_topk(spark, lex, pos, queries, k=10).collect()
     assert len(ranked) > 0

@@ -73,20 +73,24 @@ def test_lexical_serving_uses_recorded_bucket_modulus(spark, tmp_path):
     scalars, and serve-time pruning reads it back — so an index built
     under n_buckets=8 serves complete results even though the module
     constant says 64."""
-    from plumberapp_spark.llm import lexical
+    from plumberapp_spark.llm import segments
     from plumberapp_spark.llm.dedup import tfidf_topk
+    from plumberapp_spark.llm.scoring import DEFAULT_BUCKETS
     from plumberapp_spark.session import load_table
 
     docs = load_table(spark, SF_DIR, "documents").limit(80)
     path = str(tmp_path / "lex8")
-    lexical.build_lexical_index(docs, path, n_buckets=8)
-    sc, n_buckets = lexical._index_scalars(spark, path)
+    segments.build_segmented_index(docs, path, n_buckets=8)
+    n_buckets = segments._seg_buckets(spark, segments._list_segments(path)[0])
     assert n_buckets == 8
-    assert lexical.DEFAULT_BUCKETS != 8, "test needs a modulus != the constant"
+    assert DEFAULT_BUCKETS != 8, "test needs a modulus != the constant"
+    segments.refresh_tfidf_norms(spark, path)
     queries = docs.filter(F.col("doc_id") < 3)
     served = {
         tuple(r)
-        for r in lexical.tfidf_topk_indexed(spark, path, queries, k=5).collect()
+        for r in segments.tfidf_topk_segmented(
+            spark, path, queries, k=5, text_col="text", id_col="doc_id"
+        ).collect()
     }
     direct = {tuple(r) for r in tfidf_topk(docs, queries, k=5).collect()}
     assert served == direct, (
@@ -99,7 +103,7 @@ def test_freetext_retrieval_semantics(spark, tmp_path):
     """VERDICT r8 #1: free-text serving weights novel strings from the
     index's own statistics; OOV terms drop from dot AND query norm; a
     fully-OOV query returns no rows (never an error)."""
-    from plumberapp_spark.llm import lexical
+    from plumberapp_spark.llm import segments
 
     docs = spark.createDataFrame(
         [
@@ -110,12 +114,13 @@ def test_freetext_retrieval_semantics(spark, tmp_path):
         "doc_id bigint, text string",
     )
     path = str(tmp_path / "lexft")
-    lexical.build_lexical_index(docs, path)
+    segments.build_segmented_index(docs, path)
+    segments.refresh_tfidf_norms(spark, path)
     q = spark.createDataFrame(
         [(9001, "spark join zzzoov"), (9002, "totally unseen words")],
         "query_id bigint, q_text string",
     )
-    got = lexical.bm25_topk_freetext(spark, path, q, k=5).collect()
+    got = segments.bm25_topk_segmented(spark, path, q, k=5).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
@@ -123,7 +128,7 @@ def test_freetext_retrieval_semantics(spark, tmp_path):
     assert set(by_q[9001]) == {0, 1}
     # fully-OOV query: zero rows, no exception
     assert 9002 not in by_q
-    cos = lexical.tfidf_topk_freetext(spark, path, q, k=5).collect()
+    cos = segments.tfidf_topk_segmented(spark, path, q, k=5).collect()
     assert all(r["query_id"] == 9001 for r in cos)
     # OOV term dropped from query norm: the matched-term-only norm keeps
     # cos_sim within (0, 1]

@@ -64,10 +64,11 @@ def test_append_equals_single_build(spark, tmp_path):
 
 
 def test_append_matches_direct_operator(spark, tmp_path):
-    """Cross-family anchor: segmented serving == the weighted lexical
-    index's free-text path on the same corpus — raw-stats-at-serve and
-    weights-at-build are the same function."""
-    from plumberapp_spark.llm.lexical import bm25_topk_freetext, build_lexical_index
+    """Cross-family anchor: segmented serving of query docs drawn from
+    the corpus == the direct operator over the same corpus — raw stats
+    weighted at serve time and the direct lineage are the same
+    function."""
+    from plumberapp_spark.llm.dedup import bm25_topk
     from plumberapp_spark.llm.segments import (
         append_segment,
         bm25_topk_segmented,
@@ -79,12 +80,9 @@ def test_append_matches_direct_operator(spark, tmp_path):
     build_segmented_index(docs.filter(F.col("doc_id") % 2 == 0), seg_path)
     append_segment(docs.filter(F.col("doc_id") % 2 == 1), seg_path)
 
-    lex_path = str(tmp_path / "lex")
-    build_lexical_index(docs, lex_path)
-
-    q = _queries(spark)
-    inc = bm25_topk_segmented(spark, seg_path, q, k=10)
-    direct = bm25_topk_freetext(spark, lex_path, q, k=10)
+    q = docs.filter(F.col("doc_id") < 5)
+    inc = bm25_topk_segmented(spark, seg_path, q, k=10, text_col="text", id_col="doc_id")
+    direct = bm25_topk(docs, q, k=10)
     assert _rows(inc) == _rows(direct)
 
 
@@ -209,8 +207,8 @@ def test_oov_only_query_returns_empty(spark, tmp_path):
 
 def test_ensure_rebuilds_on_format_bump(spark, tmp_path, monkeypatch):
     """An index recorded under an older SEG_FORMAT rebuilds instead of
-    serving an incompatible layout (same sidecar contract as
-    ensure_lexical_index); unchanged source + format is a no-op."""
+    serving an incompatible layout (the session.ensure_fixture sidecar
+    contract); unchanged source + format is a no-op."""
     import plumberapp_spark.llm.segments as seg_mod
 
     sf_dir = str(tmp_path / "sfSeg")
@@ -374,10 +372,11 @@ def test_maybe_compact_swaps_when_over_budget(spark, tmp_path):
 def test_tfidf_needs_refresh_and_matches_direct(spark, tmp_path):
     """tf-idf over segments: serving without a covering norms refresh
     raises (never a silently stale cosine); after refresh it equals the
-    weighted lexical index's free-text path; an append re-stales it."""
+    direct operator for query docs drawn from the corpus; an append
+    re-stales it."""
     import pytest
 
-    from plumberapp_spark.llm.lexical import build_lexical_index, tfidf_topk_freetext
+    from plumberapp_spark.llm.dedup import tfidf_topk
     from plumberapp_spark.llm.segments import (
         append_segment,
         build_segmented_index,
@@ -395,11 +394,10 @@ def test_tfidf_needs_refresh_and_matches_direct(spark, tmp_path):
     append_segment(docs.filter(F.col("doc_id") % 2 == 1), idx)
     refresh_tfidf_norms(spark, idx)
 
-    lex = str(tmp_path / "lex")
-    build_lexical_index(docs, lex)
-    assert _rows(tfidf_topk_segmented(spark, idx, q, k=10)) == _rows(
-        tfidf_topk_freetext(spark, lex, q, k=10)
-    )
+    in_corpus = docs.filter(F.col("doc_id") < 5)
+    assert _rows(
+        tfidf_topk_segmented(spark, idx, in_corpus, k=10, text_col="text", id_col="doc_id")
+    ) == _rows(tfidf_topk(docs, in_corpus, k=10))
 
     # a further append invalidates the cosine again — loud, not stale
     append_segment(

@@ -80,8 +80,9 @@ def test_unicode_whitespace_parity(spark):
     # \s+ while the pinned expression forms use Java's ASCII-only \s —
     # on NBSP / U+2028 / ideographic-space text (common in web corpora)
     # the two silently diverged and the ASCII-only test corpus hid it.
-    # All splitters now share functions.text.WS_SPLIT (re.ASCII). Pin
-    # parity on exactly the texts that used to diverge.
+    # All splitters now share functions.text's one whitespace class
+    # (split_tokens on the Arrow side). Pin parity on exactly the texts
+    # that used to diverge, and on U+000B against DuckDB.
     from plumberapp_spark.llm.dedup import ngram_jaccard_pairs
     from plumberapp_spark.llm.textqa import (
         chunk_documents,
@@ -100,6 +101,7 @@ def test_unicode_whitespace_parity(spark):
         (5, "mixed   joined and split the"),
         (6, ""),
         (7, None),
+        (8, "vertical\x0btab joins, the; and of!"),  # U+000B: one token
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -122,6 +124,78 @@ def test_unicode_whitespace_parity(spark):
         map(tuple, ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.0, vectorized=False).collect())
     )
     assert fast == slow
+
+    _assert_whitespace_matches_duckdb(spark, docs, rows)
+
+
+def _assert_whitespace_matches_duckdb(spark, docs, rows):
+    """The DuckDB oracles split on RE2's \\s = [ \\t\\n\\f\\r], which
+    leaves U+000B inside a token and counts it as punctuation. Token
+    counts (expression and Arrow forms), the quality punctuation ratio
+    and segmented BM25 must agree with DuckDB SQL on the same rows."""
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from plumberapp_spark.functions.text import quality_features, token_count
+    from plumberapp_spark.llm.segments import bm25_topk_segmented, build_segmented_index
+    from plumberapp_spark.llm.textqa import token_stats
+    from plumberapp_spark.queries_llm import QTOKS, TOKS
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = {
+        r[0]: (r[1], round(r[2], 6))
+        for r in con.execute(
+            f"""SELECT doc_id, len({TOKS}),
+                       CASE WHEN length(text) > 0
+                            THEN (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))
+                                 / length(text)
+                            ELSE 0.0 END
+                FROM documents WHERE text IS NOT NULL"""
+        ).fetchall()
+    }
+    assert want[8][0] == 5, "DuckDB keeps vertical<VT>tab as one token"
+    feats = quality_features(F.col("text"))
+    got = {
+        r[0]: (r[1], round(r[2], 6))
+        for r in docs.filter("text IS NOT NULL")
+        .select("doc_id", token_count(F.col("text")), feats["punct_ratio"])
+        .collect()
+    }
+    assert got == want
+    arrow = {r["doc_id"]: r["n_tokens"] for r in token_stats(docs).collect()}
+    assert {d: arrow[d] for d in want} == {d: n for d, (n, _) in want.items()}
+
+    qrows = [(9000001, "vertical\x0btab joins,"), (9000002, "vertical tab the of")]
+    con.register("queries", pd.DataFrame(qrows, columns=["query_id", "q_text"]))
+    bm25 = con.execute(
+        f"""
+        WITH t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
+             tok AS (SELECT doc_id, unnest(toks) AS tk FROM t),
+             tf AS (SELECT doc_id, tk, count(*) AS tf FROM tok GROUP BY 1, 2),
+             dfreq AS (SELECT tk, count(*) AS df FROM tf GROUP BY 1),
+             dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
+             sc AS (SELECT count(*) AS nd, avg(len(toks)) AS avgdl FROM t),
+             w AS (SELECT tf.doc_id, tf.tk,
+                          ln(1.0 + (sc.nd - d.df + 0.5) / (d.df + 0.5))
+                            * (tf.tf * 2.2)
+                            / (tf.tf + 1.2 * (0.25 + (0.75 * dl.dl) / sc.avgdl)) AS w
+                   FROM tf JOIN dfreq d USING (tk) JOIN dl USING (doc_id), sc),
+             qt AS (SELECT DISTINCT query_id, tk
+                    FROM (SELECT query_id, unnest({QTOKS}) AS tk FROM queries))
+        SELECT qt.query_id, w.doc_id, round(sum(w.w), 6)
+        FROM w JOIN qt USING (tk) GROUP BY 1, 2"""
+    ).fetchall()
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as tmp:
+        build_segmented_index(docs, f"{tmp}/lex")
+        served = bm25_topk_segmented(
+            spark, f"{tmp}/lex", spark.createDataFrame(qrows, "query_id long, q_text string"), k=100
+        ).collect()
+    assert {(r[0], r[1], r[2]) for r in served} == set(bm25)
+    assert any(r[0] == 9000001 and r[1] == 8 for r in bm25)
 
 
 def test_redact_pii_behavior(spark):
