@@ -1,19 +1,20 @@
 """Column-function library: portable hashing, text analysis, vector math.
 
-Everything here is a Catalyst expression (JVM-side, codegen'd) — the
-building blocks for the dedup/similarity/text operators in
-``plumberapp_spark.llm`` and for oracle-checkable queries (each function
-has an exact DuckDB-SQL equivalent noted in its docstring).
+Catalyst expressions (JVM-side, codegen'd where Spark allows) for the
+operators that stay relational — quality features, fingerprints, the
+lexical index's tokenize pass, md5 buckets and salts, cosine — plus the
+shared definitions (md5 prefix, whitespace class, MinHash permutations)
+that the Arrow operators in ``plumberapp_spark.llm`` reimplement in
+Python. Each function has an exact DuckDB-SQL equivalent noted in its
+docstring.
 """
 
-from plumberapp_spark.functions.hashing import md5_long, stable_bucket, minhash_value
+from plumberapp_spark.functions.hashing import md5_long, stable_bucket
 from plumberapp_spark.functions.text import (
     tokenize,
     word_ngrams,
-    char_shingles,
     token_count,
     quality_features,
-    langid_score,
     doc_fingerprint,
 )
 from plumberapp_spark.functions.vectors import dot, l2_norm, cosine
@@ -21,13 +22,10 @@ from plumberapp_spark.functions.vectors import dot, l2_norm, cosine
 __all__ = [
     "md5_long",
     "stable_bucket",
-    "minhash_value",
     "tokenize",
     "word_ngrams",
-    "char_shingles",
     "token_count",
     "quality_features",
-    "langid_score",
     "doc_fingerprint",
     "dot",
     "l2_norm",

@@ -41,50 +41,13 @@ _GOLDEN32 = 0x9E3779B9
 def minhash_perm_params(perm: int) -> tuple[int, int]:
     """(a, b) for the affine permutation ``(a*h + b) mod M61``. a = 2p+1
     stays odd (a bijection mod 2^k inputs) and small enough that a*h for a
-    56-bit h cannot overflow int64 (requires perm < 32)."""
+    56-bit h cannot overflow int64 (requires perm < 32).
+
+    MinHash value p of a shingle set is the minimum of this map over the
+    shingles' md5 prefixes (``dedup._signature_arrays``). DuckDB oracle:
+    ``list_min(list_transform(hs, h -> (h*<a> + <b>) % 2305843009213693951))``
+    with ``hs = list_transform(sh, s -> ('0x' || substr(md5(s), 1, 14))::BIGINT)``.
+    """
     if not 0 <= perm < 32:
         raise ValueError("perm must be in [0, 32): a*h must fit in int64")
     return 2 * perm + 1, perm * _GOLDEN32
-
-
-def minhash_value(hashed_shingles: Column, seed: int) -> Column:
-    """MinHash for one permutation over PRE-HASHED shingles: the cheap
-    affine map ``(a*h + b) mod M61`` minimized over the array.
-
-    DuckDB oracle: ``list_min(list_transform(hs, h -> (h*<a> + <b>) %
-    2305843009213693951))`` with ``hs = list_transform(sh, s ->
-    ('0x' || substr(md5(s), 1, 14))::BIGINT)``.
-    """
-    a, b = minhash_perm_params(seed)
-    return F.array_min(
-        F.transform(hashed_shingles, lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE61))
-    )
-
-
-def minhash_signature_column(shingles: Column, num_perm: int) -> Column:
-    """ALL ``num_perm`` MinHash minima in one traversal, as an
-    ``array<bigint>`` (null if there are no shingles, matching
-    ``list_min([])``).
-
-    Each shingle is md5-hashed ONCE and folded into the running minima of
-    every affine permutation via aggregate+zip_with — one hash pass total
-    instead of one per permutation. Spark's higher-order functions are
-    interpreted (no whole-stage codegen), so repeated subtrees are NOT
-    common-subexpression-eliminated across output columns: a caller that
-    wants the signature AND derived columns (LSH bands) must materialize
-    this column behind an exchange/cache barrier or every derived column
-    re-runs the full hash pass (measured 4-8x slowdown at sf0.1).
-    """
-    hashed = F.transform(shingles, lambda s: md5_long(s))
-    params = [minhash_perm_params(p) for p in range(num_perm)]
-    init = F.array_repeat(F.lit(MERSENNE61).cast("bigint"), num_perm)
-    sig = F.aggregate(
-        hashed,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[(h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE61) for a, b in params]),
-            lambda cur, cand: F.least(cur, cand),
-        ),
-    )
-    return F.when(F.size(hashed) > 0, sig)

@@ -1,9 +1,15 @@
-"""Text-analysis column functions (training-data pipeline surface).
+"""Text-analysis building blocks (training-data pipeline surface).
 
-Language-ID, quality scoring, token counting and fingerprinting as pure
-Catalyst expressions over the ``documents`` table — the scale path for a
-100 TB corpus is "one narrow projection pass, no Python, no shuffle",
-which is exactly what these compile to.
+Two halves sharing one definition of a token:
+
+* Catalyst column functions — tokenization, n-grams, quality features,
+  fingerprinting — for the operators that stay JVM-side (``text_quality``,
+  document fingerprints, the lexical index's tokenize pass);
+* the constants and the Python splitter (:func:`split_tokens`) that the
+  Arrow ``mapInPandas`` operators in ``plumberapp_spark.llm`` tokenize
+  with (language ID, token stats, the quality gate, dedup shingles).
+
+The registered queries' DuckDB oracles split text the same way.
 """
 
 from __future__ import annotations
@@ -11,9 +17,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Tiny deterministic marker lists (public stopword-style heuristic).
-# Real deployments swap in fastText/CLD3 via the pandas-UDF hook in
-# plumberapp_spark.llm.textqa; the heuristic keeps the oracle exact.
+# Tiny deterministic marker lists (public stopword-style heuristic) for
+# plumberapp_spark.llm.textqa.language_id. Real deployments swap in
+# fastText/CLD3 at that Arrow pass; the heuristic keeps the oracle exact.
 LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "in"],
     "es": ["el", "la", "de", "que", "y"],
@@ -29,8 +35,9 @@ STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 # (even under re.ASCII) ALSO match U+000B (vertical tab), and Python's
 # default \s is Unicode-aware besides (NBSP, U+2028, ideographic
 # space). So neither engine's \s is used: both sides match this
-# explicit class. Parity on U+000B and non-ASCII whitespace is pinned
-# against DuckDB in tests/test_textops_vectorized.py.
+# explicit class. Agreement with DuckDB on U+000B and non-ASCII
+# whitespace, for both halves of this module, is pinned in
+# tests/test_textops_vectorized.py::test_unicode_whitespace_parity.
 WS_CHARS = r" \t\n\f\r"
 _WS = f"[{WS_CHARS}]+"
 # one punctuation character: neither an ASCII word character (Java's and
@@ -44,7 +51,7 @@ WS_SPLIT = _re_mod.compile(_WS)
 
 def split_tokens(text: str | None) -> list[str]:
     """The Python-side twin of :func:`tokenize` for Arrow
-    ``mapInPandas`` paths: whitespace tokens, empty tokens removed,
+    ``mapInPandas`` operators: whitespace tokens, empty tokens removed,
     ``[]`` for a NULL text."""
     return [t for t in WS_SPLIT.split(text) if t] if text is not None else []
 
@@ -77,15 +84,6 @@ def word_ngrams(tokens: Column, n: int) -> Column:
     return F.when(count >= 1, grams).otherwise(F.array().cast("array<string>"))
 
 
-def char_shingles(col: Column, k: int) -> Column:
-    """Character k-shingles of a string (substring sliding window)."""
-    count = F.length(col) - (k - 1)
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.greatest(count, F.lit(1))), lambda i: F.substring(col, i, k)
-    )
-    return F.when(count >= 1, shingles).otherwise(F.array().cast("array<string>"))
-
-
 def quality_features(col: Column) -> dict[str, Column]:
     """Quality-scoring features: length, token count, mean token length,
     punctuation ratio, stopword ratio. Each is a named column expression.
@@ -104,25 +102,6 @@ def quality_features(col: Column) -> dict[str, Column]:
         "punct_ratio": F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0)),
         "stopword_ratio": F.when(n_tok > 0, stop_hits / n_tok).otherwise(F.lit(0.0)),
     }
-
-
-def langid_score(col: Column, lang: str) -> Column:
-    """Marker-hit count for one language (n-gram/stopword heuristic)."""
-    toks = tokenize(F.lower(col))
-    markers = LANG_MARKERS[lang]
-    return F.size(F.filter(toks, lambda t: t.isin(markers)))
-
-
-def langid_best(col: Column) -> Column:
-    """argmax language by marker hits; 'und' when all zero. Deterministic
-    tie-break = language name order.
-    """
-    scored = None
-    for lang in sorted(LANG_MARKERS):
-        s = langid_score(col, lang)
-        entry = F.struct(s.alias("score"), F.lit(lang).alias("lang"))
-        scored = entry if scored is None else F.when(s > scored["score"], entry).otherwise(scored)
-    return F.when(scored["score"] > 0, scored["lang"]).otherwise(F.lit("und"))
 
 
 def doc_fingerprint(col: Column) -> Column:

@@ -7,7 +7,7 @@ oracle) and designed shuffle-first for 100 TB:
 * exact dedup        — one hash-groupBy, map-side partial aggregation
 * MinHash + LSH      — signature computed in ONE narrow pass (no shuffle),
                        the only exchange is the band-bucket groupBy
-* SimHash            — per-row expression, zero shuffle
+* SimHash            — one row-local Arrow pass, zero shuffle
 * n-gram Jaccard     — inverted-index self-join with hot-shingle pruning
 * embedding ANN      — brute-force top-k (oracle path) + LSH-bucketed
                        variant (scale path)
@@ -20,7 +20,7 @@ from plumberapp_spark.llm.dedup import (
     ngram_jaccard_pairs,
     minhash_signature,
     minhash_lsh_candidates,
-    simhash,
+    simhash_table,
 )
 from plumberapp_spark.llm.similarity import brute_force_topk, lsh_bucketed_topk
 from plumberapp_spark.llm.textqa import text_quality, language_id, document_fingerprints
@@ -30,7 +30,7 @@ __all__ = [
     "ngram_jaccard_pairs",
     "minhash_signature",
     "minhash_lsh_candidates",
-    "simhash",
+    "simhash_table",
     "brute_force_topk",
     "lsh_bucketed_topk",
     "text_quality",

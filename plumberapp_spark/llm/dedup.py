@@ -22,17 +22,11 @@ n-gram Jaccard     1 exchange on shingle       hot-shingle cap bounds the
 from __future__ import annotations
 
 import hashlib
-import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from plumberapp_spark.functions.hashing import (
-    MERSENNE61,
-    md5_long,
-    minhash_perm_params,
-    minhash_signature_column,
-)
+from plumberapp_spark.functions.hashing import MERSENNE61, md5_long, minhash_perm_params
 from plumberapp_spark.functions.text import tokenize, word_ngrams
 from plumberapp_spark.llm.scoring import bm25_weight, tfidf_weight
 
@@ -52,44 +46,20 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def simhash(text: Column, bits: int = 16) -> Column:
-    """SimHash over whitespace tokens: per-bit majority vote of 56-bit token
-    hashes, packed little-endian into a BIGINT. Pure row-local expression —
-    zero shuffle; near-dup candidates then group on the simhash key (or on
-    rotated bit-bands for Hamming-distance search).
+def simhash_table(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
+    """(id, simhash) for every row: SimHash over whitespace tokens, the
+    per-bit majority vote of 56-bit token hashes (first 56 bits of md5)
+    packed little-endian into a BIGINT. Row-local — zero shuffle;
+    near-dup candidates then group on the key (or on rotated bit-bands
+    for Hamming-distance search, :func:`simhash_hamming_pairs`).
 
-    Oracle: same construction with list_filter + bit ops on
+    Each token is hashed ONCE in an Arrow ``mapInPandas`` pass and the
+    majority vote is taken in numpy. An expression form (one interpreted
+    ``filter`` lambda per bit, 16x the md5 work, no codegen) measured
+    5.7s vs ~0.5s warm at sf0.1. The DuckDB oracle (q18) is the same
+    construction with ``list_filter`` and bit ops on
     ``('0x'||substr(md5(t),1,14))::BIGINT``.
     """
-    toks = tokenize(text)
-    n = F.size(toks)
-
-    def _ones(mask: int):
-        # single-arg lambda: a 2-arg lambda would receive the array INDEX
-        # as its second argument (PySpark higher-order-function contract)
-        return F.size(F.filter(toks, lambda t: md5_long(t).bitwiseAND(F.lit(mask)) != 0))
-
-    acc = F.lit(0).cast("bigint")
-    for j in range(bits):
-        bit_j = F.when(_ones(1 << j) * 2 > n, F.lit(1)).otherwise(F.lit(0)).cast("bigint")
-        acc = acc + bit_j * F.lit(1 << j)
-    return acc
-
-
-def simhash_table(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 16, vectorized: bool = True
-) -> DataFrame:
-    """(id, simhash) for every row. ``vectorized=True`` (default) hashes
-    each token ONCE in an Arrow ``mapInPandas`` pass and takes the per-bit
-    majority vote in numpy; the expression form (:func:`simhash`) hashes
-    every token once PER BIT through interpreted ``filter`` lambdas (no
-    codegen, no cross-bit CSE — 16x the md5 work), and remains the oracle
-    definition. Bit-identical by construction; parity pinned in tests.
-    Measured at sf0.1: 5.7s -> ~0.5s warm.
-    """
-    if not vectorized:
-        return df.select(F.col(id_col), simhash(F.col(text_col), bits).alias("simhash"))
-
     import numpy as np
     import pandas as pd
 
@@ -242,17 +212,16 @@ def _signature_arrays(
     """(id, _sig array<bigint>) with the signature computed exactly once
     per row, in parallel, via an Arrow-batched ``mapInPandas``.
 
-    Why a Python UDF on the hot path: the pure-expression form
-    (:func:`plumberapp_spark.functions.hashing.minhash_signature_column`)
-    runs per-shingle md5 + affine folds through INTERPRETED higher-order
-    functions — no whole-stage codegen — and measured 2-50x slower with
-    erratic GC-bound variance at sf0.1 (0.9s/54s/12.8s across identical
-    runs vs a stable 0.5s here). The vectorized path hashes each distinct
-    shingle once (hashlib) and folds all k permutations in one numpy
-    broadcast ``(h[:,None]*A + B) % M61`` — bit-identical output
-    (asserted in tests) because both sides define h = first 56 bits of
-    md5 and the same affine params. The expression form remains for
-    column-level composition and as the oracle's definition.
+    Why a Python UDF on the hot path: a pure-expression form (per-shingle
+    md5 + affine folds through INTERPRETED higher-order functions — no
+    whole-stage codegen) measured 2-50x slower with erratic GC-bound
+    variance at sf0.1 (0.9s/54s/12.8s across identical runs vs a stable
+    0.5s here). This path hashes each distinct shingle once (hashlib) and
+    folds all k permutations in one numpy broadcast
+    ``(h[:,None]*A + B) % M61``, where h = first 56 bits of md5 and the
+    affine params come from ``minhash_perm_params`` — the same
+    definition as the DuckDB oracle's ``list_min(list_transform(...))``
+    (bit-exactness pinned against a pure-Python reference in tests).
 
     The one exchange (round-robin to defaultParallelism) happens BEFORE
     the UDF: shingling+hashing is the CPU-heavy stage and a compact input
@@ -472,7 +441,6 @@ def ngram_jaccard_pairs(
     ngram: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = None,
-    vectorized: bool = True,
     max_candidate_pairs: int | None = 100_000_000,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted-index self-join:
@@ -492,48 +460,41 @@ def ngram_jaccard_pairs(
     one extra pass over the inverted-index lineage — only paid when no
     ``max_shingle_freq`` cap already bounds the join. ``None`` disables.
 
-    ``vectorized=True`` (default) builds the exploded inverted index in
-    one Arrow ``mapInPandas`` pass (plain Python string slicing) instead
-    of the interpreted ``transform(sequence, concat_ws(slice))`` chain,
-    which measured 3.6s per pass at sf0.1 — and the self-join re-executes
-    its input lineage on BOTH sides, doubling that. Same rows by
-    construction; the expression form stays as the oracle definition.
+    The exploded inverted index is built in one Arrow ``mapInPandas``
+    pass (plain Python string slicing): the interpreted
+    ``transform(sequence, concat_ws(slice))`` chain measured 3.6s per
+    pass at sf0.1 — and the self-join re-executes its input lineage on
+    BOTH sides, doubling that.
     """
-    if vectorized:
-        import pandas as pd
+    import pandas as pd
 
-        id_ddl = df.schema[id_col].dataType.simpleString()
-        from plumberapp_spark.functions.text import split_tokens
+    from plumberapp_spark.functions.text import split_tokens
 
-        def shingle_rows(batches):
-            for pdf in batches:
-                ids, ns, shs = [], [], []
-                for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = split_tokens(text)
-                    cnt = len(toks) - (ngram - 1)
-                    if cnt < 1:
-                        continue  # empty shingle array: explode drops the row
-                    uniq = {" ".join(toks[i : i + ngram]) for i in range(cnt)}
-                    n = len(uniq)
-                    for s in uniq:
-                        ids.append(row_id)
-                        ns.append(n)
-                        shs.append(s)
-                yield pd.DataFrame({id_col: ids, "_n": pd.array(ns, dtype="int32"), "shingle": shs})
+    id_ddl = df.schema[id_col].dataType.simpleString()
 
-        par = df.sparkSession.sparkContext.defaultParallelism
-        inv = (
-            df.select(F.col(id_col), F.col(text_col))
-            .repartition(par)
-            .mapInPandas(shingle_rows, f"{id_col} {id_ddl}, _n int, shingle string")
-        )
-    else:
-        toks = tokenize(F.col(text_col))
-        shingled = df.select(
-            F.col(id_col), F.array_distinct(word_ngrams(toks, ngram)).alias("_sh")
-        ).withColumn("_n", F.size("_sh"))
-        inv = shingled.select(F.col(id_col), F.col("_n"), F.explode("_sh").alias("shingle"))
-    if max_shingle_freq is not None and vectorized:
+    def shingle_rows(batches):
+        for pdf in batches:
+            ids, ns, shs = [], [], []
+            for row_id, text in zip(pdf[id_col], pdf[text_col]):
+                toks = split_tokens(text)
+                cnt = len(toks) - (ngram - 1)
+                if cnt < 1:
+                    continue  # no shingles: the doc has no index rows
+                uniq = {" ".join(toks[i : i + ngram]) for i in range(cnt)}
+                n = len(uniq)
+                for s in uniq:
+                    ids.append(row_id)
+                    ns.append(n)
+                    shs.append(s)
+            yield pd.DataFrame({id_col: ids, "_n": pd.array(ns, dtype="int32"), "shingle": shs})
+
+    par = df.sparkSession.sparkContext.defaultParallelism
+    inv = (
+        df.select(F.col(id_col), F.col(text_col))
+        .repartition(par)
+        .mapInPandas(shingle_rows, f"{id_col} {id_ddl}, _n int, shingle string")
+    )
+    if max_shingle_freq is not None:
         # Capped fast path (r4, VERDICT item 4). Two stages, both
         # hot-shingle-safe:
         # 1. a COUNT aggregate per shingle (map-side partial combine, the
@@ -584,11 +545,6 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )
-    if max_shingle_freq is not None:
-        hot = Window.partitionBy("shingle")
-        inv = inv.withColumn("_df", F.count("*").over(hot)).filter(
-            F.col("_df") <= max_shingle_freq
-        ).drop("_df")
     # Uncapped branch: the shingle pass is consumed up to three times —
     # the candidate-volume probe plus BOTH sides of the self-join (the
     # plan shows two MapInPandas nodes, no ReusedExchange — the
@@ -599,7 +555,7 @@ def ngram_jaccard_pairs(
     release_retrieval_caches()
     inv = inv.persist(StorageLevel.MEMORY_AND_DISK)
     _RETRIEVAL_CACHES.append(inv)
-    if max_shingle_freq is None and max_candidate_pairs is not None:
+    if max_candidate_pairs is not None:
         projected = (
             inv.groupBy("shingle")
             .agg(F.count("*").alias("_c"))
@@ -636,27 +592,15 @@ def term_frequencies(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    vectorized: bool = True,
     with_doc_len: bool = False,
 ) -> DataFrame:
     """``(id, tk, _tf)`` — one row per (doc, distinct token) with its
-    in-doc count. ``vectorized=True`` (default) produces COMPLETE
-    per-doc counts in one Arrow pass (tokenize + Counter), which both
-    skips the interpreted tokenize HOF and ELIMINATES the (id, tk)
-    groupBy exchange the explode form needs — the extraction is
-    exchange-free, and downstream consumers (df(t) rollup, doc-length
-    rollup) pay only their own exchanges. The explode+groupBy form is
-    the oracle-parity definition."""
-    if not vectorized:
-        tf = (
-            df.select(F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("tk"))
-            .groupBy(id_col, "tk")
-            .agg(F.count("*").alias("_tf"))
-        )
-        if with_doc_len:
-            tf = tf.withColumn("_dl", F.sum("_tf").over(Window.partitionBy(id_col)))
-        return tf
-
+    in-doc count (plus the doc's token count ``_dl`` when
+    ``with_doc_len``). COMPLETE per-doc counts come out of one Arrow pass
+    (tokenize + Counter), which both skips the interpreted tokenize HOF
+    and ELIMINATES the (id, tk) groupBy exchange an explode form needs —
+    the extraction is exchange-free, and downstream consumers (df(t)
+    rollup, doc-length rollup) pay only their own exchanges."""
     from collections import Counter
 
     import pandas as pd
@@ -1095,7 +1039,6 @@ def decontaminate(
     id_col: str = "doc_id",
     ngram: int = 5,
     min_overlap: int = 1,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: for every corpus doc, count the
     distinct word ``ngram``-shingles it shares with ANY benchmark/eval
@@ -1113,20 +1056,13 @@ def decontaminate(
 
     Output: ``(id, n_overlapping_ngrams, contaminated)``.
 
-    ``vectorized=True`` (default) generates each side's distinct
-    (id, shingle) rows in one Arrow pass (tokenize + n-gram + set per
-    doc in Python) instead of the interpreted transform-lambda +
-    explode chain — measured 3.6 s → ~1 s at sf0.1, ~4x at 100×; the
-    expression form remains the oracle-parity definition.
+    Each side's distinct (id, shingle) rows come out of one Arrow pass
+    (tokenize + n-gram + set per doc in Python): the interpreted
+    transform-lambda + explode chain measured 3.6 s vs ~1 s at sf0.1,
+    ~4x at 100×.
     """
 
     def _shingles(df: DataFrame, with_id: bool) -> DataFrame:
-        if not vectorized:
-            grams = F.explode(
-                F.array_distinct(word_ngrams(tokenize(F.col(text_col)), ngram))
-            ).alias("_sh")
-            return df.select(F.col(id_col), grams) if with_id else df.select(grams)
-
         import pandas as pd
 
         from plumberapp_spark.functions.text import split_tokens
@@ -1271,7 +1207,6 @@ def bloom_decontaminate(
     n_bits: int = 1 << 20,
     n_hashes: int = 4,
     min_overlap: int = 1,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Bloom-filter benchmark decontamination: :func:`decontaminate`'s
     eval-overlap flag computed against a CONSTANT-memory sketch of the
@@ -1293,15 +1228,12 @@ def bloom_decontaminate(
     benchmark-side position distinct (eval-sized). decontaminate's
     matched-pair aggregation disappears entirely.
 
-    ``vectorized=True`` (default) collects the bounded position set
-    (≤ min(n_bits, n_hashes x |bench shingles|) ints — the q77
-    vocab-closure contract), packs it into a real bitset, and probes it
-    in one Arrow pass over the corpus. The expression form
-    (``vectorized=False``) is the lazy oracle-parity definition, but its
-    per-probe ``element_at`` on a Spark map is a LINEAR scan inside an
-    interpreted lambda — O(|corpus shingles| x n_hashes x set bits),
-    measured ~20x slower at sf0.1 — so it exists for parity tests, not
-    production.
+    The bounded position set (≤ min(n_bits, n_hashes x |bench shingles|)
+    ints — the q77 vocab-closure contract) is collected, packed into a
+    real bitset, and probed in one Arrow pass over the corpus. A lazy
+    expression form (the sketch as a broadcast Spark map) measured ~20x
+    slower at sf0.1: its per-probe ``element_at`` is a LINEAR scan inside
+    an interpreted lambda — O(|corpus shingles| x n_hashes x set bits).
 
     Output: ``(id, n_flagged_ngrams, flagged)`` — n_flagged_ngrams
     counts the doc's DISTINCT shingles that pass the membership test.
@@ -1323,80 +1255,48 @@ def bloom_decontaminate(
         )
         .distinct()
     )
-    if vectorized:
-        import hashlib
+    import pandas as pd
 
-        import pandas as pd
+    from plumberapp_spark.functions.text import split_tokens
 
-        from plumberapp_spark.functions.text import split_tokens
+    bits = bytearray(n_bits // 8 + 1)
+    for row in positions.collect():  # bounded: eval-set sized
+        p = row["_p"]
+        bits[p >> 3] |= 1 << (p & 7)
+    bits = bytes(bits)
+    id_ddl = corpus.schema[id_col].dataType.simpleString()
 
-        bits = bytearray(n_bits // 8 + 1)
-        for row in positions.collect():  # bounded: eval-set sized
-            p = row["_p"]
-            bits[p >> 3] |= 1 << (p & 7)
-        bits = bytes(bits)
-        id_ddl = corpus.schema[id_col].dataType.simpleString()
-
-        def probe(batches):
-            for pdf in batches:
-                ids, counts = [], []
-                for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = split_tokens(text)
-                    seen = {
-                        " ".join(toks[i : i + ngram])
-                        for i in range(len(toks) - ngram + 1)
-                    }
-                    n = 0
-                    for sh in seen:
-                        hit = True
-                        for j in range(n_hashes):
-                            p = (
-                                int(
-                                    hashlib.md5(f"b{j}:{sh}".encode()).hexdigest()[:14],
-                                    16,
-                                )
-                                % n_bits
+    def probe(batches):
+        for pdf in batches:
+            ids, counts = [], []
+            for row_id, text in zip(pdf[id_col], pdf[text_col]):
+                toks = split_tokens(text)
+                seen = {
+                    " ".join(toks[i : i + ngram])
+                    for i in range(len(toks) - ngram + 1)
+                }
+                n = 0
+                for sh in seen:
+                    hit = True
+                    for j in range(n_hashes):
+                        p = (
+                            int(
+                                hashlib.md5(f"b{j}:{sh}".encode()).hexdigest()[:14],
+                                16,
                             )
-                            if not bits[p >> 3] & (1 << (p & 7)):
-                                hit = False
-                                break
-                        n += hit
-                    ids.append(row_id)
-                    counts.append(n)
-                yield pd.DataFrame({id_col: ids, "n_flagged_ngrams": counts})
-
-        return (
-            corpus.select(F.col(id_col), F.col(text_col))
-            .mapInPandas(probe, f"{id_col} {id_ddl}, n_flagged_ngrams bigint")
-            .withColumn("flagged", F.col("n_flagged_ngrams") >= min_overlap)
-        )
-
-    # the sketch: one row, one map<bigint, boolean> whose keys are the set
-    # bits. groupBy().agg on an empty input still yields the single row, so
-    # an empty benchmark degrades to "nothing flagged", not an empty join.
-    bloom = positions.groupBy().agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("_p"), F.lit(True)))
-        ).alias("_bloom")
-    )
-
-    def _hit(sh: Column) -> Column:
-        cond = F.lit(True)
-        for j in range(n_hashes):
-            # try_element_at: null (not ANSI MAP_KEY_DOES_NOT_EXIST) on a
-            # clear bit — the membership test IS the missing-key probe
-            cond = cond & F.try_element_at(F.col("_bloom"), _pos(sh, j)).isNotNull()
-        return cond
+                            % n_bits
+                        )
+                        if not bits[p >> 3] & (1 << (p & 7)):
+                            hit = False
+                            break
+                    n += hit
+                ids.append(row_id)
+                counts.append(n)
+            yield pd.DataFrame({id_col: ids, "n_flagged_ngrams": counts})
 
     return (
         corpus.select(F.col(id_col), F.col(text_col))
-        .crossJoin(F.broadcast(bloom))
-        .select(
-            F.col(id_col),
-            F.size(F.filter(_shingles(F.col(text_col)), _hit))
-            .cast("bigint")
-            .alias("n_flagged_ngrams"),
-        )
+        .mapInPandas(probe, f"{id_col} {id_ddl}, n_flagged_ngrams bigint")
         .withColumn("flagged", F.col("n_flagged_ngrams") >= min_overlap)
     )
 
@@ -1406,7 +1306,6 @@ def duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 8,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring statistics — the span-granular dedup
     signal of Lee et al. 2022 ("Deduplicating Training Data Makes
@@ -1430,43 +1329,30 @@ def duplicate_spans(
     documents, never one task per corpus.
     """
     toks = tokenize(F.coalesce(F.col(text_col), F.lit("")))
-    if vectorized:
-        # one Arrow pass to (id, pos, digest) — the interpreted
-        # transform-lambda + posexplode + per-gram md5 expression chain is
-        # the decontaminate-measured ~4x tax; the expression form below
-        # remains the oracle-parity definition
-        import hashlib
+    # one Arrow pass to (id, pos, digest) — the interpreted
+    # transform-lambda + posexplode + per-gram md5 expression chain is
+    # the decontaminate-measured ~4x tax
+    import pandas as pd
 
-        import pandas as pd
+    from plumberapp_spark.functions.text import split_tokens
 
-        from plumberapp_spark.functions.text import split_tokens
+    id_ddl = df.schema[id_col].dataType.simpleString()
 
-        id_ddl = df.schema[id_col].dataType.simpleString()
+    def gen(batches):
+        for pdf in batches:
+            ids, ps, hs = [], [], []
+            for row_id, text in zip(pdf[id_col], pdf[text_col]):
+                tk = split_tokens(text)
+                for i in range(len(tk) - ngram + 1):
+                    g = " ".join(tk[i : i + ngram])
+                    ids.append(row_id)
+                    ps.append(i + 1)  # 1-based, matches generate_series
+                    hs.append(int(hashlib.md5(g.encode()).hexdigest()[:14], 16))
+            yield pd.DataFrame({id_col: ids, "_pos": ps, "_h": hs})
 
-        def gen(batches):
-            for pdf in batches:
-                ids, ps, hs = [], [], []
-                for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    tk = split_tokens(text)
-                    for i in range(len(tk) - ngram + 1):
-                        g = " ".join(tk[i : i + ngram])
-                        ids.append(row_id)
-                        ps.append(i + 1)  # 1-based, matches generate_series
-                        hs.append(int(hashlib.md5(g.encode()).hexdigest()[:14], 16))
-                yield pd.DataFrame({id_col: ids, "_pos": ps, "_h": hs})
-
-        grams = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-            gen, f"{id_col} {id_ddl}, _pos bigint, _h bigint"
-        )
-    else:
-        grams = df.select(
-            F.col(id_col),
-            F.posexplode(word_ngrams(toks, ngram)).alias("_i", "_g"),
-        ).select(
-            F.col(id_col),
-            (F.col("_i") + 1).cast("bigint").alias("_pos"),  # 1-based
-            md5_long(F.col("_g")).alias("_h"),
-        )
+    grams = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+        gen, f"{id_col} {id_ddl}, _pos bigint, _h bigint"
+    )
     dup = (
         grams.withColumn("_c", F.count("*").over(Window.partitionBy("_h")))
         .filter(F.col("_c") >= 2)

@@ -245,7 +245,6 @@ def dsir_importance(
     id_col: str = "doc_id",
     n_buckets: int = 8192,
     seed: int = 7,
-    vectorized: bool = True,
 ) -> DataFrame:
     """DSIR data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every corpus doc
@@ -267,27 +266,16 @@ def dsir_importance(
     per doc after map-side combine, never the feature stream. Hashing is
     md5-keyed, so the DuckDB oracle reproduces buckets bit-for-bit.
 
-    ``vectorized=True`` (default) generates each side's (id, bucket,
-    count) rows in one Arrow pass — tokenize + bigram + hash + per-doc
-    Counter in Python — instead of the interpreted transform-lambda +
-    explode + per-feature md5 expression chain (the decontaminate
-    measurement class: ~4x at sf0.1, growing with scale); the expression
-    form remains the oracle-parity definition.
+    Each side's (id, bucket, count) rows come out of one Arrow pass —
+    tokenize + bigram + hash + per-doc Counter in Python — instead of an
+    interpreted transform-lambda + explode + per-feature md5 expression
+    chain (the decontaminate measurement class: ~4x at sf0.1, growing
+    with scale). A feature's bucket is ``stable_bucket(f, n_buckets,
+    seed)``: the first 56 bits of ``md5('s<seed>:' || f)`` mod
+    ``n_buckets``.
     """
-    from plumberapp_spark.functions.hashing import stable_bucket
-    from plumberapp_spark.functions.text import tokenize, word_ngrams
 
     def _features(frame: DataFrame, with_id: bool) -> DataFrame:
-        if not vectorized:
-            toks = tokenize(F.coalesce(F.col(text_col), F.lit("")))
-            feats = F.explode(F.concat(toks, word_ngrams(toks, 2))).alias("_f")
-            cols = [F.col(id_col), feats] if with_id else [feats]
-            return frame.select(*cols).select(
-                *([F.col(id_col)] if with_id else []),
-                stable_bucket(F.col("_f"), n_buckets, seed).alias("_b"),
-                F.lit(1).cast("bigint").alias("_c"),
-            )
-
         import hashlib
         from collections import Counter
 

@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from plumberapp_spark.functions.vectors import cosine, dot, l2_norm
-from plumberapp_spark.functions.hashing import md5_long
+from plumberapp_spark.functions.vectors import cosine
 from plumberapp_spark.session import write_partitioned
 
 
@@ -31,58 +30,24 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    vectorized: bool = True,
     max_broadcast_queries: int = 100_000,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
     Cosine rounded to 6 decimals BEFORE ranking, ties broken by corpus id —
-    makes the ranking deterministic across engines/summation orders.
+    makes the ranking deterministic across engines/summation orders;
+    cosine is 0 for zero vectors.
 
-    ``vectorized=True`` (default): the query matrix is collected (bounded
-    by ``max_broadcast_queries`` — same enforced small-side contract as
-    IVF) and broadcast; each Arrow batch of the corpus scores against it
-    with one numpy matmul and emits only its local per-query top-k, so
-    the exchange carries ≤ k rows per query per partition. One corpus
-    pass, no interpreted per-pair lambdas — this is also ``ann_topk``'s
-    exact route below the candidate threshold, so it must not be the
-    slow path. ``vectorized=False`` is the pure-expression relational
-    form (broadcast crossJoin + HOF cosine), kept as the oracle
-    definition; parity pinned in tests/test_ivf_recall.py.
+    The query matrix is collected (bounded by ``max_broadcast_queries`` —
+    same enforced small-side contract as IVF) and broadcast; each Arrow
+    batch of the corpus scores against it with one numpy matmul and
+    emits only its local per-query top-k, so the exchange carries ≤ k
+    rows per query per partition. One corpus pass, no interpreted
+    per-pair lambdas — this is also ``ann_topk``'s exact route below the
+    candidate threshold, so it must not be the slow path. Checked
+    against DuckDB's ``list_cosine_similarity`` in
+    tests/test_ivf_recall.py.
     """
-    if vectorized:
-        return _brute_force_topk_vectorized(
-            corpus, queries, k, id_col, vec_col, query_id_col, max_broadcast_queries
-        )
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
-    )
-    joined = corpus.crossJoin(F.broadcast(q)).filter(F.col(id_col) != F.col(query_id_col))
-    scored = joined.select(
-        query_id_col,
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", F.col("rank").cast("bigint").alias("rank"))
-    )
-
-
-def _brute_force_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    max_broadcast_queries: int,
-) -> DataFrame:
-    """numpy matmul scorer for :func:`brute_force_topk`; determinism
-    contract identical to the expression form (round 6 before ranking,
-    cosine()=0 for zero vectors, ties to the smaller neighbor id)."""
     import numpy as np
     import pandas as pd
 
@@ -160,22 +125,6 @@ def _brute_force_topk_vectorized(
     )
 
 
-def _hyperplane_projection(vec, dim: int, plane_seed: int):
-    """Deterministic pseudo-random hyperplane dot product: component j of
-    plane ``p`` is ``md5_long("h{p}:{j}") / 2^55 - 1`` in [-1, 1). Computed
-    as a zip_with against the vector — no stored model, any executor can
-    recompute it.
-    """
-    idx = F.sequence(F.lit(0), F.lit(dim - 1))
-    plane = F.transform(
-        idx,
-        lambda j: md5_long(F.concat(F.lit(f"h{plane_seed}:"), j.cast("string"))) / F.lit(float(2**55))
-        - F.lit(1.0),
-    )
-    prods = F.zip_with(vec, plane, lambda x, p: x.cast("double") * p)
-    return F.aggregate(prods, F.lit(0.0), lambda a, v: a + v)
-
-
 def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -185,7 +134,6 @@ def lsh_bucketed_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    vectorized: bool = True,
     nprobe_flips: int = 0,
 ) -> DataFrame:
     """LSH-bucketed ANN: sign pattern over ``num_planes`` hyperplanes is the
@@ -205,33 +153,26 @@ def lsh_bucketed_topk(
     Recall monotonicity vs single-probe is pinned in
     tests/test_ivf_recall.py; values against the DuckDB replay in q73.
 
-    ``vectorized=True`` (default) computes the sign buckets in one numpy
-    matmul per Arrow batch (``V @ P.T``, plane matrix built once from the
-    same md5 derivation) instead of the per-row × per-plane × per-dim
-    interpreted ``transform``/``zip_with`` expression chain — the same
-    treatment MinHash got in ``dedup._signature_arrays``, for the same
-    reason: higher-order functions run with no codegen and re-derive every
-    plane component per row. Scoring is likewise grouped: one
-    ``applyInPandas`` per bucket matmuls |C_b|×|Q_b| with corpus and
-    queries each crossing the exchange once (never one row per candidate
-    pair — see the inline note for the measured 100× difference). The
-    expression form (``vectorized=False``) remains the oracle
-    definition; parity is pinned in tests.
+    Hyperplane ``p``'s component j is ``md5_long("h{p}:{j}") / 2^55 - 1``
+    in [-1, 1) (first 56 bits of md5; no stored model, any executor can
+    recompute it), and the bucket is the string of sign bits, '1' for a
+    dot product >= 0. The sign buckets come from one numpy matmul per
+    Arrow batch (``V @ P.T``, plane matrix built once) instead of a
+    per-row × per-plane × per-dim interpreted ``transform``/``zip_with``
+    expression chain — the same treatment MinHash got in
+    ``dedup._signature_arrays``, for the same reason: higher-order
+    functions run with no codegen and re-derive every plane component
+    per row. Scoring is likewise grouped: one ``applyInPandas`` per
+    bucket matmuls |C_b|×|Q_b| with corpus and queries each crossing the
+    exchange once (never one row per candidate pair — see the inline
+    note for the measured 100× difference).
     """
+    import hashlib
 
-    def bucket_expr(df: DataFrame) -> DataFrame:
-        key = F.lit("")
-        for p in range(num_planes):
-            proj = _hyperplane_projection(F.col(vec_col), dim, p)
-            key = F.concat(key, F.when(proj >= 0, "1").otherwise("0"))
-        return df.withColumn("_bucket", key)
+    import numpy as np
+    import pandas as pd
 
-    def bucket_np(df: DataFrame) -> DataFrame:
-        import hashlib
-
-        import numpy as np
-        import pandas as pd  # noqa: F401  (mapInPandas batches are pandas)
-
+    def bucket(df: DataFrame) -> DataFrame:
         planes = np.array(
             [
                 [
@@ -257,156 +198,121 @@ def lsh_bucketed_topk(
         out_schema = T.StructType(list(df.schema.fields) + [T.StructField("_bucket", T.StringType())])
         return df.mapInPandas(add_bucket, out_schema)
 
-    bucket = bucket_np if vectorized else bucket_expr
     if nprobe_flips not in (0, 1):
         raise NotImplementedError("nprobe_flips: only Hamming distance <= 1 probing is implemented")
 
-    if vectorized:
-        # Per-bucket matmul via ONE groupBy("_bucket") applyInPandas:
-        # corpus and query rows each transit the exchange exactly once
-        # (skinny (id, vec, bucket, side) rows), and every bucket scores
-        # its |C_b|×|Q_b| cosine matrix with one numpy matmul. The
-        # previous shape — bucket equi-join producing one row PER
-        # CANDIDATE PAIR carrying BOTH vectors — moved |pairs|·2·dim
-        # doubles through Arrow; at 100× (200k corpus, 4k queries, 16
-        # buckets → ~50M pairs) that was ~50 GB of transfer and 44 s
-        # wall. This form moves |C|+|Q| rows and runs in ~2 s. A query's
-        # candidates live entirely in its own bucket, so the per-bucket
-        # top-k (global (-cos, neighbor_id) order, rank emitted in-cell)
-        # is the complete per-query answer — no second exchange needed.
-        import numpy as np
-        import pandas as pd
-
-        c_id_ddl = corpus.schema[id_col].dataType.simpleString()
-        q_id_ddl = queries.schema[id_col].dataType.simpleString()
-        if c_id_ddl != q_id_ddl:
-            # corpus+query rows union into one keyed frame below; a silent
-            # union-coercion would emit ids in a type neither side declared
-            raise ValueError(
-                f"lsh_bucketed_topk: corpus id type {c_id_ddl} != query id "
-                f"type {q_id_ddl}; cast one side before calling"
-            )
-        out_schema = (
-            f"{query_id_col} {q_id_ddl}, neighbor_id {c_id_ddl}, cos_sim double, rank bigint"
+    # Per-bucket matmul via ONE groupBy("_bucket") applyInPandas:
+    # corpus and query rows each transit the exchange exactly once
+    # (skinny (id, vec, bucket, side) rows), and every bucket scores
+    # its |C_b|×|Q_b| cosine matrix with one numpy matmul. The
+    # previous shape — bucket equi-join producing one row PER
+    # CANDIDATE PAIR carrying BOTH vectors — moved |pairs|·2·dim
+    # doubles through Arrow; at 100× (200k corpus, 4k queries, 16
+    # buckets → ~50M pairs) that was ~50 GB of transfer and 44 s
+    # wall. This form moves |C|+|Q| rows and runs in ~2 s. A query's
+    # candidates live entirely in its own bucket, so the per-bucket
+    # top-k (global (-cos, neighbor_id) order, rank emitted in-cell)
+    # is the complete per-query answer — no second exchange needed.
+    c_id_ddl = corpus.schema[id_col].dataType.simpleString()
+    q_id_ddl = queries.schema[id_col].dataType.simpleString()
+    if c_id_ddl != q_id_ddl:
+        # corpus+query rows union into one keyed frame below; a silent
+        # union-coercion would emit ids in a type neither side declared
+        raise ValueError(
+            f"lsh_bucketed_topk: corpus id type {c_id_ddl} != query id "
+            f"type {q_id_ddl}; cast one side before calling"
         )
+    out_schema = (
+        f"{query_id_col} {q_id_ddl}, neighbor_id {c_id_ddl}, cos_sim double, rank bigint"
+    )
 
-        c = bucket(corpus).select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), "_bucket", F.lit(0).alias("_side")
-        )
-        q = bucket(queries).select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), "_bucket", F.lit(1).alias("_side")
-        )
-        if nprobe_flips:
-            # replicate each query row into its own bucket + every
-            # 1-bit-flipped bucket (skinny rows; corpus side untouched)
-            q_schema = q.schema
-
-            def expand_probes(batches):
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    frames = [pdf]
-                    for j in range(num_planes):
-                        v = pdf.copy()
-                        v["_bucket"] = [
-                            b[:j] + ("0" if b[j] == "1" else "1") + b[j + 1:]
-                            for b in pdf["_bucket"]
-                        ]
-                        frames.append(v)
-                    yield pd.concat(frames, ignore_index=True)
-
-            q = q.mapInPandas(expand_probes, q_schema)
-
-        def bucket_topk(key, pdf):
-            side = pdf["_side"].to_numpy()
-            ids = pdf["_id"].to_numpy()
-            mat = np.vstack(pdf["_vec"].to_numpy()).astype(np.float64)
-            cm, qm = side == 0, side == 1
-            c_ids, q_ids = ids[cm], ids[qm]
-            if len(c_ids) == 0 or len(q_ids) == 0:
-                return pd.DataFrame(
-                    {query_id_col: [], "neighbor_id": [], "cos_sim": [], "rank": []}
-                )
-            cv, qv = mat[cm], mat[qm]
-            c_norm = np.sqrt((cv * cv).sum(axis=1))
-            q_norm = np.sqrt((qv * qv).sum(axis=1))
-            denom = c_norm[:, None] * q_norm[None, :]
-            sims = np.zeros((len(c_ids), len(q_ids)))
-            np.divide(cv @ qv.T, denom, out=sims, where=denom > 0)
-            sims = np.round(sims, 6)
-            out_q, out_n, out_s, out_r = [], [], [], []
-            for j in range(len(q_ids)):
-                mask = c_ids != q_ids[j]
-                cand_ids = c_ids[mask]
-                cand_sims = sims[mask, j]
-                if not len(cand_ids):
-                    continue
-                top = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(top), q_ids[j]))
-                out_n.append(cand_ids[top])
-                out_s.append(cand_sims[top])
-                out_r.append(np.arange(1, len(top) + 1, dtype=np.int64))
-            if not out_q:
-                return pd.DataFrame(
-                    {query_id_col: [], "neighbor_id": [], "cos_sim": [], "rank": []}
-                )
-            return pd.DataFrame(
-                {
-                    query_id_col: np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                    "rank": np.concatenate(out_r),
-                }
-            )
-
-        res = c.unionByName(q).groupBy("_bucket").applyInPandas(bucket_topk, out_schema)
-        if nprobe_flips:
-            # per-bucket top-k is complete per PROBE; merge the disjoint
-            # probe candidate sets into the final per-query top-k (a
-            # window over <= (num_planes+1)*k rows per query)
-            w = Window.partitionBy(query_id_col).orderBy(
-                F.col("cos_sim").desc(), F.col("neighbor_id")
-            )
-            res = (
-                res.drop("rank")
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(
-                    query_id_col, "neighbor_id", "cos_sim",
-                    F.col("rank").cast("bigint").alias("rank"),
-                )
-            )
-        return res
-
-    c = bucket(corpus).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec"), "_bucket")
+    c = bucket(corpus).select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), "_bucket", F.lit(0).alias("_side")
+    )
     q = bucket(queries).select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec"), "_bucket"
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), "_bucket", F.lit(1).alias("_side")
     )
     if nprobe_flips:
-        variants = F.array(
-            F.col("_bucket"),
-            *[
-                F.concat(
-                    F.expr(f"substring(_bucket, 1, {j})"),
-                    F.when(F.expr(f"substring(_bucket, {j + 1}, 1)") == "1", F.lit("0")).otherwise(F.lit("1")),
-                    F.expr(f"substring(_bucket, {j + 2})"),
-                )
-                for j in range(num_planes)
-            ],
+        # replicate each query row into its own bucket + every
+        # 1-bit-flipped bucket (skinny rows; corpus side untouched)
+        q_schema = q.schema
+
+        def expand_probes(batches):
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                frames = [pdf]
+                for j in range(num_planes):
+                    v = pdf.copy()
+                    v["_bucket"] = [
+                        b[:j] + ("0" if b[j] == "1" else "1") + b[j + 1:]
+                        for b in pdf["_bucket"]
+                    ]
+                    frames.append(v)
+                yield pd.concat(frames, ignore_index=True)
+
+        q = q.mapInPandas(expand_probes, q_schema)
+
+    def bucket_topk(key, pdf):
+        side = pdf["_side"].to_numpy()
+        ids = pdf["_id"].to_numpy()
+        mat = np.vstack(pdf["_vec"].to_numpy()).astype(np.float64)
+        cm, qm = side == 0, side == 1
+        c_ids, q_ids = ids[cm], ids[qm]
+        if len(c_ids) == 0 or len(q_ids) == 0:
+            return pd.DataFrame(
+                {query_id_col: [], "neighbor_id": [], "cos_sim": [], "rank": []}
+            )
+        cv, qv = mat[cm], mat[qm]
+        c_norm = np.sqrt((cv * cv).sum(axis=1))
+        q_norm = np.sqrt((qv * qv).sum(axis=1))
+        denom = c_norm[:, None] * q_norm[None, :]
+        sims = np.zeros((len(c_ids), len(q_ids)))
+        np.divide(cv @ qv.T, denom, out=sims, where=denom > 0)
+        sims = np.round(sims, 6)
+        out_q, out_n, out_s, out_r = [], [], [], []
+        for j in range(len(q_ids)):
+            mask = c_ids != q_ids[j]
+            cand_ids = c_ids[mask]
+            cand_sims = sims[mask, j]
+            if not len(cand_ids):
+                continue
+            top = np.lexsort((cand_ids, -cand_sims))[:k]
+            out_q.append(np.full(len(top), q_ids[j]))
+            out_n.append(cand_ids[top])
+            out_s.append(cand_sims[top])
+            out_r.append(np.arange(1, len(top) + 1, dtype=np.int64))
+        if not out_q:
+            return pd.DataFrame(
+                {query_id_col: [], "neighbor_id": [], "cos_sim": [], "rank": []}
+            )
+        return pd.DataFrame(
+            {
+                query_id_col: np.concatenate(out_q),
+                "neighbor_id": np.concatenate(out_n),
+                "cos_sim": np.concatenate(out_s),
+                "rank": np.concatenate(out_r),
+            }
         )
-        q = q.withColumn("_bucket", F.explode(variants))
-    cand = c.join(F.broadcast(q), on="_bucket").filter(F.col("neighbor_id") != F.col(query_id_col))
-    scored = cand.select(
-        query_id_col,
-        "neighbor_id",
-        F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", F.col("rank").cast("bigint").alias("rank"))
-    )
+
+    res = c.unionByName(q).groupBy("_bucket").applyInPandas(bucket_topk, out_schema)
+    if nprobe_flips:
+        # per-bucket top-k is complete per PROBE; merge the disjoint
+        # probe candidate sets into the final per-query top-k (a
+        # window over <= (num_planes+1)*k rows per query)
+        w = Window.partitionBy(query_id_col).orderBy(
+            F.col("cos_sim").desc(), F.col("neighbor_id")
+        )
+        res = (
+            res.drop("rank")
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(
+                query_id_col, "neighbor_id", "cos_sim",
+                F.col("rank").cast("bigint").alias("rank"),
+            )
+        )
+    return res
 
 
 def top_pairs_cosine_blocked(
@@ -568,7 +474,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    vectorized: bool = True,
     max_broadcast_queries: int = 100_000,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: partition the corpus into ``n_centroids``
@@ -587,97 +492,17 @@ def ivf_topk(
     scales with the corpus stays distributed; queries are assumed small
     and broadcast.
 
-    Two implementations, output-identical (pinned in
-    ``tests/test_ivf_recall.py``):
-
-    * ``vectorized=True`` (default): one ``mapInPandas`` pass — block
-      matmul against the broadcast centroid and query matrices, cell
-      assignment + candidate scoring + per-partition partial top-k all
-      inside the task, so the exchange carries at most k rows per query
-      per partition. ~6x faster than the expression form (interpreted
-      HOF dot products) and the shape that survives 100 TB.
-    * ``vectorized=False``: pure Catalyst expressions (crossJoin with
-      broadcast centroids + windows) — the relational reference
-      implementation that defines the semantics and mirrors the SQL
-      oracle clause-for-clause.
+    One ``mapInPandas`` pass — block matmul against the broadcast
+    centroid and query matrices, cell assignment + candidate scoring +
+    per-partition partial top-k all inside the task, so the exchange
+    carries at most k rows per query per partition. ~6x faster than an
+    expression form (interpreted HOF dot products) and the shape that
+    survives 100 TB. Cosines are rounded to 6 decimals before every
+    discrete choice; cell ties go to the smaller centroid id (np.argmax
+    returns the first max over the c_id-ascending matrix); probe and rank
+    ties go through a stable argsort over the same ordering. The DuckDB
+    oracle (q54) replays it clause for clause.
     """
-    if vectorized:
-        return _ivf_topk_vectorized(
-            corpus,
-            queries,
-            k,
-            n_centroids,
-            nprobe,
-            id_col,
-            vec_col,
-            query_id_col,
-            max_broadcast_queries,
-        )
-    cents = (
-        corpus.select(F.col(id_col).alias("_c_id"), F.col(vec_col).alias("_c_vec"))
-        .orderBy(F.md5(F.col("_c_id").cast("string")), "_c_id")
-        .limit(n_centroids)
-    )
-
-    def assign(df: DataFrame, out_id: str, out_vec: str, n: int) -> DataFrame:
-        scored = (
-            df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec))
-            .crossJoin(F.broadcast(cents))
-            .select(
-                out_id,
-                out_vec,
-                "_c_id",
-                F.round(cosine(F.col(out_vec), F.col("_c_vec")), 6).alias("_s"),
-            )
-        )
-        w = Window.partitionBy(out_id).orderBy(F.col("_s").desc(), F.col("_c_id"))
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= n)
-            .select(out_id, out_vec, F.col("_c_id").alias("_cell"))
-        )
-
-    corpus_cells = assign(corpus, "neighbor_id", "_cvec", 1)
-    query_cells = assign(queries, query_id_col, "_qvec", nprobe)
-    cand = corpus_cells.join(F.broadcast(query_cells), on="_cell").filter(
-        F.col("neighbor_id") != F.col(query_id_col)
-    )
-    scored = cand.select(
-        query_id_col,
-        "neighbor_id",
-        F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            "cos_sim",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
-
-
-def _ivf_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_centroids: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    max_broadcast_queries: int = 100_000,
-) -> DataFrame:
-    """Block-matmul IVF (see :func:`ivf_topk`). Determinism contract is
-    identical to the expression form: cosines rounded to 6 decimals
-    before every discrete choice; cell ties -> smaller centroid id
-    (np.argmax returns the first max over the c_id-ascending matrix);
-    probe/rank ties -> stable argsort over the same ordering."""
     import numpy as np
     import pandas as pd
 
@@ -778,56 +603,30 @@ def near_dup_pairs_cosine(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int | None = None,
-    vectorized: bool = True,
     rows_per_block: int = 2048,
 ) -> DataFrame:
     """Exact embedding near-dup pairs (a < b, cosine >= threshold); with
     ``k`` set, only the global top-k pairs per the (-cos, id_a, id_b)
     order.
 
-    ``vectorized=True`` (default) routes through the grid block self-join
+    Routes through the grid block self-join
     (:func:`top_pairs_cosine_blocked`): no full-corpus broadcast, one
     numpy matmul per grid cell, the threshold applied inside the cell so
     only surviving pairs (or the local top-k) ever leave the task. This
     replaced the round-2 hot-path anti-pattern — broadcast crossJoin +
     interpreted ``aggregate``/``zip_with`` cosine over all n²/2 pairs —
     which was the suite's slowest query (9.1 s at sf0.1, 20x its oracle)
-    and whose broadcast side grows with the corpus.
-
-    ``vectorized=False`` is that O(n²) expression form, kept as the
-    relational reference definition (mirrors the SQL oracle clause for
-    clause; parity pinned in tests/test_pair_search_grid.py).
+    and whose broadcast side grows with the corpus. Checked against
+    DuckDB in tests/test_pair_search_grid.py.
     """
-    if vectorized:
-        pairs = top_pairs_cosine_blocked(
-            df,
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            rows_per_block=rows_per_block,
-            threshold=threshold,
-        )
-        return pairs
-    par = df.sparkSession.sparkContext.defaultParallelism
-    normed = df.select(
-        F.col(id_col), F.col(vec_col).alias("_v"), l2_norm(F.col(vec_col)).alias("_n")
-    ).repartition(par)
-    a = normed.select(
-        F.col(id_col).alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na")
+    return top_pairs_cosine_blocked(
+        df,
+        k=k,
+        id_col=id_col,
+        vec_col=vec_col,
+        rows_per_block=rows_per_block,
+        threshold=threshold,
     )
-    b = normed.select(
-        F.col(id_col).alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
-    )
-    pairs = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
-    denom = F.col("_na") * F.col("_nb")
-    cos = F.when(denom > 0, dot(F.col("_va"), F.col("_vb")) / denom).otherwise(F.lit(0.0))
-    out = (
-        pairs.select("id_a", "id_b", F.round(cos, 6).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
-    if k is not None:
-        out = out.orderBy(F.col("cos_sim").desc(), "id_a", "id_b").limit(k)
-    return out
 
 
 # Persisted frames from the most recent ann_recall_report call. The report
@@ -985,7 +784,6 @@ def semantic_dedup(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
     max_cell_rows: int = 200_000,
 ) -> DataFrame:
     """SemDeDup-style embedding semantic dedup (Abbas et al. 2023,
@@ -1008,45 +806,6 @@ def semantic_dedup(
     matches IVF: cosines rounded to 6 decimals before every comparison,
     cell ties to the smaller centroid id.
     """
-    if not vectorized:
-        cent = (
-            corpus.select(F.col(id_col).alias("_c_id"), F.col(vec_col).alias("_c_vec"))
-            .orderBy(F.md5(F.col("_c_id").cast("string")), "_c_id")
-            .limit(n_centroids)
-        )
-        sim = corpus.select(id_col, vec_col).crossJoin(F.broadcast(cent)).select(
-            id_col,
-            vec_col,
-            "_c_id",
-            F.round(cosine(F.col(vec_col), F.col("_c_vec")), 6).alias("_s"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.col("_s").desc(), "_c_id")
-        cells = (
-            sim.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(id_col, vec_col, F.col("_c_id").alias("cell"))
-        )
-        a, b = cells.alias("a"), cells.alias("b")
-        dropped = (
-            a.join(
-                b,
-                (F.col("a.cell") == F.col("b.cell"))
-                & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}")),
-            )
-            .filter(F.round(cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), 6) >= tau)
-            .select(F.col(f"a.{id_col}").alias(id_col))
-            .distinct()
-            .withColumn("_dropped", F.lit(True))
-        )
-        return (
-            cells.join(dropped, on=id_col, how="left")
-            .select(
-                id_col,
-                "cell",
-                F.coalesce(~F.col("_dropped"), F.lit(True)).alias("kept"),
-            )
-        )
-
     import numpy as np
     import pandas as pd
 
@@ -1068,7 +827,7 @@ def semantic_dedup(
             out = pdf[[id_col, vec_col]].copy()
             # argmax over the c_id-ascending matrix = cell ties to the
             # SMALLER centroid id; emit the centroid's own id (the
-            # expression form's and the oracle's cell label)
+            # oracle's cell label)
             out["cell"] = c_ids_[
                 np.argmax(_cos_matrix(vecs, v_norm, c_mat_, c_norm_), axis=1)
             ]

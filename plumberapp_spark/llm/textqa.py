@@ -10,14 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from plumberapp_spark.functions.text import (
-    tokenize,
-    token_count,
-    quality_features,
-    langid_best,
-    doc_fingerprint,
-    word_ngrams,
-)
+from plumberapp_spark.functions.text import tokenize, quality_features, doc_fingerprint
 
 
 def widen(df: DataFrame, min_partition_bytes: int = 32 << 20) -> DataFrame:
@@ -71,24 +64,16 @@ def text_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
 
 
-def language_id(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", vectorized: bool = True
-) -> DataFrame:
-    """Marker-token language ID ('und' when no marker hits).
+def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Marker-token language ID ('und' when no marker hits): the
+    language with the most marker-token hits in the lowercased text,
+    strictly-greater argmax with language-name-order tie-break.
 
-    ``vectorized=True`` (default) tokenizes each doc ONCE in an Arrow
-    ``mapInPandas`` pass and scores every language against that token
-    list; the expression form (:func:`langid_best`, the oracle
-    definition) re-runs lower+split+filter per language through
-    interpreted lambdas. Identical output by construction — same
-    tokenization, same strictly-greater argmax with name-order
-    tie-break; parity pinned in tests. sf0.1: 3.1s -> ~0.4s warm.
+    Each doc is tokenized ONCE in an Arrow ``mapInPandas`` pass and every
+    language is scored against that token list. An expression form that
+    re-ran lower+split+filter per language through interpreted lambdas
+    measured 3.1s vs ~0.4s warm at sf0.1. The DuckDB oracle is q23's.
     """
-    if not vectorized:
-        return df.select(F.col(id_col), langid_best(F.col(text_col)).alias("pred_lang"))
-
-    import re
-
     import pandas as pd
 
     from plumberapp_spark.functions.text import LANG_MARKERS, split_tokens
@@ -115,65 +100,44 @@ def language_id(
     )
 
 
-def token_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", vectorized: bool = True
-) -> DataFrame:
+def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Token counting: whitespace tokens + a BPE-ish subword estimate
     (ceil(chars/4) per token, the common ~4-chars-per-token heuristic) +
-    distinct token count.
+    distinct token count. NULL text is the empty doc (0 tokens).
 
-    ``vectorized=True`` (default): one Arrow ``mapInPandas`` pass
-    computing all three stats per batch — the expression form evaluates
-    three interpreted higher-order chains per row (tokenize runs once
-    per derived column; HOFs get no codegen and no cross-column CSE,
-    the same cost the MinHash notes in SCALE.md §5 document). Expression
-    form kept as the oracle definition; parity pinned in
+    One Arrow ``mapInPandas`` pass computes all three stats per batch —
+    an expression form evaluates three interpreted higher-order chains
+    per row (tokenize runs once per derived column; HOFs get no codegen
+    and no cross-column CSE, the same cost the MinHash notes in SCALE.md
+    §5 document). Checked against DuckDB in
     tests/test_textops_vectorized.py.
     """
-    if vectorized:
-        import re as _re
+    import pandas as pd
 
-        import pandas as pd
+    from plumberapp_spark.functions.text import split_tokens
+    id_ddl = df.schema[id_col].dataType.simpleString()
 
-        from plumberapp_spark.functions.text import split_tokens
-        id_ddl = df.schema[id_col].dataType.simpleString()
+    def stats(batches):
+        for pdf in batches:
+            n_tok, n_dist, n_sub = [], [], []
+            for text in pdf[text_col]:
+                toks = split_tokens(text)
+                n_tok.append(len(toks))
+                n_dist.append(len(set(toks)))
+                n_sub.append(sum((len(t) + 3) // 4 for t in toks))
+            out = pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "n_tokens": pd.array(n_tok, dtype="int64"),
+                    "n_distinct_tokens": pd.array(n_dist, dtype="int64"),
+                    "n_subword_est": pd.array(n_sub, dtype="int64"),
+                }
+            )
+            yield out
 
-        def stats(batches):
-            for pdf in batches:
-                n_tok, n_dist, n_sub = [], [], []
-                for text in pdf[text_col]:
-                    toks = split_tokens(text)
-                    n_tok.append(len(toks))
-                    n_dist.append(len(set(toks)))
-                    n_sub.append(sum((len(t) + 3) // 4 for t in toks))
-                out = pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "n_tokens": pd.array(n_tok, dtype="int64"),
-                        "n_distinct_tokens": pd.array(n_dist, dtype="int64"),
-                        "n_subword_est": pd.array(n_sub, dtype="int64"),
-                    }
-                )
-                yield out
-
-        return widen(df.select(F.col(id_col), F.col(text_col))).mapInPandas(
-            stats,
-            f"{id_col} {id_ddl}, n_tokens bigint, n_distinct_tokens bigint, n_subword_est bigint",
-        )
-    # NULL text = empty doc (0 tokens), matching the Arrow path and the
-    # repo-wide convention — an uncoalesced split(NULL) would yield NULL
-    # stats and diverge from the vectorized default (pinned in
-    # tests/test_textops_vectorized.py::test_unicode_whitespace_parity).
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    toks = tokenize(text)
-    subword = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.ceil(F.length(t) / 4).cast("bigint")
-    )
-    return df.select(
-        F.col(id_col),
-        token_count(text).cast("bigint").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("bigint").alias("n_distinct_tokens"),
-        subword.alias("n_subword_est"),
+    return widen(df.select(F.col(id_col), F.col(text_col))).mapInPandas(
+        stats,
+        f"{id_col} {id_ddl}, n_tokens bigint, n_distinct_tokens bigint, n_subword_est bigint",
     )
 
 
@@ -191,7 +155,6 @@ def repetition_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 3,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Gopher-style repetition ratios per document — the standard
     pre-training quality signals for boilerplate / spam / degenerate
@@ -201,39 +164,11 @@ def repetition_stats(
     * ``dup_ngram_frac``  = 1 − distinct_ngrams / ngrams  (word n-grams)
     * ``top_word_frac``   = most-frequent-token count / tokens
 
-    All row-local (zero shuffle at any scale). ``vectorized=True``
-    (default) computes the three ratios in one Arrow ``mapInPandas``
-    pass with a single Counter per doc; the expression form tokenizes
-    once but pays an O(distinct × tokens) interpreted lambda for the
-    top-word count, and remains the oracle-parity definition
-    (tests pin equality).
+    All row-local (zero shuffle at any scale): the three ratios come out
+    of one Arrow ``mapInPandas`` pass with a single Counter per doc (an
+    expression form pays an O(distinct × tokens) interpreted lambda for
+    the top-word count). NULL text counts as the empty document.
     """
-    if not vectorized:
-        # NULL text counts as the empty document (parity with the Arrow
-        # path) — size(tokenize(NULL)) would be NULL, not 0
-        toks = tokenize(F.coalesce(F.col(text_col), F.lit("")))
-        n = F.size(toks)
-        grams = word_ngrams(toks, ngram)
-        n_g = F.size(grams)
-        top = F.array_max(
-            F.transform(
-                F.array_distinct(toks),
-                lambda d: F.size(F.filter(toks, lambda t: t == d)),
-            )
-        )
-        return df.select(
-            F.col(id_col),
-            n.cast("bigint").alias("n_tokens"),
-            F.round(
-                F.when(n > 0, 1 - F.size(F.array_distinct(toks)) / n).otherwise(0.0), 6
-            ).alias("dup_word_frac"),
-            F.round(
-                F.when(n_g > 0, 1 - F.size(F.array_distinct(grams)) / n_g).otherwise(0.0), 6
-            ).alias("dup_ngram_frac"),
-            F.round(F.when(n > 0, top / n).otherwise(0.0), 6).alias("top_word_frac"),
-        )
-
-    import re as _re
     from collections import Counter
 
     import pandas as pd
@@ -284,7 +219,6 @@ def quality_filter(
     stop_lo: float = 0.02,
     stop_hi: float = 0.6,
     max_dup_word: float = 0.65,
-    vectorized: bool = True,
 ) -> DataFrame:
     """The composed C4/Gopher-style cleanup gate: every rule the cheap
     text-quality family provides, applied in a fixed order, returning a
@@ -294,39 +228,17 @@ def quality_filter(
     duplicate-word fraction <= max_dup_word; language identifiable
     (marker-based langid != 'und').
 
-    One pure projection — the whole composite evaluates row-local with
+    One row-local pass — the whole composite evaluates per row with
     zero shuffle at any corpus size, which is exactly why production
     pipelines run these gates BEFORE any dedup/embedding stage.
 
-    ``vectorized=True`` (default) evaluates every rule in ONE Arrow
-    ``mapInPandas`` pass with a single tokenization per doc — the
-    expression form pays interpreted higher-order lambdas per rule AND
-    per language (the q23 cost, ~5x here: measured 4.7 s vs 0.5 s at
-    sf0.1) and remains the oracle-parity definition (tests pin equality).
+    Every rule is evaluated in ONE Arrow ``mapInPandas`` pass with a
+    single tokenization per doc — an expression form pays interpreted
+    higher-order lambdas per rule AND per language (the q23 cost, ~5x
+    here: measured 4.7 s vs 0.5 s at sf0.1). NULL text is the empty doc,
+    and the punctuation ratio counts characters, not UTF-8 bytes. The
+    DuckDB oracle is q62's.
     """
-    if not vectorized:
-        text = F.coalesce(F.col(text_col), F.lit(""))  # NULL = empty doc
-        feats = quality_features(text)
-        toks = tokenize(text)
-        n = F.size(toks)
-        dup_word = F.when(n > 0, 1 - F.size(F.array_distinct(toks)) / n).otherwise(0.0)
-        reason = (
-            F.when(feats["n_tokens"] < min_tokens, F.lit("too_short"))
-            .when(feats["punct_ratio"] > max_punct, F.lit("punctuation"))
-            .when(
-                (feats["stopword_ratio"] < stop_lo) | (feats["stopword_ratio"] > stop_hi),
-                F.lit("stopwords"),
-            )
-            .when(dup_word > max_dup_word, F.lit("repetition"))
-            .when(langid_best(text) == "und", F.lit("language"))
-            .otherwise(F.lit("keep"))
-        )
-        return df.select(
-            F.col(id_col),
-            reason.alias("reason"),
-            (reason == "keep").alias("keep"),
-        )
-
     import re as _re
 
     import pandas as pd
@@ -393,28 +305,18 @@ def top_ngrams(
     id_col: str = "doc_id",
     n: int = 2,
     k: int = 20,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Corpus-wide top-k word n-grams with counts — the vocabulary /
     BPE-merge-candidate statistic every tokenizer build starts from.
     Deterministic ties: count desc, then gram asc.
 
-    ``vectorized=True`` (default): one Arrow pass emits PER-BATCH
-    (gram, count) partials from a single Counter — the exchange then
-    carries each batch's distinct grams, not every occurrence, and the
-    final groupBy sums partials (a reduce over vocabulary-sized input).
-    The expression form explodes one row per occurrence through an
-    interpreted n-gram lambda (measured 3.3 s vs 0.3 s at sf0.1, 70 s at
-    100×) and remains the oracle-parity definition.
+    One Arrow pass emits PER-BATCH (gram, count) partials from a single
+    Counter — the exchange then carries each batch's distinct grams, not
+    every occurrence, and the final groupBy sums partials (a reduce over
+    vocabulary-sized input). An expression form that explodes one row
+    per occurrence through an interpreted n-gram lambda measured 3.3 s
+    vs 0.3 s at sf0.1, 70 s at 100×.
     """
-    if not vectorized:
-        grams = df.select(
-            F.explode(word_ngrams(tokenize(F.col(text_col)), n)).alias("ngram")
-        )
-        counts = grams.groupBy("ngram").agg(F.count("*").alias("n_occurrences"))
-        return counts.orderBy(F.col("n_occurrences").desc(), F.col("ngram")).limit(k)
-
-    import re as _re
     from collections import Counter
 
     import pandas as pd
@@ -446,7 +348,6 @@ def chunk_documents(
     id_col: str = "doc_id",
     max_tokens: int = 64,
     overlap: int = 0,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Split each document into token-window chunks — the
     context-length preprocessing step between cleaning and tokenization
@@ -459,60 +360,42 @@ def chunk_documents(
     ceil(tokens / stride) per doc, each carrying
     ``(id, chunk_id, chunk_text, n_chunk_tokens)``.
 
-    ``vectorized=True`` (default) emits the chunk rows from one Arrow
-    pass (tokenize + slice per doc in Python) — the expression form
-    pays an interpreted transform + array_join per chunk and stays as
-    the oracle-parity definition.
+    The chunk rows come out of one Arrow pass (tokenize + slice per doc
+    in Python) — an expression form pays an interpreted transform +
+    array_join per chunk.
     """
     if overlap >= max_tokens:
         raise ValueError(f"overlap ({overlap}) must be < max_tokens ({max_tokens})")
     stride = max_tokens - overlap
-    if vectorized:
-        import re as _re
 
-        import pandas as pd
+    import pandas as pd
 
-        from plumberapp_spark.functions.text import split_tokens
-        id_ddl = df.schema[id_col].dataType.simpleString()
+    from plumberapp_spark.functions.text import split_tokens
+    id_ddl = df.schema[id_col].dataType.simpleString()
 
-        def gen(batches):
-            for pdf in batches:
-                ids, cids, texts, ns = [], [], [], []
-                for row_id, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = split_tokens(text)
-                    n = len(toks)
-                    for cid, start in enumerate(range(0, n, stride)):
-                        window = toks[start : start + max_tokens]
-                        ids.append(row_id)
-                        cids.append(cid)
-                        texts.append(" ".join(window))
-                        ns.append(len(window))
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "chunk_id": pd.array(cids, dtype="int64"),
-                        "chunk_text": texts,
-                        "n_chunk_tokens": pd.array(ns, dtype="int64"),
-                    }
-                )
+    def gen(batches):
+        for pdf in batches:
+            ids, cids, texts, ns = [], [], [], []
+            for row_id, text in zip(pdf[id_col], pdf[text_col]):
+                toks = split_tokens(text)
+                n = len(toks)
+                for cid, start in enumerate(range(0, n, stride)):
+                    window = toks[start : start + max_tokens]
+                    ids.append(row_id)
+                    cids.append(cid)
+                    texts.append(" ".join(window))
+                    ns.append(len(window))
+            yield pd.DataFrame(
+                {
+                    id_col: ids,
+                    "chunk_id": pd.array(cids, dtype="int64"),
+                    "chunk_text": texts,
+                    "n_chunk_tokens": pd.array(ns, dtype="int64"),
+                }
+            )
 
-        return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-            gen, f"{id_col} {id_ddl}, chunk_id bigint, chunk_text string, n_chunk_tokens bigint"
-        )
-    toks = tokenize(F.col(text_col))
-    n = F.size(toks)
-    n_starts = F.floor((n - 1) / stride) + 1  # starts: 0, stride, ... < n
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_starts.cast("int") - 1),
-        lambda i: F.struct(
-            i.cast("bigint").alias("chunk_id"),
-            F.array_join(F.slice(toks, i * stride + 1, max_tokens), " ").alias("chunk_text"),
-            F.least(F.lit(max_tokens), n - i * stride).cast("bigint").alias("n_chunk_tokens"),
-        ),
-    )
-    return (
-        df.select(F.col(id_col), F.explode(F.when(n > 0, chunks)).alias("_c"))
-        .select(id_col, "_c.chunk_id", "_c.chunk_text", "_c.n_chunk_tokens")
+    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+        gen, f"{id_col} {id_ddl}, chunk_id bigint, chunk_text string, n_chunk_tokens bigint"
     )
 
 

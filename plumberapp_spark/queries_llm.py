@@ -21,7 +21,6 @@ from plumberapp_spark.llm.dedup import (
     minhash_signature,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
-    simhash,
 )
 from plumberapp_spark.llm.similarity import brute_force_topk, near_dup_pairs_cosine
 from plumberapp_spark.llm.textqa import (
@@ -33,8 +32,8 @@ from plumberapp_spark.llm.textqa import (
 from plumberapp_spark.llm.multimodal import attach_media, extract_features
 from plumberapp_spark.functions.text import LANG_MARKERS, STOPWORDS
 
-# coalesce: NULL text = empty doc (0 tokens) — the repo-wide convention,
-# matching both the Arrow mapInPandas paths and the expression forms.
+# coalesce: NULL text = empty doc (0 tokens) — the repo-wide convention
+# of every tokenizing operator.
 TOKS = r"list_filter(string_split_regex(coalesce(text, ''), '\s+'), x -> x != '')"
 TOKS_LOWER = r"list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> x != '')"
 
@@ -149,17 +148,17 @@ def q17_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q18_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash — per-bit token-hash majority vote. Vectorized Arrow
-    path (one md5 per token; the expression oracle pays 16x)."""
+    """16-bit SimHash — per-bit token-hash majority vote. Arrow path (one
+    md5 per token; the SQL oracle's per-bit list_filter pays 16x)."""
     from plumberapp_spark.llm.dedup import simhash_table
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash_table(docs, "text", "doc_id", bits=16)
 
 
-@register(
-    "q19_ngram_jaccard_top_pairs",
-    oracle=f"""
+# Every doc pair sharing a 3-gram shingle, with its exact Jaccard:
+# ngram_jaccard_pairs at threshold 0 (q19 ranks it).
+JACCARD_PAIRS_SQL = f"""
     WITH t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
          s AS (SELECT doc_id, list_distinct({_ngrams('toks', 3)}) AS sh FROM t),
          sized AS (SELECT doc_id, sh, len(sh) AS n FROM s),
@@ -171,6 +170,12 @@ def q18_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                    GROUP BY 1, 2, 3, 4)
     SELECT id_a, id_b, round(inter / (n_a + n_b - inter), 6) AS jaccard
     FROM pairs
+    """
+
+
+@register(
+    "q19_ngram_jaccard_top_pairs",
+    oracle=f"""{JACCARD_PAIRS_SQL}
     ORDER BY jaccard DESC, id_a, id_b LIMIT 20
     """,
 )
@@ -236,18 +241,22 @@ _COS = (
 )
 
 
-@register(
-    "q20_embedding_topk",
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
+def embedding_topk_sql(query_filter: str, k: int) -> str:
+    """Exact cosine top-``k`` for the embeddings matching ``query_filter``
+    — :func:`brute_force_topk`'s contract (round 6, ties to the smaller
+    neighbor id)."""
+    return f"""
+    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE {query_filter}),
          c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
          scored AS (SELECT query_id, neighbor_id, {_COS} AS cos_sim
                     FROM c, q WHERE neighbor_id != query_id),
          ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank
                     FROM scored)
-    SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 10
-    """,
-)
+    SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= {k}
+    """
+
+
+@register("q20_embedding_topk", oracle=embedding_topk_sql("vec_id < 5", 10))
 def q20_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 for 5 query vectors — the exact ANN
     baseline (broadcast queries, one corpus pass, partial top-k)."""
@@ -255,25 +264,31 @@ def q20_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
 
 
-@register(
-    "q21_embedding_near_dup_pairs",
-    oracle=f"""
+def embedding_pairs_sql(threshold: float | None, k: int | None) -> str:
+    """Exact embedding pairs (a < b) with round-6 cosine >= ``threshold``,
+    the global top ``k`` by (-cos, id_a, id_b) — the
+    :func:`near_dup_pairs_cosine` contract (``None`` drops either bound)."""
+    where = "" if threshold is None else f"WHERE cos_sim >= {threshold!r}"
+    top = "" if k is None else f"ORDER BY cos_sim DESC, id_a, id_b LIMIT {k}"
+    return f"""
     WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
          pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                           round(list_dot_product(a.e, b.e) /
                                 (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))), 6) AS cos_sim
                    FROM v a, v b WHERE a.vec_id < b.vec_id)
-    SELECT id_a, id_b, cos_sim FROM pairs
-    ORDER BY cos_sim DESC, id_a, id_b LIMIT 50
-    """,
-)
+    SELECT id_a, id_b, cos_sim FROM pairs {where}
+    {top}
+    """
+
+
+@register("q21_embedding_near_dup_pairs", oracle=embedding_pairs_sql(None, 50))
 def q21_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: top-50 closest pairs. Exact O(n²)
     SEMANTICS, grid-cell EXECUTION — near_dup_pairs_cosine routes through
     the block self-join (numpy matmul per cell, threshold+top-k applied
     in-cell), so no full-corpus broadcast and no interpreted per-pair
-    lambdas; the expression form remains the oracle definition
-    (vectorized=False, parity pinned in tests)."""
+    lambdas. The oracle is the quadratic pair join, which the grid must
+    reproduce pair for pair."""
     return near_dup_pairs_cosine(
         load_table(spark, sf_dir, "embeddings"), threshold=-1.0, k=50
     )
@@ -291,9 +306,9 @@ _STOP_LIST = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
     oracle=f"""
     WITH t AS (SELECT doc_id, text, {TOKS} AS toks FROM documents),
          f AS (SELECT doc_id,
-                      CAST(strlen(text) AS BIGINT) AS n_chars,
+                      CAST(length(text) AS BIGINT) AS n_chars,
                       CAST(len(toks) AS BIGINT) AS n_tokens,
-                      strlen(text) - strlen(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS punct,
+                      length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS punct,
                       len(list_filter(toks, t -> list_contains({_STOP_LIST}, lower(t)))) AS stop_hits
                FROM t)
     SELECT doc_id, n_chars, n_tokens,
@@ -317,7 +332,8 @@ def _langid_oracle() -> str:
         f"len(list_filter(toks, t -> list_contains([{', '.join(repr(m) for m in LANG_MARKERS[lang])}], t))) AS s_{lang}"
         for lang in langs
     )
-    # tie-break = first language in sorted order (matches langid_best)
+    # tie-break = first language in sorted order (language_id's strict >
+    # over name-sorted languages)
     case = f"CASE WHEN greatest({', '.join('s_' + lang for lang in langs)}) = 0 THEN 'und'"
     for i, lang in enumerate(langs):
         others = [f"s_{lang} >= s_{o}" for o in langs[i + 1 :]]
@@ -344,7 +360,7 @@ def q23_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            CAST(len(toks) AS BIGINT) AS n_tokens,
            CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens,
-           CAST(list_aggregate(list_transform(toks, t -> CAST(ceil(strlen(t) / 4.0) AS BIGINT)), 'sum') AS BIGINT) AS n_subword_est
+           CAST(coalesce(list_aggregate(list_transform(toks, t -> CAST(ceil(length(t) / 4.0) AS BIGINT)), 'sum'), 0) AS BIGINT) AS n_subword_est
     FROM t
     """,
 )
@@ -640,8 +656,8 @@ def _quality_filter_oracle() -> str:
     WITH t AS (SELECT doc_id, text, {TOKS} AS toks, {TOKS_LOWER} AS ltoks FROM documents),
          f AS (SELECT doc_id,
                       len(toks) AS n,
-                      strlen(text) AS n_chars,
-                      strlen(text) - strlen(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS punct,
+                      length(text) AS n_chars,
+                      length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS punct,
                       len(list_filter(toks, t -> list_contains({_STOP_LIST}, lower(t)))) AS stop_hits,
                       len(list_distinct(toks)) AS nd,
                       {score_cols}
@@ -727,16 +743,18 @@ def q63_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q64_top_ngrams",
-    oracle=f"""
+def top_ngrams_sql(n: int, k: int) -> str:
+    """Corpus-wide top-``k`` word ``n``-grams, count desc then gram asc."""
+    return f"""
     WITH t AS (SELECT {TOKS} AS toks FROM documents),
-         g AS (SELECT unnest({_ngrams('toks', 2)}) AS ngram FROM t)
+         g AS (SELECT unnest({_ngrams('toks', n)}) AS ngram FROM t)
     SELECT ngram, count(*) AS n_occurrences
     FROM g GROUP BY 1
-    ORDER BY n_occurrences DESC, ngram LIMIT 20
-    """,
-)
+    ORDER BY n_occurrences DESC, ngram LIMIT {k}
+    """
+
+
+@register("q64_top_ngrams", oracle=top_ngrams_sql(2, 20))
 def q64_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 bigrams — the vocabulary/BPE-merge statistic a
     tokenizer build starts from. explode -> map-side partial agg on the
@@ -786,20 +804,23 @@ def q65_token_budget_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q67_decontamination",
-    oracle=f"""
+def decontamination_sql(bench_mod: int) -> str:
+    """:func:`decontaminate` over 5-grams with the docs ``doc_id %
+    bench_mod = 0`` as the benchmark and ``min_overlap`` 1."""
+    return f"""
     WITH corp AS (SELECT doc_id, list_distinct({_ngrams('(' + TOKS + ')', 5)}) AS shs
                   FROM documents),
-         bench AS (SELECT DISTINCT unnest(shs) AS sh FROM corp WHERE doc_id % 100 = 0),
+         bench AS (SELECT DISTINCT unnest(shs) AS sh FROM corp WHERE doc_id % {bench_mod} = 0),
          flat AS (SELECT doc_id, unnest(shs) AS sh FROM corp),
          ov AS (SELECT doc_id, count(*) AS n FROM flat JOIN bench USING (sh) GROUP BY 1)
     SELECT c.doc_id,
            CAST(coalesce(ov.n, 0) AS BIGINT) AS n_overlapping_ngrams,
            coalesce(ov.n, 0) >= 1 AS contaminated
     FROM corp c LEFT JOIN ov USING (doc_id)
-    """,
-)
+    """
+
+
+@register("q67_decontamination", oracle=decontamination_sql(100))
 def q67_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (the GPT-3/PaLM-style eval-overlap
     filter): every doc sharing a distinct 5-gram with the held-out
@@ -838,20 +859,24 @@ def q68_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_against(new, ingested, "text", "doc_id").select("doc_id", "lang", "source")
 
 
-@register(
-    "q69_document_chunking",
-    oracle=f"""
+def chunking_sql(max_tokens: int, overlap: int) -> str:
+    """:func:`chunk_documents`: ``max_tokens``-token windows starting
+    every ``max_tokens - overlap`` tokens, short tail kept."""
+    stride = max_tokens - overlap
+    return f"""
     WITH t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
          g AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
          e AS (SELECT doc_id, toks, n,
-                      unnest(generate_series(0, CAST(floor((n - 1) / 16) AS BIGINT))) AS chunk_id
+                      unnest(generate_series(0, CAST(floor((n - 1) / {stride}) AS BIGINT))) AS chunk_id
                FROM g)
     SELECT doc_id, chunk_id,
-           array_to_string(toks[chunk_id * 16 + 1 : chunk_id * 16 + 24], ' ') AS chunk_text,
-           CAST(least(24, n - chunk_id * 16) AS BIGINT) AS n_chunk_tokens
+           array_to_string(toks[chunk_id * {stride} + 1 : chunk_id * {stride} + {max_tokens}], ' ') AS chunk_text,
+           CAST(least({max_tokens}, n - chunk_id * {stride}) AS BIGINT) AS n_chunk_tokens
     FROM e
-    """,
-)
+    """
+
+
+@register("q69_document_chunking", oracle=chunking_sql(24, 8))
 def q69_document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-length chunking: 24-token windows every 16 tokens
     (8-token overlap) — one training example per chunk, short tail kept.
@@ -1319,20 +1344,23 @@ def q80_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_topk(docs, docs.filter(F.col("doc_id") < 5), k=10)
 
 
-@register(
-    "q81_bloom_decontamination",
-    oracle=f"""
+def bloom_decontamination_sql(bench_mod: int, n_bits: int) -> str:
+    """:func:`bloom_decontaminate` over 5-grams, 3 hashes and ``n_bits``
+    bits, with the docs ``doc_id % bench_mod = 0`` as the benchmark and
+    ``min_overlap`` 1: the sketch's md5 bit positions, false positives
+    included."""
+    return f"""
     WITH corp AS (SELECT doc_id, list_distinct({_ngrams('(' + TOKS + ')', 5)}) AS shs
                   FROM documents),
-         bsh AS (SELECT DISTINCT unnest(shs) AS sh FROM corp WHERE doc_id % 100 = 0),
+         bsh AS (SELECT DISTINCT unnest(shs) AS sh FROM corp WHERE doc_id % {bench_mod} = 0),
          pos AS (SELECT DISTINCT
                    ('0x' || substr(md5('b' || j::VARCHAR || ':' || sh), 1, 14))::BIGINT
-                     % 262144 AS p
+                     % {n_bits} AS p
                  FROM bsh, generate_series(0, 2) AS g(j)),
          flat AS (SELECT doc_id, unnest(shs) AS sh FROM corp),
          cpos AS (SELECT doc_id, sh,
                     ('0x' || substr(md5('b' || j::VARCHAR || ':' || sh), 1, 14))::BIGINT
-                      % 262144 AS p
+                      % {n_bits} AS p
                   FROM flat, generate_series(0, 2) AS g(j)),
          hits AS (SELECT doc_id, sh FROM cpos LEFT JOIN pos ON cpos.p = pos.p
                   GROUP BY doc_id, sh HAVING count(pos.p) = 3),
@@ -1341,12 +1369,14 @@ def q80_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(coalesce(ov.n, 0) AS BIGINT) AS n_flagged_ngrams,
            coalesce(ov.n, 0) >= 1 AS flagged
     FROM corp c LEFT JOIN ov USING (doc_id)
-    """,
-)
+    """
+
+
+@register("q81_bloom_decontamination", oracle=bloom_decontamination_sql(100, 1 << 18))
 def q81_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q67's eval-overlap decontamination through a CONSTANT-memory
     Bloom sketch of the benchmark shingles (round 6): the membership
-    test is a broadcast map lookup inside the corpus projection, so the
+    test is a bitset probe inside the corpus's Arrow pass, so the
     corpus is never exploded into an exchange at all — the 100 TB
     posture q67 approaches but can't reach when the eval suite grows.
     md5-derived bit positions make the sketch (false positives included)
@@ -1425,14 +1455,15 @@ def q83_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(docs, docs.filter(F.col("doc_id") < 5), k=10)
 
 
-@register(
-    "q84_duplicate_spans",
-    oracle=f"""
+def duplicate_spans_sql(ngram: int) -> str:
+    """:func:`duplicate_spans` at ``ngram``-token resolution."""
+    w = ngram - 1
+    return f"""
     WITH t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
          g AS (SELECT doc_id,
-                      unnest(generate_series(1, len(toks) - 7)) AS pos,
-                      unnest(list_transform(generate_series(1, len(toks) - 7),
-                             i -> array_to_string(toks[i:i+7], ' '))) AS gram
+                      unnest(generate_series(1, len(toks) - {w})) AS pos,
+                      unnest(list_transform(generate_series(1, len(toks) - {w}),
+                             i -> array_to_string(toks[i:i+{w}], ' '))) AS gram
                FROM t),
          hsh AS (SELECT doc_id, pos,
                         ('0x' || substr(md5(gram), 1, 14))::BIGINT AS h
@@ -1442,7 +1473,7 @@ def q83_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                WHERE cnt.n >= 2),
          isl AS (SELECT doc_id, pos,
                         CASE WHEN lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-                                  OR pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) + 7
+                                  OR pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) + {w}
                              THEN 1 ELSE 0 END AS brk
                  FROM d),
          isl2 AS (SELECT doc_id, pos,
@@ -1450,7 +1481,7 @@ def q83_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                   FROM isl),
          sp AS (SELECT doc_id, island, min(pos) AS s, max(pos) AS e
                 FROM isl2 GROUP BY 1, 2),
-         spa AS (SELECT doc_id, count(*) AS n_spans, sum(e + 7 - s + 1) AS covered
+         spa AS (SELECT doc_id, count(*) AS n_spans, sum(e + {w} - s + 1) AS covered
                  FROM sp GROUP BY 1),
          dcnt AS (SELECT doc_id, count(*) AS n_dup FROM d GROUP BY 1)
     SELECT t.doc_id,
@@ -1461,8 +1492,10 @@ def q83_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN round(coalesce(spa.covered, 0) * 1.0 / len(toks), 6)
                 ELSE 0.0 END AS dup_token_frac
     FROM t LEFT JOIN dcnt USING (doc_id) LEFT JOIN spa USING (doc_id)
-    """,
-)
+    """
+
+
+@register("q84_duplicate_spans", oracle=duplicate_spans_sql(8))
 def q84_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-substring spans at 8-gram resolution (round 6):
     the Lee et al. 2022 ExactSubstr signal — per doc, how many gram
@@ -1475,23 +1508,24 @@ def q84_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_spans(load_table(spark, sf_dir, "documents"), ngram=8)
 
 
-@register(
-    "q85_dsir_selection",
-    oracle=f"""
+def dsir_sql(n_buckets: int) -> str:
+    """:func:`dsir_importance` (seed 7) with the English slice as the
+    target."""
+    return f"""
     WITH t AS (SELECT doc_id, lang, {TOKS} AS toks FROM documents),
          f AS (SELECT doc_id, lang,
                       unnest(list_concat(toks, {_ngrams('toks', 2)})) AS f
                FROM t),
          fb AS (SELECT doc_id, lang,
-                       ('0x' || substr(md5('s7:' || f), 1, 14))::BIGINT % 4096 AS b
+                       ('0x' || substr(md5('s7:' || f), 1, 14))::BIGINT % {n_buckets} AS b
                 FROM f),
          rawc AS (SELECT b, count(*) AS c FROM fb GROUP BY 1),
          rawt AS (SELECT sum(c) AS t FROM rawc),
          tgtc AS (SELECT b, count(*) AS c FROM fb WHERE lang = 'en' GROUP BY 1),
          tgtt AS (SELECT sum(c) AS t FROM tgtc),
          sc AS (SELECT fb.doc_id,
-                       ln((coalesce(tgtc.c, 0) + 1) * 1.0 / (tgtt.t + 4096))
-                       - ln((coalesce(rawc.c, 0) + 1) * 1.0 / (rawt.t + 4096)) AS r
+                       ln((coalesce(tgtc.c, 0) + 1) * 1.0 / (tgtt.t + {n_buckets}))
+                       - ln((coalesce(rawc.c, 0) + 1) * 1.0 / (rawt.t + {n_buckets})) AS r
                 FROM fb LEFT JOIN rawc USING (b) LEFT JOIN tgtc USING (b), rawt, tgtt),
          agg AS (SELECT doc_id, count(*)::BIGINT AS n_features,
                         round(avg(r), 6) AS mean_log_ratio
@@ -1501,8 +1535,10 @@ def q84_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            agg.mean_log_ratio,
            coalesce(agg.mean_log_ratio > 0, false) AS selected
     FROM documents d LEFT JOIN agg USING (doc_id)
-    """,
-)
+    """
+
+
+@register("q85_dsir_selection", oracle=dsir_sql(4096))
 def q85_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance-resampling scores (round 6; Xie et al. 2023):
     hashed unigram+bigram bucket distributions for the raw corpus vs an

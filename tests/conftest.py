@@ -53,3 +53,37 @@ def duck():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     yield con
     con.close()
+
+
+def assert_matches_duckdb(sdf, sql: str, con=None, **tables) -> list[tuple]:
+    """Assert ``sdf`` holds exactly DuckDB's answer to ``sql``, compared
+    the way tools/check_correctness.py compares a query with its oracle:
+    columns aligned by name, row order ignored, floats to 9 places.
+
+    ``sql`` runs on ``con`` (e.g. the ``duck`` fixture's views over the
+    sf0.001 tables) or, when ``tables`` are given, on a fresh connection
+    with each Spark frame registered under its keyword name — so the
+    oracle sees the very rows the operator saw. Returns the Spark rows."""
+    from tools.check_correctness import canon
+
+    if con is None:
+        con = duckdb.connect()
+        for name, frame in tables.items():
+            con.register(name, frame.toPandas())
+    res = con.execute(sql)
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    scols = list(sdf.columns)
+    srows = [tuple(r) for r in sdf.collect()]
+    assert sorted(scols) == sorted(ocols), f"columns: spark={scols} duckdb={ocols}"
+
+    def canon_rows(cols, rows):
+        order = sorted(range(len(cols)), key=lambda i: cols[i])
+        return sorted(tuple(canon(r[i]) for i in order) for r in rows)
+
+    got, want = canon_rows(scols, srows), canon_rows(ocols, orows)
+    assert got == want, (
+        f"{len(got)} spark rows vs {len(want)} duckdb rows; first differences: "
+        f"{sorted(set(got) ^ set(want))[:5]}"
+    )
+    return srows

@@ -228,23 +228,6 @@ def test_bloom_decontamination_never_shuffles_corpus(spark):
     assert "hashpartitioning(doc_id" not in plan
 
 
-def test_bloom_expression_route_broadcasts_sketch(spark):
-    """The lazy oracle-parity form (vectorized=False): the corpus meets
-    the one-row sketch in a broadcast join; no exchange keyed on the
-    corpus; membership test pure codegen-side (no Python)."""
-    from plumberapp_spark.llm.dedup import bloom_decontaminate
-    from plumberapp_spark.session import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    bench = docs.filter("doc_id % 100 = 0")
-    plan = formatted_plan(
-        bloom_decontaminate(docs, bench, n_bits=1 << 18, n_hashes=3, vectorized=False)
-    )
-    assert "BroadcastNestedLoopJoin" in plan  # the one-row sketch join
-    assert "hashpartitioning(doc_id" not in plan
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
-
-
 def test_duplicate_spans_exchange_is_digest_width(spark):
     """q84: gram occurrences cross the corpus-scale exchange as (id, pos,
     56-bit digest) — the gram STRING must be projected away before any

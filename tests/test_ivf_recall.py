@@ -13,6 +13,9 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from plumberapp_spark.llm.similarity import brute_force_topk, ivf_topk  # noqa: E402
+from plumberapp_spark.queries_llm import embedding_topk_sql  # noqa: E402
+from plumberapp_spark.registry import REGISTRY  # noqa: E402
+from tests.conftest import assert_matches_duckdb  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,30 +51,33 @@ def test_ivf_is_deterministic(spark):
     assert a == b
 
 
-def test_ivf_vectorized_matches_expression_form(spark):
+def test_ivf_vectorized_matches_expression_form(spark, duck):
+    # The block-matmul IVF against its relational definition (q54's
+    # oracle: md5-ranked centroids, argmax-cosine cells with ties to the
+    # smaller centroid id, nprobe=2 probe, round-6 re-rank).
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    fast = sorted(
-        map(tuple, ivf_topk(emb, queries, k=5, vectorized=True).collect())
+    assert_matches_duckdb(
+        ivf_topk(emb, queries, k=5, n_centroids=16, nprobe=2),
+        REGISTRY["q54_ivf_topk"].oracle,
+        duck,
     )
-    slow = sorted(
-        map(tuple, ivf_topk(emb, queries, k=5, vectorized=False).collect())
-    )
-    assert fast == slow
 
 
-def test_lsh_bucketing_vectorized_matches_expression_form(spark):
-    # The numpy matmul bucketing (default) and the interpreted expression
-    # form (the oracle definition) must produce identical buckets and
-    # therefore identical re-ranked results — same md5 plane derivation,
-    # sign decided at >= 0.
+def test_lsh_bucketing_vectorized_matches_expression_form(spark, duck):
+    # The numpy matmul bucketing must produce the buckets the md5 plane
+    # derivation defines (component j of plane p = md5 56-bit prefix of
+    # 'h<p>:<j>' / 2^55 - 1, sign decided at >= 0) and therefore q56's
+    # re-ranked results bit for bit.
     from plumberapp_spark.llm.similarity import lsh_bucketed_topk
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    fast = sorted(map(tuple, lsh_bucketed_topk(emb, q, k=5, dim=64, num_planes=4, vectorized=True).collect()))
-    slow = sorted(map(tuple, lsh_bucketed_topk(emb, q, k=5, dim=64, num_planes=4, vectorized=False).collect()))
-    assert fast == slow
+    assert_matches_duckdb(
+        lsh_bucketed_topk(emb, q, k=5, dim=64, num_planes=4),
+        REGISTRY["q56_lsh_bucketed_topk"].oracle,
+        duck,
+    )
 
 
 def test_ann_router_exact_under_threshold(spark):
@@ -84,15 +90,15 @@ def test_ann_router_exact_under_threshold(spark):
     assert routed == exact
 
 
-def test_brute_force_vectorized_matches_expression_form(spark):
-    # q20's scorer: the numpy matmul path (default) and the broadcast
-    # crossJoin + HOF expression form (the oracle definition) must rank
-    # identically — same rounding, zero-vector, and tie contracts.
+def test_brute_force_vectorized_matches_expression_form(spark, duck):
+    # q20's scorer: the numpy matmul path must rank exactly as the SQL
+    # definition does — same round-6, tie-to-smaller-id contracts.
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    fast = sorted(map(tuple, brute_force_topk(emb, q, k=7, vectorized=True).collect()))
-    slow = sorted(map(tuple, brute_force_topk(emb, q, k=7, vectorized=False).collect()))
-    assert fast == slow and len(fast) > 0
+    fast = assert_matches_duckdb(
+        brute_force_topk(emb, q, k=7), embedding_topk_sql("vec_id % 50 = 0", 7), duck
+    )
+    assert len(fast) > 0
 
 
 def test_brute_force_query_broadcast_contract_enforced(spark):
@@ -131,9 +137,9 @@ def test_ann_router_ivf_above_threshold(spark):
     assert routed == ivf
 
 
-def test_multiprobe_lsh_parity_and_recall_monotone(spark):
+def test_multiprobe_lsh_parity_and_recall_monotone(spark, duck):
     # Round 5: nprobe_flips=1 probes the num_planes Hamming-1 buckets.
-    # Contract: (a) vectorized == expression form exactly; (b) recall@k
+    # Contract: (a) == q73's DuckDB probe replay exactly; (b) recall@k
     # vs brute force is >= the single-probe route on the same corpus
     # (the whole point of multi-probe); (c) single-probe output is
     # UNCHANGED by the feature (nprobe_flips=0 default).
@@ -146,11 +152,8 @@ def test_multiprobe_lsh_parity_and_recall_monotone(spark):
     qs = emb.filter(F.col("vec_id") % 50 == 0)
     kw = dict(k=5, dim=64, num_planes=4)
 
-    fast = sorted(map(tuple, lsh_bucketed_topk(emb, qs, nprobe_flips=1, **kw).collect()))
-    slow = sorted(
-        map(tuple, lsh_bucketed_topk(emb, qs, nprobe_flips=1, vectorized=False, **kw).collect())
-    )
-    assert fast == slow
+    multi_probe = lsh_bucketed_topk(emb, qs, nprobe_flips=1, **kw)
+    assert_matches_duckdb(multi_probe, REGISTRY["q73_lsh_multiprobe"].oracle, duck)
 
     exact = {(r[0], r[1]) for r in brute_force_topk(emb, qs, 5).collect()}
     single = {(r[0], r[1]) for r in lsh_bucketed_topk(emb, qs, **kw).collect()}
@@ -161,18 +164,17 @@ def test_multiprobe_lsh_parity_and_recall_monotone(spark):
     assert r_multi > 0.2  # fixture-measured 0.36; a broken probe expansion reverts to ~0.1
 
 
-def test_semantic_dedup_parity_and_contract(spark):
-    # Round 5 SemDeDup: vectorized == expression form exactly; survivors
-    # are closed under the drop rule (every dropped vector has a kept or
-    # smaller-id in-cell neighbor above tau -- here just re-check against
-    # the expression form's row set); NULL-free boolean output.
+def test_semantic_dedup_parity_and_contract(spark, duck):
+    # Round 5 SemDeDup: == q74's DuckDB definition exactly (a vector is
+    # dropped iff a smaller-id in-cell neighbor has round-6 cosine >=
+    # tau); NULL-free boolean output.
     from plumberapp_spark.llm.similarity import semantic_dedup
     from plumberapp_spark.session import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    fast = sorted(map(tuple, semantic_dedup(emb, tau=0.32).collect()))
-    slow = sorted(map(tuple, semantic_dedup(emb, tau=0.32, vectorized=False).collect()))
-    assert fast == slow
+    fast = assert_matches_duckdb(
+        semantic_dedup(emb, tau=0.32, n_centroids=16), REGISTRY["q74_semantic_dedup"].oracle, duck
+    )
     assert len(fast) == emb.count()  # one row per vector, kept or not
     assert all(r[2] in (True, False) for r in fast)
     # tau above the fixture's max pairwise cosine drops nothing

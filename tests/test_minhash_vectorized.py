@@ -1,9 +1,13 @@
-"""The vectorized (Arrow mapInPandas) MinHash signature path must be
-bit-identical to the interpreted expression form it replaced on the hot
-path (dedup.py:_signature_arrays docstring has the measurements)."""
+"""The Arrow (mapInPandas) MinHash signature path must be bit-identical
+to the MinHash definition: per doc, the distinct word n-gram shingles'
+56-bit md5 prefixes folded through each affine permutation
+``(a*h + b) mod M61`` and minimized — here a pure-Python reference
+(dedup.py:_signature_arrays has the measurements behind the Arrow
+form)."""
 
 from __future__ import annotations
 
+import hashlib
 import sys
 from pathlib import Path
 
@@ -11,11 +15,26 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from plumberapp_spark.functions.hashing import minhash_signature_column  # noqa: E402
-from plumberapp_spark.functions.text import tokenize, word_ngrams  # noqa: E402
+from plumberapp_spark.functions.hashing import MERSENNE61, minhash_perm_params  # noqa: E402
 from plumberapp_spark.llm.dedup import _signature_arrays  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _reference_signature(text, num_perm, ngram):
+    """Python ints throughout (no uint64 wrap to hide), the DuckDB
+    oracle's whitespace class, NULL when the doc has no shingle."""
+    import re
+
+    toks = [t for t in re.split(r"[ \t\n\f\r]+", text or "") if t]
+    shingles = {" ".join(toks[i : i + ngram]) for i in range(len(toks) - ngram + 1)}
+    if not shingles:
+        return None
+    hashes = [int(hashlib.md5(s.encode()).hexdigest()[:14], 16) for s in shingles]
+    return [
+        min((a * h + b) % MERSENNE61 for h in hashes)
+        for a, b in map(minhash_perm_params, range(num_perm))
+    ]
 
 
 def test_vectorized_signature_matches_expression_form(spark):
@@ -26,14 +45,12 @@ def test_vectorized_signature_matches_expression_form(spark):
         r[0]: r[1]
         for r in _signature_arrays(df, "text", "doc_id", num_perm, ngram).collect()
     }
-    shingles = F.array_distinct(word_ngrams(tokenize(F.col("text")), ngram))
-    slow = {
-        r[0]: r[1]
-        for r in df.select(
-            "doc_id", minhash_signature_column(shingles, num_perm).alias("_sig")
-        ).collect()
+    ref = {
+        r["doc_id"]: _reference_signature(r["text"], num_perm, ngram)
+        for r in df.select("doc_id", "text").collect()
     }
-    assert fast == slow
+    assert fast == ref
+    assert any(sig is not None for sig in ref.values())
 
 
 def test_vectorized_signature_handles_short_and_null_docs(spark):

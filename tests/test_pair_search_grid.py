@@ -1,6 +1,7 @@
 """Exact pair search (q53 path): the grid block self-join must produce the
-same top-k pairs as a single-cell run and as the naive expression form,
-including when the corpus spans many grid cells — and its plan must not
+same top-k pairs as a single-cell run and as the quadratic DuckDB pair
+join (q21's oracle at the test's threshold and k), including when the
+corpus spans many grid cells — and its plan must not
 move the corpus through the driver (no broadcast of an n×d matrix; the only
 driver-side scalar is count())."""
 
@@ -17,6 +18,8 @@ from plumberapp_spark.llm.similarity import (  # noqa: E402
     near_dup_pairs_cosine,
     top_pairs_cosine_blocked,
 )
+from plumberapp_spark.queries_llm import embedding_pairs_sql  # noqa: E402
+from tests.conftest import assert_matches_duckdb  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -32,32 +35,36 @@ def test_multi_cell_grid_matches_single_cell(spark):
     assert one_cell == many_cells
 
 
-def test_grid_matches_expression_form(spark):
+def test_grid_matches_expression_form(spark, duck):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    naive = _pairs(
-        near_dup_pairs_cosine(emb, threshold=-1.0, vectorized=False)
-        .orderBy(F.col("cos_sim").desc(), "id_a", "id_b")
-        .limit(25)
+    assert_matches_duckdb(
+        top_pairs_cosine_blocked(emb, k=25, rows_per_block=64),
+        embedding_pairs_sql(threshold=None, k=25),
+        duck,
     )
-    grid = _pairs(top_pairs_cosine_blocked(emb, k=25, rows_per_block=64))
-    assert naive == grid
 
 
-def test_near_dup_thresholded_grid_matches_expression(spark):
+def test_near_dup_thresholded_grid_matches_expression(spark, duck):
     # The real near-dup harvest: emit ALL pairs >= threshold. Grid path
-    # (k=None, threshold in-cell) must equal the O(n²) expression form.
+    # (k=None, threshold in-cell) must equal the O(n²) pair join.
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     thr = 0.3
-    naive = _pairs(near_dup_pairs_cosine(emb, threshold=thr, vectorized=False))
-    grid = _pairs(near_dup_pairs_cosine(emb, threshold=thr, rows_per_block=64))
-    assert naive == grid and len(grid) > 0
+    grid = assert_matches_duckdb(
+        near_dup_pairs_cosine(emb, threshold=thr, rows_per_block=64),
+        embedding_pairs_sql(threshold=thr, k=None),
+        duck,
+    )
+    assert len(grid) > 0
 
 
-def test_near_dup_topk_matches_expression(spark):
+def test_near_dup_topk_matches_expression(spark, duck):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    naive = _pairs(near_dup_pairs_cosine(emb, threshold=-1.0, k=30, vectorized=False))
-    grid = _pairs(near_dup_pairs_cosine(emb, threshold=-1.0, k=30, rows_per_block=64))
-    assert naive == grid and len(grid) == 30
+    grid = assert_matches_duckdb(
+        near_dup_pairs_cosine(emb, threshold=-1.0, k=30, rows_per_block=64),
+        embedding_pairs_sql(threshold=-1.0, k=30),
+        duck,
+    )
+    assert len(grid) == 30
 
 
 def test_near_dup_grid_plan_has_no_corpus_broadcast(spark):

@@ -1,5 +1,5 @@
 """Round-4 operator additions: SimHash Hamming pair search (banding
-completeness), repetition stats (vectorized/expression parity), rank-only
+completeness), repetition stats (DuckDB parity), rank-only
 distributed window, stratified sampling (determinism + bounds), quality
 filter (rule order)."""
 
@@ -16,6 +16,13 @@ from plumberapp_spark.llm.dedup import simhash_hamming_pairs, simhash_table  # n
 from plumberapp_spark.llm.sampling import stratified_sample  # noqa: E402
 from plumberapp_spark.llm.textqa import quality_filter, repetition_stats  # noqa: E402
 from plumberapp_spark.operators.windows import ranked_running_total  # noqa: E402
+from plumberapp_spark.queries_llm import (  # noqa: E402
+    chunking_sql,
+    decontamination_sql,
+    top_ngrams_sql,
+)
+from plumberapp_spark.registry import REGISTRY  # noqa: E402
+from tests.conftest import assert_matches_duckdb  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -71,11 +78,9 @@ def test_hamming_rejects_bad_params(spark):
 # ------------------------------------------------------------------
 
 
-def test_repetition_vectorized_matches_expression(spark):
+def test_repetition_vectorized_matches_expression(spark, duck):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fast = {r["doc_id"]: tuple(r)[1:] for r in repetition_stats(docs, vectorized=True).collect()}
-    slow = {r["doc_id"]: tuple(r)[1:] for r in repetition_stats(docs, vectorized=False).collect()}
-    assert fast == slow
+    assert_matches_duckdb(repetition_stats(docs), REGISTRY["q60_repetition_stats"].oracle, duck)
 
 
 def test_repetition_edge_rows(spark):
@@ -83,14 +88,14 @@ def test_repetition_edge_rows(spark):
         [(1, None), (2, ""), (3, "x"), (4, "a a a a"), (5, "a b c d e")],
         "doc_id bigint, text string",
     )
-    rows = {r["doc_id"]: r for r in repetition_stats(df, vectorized=True).collect()}
+    rows = {r["doc_id"]: r for r in repetition_stats(df).collect()}
     assert rows[1]["n_tokens"] == 0 and rows[1]["dup_word_frac"] == 0.0
     assert rows[3]["dup_ngram_frac"] == 0.0  # shorter than the n-gram width
     assert rows[4]["dup_word_frac"] == 0.75 and rows[4]["top_word_frac"] == 1.0
     assert rows[5]["dup_word_frac"] == 0.0 and rows[5]["top_word_frac"] == 0.2
-    slow = {r["doc_id"]: r for r in repetition_stats(df, vectorized=False).collect()}
-    for k in rows:
-        assert tuple(rows[k]) == tuple(slow[k])
+    assert_matches_duckdb(
+        repetition_stats(df), REGISTRY["q60_repetition_stats"].oracle, documents=df
+    )
 
 
 # ------------------------------------------------------------------
@@ -180,24 +185,28 @@ def test_quality_filter_real_corpus_is_mixed(spark):
     assert sum(v for k, v in counts.items() if k != "keep") > 0, "filter drops nothing"
 
 
-def test_quality_filter_vectorized_matches_expression(spark):
+def test_quality_filter_vectorized_matches_expression(spark, duck):
+    oracle = REGISTRY["q62_quality_filter"].oracle
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fast = {r["doc_id"]: (r["reason"], r["keep"]) for r in quality_filter(docs).collect()}
-    slow = {
-        r["doc_id"]: (r["reason"], r["keep"])
-        for r in quality_filter(docs, vectorized=False).collect()
-    }
-    assert fast == slow
+    assert_matches_duckdb(quality_filter(docs), oracle, duck)
+    # Row 5: 21 tokens, every other rule passes, and the punctuation
+    # ratio is 0.155 in characters but 0.256 in UTF-8 bytes (each 'ñ' is
+    # one non-word character of two bytes) — it keeps only where the
+    # ratio counts characters, as the Arrow gate and the oracle's
+    # length() both do (DuckDB's strlen() counts bytes).
     edge = spark.createDataFrame(
-        [(1, None), (2, ""), (3, "the " * 30), (4, "x! " * 40)],
+        [
+            (1, None),
+            (2, ""),
+            (3, "the " * 30),
+            (4, "x! " * 40),
+            (5, "añ señor, the and of! piña caña baño daño leña moño niño paño"
+                " sueño viña otoño mañana the river in town"),
+        ],
         "doc_id bigint, text string",
     )
-    fast_e = {r["doc_id"]: (r["reason"], r["keep"]) for r in quality_filter(edge).collect()}
-    slow_e = {
-        r["doc_id"]: (r["reason"], r["keep"])
-        for r in quality_filter(edge, vectorized=False).collect()
-    }
-    assert fast_e == slow_e
+    got = {r[0]: r[1] for r in assert_matches_duckdb(quality_filter(edge), oracle, documents=edge)}
+    assert got[5] == "keep"
 
 
 # ------------------------------------------------------------------
@@ -284,14 +293,13 @@ def test_top_ngrams_counts_and_ties(spark):
     assert rows[1][1] <= 3 and len(rows) == 3
 
 
-def test_top_ngrams_vectorized_matches_expression(spark):
+def test_top_ngrams_vectorized_matches_expression(spark, duck):
     from plumberapp_spark.llm.textqa import top_ngrams
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     fast = [(r["ngram"], r["n_occurrences"]) for r in top_ngrams(docs, n=3, k=30).collect()]
-    slow = [(r["ngram"], r["n_occurrences"])
-            for r in top_ngrams(docs, n=3, k=30, vectorized=False).collect()]
-    assert fast == slow
+    want = [tuple(r) for r in duck.execute(top_ngrams_sql(3, 30)).fetchall()]
+    assert fast == want  # in order: count desc, then gram asc
 
 
 # ------------------------------------------------------------------
@@ -354,16 +362,17 @@ def test_packing_random_sizes_match_reference(spark):
         off += toks
 
 
-def test_decontaminate_vectorized_matches_expression(spark):
+def test_decontaminate_vectorized_matches_expression(spark, duck):
     from plumberapp_spark.llm.dedup import decontaminate
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
-    fast = {r["doc_id"]: tuple(r)[1:] for r in
-            decontaminate(docs, bench, vectorized=True).collect()}
-    slow = {r["doc_id"]: tuple(r)[1:] for r in
-            decontaminate(docs, bench, vectorized=False).collect()}
-    assert fast == slow
+    fast = {
+        r[0]: r[1:]
+        for r in assert_matches_duckdb(
+            decontaminate(docs, bench), decontamination_sql(bench_mod=50), duck
+        )
+    }
     # the benchmark slice itself is contaminated by construction
     assert all(fast[r["doc_id"]][1] for r in bench.select("doc_id").collect())
 
@@ -429,15 +438,13 @@ def test_quota_sample_respects_each_quota(spark):
     assert counts == {"en": 7, "zh": 3}  # whitelist semantics: others dropped
 
 
-def test_chunk_documents_vectorized_matches_expression(spark):
+def test_chunk_documents_vectorized_matches_expression(spark, duck):
     from plumberapp_spark.llm.textqa import chunk_documents
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fast = sorted(map(tuple, chunk_documents(docs, max_tokens=24, overlap=8).collect()))
-    slow = sorted(
-        map(tuple, chunk_documents(docs, max_tokens=24, overlap=8, vectorized=False).collect())
+    assert_matches_duckdb(
+        chunk_documents(docs, max_tokens=24, overlap=8), chunking_sql(24, 8), duck
     )
-    assert fast == slow
 
 
 def test_dedup_against_null_text_matches_empty(spark):

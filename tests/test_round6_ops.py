@@ -22,12 +22,25 @@ from plumberapp_spark.llm.dedup import (  # noqa: E402
     duplicate_spans,
 )
 from plumberapp_spark.llm.sampling import domain_mixture, dsir_importance  # noqa: E402
+from plumberapp_spark.queries_llm import (  # noqa: E402
+    bloom_decontamination_sql,
+    dsir_sql,
+    duplicate_spans_sql,
+)
+from tests.conftest import assert_matches_duckdb  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def _docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+
+def _first_docs(spark, n):
+    """The first ``n`` fixture docs as a local frame, so the operator and
+    its DuckDB definition see the same rows."""
+    docs = _docs(spark)
+    return spark.createDataFrame(docs.limit(n).collect(), docs.schema)
 
 
 # ------------------------------------------------------------------
@@ -70,20 +83,16 @@ def test_bloom_tiny_filter_forces_false_positives(spark):
 
 
 def test_bloom_vectorized_matches_expression_route(spark):
-    """The Arrow-probe fast path and the lazy expression form are the
-    same function: identical (id, count, flag) rows."""
-    docs = _docs(spark).limit(150)
+    """The Arrow bitset probe is the Bloom definition: the same md5 bit
+    positions, false positives included, as the DuckDB SQL — identical
+    (id, count, flag) rows."""
+    docs = _first_docs(spark, 150)
     bench = docs.filter(F.col("doc_id") % 50 == 0)
-    kw = dict(ngram=5, n_bits=1 << 16, n_hashes=3)
-    fast = {
-        r["doc_id"]: (r["n_flagged_ngrams"], r["flagged"])
-        for r in bloom_decontaminate(docs, bench, vectorized=True, **kw).collect()
-    }
-    lazy = {
-        r["doc_id"]: (r["n_flagged_ngrams"], r["flagged"])
-        for r in bloom_decontaminate(docs, bench, vectorized=False, **kw).collect()
-    }
-    assert fast == lazy
+    assert_matches_duckdb(
+        bloom_decontaminate(docs, bench, ngram=5, n_bits=1 << 16, n_hashes=3),
+        bloom_decontamination_sql(bench_mod=50, n_bits=1 << 16),
+        documents=docs,
+    )
 
 
 def test_bloom_empty_benchmark_flags_nothing(spark):
@@ -288,24 +297,21 @@ def test_streaming_bloom_dedup_drops_planted_duplicates(spark, tmp_path):
 
 
 def test_duplicate_spans_vectorized_matches_expression_route(spark):
-    docs = _docs(spark).limit(200)
-    fast = {r["doc_id"]: r for r in duplicate_spans(docs, ngram=6, vectorized=True).collect()}
-    lazy = {r["doc_id"]: r for r in duplicate_spans(docs, ngram=6, vectorized=False).collect()}
-    assert fast == lazy
+    docs = _first_docs(spark, 200)
+    assert_matches_duckdb(
+        duplicate_spans(docs, ngram=6), duplicate_spans_sql(ngram=6), documents=docs
+    )
 
 
 def test_dsir_vectorized_matches_expression_route(spark):
-    docs = _docs(spark).limit(200)
+    # bit-exact md5 buckets: 's7:'-salted feature hashes mod n_buckets
+    docs = _first_docs(spark, 200)
     target = docs.filter(F.col("lang") == "en")
-    fast = {
-        r["doc_id"]: r
-        for r in dsir_importance(docs, target, n_buckets=2048, vectorized=True).collect()
-    }
-    lazy = {
-        r["doc_id"]: r
-        for r in dsir_importance(docs, target, n_buckets=2048, vectorized=False).collect()
-    }
-    assert fast == lazy
+    assert_matches_duckdb(
+        dsir_importance(docs, target, n_buckets=2048),
+        dsir_sql(n_buckets=2048),
+        documents=docs,
+    )
 
 
 # ------------------------------------------------------------------

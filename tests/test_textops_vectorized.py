@@ -1,6 +1,9 @@
-"""Vectorized (Arrow mapInPandas) simhash and language-ID must match the
-interpreted expression forms they replaced on the hot path — same md5
-prefix hashing, same majority vote, same argmax tie-break."""
+"""The Arrow (mapInPandas) text operators against their definitions:
+DuckDB SQL — the registered oracles, or the same SQL at the test's
+parameters — run on the very rows each operator saw. Pins the md5 prefix
+hashing and majority vote of SimHash, the language argmax tie-break,
+NULL / empty / short docs, and the one whitespace class (NBSP, U+2028,
+ideographic space and U+000B) shared by every tokenizer."""
 
 from __future__ import annotations
 
@@ -11,15 +14,24 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from plumberapp_spark.llm.dedup import simhash_table  # noqa: E402
 from plumberapp_spark.llm.textqa import language_id  # noqa: E402
+from plumberapp_spark.queries_llm import (  # noqa: E402
+    JACCARD_PAIRS_SQL,
+    chunking_sql,
+    top_ngrams_sql,
+)
+from plumberapp_spark.registry import REGISTRY  # noqa: E402
+from tests.conftest import assert_matches_duckdb  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_simhash_vectorized_matches_expression(spark):
+def _oracle(name: str) -> str:
+    return REGISTRY[name].oracle
+
+
+def test_simhash_vectorized_matches_expression(spark, duck):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fast = {r[0]: r[1] for r in simhash_table(docs, "text", "doc_id", vectorized=True).collect()}
-    slow = {r[0]: r[1] for r in simhash_table(docs, "text", "doc_id", vectorized=False).collect()}
-    assert fast == slow
+    assert_matches_duckdb(simhash_table(docs, "text", "doc_id"), _oracle("q18_simhash"), duck)
 
 
 def test_simhash_edge_rows(spark):
@@ -27,16 +39,17 @@ def test_simhash_edge_rows(spark):
         [(1, None), (2, ""), (3, "   "), (4, "one"), (5, "a b a b a")],
         "doc_id bigint, text string",
     )
-    fast = {r[0]: r[1] for r in simhash_table(df, "text", "doc_id", vectorized=True).collect()}
-    slow = {r[0]: r[1] for r in simhash_table(df, "text", "doc_id", vectorized=False).collect()}
-    assert fast == slow
+    got = dict(
+        assert_matches_duckdb(
+            simhash_table(df, "text", "doc_id"), _oracle("q18_simhash"), documents=df
+        )
+    )
+    assert got[1] == got[2] == got[3] == 0  # no tokens: no bit wins a majority
 
 
-def test_language_id_vectorized_matches_expression(spark):
+def test_language_id_vectorized_matches_expression(spark, duck):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fast = {r[0]: r[1] for r in language_id(docs, vectorized=True).collect()}
-    slow = {r[0]: r[1] for r in language_id(docs, vectorized=False).collect()}
-    assert fast == slow
+    assert_matches_duckdb(language_id(docs), _oracle("q23_language_id"), duck)
 
 
 def test_language_id_tie_break(spark):
@@ -47,46 +60,38 @@ def test_language_id_tie_break(spark):
         [(1, "la"), (2, "der die und"), (3, "zzz qqq"), (4, None)],
         "doc_id bigint, text string",
     )
-    fast = {r[0]: r[1] for r in language_id(df, vectorized=True).collect()}
-    slow = {r[0]: r[1] for r in language_id(df, vectorized=False).collect()}
-    assert fast == slow
+    fast = dict(assert_matches_duckdb(language_id(df), _oracle("q23_language_id"), documents=df))
     assert fast[1] == "es" and fast[2] == "de" and fast[3] == "und" and fast[4] == "und"
 
 
-def test_ngram_jaccard_vectorized_matches_expression(spark):
+def test_ngram_jaccard_vectorized_matches_expression(spark, duck):
     from plumberapp_spark.llm.dedup import ngram_jaccard_pairs
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fast = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.0, vectorized=True).collect())
-    )
-    slow = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.0, vectorized=False).collect())
-    )
-    assert fast == slow
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.0)
+    assert_matches_duckdb(pairs, JACCARD_PAIRS_SQL, duck)
 
 
-def test_token_stats_vectorized_matches_expression_form(spark):
+def test_token_stats_vectorized_matches_expression_form(spark, duck):
     from plumberapp_spark.llm.textqa import token_stats
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    fast = sorted(map(tuple, token_stats(docs, vectorized=True).collect()))
-    slow = sorted(map(tuple, token_stats(docs, vectorized=False).collect()))
-    assert fast == slow and len(fast) > 0
+    rows = assert_matches_duckdb(token_stats(docs), _oracle("q24_token_stats"), duck)
+    assert len(rows) > 0
 
 
 def test_unicode_whitespace_parity(spark):
-    # ADVICE r4: the Arrow paths tokenized with Python's Unicode-aware
-    # \s+ while the pinned expression forms use Java's ASCII-only \s —
-    # on NBSP / U+2028 / ideographic-space text (common in web corpora)
-    # the two silently diverged and the ASCII-only test corpus hid it.
+    # ADVICE r4: the Arrow paths once tokenized with Python's
+    # Unicode-aware \s+ while Spark's expressions used Java's \s — on
+    # NBSP / U+2028 / ideographic-space text (common in web corpora) the
+    # engines silently diverged and the ASCII-only test corpus hid it.
     # All splitters now share functions.text's one whitespace class
-    # (split_tokens on the Arrow side). Pin parity on exactly the texts
-    # that used to diverge, and on U+000B against DuckDB.
+    # (split_tokens on the Arrow side). Pin every Arrow text operator
+    # against DuckDB on exactly the texts that used to diverge, U+000B
+    # and non-ASCII letters included.
     from plumberapp_spark.llm.dedup import ngram_jaccard_pairs
     from plumberapp_spark.llm.textqa import (
         chunk_documents,
-        language_id,
         quality_filter,
         repetition_stats,
         token_stats,
@@ -105,25 +110,16 @@ def test_unicode_whitespace_parity(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    for fn, kw in [
-        (token_stats, {}),
-        (language_id, {}),
-        (repetition_stats, {}),
-        (quality_filter, {}),
-        (top_ngrams, {"n": 2, "k": 50}),
-        (chunk_documents, {"max_tokens": 3}),
+    for out, sql in [
+        (token_stats(docs), _oracle("q24_token_stats")),
+        (language_id(docs), _oracle("q23_language_id")),
+        (repetition_stats(docs), _oracle("q60_repetition_stats")),
+        (quality_filter(docs), _oracle("q62_quality_filter")),
+        (top_ngrams(docs, n=2, k=50), top_ngrams_sql(2, 50)),
+        (chunk_documents(docs, max_tokens=3), chunking_sql(3, 0)),
+        (ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.0), JACCARD_PAIRS_SQL),
     ]:
-        fast = sorted(map(tuple, fn(docs, vectorized=True, **kw).collect()))
-        slow = sorted(map(tuple, fn(docs, vectorized=False, **kw).collect()))
-        assert fast == slow, f"{fn.__name__} diverges on non-ASCII whitespace"
-
-    fast = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.0, vectorized=True).collect())
-    )
-    slow = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.0, vectorized=False).collect())
-    )
-    assert fast == slow
+        assert_matches_duckdb(out, sql, documents=docs)
 
     _assert_whitespace_matches_duckdb(spark, docs, rows)
 
@@ -131,8 +127,9 @@ def test_unicode_whitespace_parity(spark):
 def _assert_whitespace_matches_duckdb(spark, docs, rows):
     """The DuckDB oracles split on RE2's \\s = [ \\t\\n\\f\\r], which
     leaves U+000B inside a token and counts it as punctuation. Token
-    counts (expression and Arrow forms), the quality punctuation ratio
-    and segmented BM25 must agree with DuckDB SQL on the same rows."""
+    counts (the Catalyst tokenizer and the Arrow token_stats), the
+    quality punctuation ratio and segmented BM25 must agree with DuckDB
+    SQL on the same rows."""
     import duckdb
     import pandas as pd
     from pyspark.sql import functions as F
