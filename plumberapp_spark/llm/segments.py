@@ -72,21 +72,23 @@ summed on the driver and inlined as literals + a top-k tail that
 crosses one exchange. The only corpus-sized relation a query ever
 touches is the pruned postings subset of its own terms, and the fixed
 per-request cost is the handful of Spark jobs those steps need
-(pinned by ``tests/test_index_job_floor.py``). Reference analog: the reference resumes /
-extends pipelines without replaying finished work
-(plumber_analysis/src/plumber_analysis/pipeline_optimizer.py's
-ResumeDataset handling); the segment trick is that same
-"don't redo what's done" contract applied to index maintenance.
+(pinned by ``tests/test_index_job_floor.py``).
+
+Segments and tombstones are members of :mod:`~plumberapp_spark.llm.store`
+(``seg_*`` and ``tomb_*``, both complete once their ``scalars`` land):
+listing, naming, the absorbed ledger, the compaction swap, the
+tombstone splice and the streaming sink are the store's; this module
+keeps the payload — the segment writer, the merge and the delete.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from plumberapp_spark.llm import store
 from plumberapp_spark.llm.scoring import (
     DEFAULT_BUCKETS,
     _bucket,
@@ -109,99 +111,6 @@ from plumberapp_spark.llm.scoring import (
 # postings scan, and token-less docs (invisible in postings) still
 # decrement N correctly.
 SEG_FORMAT = 3
-
-# manual appends use zero-padded ints; streaming ingest uses epoch-keyed
-# names (seg_s…). Segment ORDER is irrelevant to correctness — the union
-# is a multiset and the globals are additive — so the name only needs to
-# be unique within the index.
-_SEG_RE = re.compile(r"^seg_[0-9A-Za-z]+$")
-_SEG_NUM_RE = re.compile(r"^seg_(\d+)$")
-_TOMB_RE = re.compile(r"^tomb_(\d+)$")
-
-
-def _recover_swap(path: str) -> None:
-    """Complete or roll back a compaction swap that died between its two
-    renames (ADVICE r10, medium). :func:`_swap_compacted` writes a
-    sibling intent marker BEFORE touching the live path, so every crash
-    state is decidable:
-
-    * marker absent — no swap in flight; nothing to do.
-    * marker present, live path present — the crash hit either before
-      the first rename (live index untouched) or after both (swap
-      complete): the path serves correctly either way, so the marker is
-      stale — discard it.
-    * marker present, live path absent, ``<path>.compact`` present —
-      the crash hit BETWEEN the renames (the silent-data-loss window:
-      a restarted sink would otherwise recreate ``path`` holding only
-      the replayed epoch while the real corpus sits in ``.old.N``).
-      Roll FORWARD: the compacted index is complete by construction
-      (it was only renamed after :func:`compact_segments` returned).
-    * marker present, neither directory — unrecoverable externally
-      induced state; refuse loudly rather than serve an empty index.
-
-    Called from :func:`_list_segments`, the choke point every reader,
-    appender, deleter and sink passes through — so recovery happens on
-    the first touch after a crash, before any segment write could
-    recreate ``path``."""
-    intent = f"{path}.swapintent"
-    if not os.path.exists(intent):
-        return
-    tmp = f"{path}.compact"
-    if os.path.isdir(path):
-        os.remove(intent)
-        return
-    if os.path.isdir(tmp):
-        os.rename(tmp, path)
-        os.remove(intent)
-        return
-    raise RuntimeError(
-        f"interrupted compaction swap at {path!r}: neither the live index "
-        f"nor {tmp!r} survived — restore from the newest {path}.old.N "
-        "sibling before serving or appending"
-    )
-
-
-def _swap_compacted(path: str) -> str:
-    """The default two-rename POSIX swap behind :func:`maybe_compact`
-    (and the IVF twin), made crash-recoverable: an intent marker is
-    written before the first rename and removed after the second, so a
-    death anywhere in between is repaired by :func:`_recover_swap` on
-    the next index touch instead of silently serving a near-empty
-    recreated path. Returns the retired path. Still NOT atomic on
-    object stores — pass a ``swap=`` callback there (see
-    :func:`maybe_compact`'s contract)."""
-    intent = f"{path}.swapintent"
-    tmp = f"{path}.compact"
-    n = 0
-    while os.path.exists(f"{path}.old.{n}"):
-        n += 1
-    retired = f"{path}.old.{n}"
-    with open(intent, "w") as fh:
-        fh.write(retired)
-    os.rename(path, retired)
-    os.rename(tmp, path)
-    os.remove(intent)
-    return retired
-
-
-def _list_segments(path: str) -> list[str]:
-    """Complete segments under ``path``. A segment is complete iff its
-    scalars marker exists — scalars is the LAST relation a segment
-    write lands, so a half-written segment (died mid-append) is
-    invisible to serving rather than AnalysisException. Also the
-    recovery choke point for interrupted compaction swaps
-    (:func:`_recover_swap`) — one marker stat per call."""
-    _recover_swap(path)
-    try:
-        names = sorted(n for n in os.listdir(path) if _SEG_RE.match(n))
-    except OSError:
-        return []
-    return [
-        os.path.join(path, n)
-        for n in names
-        if os.path.exists(os.path.join(path, n, "scalars", "_SUCCESS"))
-    ]
-
 
 def _write_segment(
     docs: DataFrame,
@@ -317,37 +226,6 @@ def _seg_buckets(spark, seg_path: str) -> int:
 # operation applied to the index tier.
 
 
-def _list_tombstones(path: str) -> list[str]:
-    """Complete tombstones under ``path`` — complete iff the scalars
-    marker landed (half-written deletes are invisible, like segments)."""
-    try:
-        names = sorted(n for n in os.listdir(path) if _TOMB_RE.match(n))
-    except OSError:
-        return []
-    return [
-        os.path.join(path, n)
-        for n in names
-        if os.path.exists(os.path.join(path, n, "scalars", "_SUCCESS"))
-    ]
-
-
-def _absorbed_segments(path: str) -> set[str]:
-    """Names of segments a PRIOR COMPACTION folded into this index
-    (``absorbed.json``, written by compact_segments). An epoch-keyed
-    replay must treat an absorbed segment as complete — its rows are
-    already in the compacted segment — or a post-compaction replay
-    would double-ingest the epoch. This is what makes in-sink
-    auto-compaction (streaming_segment_ingest's ``max_segments``)
-    exactly-once-preserving."""
-    import json
-
-    try:
-        with open(os.path.join(path, "absorbed.json")) as fh:
-            return set(json.load(fh))
-    except (OSError, ValueError):
-        return set()
-
-
 def _require_doclens(segs: list[str]) -> None:
     """Fail with GUIDANCE when a segment predates the ``doclens``
     relation (layout format ≤ 2) instead of a raw parquet
@@ -374,60 +252,6 @@ def _require_doclens(segs: list[str]) -> None:
         )
 
 
-def _tomb_local_ids(tombs: list[str], max_ids: int = 10_000):
-    """``(id_column_name, sorted tombstoned values)`` when every
-    ``{tomb}/ids`` relation is locally readable and their union is small
-    enough for an in-plan ``NOT IN`` set — the takedown-set twin of the
-    driver-side scalar reads: a bounded id SET needs no broadcast build
-    job per read. None → callers keep the broadcast anti-join (object
-    stores, big takedowns). Both index tiers (lexical segments here, IVF
-    in ``similarity``) store tombstones as ``{tomb}/ids``."""
-    from plumberapp_spark.session import local_parquet_rows
-
-    col_name, vals = None, []
-    for t in tombs:
-        rows = local_parquet_rows(f"{t}/ids", max_rows=max_ids + 1)
-        if rows is None:
-            return None
-        if rows and col_name is None:
-            col_name = next(iter(rows[0]))
-        vals.extend(next(iter(r.values())) for r in rows)
-        if len(vals) > max_ids:
-            return None
-    if col_name is None:
-        return None
-    # a NULL tomb id matches nothing under the anti-join's equality —
-    # drop it so the IN-set filter agrees exactly
-    return col_name, sorted({v for v in vals if v is not None})
-
-
-def _minus_tombstones(spark, tombs: list[str], df: DataFrame) -> DataFrame:
-    """``df`` minus every id tombstoned in ``tombs`` (matched on the
-    tombstones' own id column). Small local takedown sets apply as a
-    plan-side ``NOT IN`` filter that pushes into the parquet scan (no
-    broadcast build job); anything else keeps the broadcast anti-join.
-    NULL-keyed rows survive both forms (an anti-join keeps them because
-    NULL equals nothing). Both forms lead with the id column, as the
-    anti-join emits it, so a relation written from either has one
-    schema."""
-    if not tombs:
-        return df
-    local = _tomb_local_ids(tombs)
-    if local is not None:
-        col_name, vals = local
-        if vals:
-            df = df.filter(F.col(col_name).isNull() | ~F.col(col_name).isin(vals))
-        return df.select(col_name, *[c for c in df.columns if c != col_name])
-    from functools import reduce
-
-    from plumberapp_spark.session import read_parquet_cached
-
-    dead = reduce(
-        DataFrame.unionByName, [read_parquet_cached(spark, f"{t}/ids") for t in tombs]
-    )
-    return df.join(F.broadcast(dead), dead.columns[0], "left_anti")
-
-
 def delete_docs(spark, path: str, ids: DataFrame, id_col: str = "doc_id") -> str:
     """Remove documents from the index WITHOUT touching any segment:
     write one immutable tombstone. Cost is one scan of the slim doclens
@@ -443,14 +267,14 @@ def delete_docs(spark, path: str, ids: DataFrame, id_col: str = "doc_id") -> str
     a cached block is lost: ``ids`` is evaluated once, as the broadcast
     build side collected on the driver, and a recompute re-reads the
     immutable doclens files against that same broadcast."""
-    segs = _list_segments(path)
+    segs = store.members(path, "seg", "scalars")
     if not segs:
         raise ValueError(f"no segments under {path!r} — nothing to delete from")
     _require_doclens(segs)
-    tombs = _list_tombstones(path)
-    nums = [int(_TOMB_RE.match(os.path.basename(t)).group(1)) for t in tombs]
-    tomb = os.path.join(path, f"tomb_{(max(nums, default=-1)) + 1:05d}")
-    doclens = _minus_tombstones(spark, tombs, _union_pruned(spark, segs, "doclens", []))
+    tombs = store.tombstones(path, "scalars")
+    tomb, _ = store.member_dir(path, "tomb", "scalars", tombs)
+    doclens = _union_pruned(spark, segs, "doclens", [])
+    doclens = store.minus_tombstones(spark, tombs, doclens)
     req = ids.select(F.col(id_col).alias("doc_id"))
     matched = doclens.join(F.broadcast(req), "doc_id", "left_semi").persist()
     try:
@@ -477,7 +301,7 @@ def _apply_tombstones(
     spark, path: str, postings: DataFrame, dfreq: DataFrame
 ) -> tuple[DataFrame, DataFrame, list[str]]:
     """Splice deletions into a serving plan: drop the tombstoned ids
-    from the pruned postings (:func:`_minus_tombstones`), and REPLACE
+    from the pruned postings (``store.minus_tombstones``), and REPLACE
     the termstats-derived df with a count over the live postings — each
     (doc, term) posting row is one df unit, so ``count(live rows per
     tk)`` IS ``Σ termstats − removed`` exactly (the postings are their
@@ -486,10 +310,10 @@ def _apply_tombstones(
     the termstats scans and a correction join; with no tombstones the
     cheaper summed-termstats ``dfreq`` passes through untouched.
     Returns (live postings, effective dfreq, tombs)."""
-    tombs = _list_tombstones(path)
+    tombs = store.tombstones(path, "scalars")
     if not tombs:
         return postings, dfreq, tombs
-    live = _minus_tombstones(spark, tombs, postings)
+    live = store.minus_tombstones(spark, tombs, postings)
     return live, live.groupBy("tk").agg(F.count("*").alias("_df")), tombs
 
 
@@ -528,32 +352,15 @@ def append_segment(
     of an already-complete segment is a no-op, which is what turns
     foreachBatch's at-least-once delivery into exactly-once index
     contents."""
-    segs = _list_segments(path)
-    if name is not None:
-        if not _SEG_RE.match(name):
-            raise ValueError(f"segment name {name!r} must match {_SEG_RE.pattern}")
-        seg = os.path.join(path, name)
-        if skip_if_complete and (
-            os.path.exists(os.path.join(seg, "scalars", "_SUCCESS"))
-            or name in _absorbed_segments(path)
-        ):
-            return seg
-        # first segment of an empty index keeps the caller's name — a
-        # replay must land on the SAME directory or epoch 0 would
-        # double-ingest under two names
-        if not segs:
-            _write_segment(new_docs, seg, text_col, id_col, DEFAULT_BUCKETS)
-            return seg
-    elif not segs:
-        return build_segmented_index(new_docs, path, text_col, id_col)
-    else:
-        nums = [
-            int(m.group(1))
-            for s in segs
-            if (m := _SEG_NUM_RE.match(os.path.basename(s)))
-        ]
-        seg = os.path.join(path, f"seg_{(max(nums, default=-1)) + 1:05d}")
-    n_buckets = _seg_buckets(new_docs.sparkSession, segs[0])
+    segs = store.members(path, "seg", "scalars")
+    seg, done = store.member_dir(path, "seg", "scalars", segs, name, skip_if_complete)
+    if done:
+        return seg
+    # the first segment of an empty index takes the default layout (and,
+    # when named, keeps the caller's name: a replay must land on the SAME
+    # directory or epoch 0 would double-ingest under two names)
+    spark = new_docs.sparkSession
+    n_buckets = _seg_buckets(spark, segs[0]) if segs else DEFAULT_BUCKETS
     _write_segment(new_docs, seg, text_col, id_col, n_buckets)
     return seg
 
@@ -682,7 +489,7 @@ def _query_postings(
     from plumberapp_spark.functions.text import tokenize
     from plumberapp_spark.session import collect_bounded, local_relation
 
-    segs = _list_segments(path)
+    segs = store.members(path, "seg", "scalars")
     if not segs:
         raise ValueError(f"no segments under {path!r} — build or append first")
     pairs = queries.select(
@@ -774,7 +581,7 @@ def bm25_topk_segmented(
     docs' ``text``/``doc_id`` and shares q83's oracle).
 
     Per query run: :func:`_query_postings`' pruned scans, tombstoned ids
-    dropped by :func:`_minus_tombstones` inside them, a
+    dropped by ``store.minus_tombstones`` inside them, a
     query-vocab-sized df merge, :func:`_match`'s candidate restriction
     and self-exclusion, the per-row weight with N and avgdl inlined as
     literals (:func:`_with_globals`), one bounded aggregate, and the
@@ -784,7 +591,7 @@ def bm25_topk_segmented(
     segs, qterms, terms, buckets, postings = _query_postings(
         spark, path, queries, text_col, id_col, qtf=False
     )
-    tombs = _list_tombstones(path)
+    tombs = store.tombstones(path, "scalars")
     if tombs:
         # BM25 needs df only per posting row, so on a tombstoned index
         # it rides a window COUNT over the single live pruned scan — a
@@ -794,7 +601,7 @@ def bm25_topk_segmented(
         # scan (measured at zipf100: 6.7 s → 4.9 s).
         from pyspark.sql import Window
 
-        postings = _minus_tombstones(spark, tombs, postings).withColumn(
+        postings = store.minus_tombstones(spark, tombs, postings).withColumn(
             "_df", F.count("*").over(Window.partitionBy("tk"))
         )
     weighted = _match(postings, qterms, candidates)
@@ -828,7 +635,7 @@ def refresh_tfidf_norms(spark, path: str) -> str:
     and tf-idf costs one numeric pass per delta batch."""
     import json
 
-    segs = _list_segments(path)
+    segs = store.members(path, "seg", "scalars")
     if not segs:
         raise ValueError(f"no segments under {path!r} — nothing to refresh")
     # deletions shift every df and N too — the refresh applies them the
@@ -861,7 +668,7 @@ def ensure_tfidf_norms(spark, path: str) -> None:
     """Refresh the norms relation iff it does not cover the current
     segment set (idempotent — the fixture-side convenience around
     :func:`refresh_tfidf_norms`)."""
-    segs = _list_segments(path)
+    segs = store.members(path, "seg", "scalars")
     try:
         _covered_norms(spark, path, segs)
     except ValueError:
@@ -883,7 +690,7 @@ def _covered_norms(spark, path: str, segs: list[str]) -> DataFrame:
         cover = {"segs": cover, "tombs": []}
     current = {
         "segs": [os.path.basename(s) for s in segs],
-        "tombs": [os.path.basename(t) for t in _list_tombstones(path)],
+        "tombs": [os.path.basename(t) for t in store.tombstones(path, "scalars")],
     }
     if cover != current:
         raise ValueError(
@@ -969,16 +776,17 @@ def compact_segments(spark, path: str, out_path: str) -> str:
     Serving the compacted index returns bit-identical scores to serving
     the segments — q105 pins this with the same full-corpus oracle as
     q104, and the delete family pins the tombstone case."""
-    segs = _list_segments(path)
+    segs = store.members(path, "seg", "scalars")
     if not segs:
         raise ValueError(f"no segments under {path!r} — nothing to compact")
     from plumberapp_spark.session import write_partitioned
 
     _require_doclens(segs)
     n_buckets = _seg_buckets(spark, segs[0])
-    tombs = _list_tombstones(path)
+    tombs = store.tombstones(path, "scalars")
     seg = os.path.join(out_path, "seg_00000")
-    postings = _minus_tombstones(spark, tombs, _union_pruned(spark, segs, "postings", []))
+    postings = _union_pruned(spark, segs, "postings", [])
+    postings = store.minus_tombstones(spark, tombs, postings)
     write_partitioned(postings.repartition("_b"), f"{seg}/postings", "_b")
     if tombs:
         # deletes shift df — recount from the SURVIVING postings (read
@@ -996,7 +804,8 @@ def compact_segments(spark, path: str, out_path: str) -> str:
             .agg(F.sum("_df").alias("_df"))
         )
     write_partitioned(termstats.repartition("_b"), f"{seg}/termstats", "_b")
-    doclens = _minus_tombstones(spark, tombs, _union_pruned(spark, segs, "doclens", []))
+    doclens = _union_pruned(spark, segs, "doclens", [])
+    doclens = store.minus_tombstones(spark, tombs, doclens)
     doclens.write.mode("overwrite").parquet(f"{seg}/doclens")
     # scalars last — the completion marker
     (
@@ -1008,17 +817,8 @@ def compact_segments(spark, path: str, out_path: str) -> str:
         .write.mode("overwrite")
         .parquet(f"{seg}/scalars")
     )
-    # record what was folded in: absorbed = the source's own absorbed
-    # set plus every segment this compaction merged — the idempotency
-    # ledger an epoch-keyed replay checks after a swap (see
-    # _absorbed_segments)
-    import json
-
-    absorbed = sorted(
-        _absorbed_segments(path) | {os.path.basename(s) for s in segs}
-    )
-    with open(os.path.join(out_path, "absorbed.json"), "w") as fh:
-        json.dump(absorbed, fh)
+    # the exactly-once ledger an epoch-keyed replay checks after a swap
+    store.write_absorbed(path, out_path, segs)
     return seg
 
 
@@ -1049,27 +849,18 @@ def streaming_segment_ingest(
     given bound, so the per-query segment fan-out stays bounded under
     indefinite ingest with no external orchestration. Exactly-once
     survives the swap because compaction records the epoch segments it
-    folded in (``absorbed.json``) and a replayed epoch treats an
-    absorbed segment as complete. Left None, compaction cadence stays
+    folded in (the store's absorbed ledger) and a replayed epoch treats
+    an absorbed segment as complete. Left None, compaction cadence stays
     the caller's knob (micro-batch-per-segment = flattest ingest
     latency)."""
 
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        append_segment(
-            batch_df,
-            path,
-            text_col,
-            id_col,
-            name=f"seg_s{epoch_id:09d}",
-            skip_if_complete=True,
-        )
+    def _append(batch_df: DataFrame, **kw) -> None:
+        append_segment(batch_df, path, text_col, id_col, **kw)
         if max_segments is not None:
             maybe_compact(batch_df.sparkSession, path, max_segments)
 
     writer = (
-        stream_docs.writeStream.foreachBatch(_sink)
+        stream_docs.writeStream.foreachBatch(store.epoch_sink("seg_s", _append))
         .option("checkpointLocation", checkpoint)
         .queryName("segment_ingest")
     )
@@ -1111,8 +902,8 @@ def ensure_segmented_index(
         sf_dir,
         table,
         build,
-        fields=lambda: (SEG_FORMAT, len(_list_segments(path))),
-        complete=lambda: len(_list_segments(path)) >= 2,
+        fields=lambda: (SEG_FORMAT, len(store.members(path, "seg", "scalars"))),
+        complete=lambda: len(store.members(path, "seg", "scalars")) >= 2,
     )
 
 
@@ -1128,36 +919,14 @@ def maybe_compact(
     retired path when a compaction ran, None otherwise. Keeps the
     per-query fan-out (|segments| × |query buckets| pruned reads)
     bounded no matter how many micro-batch appends arrive; tombstoned
-    docs are dropped physically in the process (compact_segments).
-
-    SWAP CONTRACT (VERDICT r9 #7): the default swap is two POSIX
-    renames — old index → ``<path>.old.<n>``, compacted → ``path`` —
-    which is atomic per-rename on POSIX filesystems but NOT on object
-    stores, where "rename" is copy+delete and a reader can observe the
-    path missing between the two steps. Deployments on S3/GCS/ABFS
-    must pass ``swap(compacted_path, live_path) -> retired_path``
-    implementing their store's pointer flip (a manifest/alias update,
-    or a versioned-prefix switch); this function then performs NO
-    filesystem mutation of its own. The caller (either way) removes
-    the retired copy once no in-flight readers reference it.
-
-    CRASH SAFETY (ADVICE r10): the default swap records an intent
-    marker around its renames; a crash between them is repaired —
-    rolled forward — by :func:`_recover_swap` the next time anything
-    touches the index, so a restarted streaming sink can no longer
-    recreate ``path`` holding only the replayed epoch while the real
-    corpus sits in ``.old.N``."""
-    segs = _list_segments(path)
-    if len(segs) <= max_segments:
+    docs are dropped physically in the process (compact_segments). The
+    swap, its ``swap=`` hook for object stores and its crash recovery
+    are :func:`~plumberapp_spark.llm.store.compact_and_swap`'s."""
+    if len(store.members(path, "seg", "scalars")) <= max_segments:
         return None
-    tmp = f"{path}.compact"
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
-    compact_segments(spark, path, tmp)
-    if swap is not None:
-        return swap(tmp, path)
-    return _swap_compacted(path)
+    return store.compact_and_swap(
+        path, lambda out_path: compact_segments(spark, path, out_path), swap
+    )
 
 
 def ensure_streamed_index(
@@ -1199,7 +968,7 @@ def ensure_streamed_index(
         table,
         build,
         fields=(SEG_FORMAT,),
-        complete=lambda: bool(_list_segments(path)),
+        complete=lambda: bool(store.members(path, "seg", "scalars")),
     )
 
 
@@ -1237,8 +1006,8 @@ def ensure_deleted_segmented_index(
         table,
         build,
         fields=(SEG_FORMAT,),
-        complete=lambda: len(_list_segments(path)) >= 2
-        and bool(_list_tombstones(path)),
+        complete=lambda: len(store.members(path, "seg", "scalars")) >= 2
+        and bool(store.tombstones(path, "scalars")),
     )
 
 
@@ -1259,7 +1028,7 @@ def ensure_deleted_compacted_index(
         table,
         lambda: compact_segments(spark, src, path),
         fields=(SEG_FORMAT,),
-        complete=lambda: bool(_list_segments(path)),
+        complete=lambda: bool(store.members(path, "seg", "scalars")),
     )
 
 
@@ -1278,5 +1047,5 @@ def ensure_compacted_index(spark, sf_dir: str, table: str = "documents") -> str:
         table,
         lambda: compact_segments(spark, src, path),
         fields=(SEG_FORMAT,),
-        complete=lambda: bool(_list_segments(path)),
+        complete=lambda: bool(store.members(path, "seg", "scalars")),
     )

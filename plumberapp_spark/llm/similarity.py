@@ -11,6 +11,11 @@ Two paths:
   cosine re-rank. The scale path: the cross product shrinks from |Q|×|C|
   to collisions only. Hyperplanes are md5-derived (deterministic, no state
   to ship).
+
+The persisted IVF index (:func:`build_ivf_index` onward) keeps its
+appends as ``delta_*`` members and its deletes as ``tomb_*`` members of
+:mod:`~plumberapp_spark.llm.store`, which owns their listing, naming,
+absorbed ledger, compaction swap, tombstone splice and streaming sink.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from plumberapp_spark.functions.vectors import cosine
+from plumberapp_spark.llm import store
 from plumberapp_spark.session import write_partitioned
 
 
@@ -875,9 +881,10 @@ def semantic_dedup(
 # * per-cell candidate scoring from the stored columns;
 # * whether an exact rerank against the full-precision corpus follows.
 #
-# Everything else — the md5 centroid draw, delta listing, tombstones, the
-# absorbed ledger, the crash-recoverable swap, probe coalescing and cell
-# pruning — exists once below. An index on disk names its own codec (the
+# Everything else — the md5 centroid draw, probe coalescing and cell
+# pruning — exists once below; delta and tombstone bookkeeping is
+# ``store``'s (a delta is complete once its cells relation lands, a
+# tombstone once its ids do). An index on disk names its own codec (the
 # cells relation it holds), so callers pass the codec only at build time.
 # ---------------------------------------------------------------------------
 
@@ -887,9 +894,6 @@ def semantic_dedup(
 # #4 — the same contract segments.SEG_FORMAT gives the lexical index)
 IVF_INDEX_FORMAT = 1
 SQ_IVF_FORMAT = 1
-
-_DELTA_NAME = r"^delta_[0-9A-Za-z]+$"
-
 
 def _cos_matrix(a, a_norm, b, b_norm):
     """Round-6 cosines between the rows of ``a`` and ``b`` (norms
@@ -1193,12 +1197,10 @@ def _index_codec(path: str) -> RawCodec:
 
 def _open_index(path: str) -> RawCodec:
     """First step of every lifecycle call: roll an interrupted
-    compaction swap forward or back (segments._recover_swap — a probe,
+    compaction swap forward or back (``store.recover_swap`` — a probe,
     append or compaction must never see the half-swapped path), then
     read the index's codec."""
-    from plumberapp_spark.llm.segments import _recover_swap
-
-    _recover_swap(path)
+    store.recover_swap(path)
     return _index_codec(path)
 
 
@@ -1276,46 +1278,6 @@ def _load_centroids(spark, path: str):
     return _centroid_matrix(cent_rows)[1:]
 
 
-def _ivf_delta_dirs(path: str, codec: RawCodec | None = None) -> list[str]:
-    """Complete delta segments under an IVF index, in name order — a
-    delta is visible to serving iff its cells marker landed (the
-    half-written-append invisibility contract, shared with
-    segments._list_segments)."""
-    import os
-    import re as _re
-
-    codec = codec or _index_codec(path)
-    try:
-        names = sorted(n for n in os.listdir(path) if _re.match(_DELTA_NAME, n))
-    except OSError:
-        return []
-    return [
-        os.path.join(path, n)
-        for n in names
-        if os.path.exists(os.path.join(path, n, codec.cells, "_SUCCESS"))
-    ]
-
-
-def _ivf_tomb_dirs(path: str) -> list[str]:
-    """Complete tombstones under an IVF index (``tomb_*`` directories,
-    complete iff the ids marker landed) — the dense twin of
-    segments._list_tombstones."""
-    import os
-    import re as _re
-
-    try:
-        names = sorted(
-            n for n in os.listdir(path) if _re.match(r"^tomb_[0-9]+$", n)
-        )
-    except OSError:
-        return []
-    return [
-        os.path.join(path, n)
-        for n in names
-        if os.path.exists(os.path.join(path, n, "ids", "_SUCCESS"))
-    ]
-
-
 # rows per probe task: ≈ a few MB of codes — small enough that one
 # task's numpy batch stays cache-friendly, large enough to amortize the
 # per-task Python boundary
@@ -1364,14 +1326,8 @@ def delete_from_ivf_index(
     neither the codebook nor the quantizer. Unlike the lexical tier,
     overlapping/unknown ids need no dedup — the anti-join is idempotent
     and absent ids match nothing."""
-    import os
-
-    from plumberapp_spark.llm.segments import _recover_swap
-
-    _recover_swap(path)
-    tombs = _ivf_tomb_dirs(path)
-    nums = [int(os.path.basename(t).split("_")[1]) for t in tombs]
-    tomb = os.path.join(path, f"tomb_{(max(nums, default=-1)) + 1:05d}")
+    tombs = store.tombstones(path, "ids")
+    tomb, _ = store.member_dir(path, "tomb", "ids", tombs)
     (
         ids.select(F.col(id_col))
         .distinct()
@@ -1390,44 +1346,14 @@ def _read_ivf_cells(spark, path: str, codec: RawCodec | None = None) -> DataFram
     partition layout, and a probe's IN filter pushes through the union
     to every scan — partition pruning holds across segments; the
     tombstone filter runs on the pruned survivors only."""
-    from plumberapp_spark.llm.segments import _minus_tombstones, _recover_swap
     from plumberapp_spark.session import read_parquet_cached
 
-    _recover_swap(path)
+    store.recover_swap(path)
     codec = codec or _index_codec(path)
     cells = read_parquet_cached(spark, f"{path}/{codec.cells}")
-    for d in _ivf_delta_dirs(path, codec):
+    for d in store.members(path, "delta", codec.cells):
         cells = cells.unionByName(read_parquet_cached(spark, f"{d}/{codec.cells}"))
-    return _minus_tombstones(spark, _ivf_tomb_dirs(path), cells)
-
-
-def _ivf_absorbed(path: str) -> set[str]:
-    """Delta names a prior compaction folded into this index
-    (``absorbed.json`` — segments._absorbed_segments' dense twin): a
-    replayed epoch treats an absorbed delta as complete, so in-sink
-    auto-compaction preserves exactly-once ingest."""
-    import json
-    import os
-
-    try:
-        with open(os.path.join(path, "absorbed.json")) as fh:
-            return set(json.load(fh))
-    except (OSError, ValueError):
-        return set()
-
-
-def _write_absorbed(path: str, out_path: str, codec: RawCodec) -> None:
-    """Carry the exactly-once ledger into a compacted or rebuilt index:
-    every delta it folded in, plus what ``path`` had already absorbed."""
-    import json
-    import os
-
-    absorbed = sorted(
-        _ivf_absorbed(path)
-        | {os.path.basename(d) for d in _ivf_delta_dirs(path, codec)}
-    )
-    with open(os.path.join(out_path, "absorbed.json"), "w") as fh:
-        json.dump(absorbed, fh)
+    return store.minus_tombstones(spark, store.tombstones(path, "ids"), cells)
 
 
 def compact_ivf_index(spark, path: str, out_path: str) -> str:
@@ -1440,9 +1366,8 @@ def compact_ivf_index(spark, path: str, out_path: str) -> str:
     the codec's side relations are copied verbatim. The output has no
     deltas and no tombstones; serving it is bit-identical to serving
     the segmented index (pinned by test + q117/q128/q134's shared
-    oracles). Runs beside serving; swap is the caller's problem —
-    :func:`maybe_compact_ivf` carries the same swap contract as
-    segments.maybe_compact."""
+    oracles). Runs beside serving; :func:`maybe_compact_ivf` swaps it
+    in."""
     codec = _open_index(path)
     cells = _read_ivf_cells(spark, path, codec)
     write_partitioned(cells, f"{out_path}/{codec.cells}", "_cell")
@@ -1455,36 +1380,27 @@ def compact_ivf_index(spark, path: str, out_path: str) -> str:
         spark.read.parquet(f"{path}/{side}").coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{out_path}/{side}")
-    _write_absorbed(path, out_path, codec)
+    store.write_absorbed(path, out_path, store.members(path, "delta", codec.cells))
     return out_path
 
 
 def maybe_compact_ivf(
     spark, path: str, max_deltas: int = 16, swap=None
 ) -> str | None:
-    """Size-bounded maintenance policy for the dense route — the
-    segments.maybe_compact twin: when more than ``max_deltas`` complete
-    delta segments (or any tombstone) have accumulated, compact into a
-    sibling and swap it in. Returns the retired path when a compaction
-    ran, None otherwise. Default swap = two POSIX renames (NOT atomic
-    on object stores — pass ``swap(compacted_path, live_path) ->
-    retired_path`` there; see segments.maybe_compact's contract), made
-    crash-recoverable by the shared intent marker (ADVICE r10): a death
-    between the renames rolls forward on the next index touch via
-    segments._recover_swap — which every lifecycle call runs first."""
-    import shutil
-
-    from plumberapp_spark.llm.segments import _swap_compacted
-
+    """Size-bounded maintenance policy for the dense route: when more
+    than ``max_deltas`` complete delta segments (or any tombstone) have
+    accumulated, compact into a sibling and swap it in. Returns the
+    retired path when a compaction ran, None otherwise. The swap, its
+    ``swap=`` hook for object stores and its crash recovery are
+    :func:`~plumberapp_spark.llm.store.compact_and_swap`'s."""
     codec = _open_index(path)
-    if len(_ivf_delta_dirs(path, codec)) <= max_deltas and not _ivf_tomb_dirs(path):
+    if len(store.members(path, "delta", codec.cells)) <= max_deltas and not (
+        store.tombstones(path, "ids")
+    ):
         return None
-    tmp = f"{path}.compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    compact_ivf_index(spark, path, tmp)
-    if swap is not None:
-        return swap(tmp, path)
-    return _swap_compacted(path)
+    return store.compact_and_swap(
+        path, lambda out_path: compact_ivf_index(spark, path, out_path), swap
+    )
 
 
 def append_to_ivf_index(
@@ -1505,29 +1421,20 @@ def append_to_ivf_index(
     one immutable ``delta_*`` segment. The base cells and prior deltas
     are never read or rewritten — append cost is assignment over the
     delta plus one bucket-partitioned write. ``name``/``skip_if_complete``
-    carry the segments-module idempotency contract (epoch-keyed replays
-    are no-ops), so a streaming foreachBatch sink can feed this
-    directly."""
-    import os
-    import re as _re
-
+    carry the store's idempotency contract (epoch-keyed replays are
+    no-ops), so a streaming foreachBatch sink can feed this directly."""
     spark = new_vectors.sparkSession
     codec = _open_index(path)
-    if name is not None:
-        if not _re.match(_DELTA_NAME, name):
-            raise ValueError(f"delta name {name!r} must match delta_[0-9A-Za-z]+")
-        delta = os.path.join(path, name)
-        if skip_if_complete and (
-            os.path.exists(os.path.join(delta, codec.cells, "_SUCCESS"))
-            or name in _ivf_absorbed(path)
-        ):
-            return delta
-    else:
-        existing = {os.path.basename(d) for d in _ivf_delta_dirs(path, codec)}
-        n = 0
-        while f"delta_{n:05d}" in existing:
-            n += 1
-        delta = os.path.join(path, f"delta_{n:05d}")
+    delta, done = store.member_dir(
+        path,
+        "delta",
+        codec.cells,
+        store.members(path, "delta", codec.cells),
+        name,
+        skip_if_complete,
+    )
+    if done:
+        return delta
     c_mat, c_norm = _load_centroids(spark, path)
     state = codec.load(spark, path)
     narrow = codec.narrow(new_vectors, id_col, vec_col)
@@ -1569,28 +1476,23 @@ def rebuild_ivf_index(
     the hash-anchorable contract this operator pins.
 
     Exactly-once is preserved across the swap: the fresh index carries
-    an ``absorbed.json`` covering every delta the rebuild folded in, so
+    an absorbed ledger covering every delta the rebuild folded in, so
     an epoch-keyed replay after the swap is a no-op (the
     :func:`maybe_compact_ivf` ledger contract). ``n_centroids``
     defaults to the current codebook's size. Returns the retired path
     (or ``swap``'s return on object stores)."""
-    import shutil
-
-    from plumberapp_spark.llm.segments import _swap_compacted
-
     codec = _open_index(path)
     _require_raw(codec, "rebuild_ivf_index")
     live = _read_ivf_cells(spark, path, codec).drop("_cell")
     id_col, vec_col = live.columns[0], live.columns[1]
     if n_centroids is None:
         n_centroids = spark.read.parquet(f"{path}/centroids").count()
-    tmp = f"{path}.compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    build_ivf_index(live, tmp, int(n_centroids), id_col, vec_col)
-    _write_absorbed(path, tmp, codec)
-    if swap is not None:
-        return swap(tmp, path)
-    return _swap_compacted(path)
+
+    def rebuild(out_path: str) -> None:
+        build_ivf_index(live, out_path, int(n_centroids), id_col, vec_col)
+        store.write_absorbed(path, out_path, store.members(path, "delta", codec.cells))
+
+    return store.compact_and_swap(path, rebuild, swap)
 
 
 def codebook_drift_advice(
@@ -1638,7 +1540,7 @@ def codebook_drift_advice(
         .groupBy()
         .agg(F.count("*").alias("n_hit"))
     )
-    n_deltas = len(_ivf_delta_dirs(path, codec))
+    n_deltas = len(store.members(path, "delta", codec.cells))
     recall = F.round(F.col("n_hit") / F.greatest(F.col("n_true"), F.lit(1)), 6)
     return (
         n_true.crossJoin(n_hit)
@@ -1759,7 +1661,9 @@ def ivf_topk_indexed(
         cells_df = cells_df.join(allowed, id_col, "left_semi")
     cells_df = _probe_coalesce(
         cells_df,
-        _probed_cell_dirs(path, codec.cells, _ivf_delta_dirs(path, codec), probed),
+        _probed_cell_dirs(
+            path, codec.cells, store.members(path, "delta", codec.cells), probed
+        ),
     )
     # a raw probe's per-query top-k is final; a coded probe's cut is the
     # rerank shortlist, scored approximately
@@ -1967,9 +1871,8 @@ def ensure_ivf_appended_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """Build-then-append fixture contract for the registered query
-    (the dense twin of segments.ensure_segmented_index): the index is
-    BUILT on 80 % of the table (``id % 5 != 0`` — centroids drawn from
+    """Build-then-append fixture contract for the registered query:
+    the index is BUILT on 80 % of the table (``id % 5 != 0`` — centroids drawn from
     that subset only) and the remaining fifth arrives via
     :func:`append_to_ivf_index` as a delta segment, so serving
     exercises the real base+delta union while the oracle replays the
@@ -1993,7 +1896,7 @@ def ensure_ivf_appended_index(
         table,
         build,
         fields=(IVF_INDEX_FORMAT,),
-        complete=lambda: bool(_ivf_delta_dirs(path, RAW)),
+        complete=lambda: bool(store.members(path, "delta", RAW.cells)),
     )
 
 
@@ -2041,7 +1944,9 @@ def ensure_deleted_ivf_index(
         table,
         build,
         fields=(codec.format,),
-        complete=lambda: bool(_ivf_delta_dirs(path, codec) and _ivf_tomb_dirs(path)),
+        complete=lambda: bool(
+            store.members(path, "delta", codec.cells) and store.tombstones(path, "ids")
+        ),
     )
 
 
@@ -2162,23 +2067,16 @@ def ensure_streamed_ivf_index(
             spark.readStream.schema(schema)
             .format("parquet")
             .load(f"{sf_dir}/{table}.*")
+            .filter(F.col(id_col) % 5 == 0)
         )
-
-        def _sink(batch_df, epoch_id: int) -> None:
-            delta = batch_df.filter(F.col(id_col) % 5 == 0)
-            if delta.limit(1).count() == 0:
-                return
-            append_to_ivf_index(
-                delta,
-                path,
-                id_col,
-                vec_col,
-                name=f"delta_e{epoch_id:09d}",
-                skip_if_complete=True,
-            )
-
+        sink = store.epoch_sink(
+            "delta_e",
+            lambda batch_df, **kw: append_to_ivf_index(
+                batch_df, path, id_col, vec_col, **kw
+            ),
+        )
         q = (
-            stream.writeStream.foreachBatch(_sink)
+            stream.writeStream.foreachBatch(sink)
             .option("checkpointLocation", os.path.join(path, "_checkpoint"))
             .trigger(availableNow=True)
             .start()
@@ -2191,5 +2089,5 @@ def ensure_streamed_ivf_index(
         table,
         build,
         fields=(IVF_INDEX_FORMAT,),
-        complete=lambda: bool(_ivf_delta_dirs(path, RAW)),
+        complete=lambda: bool(store.members(path, "delta", RAW.cells)),
     )

@@ -3,6 +3,11 @@ language ID, token statistics, fingerprinting. All pure projections
 (zero-shuffle at any scale); the heuristic scorers are exact-oracle, with a
 pandas-UDF hook where a real model (fastText, a BPE tokenizer) would slot
 in on a cluster with the dependency installed.
+
+The LM quality scores (unigram and bigram) also serve from persisted
+fits: a build-once unigram vocabulary, and a segmented count LM whose
+``seg_*`` segments are members of :mod:`~plumberapp_spark.llm.store` and
+serve both the bigram and the unigram score.
 """
 
 from __future__ import annotations
@@ -11,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from plumberapp_spark.functions.text import tokenize, quality_features, doc_fingerprint
+from plumberapp_spark.llm import store
 
 
 def widen(df: DataFrame, min_partition_bytes: int = 32 << 20) -> DataFrame:
@@ -901,78 +907,45 @@ def _score_with_bigram_counts(
 # rollup. No norms-refresh analog is needed (nothing in the LM is
 # non-additive), which makes the bigram LM the cheapest member of the
 # maintenance tier.
+#
+# Segments are ``seg_*`` members of ``store`` (complete once ``scalars``
+# lands); deletes are NEGATIVE count segments, not tombstones. The same
+# segments serve the unigram LM: ``uni`` + ``scalars`` are exactly the
+# unigram fit's counts and token total (unigram_logprob_score_segmented).
 
 BIGRAM_LM_FORMAT = 1
 
-_BGSEG_RE = None  # set lazily to avoid re-import at module load
 
-
-def _bigram_segments(path: str) -> list[str]:
-    """Complete bigram-LM segments (scalars marker last — half-written
-    appends invisible, the segments.py contract)."""
-    import os
-    import re as _re
-
-    try:
-        names = sorted(
-            n for n in os.listdir(path) if _re.match(r"^seg_[0-9A-Za-z]+$", n)
-        )
-    except OSError:
-        return []
-    return [
-        os.path.join(path, n)
-        for n in names
-        if os.path.exists(os.path.join(path, n, "scalars", "_SUCCESS"))
-    ]
-
-
-def _resolve_segment(
-    path: str, segs: list[str], name: str | None, skip_if_complete: bool
-) -> tuple[str, bool]:
-    """The epoch-keyed segment-naming contract shared by every additive
-    LM write (bigram append/delete, unigram append/delete): with a
-    ``name``, the directory is pinned (a replay lands on the SAME path)
-    and ``skip_if_complete`` makes a completed replay a no-op; without
-    one, the next zero-padded number. Returns (segment dir,
-    already_complete)."""
-    import os
-    import re as _re
-
-    if name is not None:
-        if not _re.match(r"^seg_[0-9A-Za-z]+$", name):
-            raise ValueError(f"segment name {name!r} must match seg_[0-9A-Za-z]+")
-        seg = os.path.join(path, name)
-        done = skip_if_complete and os.path.exists(
-            os.path.join(seg, "scalars", "_SUCCESS")
-        )
-        return seg, done
-    nums = [
-        int(m.group(1))
-        for s in segs
-        if (m := _re.match(r"^seg_(\d+)$", os.path.basename(s)))
-    ]
-    return os.path.join(path, f"seg_{(max(nums, default=-1)) + 1:05d}"), False
-
-
-def _write_bigram_segment(
-    docs: DataFrame, seg_path: str, text_col: str, id_col: str
+def _write_lm_segment(
+    docs: DataFrame, seg_path: str, text_col: str, id_col: str, sign: int = 1
 ) -> None:
-    """One segment from one tokenize pass: bigram counts, unigram
-    counts, then the token-total scalar LAST (the completion marker).
-    Raw counts only — no corpus-global enters a segment."""
-    bg = _bigram_pairs(docs, text_col, id_col)
-    bg.groupBy("w1", "w2").agg(F.count("*").alias("_c12")).write.mode(
-        "overwrite"
-    ).parquet(f"{seg_path}/bgc")
-    tok = docs.select(
-        F.explode(tokenize(F.coalesce(F.col(text_col), F.lit("")))).alias("tk")
+    """One LM segment: bigram counts, unigram counts, then the token
+    total LAST (the completion marker), summed from the written unigram
+    counts instead of a third pass over ``docs``. ``sign=-1`` writes a
+    deletion segment (the counts a build would add, negated). Raw
+    counts only — no corpus-global enters a segment."""
+    cnt = F.count("*") if sign > 0 else -F.count("*")
+    _bigram_pairs(docs, text_col, id_col).groupBy("w1", "w2").agg(
+        cnt.alias("_c12")
+    ).write.mode("overwrite").parquet(f"{seg_path}/bgc")
+    uni = (
+        docs.select(
+            F.explode(tokenize(F.coalesce(F.col(text_col), F.lit("")))).alias("tk")
+        )
+        .groupBy("tk")
+        .agg(cnt.alias("_c"))
     )
-    tok.groupBy("tk").agg(F.count("*").alias("_c")).write.mode(
-        "overwrite"
-    ).parquet(f"{seg_path}/uni")
-    tok.groupBy().agg(F.count("*").alias("_n")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{seg_path}/scalars")
+    uni.write.mode("overwrite").parquet(f"{seg_path}/uni")
+    # one partition, so the one-row total needs no exchange
+    (
+        docs.sparkSession.read.schema(uni.schema)
+        .parquet(f"{seg_path}/uni")
+        .coalesce(1)
+        .groupBy()
+        .agg(F.coalesce(F.sum("_c"), F.lit(0)).alias("_n"))
+        .write.mode("overwrite")
+        .parquet(f"{seg_path}/scalars")
+    )
 
 
 def build_bigram_lm(
@@ -983,7 +956,7 @@ def build_bigram_lm(
     import os
 
     seg = os.path.join(path, "seg_00000")
-    _write_bigram_segment(docs, seg, text_col, id_col)
+    _write_lm_segment(docs, seg, text_col, id_col)
     return seg
 
 
@@ -998,12 +971,12 @@ def append_bigram_segment(
     """Absorb new documents into the LM by tokenizing ONLY the delta —
     counts are additive, so old segments are never read or rewritten.
     ``name``/``skip_if_complete`` carry the epoch-keyed idempotency
-    contract (segments.append_segment), so a streaming foreachBatch
-    sink can feed this directly."""
-    seg, done = _resolve_segment(path, _bigram_segments(path), name, skip_if_complete)
-    if done:
-        return seg
-    _write_bigram_segment(new_docs, seg, text_col, id_col)
+    contract (``store.member_dir``), so a streaming foreachBatch sink
+    can feed this directly."""
+    segs = store.members(path, "seg", "scalars")
+    seg, done = store.member_dir(path, "seg", "scalars", segs, name, skip_if_complete)
+    if not done:
+        _write_lm_segment(new_docs, seg, text_col, id_col)
     return seg
 
 
@@ -1030,25 +1003,12 @@ def delete_bigram_docs(
     guard, same as appends). Takedown pipelines have the documents in
     hand by definition; callers that only have ids join them against
     the corpus first."""
-    segs = _bigram_segments(path)
+    segs = store.members(path, "seg", "scalars")
     if not segs:
         raise ValueError(f"no segments under {path!r} — nothing to delete from")
-    seg, done = _resolve_segment(path, segs, name, skip_if_complete)
-    if done:
-        return seg
-    bg = _bigram_pairs(deleted_docs, text_col, id_col)
-    bg.groupBy("w1", "w2").agg((-F.count("*")).alias("_c12")).write.mode(
-        "overwrite"
-    ).parquet(f"{seg}/bgc")
-    tok = deleted_docs.select(
-        F.explode(tokenize(F.coalesce(F.col(text_col), F.lit("")))).alias("tk")
-    )
-    tok.groupBy("tk").agg((-F.count("*")).alias("_c")).write.mode(
-        "overwrite"
-    ).parquet(f"{seg}/uni")
-    tok.groupBy().agg((-F.count("*")).alias("_n")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{seg}/scalars")
+    seg, done = store.member_dir(path, "seg", "scalars", segs, name, skip_if_complete)
+    if not done:
+        _write_lm_segment(deleted_docs, seg, text_col, id_col, sign=-1)
     return seg
 
 
@@ -1058,7 +1018,7 @@ def compact_bigram_lm(spark, path: str, out_path: str) -> str:
     are the same integers)."""
     import os
 
-    segs = _bigram_segments(path)
+    segs = store.members(path, "seg", "scalars")
     if not segs:
         raise ValueError(f"no segments under {path!r} — nothing to compact")
     seg = os.path.join(out_path, "seg_00000")
@@ -1186,7 +1146,7 @@ def bigram_logprob_score_segmented(
     the mean — the free-text-OOV contract; a batch drawn from the
     indexed corpus matches everything, which is how the registered
     query hash-anchors to q110's oracle)."""
-    segs = _bigram_segments(path)
+    segs = store.members(path, "seg", "scalars")
     if not segs:
         raise ValueError(f"no segments under {path!r} — build or append first")
     bg = _bigram_pairs(df, text_col, id_col)
@@ -1231,7 +1191,7 @@ def ensure_deleted_bigram_lm(
         table,
         build,
         fields=(BIGRAM_LM_FORMAT,),
-        complete=lambda: len(_bigram_segments(path)) >= 3,
+        complete=lambda: len(store.members(path, "seg", "scalars")) >= 3,
     )
 
 
@@ -1267,154 +1227,8 @@ def ensure_bigram_lm(
         table,
         build,
         fields=(BIGRAM_LM_FORMAT,),
-        complete=lambda: len(_bigram_segments(path)) >= 2,
+        complete=lambda: len(store.members(path, "seg", "scalars")) >= 2,
     )
-
-
-# -- segmented unigram LM (round 11: maintenance parity, VERDICT r10 #6) ---
-#
-# The persisted unigram LM (q96/q97) was rebuild-only while the bigram
-# LM got segments + deletes in round 10 — yet the unigram counts are
-# JUST AS additive (c(tk) and T sum over document subsets). The one
-# subtlety the bigram tier did not have: the SERVED model is the
-# top-``vocab_size`` TRUNCATION of the counts, and a truncation is NOT
-# additive (the top-k of a union is not the union of top-ks) — so
-# segments store FULL per-segment token counts (the Zipf-bounded
-# relation, exactly the bigram tier's ``uni``), and the top-k
-# vocabulary derives AT SERVE TIME from the merged counts with
-# _fit_unigram_lm's own deterministic tie-break (count desc, token
-# asc). That makes serving provably identical to a fresh fit on the
-# union corpus (q122 shares q77/q96's oracle), and deletes — negative
-# count segments, the q119 design — exactly a fresh fit on survivors.
-
-UNIGRAM_LM_FORMAT = 1
-
-
-def _unigram_segments(path: str) -> list[str]:
-    """Complete unigram-LM segments (scalars marker last — half-written
-    appends invisible; same layout contract as _bigram_segments)."""
-    return _bigram_segments(path)
-
-
-def _write_unigram_segment(
-    docs: DataFrame, seg_path: str, text_col: str, sign: int = 1
-) -> None:
-    """One segment from one tokenize pass: RAW token counts, then the
-    token-total scalar LAST (the completion marker). ``sign=-1`` writes
-    a deletion segment (the counts a build would add, negated)."""
-    tok = docs.select(
-        F.explode(tokenize(F.coalesce(F.col(text_col), F.lit("")))).alias("tk")
-    )
-    tok.groupBy("tk").agg((sign * F.count("*")).alias("_c")).write.mode(
-        "overwrite"
-    ).parquet(f"{seg_path}/uni")
-    tok.groupBy().agg((sign * F.count("*")).alias("_n")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{seg_path}/scalars")
-
-
-def build_segmented_unigram_lm(
-    docs: DataFrame, path: str, text_col: str = "text"
-) -> str:
-    """Initial segment from the starting corpus; everything after
-    arrives via :func:`append_unigram_segment` /
-    :func:`delete_unigram_docs`."""
-    import os
-
-    seg = os.path.join(path, "seg_00000")
-    _write_unigram_segment(docs, seg, text_col)
-    return seg
-
-
-def append_unigram_segment(
-    new_docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    name: str | None = None,
-    skip_if_complete: bool = False,
-) -> str:
-    """Absorb new documents into the LM by tokenizing ONLY the delta —
-    token counts are additive, so old segments are never read or
-    rewritten. ``name``/``skip_if_complete`` carry the epoch-keyed
-    idempotency contract, so a streaming foreachBatch sink can feed
-    this directly (the q106/q112 pattern)."""
-    seg, done = _resolve_segment(
-        path, _unigram_segments(path), name, skip_if_complete
-    )
-    if done:
-        return seg
-    _write_unigram_segment(new_docs, seg, text_col)
-    return seg
-
-
-def delete_unigram_docs(
-    deleted_docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    name: str | None = None,
-    skip_if_complete: bool = False,
-) -> str:
-    """Remove documents from the LM by appending a NEGATIVE segment
-    (the q119 design). Same caller contract as
-    :func:`delete_bigram_docs`: the LM stores no doc-keyed relation, so
-    the delete is charged with the documents' TEXT, and only rows that
-    were actually ingested — the epoch-keyed ``name``/
-    ``skip_if_complete`` pair is the replay guard, and the merge's
-    non-negative invariant (:func:`_nonneg`) fails loudly on an
-    un-keyed double delete instead of serving silently wrong scores."""
-    segs = _unigram_segments(path)
-    if not segs:
-        raise ValueError(f"no segments under {path!r} — nothing to delete from")
-    seg, done = _resolve_segment(path, segs, name, skip_if_complete)
-    if done:
-        return seg
-    _write_unigram_segment(deleted_docs, seg, text_col, sign=-1)
-    return seg
-
-
-def compact_unigram_lm(spark, path: str, out_path: str) -> str:
-    """Merge every segment into one — a numeric rollup (counts sum,
-    zero-count tokens drop physically), no re-tokenization. Serving
-    pre/post is bit-identical (the counts are the same integers)."""
-    import os
-
-    segs = _unigram_segments(path)
-    if not segs:
-        raise ValueError(f"no segments under {path!r} — nothing to compact")
-    seg = os.path.join(out_path, "seg_00000")
-    uni, sc = _merged_unigram_counts(spark, segs)
-    uni.write.mode("overwrite").parquet(f"{seg}/uni")
-    sc.coalesce(1).write.mode("overwrite").parquet(f"{seg}/scalars")
-    return seg
-
-
-def _merged_unigram_counts(spark, segs: list[str]):
-    """(uni, scalars) summed across segments — the additive merge with
-    the shared non-negative invariant and positivity filter (a count
-    summed to zero means the token no longer exists in the corpus)."""
-
-    from plumberapp_spark.session import read_parquet_cached
-
-    def _union(rel):
-        out = None
-        for s in segs:
-            df = read_parquet_cached(spark, f"{s}/{rel}")
-            out = df if out is None else out.unionByName(df)
-        return out
-
-    if len(segs) == 1:
-        return (
-            read_parquet_cached(spark, f"{segs[0]}/uni"),
-            read_parquet_cached(spark, f"{segs[0]}/scalars"),
-        )
-    uni = (
-        _union("uni")
-        .groupBy("tk")
-        .agg(_nonneg(F.sum("_c")).alias("_c"))
-        .filter(F.col("_c") > 0)
-    )
-    sc = _merged_scalar_n(spark, segs)
-    return uni, sc
 
 
 def unigram_logprob_score_segmented(
@@ -1425,17 +1239,24 @@ def unigram_logprob_score_segmented(
     id_col: str = "doc_id",
     vocab_size: int = 1000,
 ) -> DataFrame:
-    """q77's scoring served from the segmented LM: ONE Zipf-bounded
-    count merge + a ``vocab_size``-row top-k gather (count desc, token
-    asc — _fit_unigram_lm's own deterministic tie-break, so the served
-    vocabulary is EXACTLY the one a fresh fit on the union corpus
-    selects), then the shared broadcast Arrow scoring pass. The
-    corpus-wide tokenize never reruns — appends and deletes already
-    paid their delta-sized passes."""
-    segs = _unigram_segments(path)
+    """q77's scoring served from the segmented LM's ``uni``/``scalars``
+    (its ``bgc`` stays unread). The served model is the
+    top-``vocab_size`` TRUNCATION of the counts, and a truncation is not
+    additive (the top-k of a union is not the union of top-ks), so the
+    vocabulary derives AT SERVE TIME from the merged FULL counts: ONE
+    Zipf-bounded count merge + a ``vocab_size``-row gather with
+    _fit_unigram_lm's own deterministic tie-break (count desc, token
+    asc). That makes serving exactly a fresh fit on the union corpus
+    (q122 shares q77's oracle), and after deletes — negative count
+    segments — exactly a fresh fit on the survivors (q123), with a
+    deleted Zipf-head token falling out of the vocabulary itself. Then
+    the shared broadcast Arrow scoring pass; the corpus-wide tokenize
+    never reruns — appends and deletes already paid their delta-sized
+    passes."""
+    segs = store.members(path, "seg", "scalars")
     if not segs:
         raise ValueError(f"no segments under {path!r} — build or append first")
-    uni, sc = _merged_unigram_counts(spark, segs)
+    _, uni, sc = _merged_bigram_counts(spark, segs)
     rows = (
         uni.orderBy(F.col("_c").desc(), F.col("tk")).limit(vocab_size).collect()
     )
@@ -1459,71 +1280,3 @@ def perplexity_buckets_segmented(
         spark, path, df, text_col, id_col, vocab_size
     )
     return bucket_lm_scores(scores, id_col, n_buckets)
-
-
-def ensure_segmented_unigram_lm(
-    spark,
-    sf_dir: str,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """Build-once fixture contract (the ensure_bigram_lm shape): built
-    80/20 (seg_00000 from ``doc_id % 5 != 0``, the remaining fifth
-    APPENDED) so serving exercises a real multi-segment merge while the
-    union is exactly the full table — q77/q96's oracle applies
-    verbatim."""
-    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
-
-    path = fixture_path(spark, sf_dir, "uglm", table)
-
-    def build():
-        docs = load_table(spark, sf_dir, table)
-        build_segmented_unigram_lm(
-            docs.filter(F.col(id_col) % 5 != 0), path, text_col
-        )
-        append_unigram_segment(
-            docs.filter(F.col(id_col) % 5 == 0), path, text_col
-        )
-
-    return ensure_fixture(
-        path,
-        sf_dir,
-        table,
-        build,
-        fields=(UNIGRAM_LM_FORMAT,),
-        complete=lambda: len(_unigram_segments(path)) >= 2,
-    )
-
-
-def ensure_deleted_unigram_lm(
-    spark,
-    sf_dir: str,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """Fixture for the unigram deletion query: the 80/20 build+append
-    followed by a takedown of every ``doc_id % 7 == 3`` as one NEGATIVE
-    segment — the deleted set cuts across both positive segments, so
-    the merge exercises real cancellation."""
-    from plumberapp_spark.session import ensure_fixture, fixture_path, load_table
-
-    path = fixture_path(spark, sf_dir, "uglmdel", table)
-
-    def build():
-        docs = load_table(spark, sf_dir, table)
-        build_segmented_unigram_lm(
-            docs.filter(F.col(id_col) % 5 != 0), path, text_col
-        )
-        append_unigram_segment(docs.filter(F.col(id_col) % 5 == 0), path, text_col)
-        delete_unigram_docs(docs.filter(F.col(id_col) % 7 == 3), path, text_col)
-
-    return ensure_fixture(
-        path,
-        sf_dir,
-        table,
-        build,
-        fields=(UNIGRAM_LM_FORMAT,),
-        complete=lambda: len(_unigram_segments(path)) >= 3,
-    )

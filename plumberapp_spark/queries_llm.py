@@ -3195,21 +3195,22 @@ def q121_ivf_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_REG["q77_unigram_logprob"].oracle,
 )
 def q122_unigram_lm_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEGMENTED unigram LM (round 11, VERDICT r10 #6 — maintenance
-    parity with the bigram tier): token counts are additive, so the LM
-    lives as immutable count segments; appends tokenize only the delta.
-    The one wrinkle the bigram tier lacked: the served model is a
-    top-vocab_size TRUNCATION, which is not additive — so segments
-    store FULL counts and the vocabulary derives at serve time from the
-    merged counts (one Zipf-bounded rollup + a 1000-row gather with the
-    fit's own count-desc/token-asc tie-break). Serving is bit-identical
-    to q77's fresh fit on the union corpus."""
+    """SEGMENTED unigram LM: token counts are additive, so the unigram
+    model serves from the segmented LM q118 serves — the 80/20
+    ``ensure_bigram_lm`` fixture, whose segments already hold the FULL
+    per-segment token counts (``uni``) and token total (``scalars``);
+    appends tokenize only the delta. The served model is a
+    top-vocab_size TRUNCATION, which is not additive — so the
+    vocabulary derives at serve time from the merged counts (one
+    Zipf-bounded rollup + a 1000-row gather with the fit's own
+    count-desc/token-asc tie-break). Serving is bit-identical to q77's
+    fresh fit on the union corpus."""
     from plumberapp_spark.llm.textqa import (
-        ensure_segmented_unigram_lm,
+        ensure_bigram_lm,
         unigram_logprob_score_segmented,
     )
 
-    path = ensure_segmented_unigram_lm(spark, sf_dir, "documents")
+    path = ensure_bigram_lm(spark, sf_dir, "documents")
     return unigram_logprob_score_segmented(
         spark, path, load_table(spark, sf_dir, "documents")
     )
@@ -3229,20 +3230,20 @@ _UNIGRAM_DELETED_ORACLE = _REG["q77_unigram_logprob"].oracle.replace(
 
 @register("q123_unigram_lm_after_delete", oracle=_UNIGRAM_DELETED_ORACLE)
 def q123_unigram_lm_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELETION for the unigram LM (round 11, q119's negative-segment
-    design): a takedown appends negated counts; the additive merge
-    cancels them exactly (zero-count tokens vanish via the positivity
-    filter, negative merges fail loudly), and the serve-time top-k
-    re-derives the vocabulary over the SURVIVORS — a deleted Zipf-head
-    token falls out of the vocabulary itself, which a frozen persisted
-    vocab (q96) could never do. The oracle is q77's fit on
-    corpus-minus-deleted: the hash proves the delete is exact."""
+    """DELETION for the unigram LM, served from q119's deleted LM
+    (``ensure_deleted_bigram_lm``): a takedown appends negated counts;
+    the additive merge cancels them exactly (zero-count tokens vanish
+    via the positivity filter, negative merges fail loudly), and the
+    serve-time top-k re-derives the vocabulary over the SURVIVORS — a
+    deleted Zipf-head token falls out of the vocabulary itself, which a
+    frozen persisted vocab (q96) could never do. The oracle is q77's
+    fit on corpus-minus-deleted: the hash proves the delete is exact."""
     from plumberapp_spark.llm.textqa import (
-        ensure_deleted_unigram_lm,
+        ensure_deleted_bigram_lm,
         unigram_logprob_score_segmented,
     )
 
-    path = ensure_deleted_unigram_lm(spark, sf_dir, "documents")
+    path = ensure_deleted_bigram_lm(spark, sf_dir, "documents")
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 != 3)
     return unigram_logprob_score_segmented(spark, path, docs)
 

@@ -61,7 +61,8 @@ def test_bm25_after_delete_equals_fresh_build(spark, deleted_index, tmp_path):
 
 
 def test_delete_is_idempotent_and_ignores_unknown_ids(spark, deleted_index):
-    from plumberapp_spark.llm.segments import _list_tombstones, delete_docs
+    from plumberapp_spark.llm import store
+    from plumberapp_spark.llm.segments import delete_docs
 
     before = _bm25(spark, deleted_index)
     docs = _docs(spark)
@@ -72,28 +73,27 @@ def test_delete_is_idempotent_and_ignores_unknown_ids(spark, deleted_index):
     t = delete_docs(spark, deleted_index, ids)
     sc = spark.read.parquet(f"{t}/scalars").first()
     assert sc["_nd"] == 0 and sc["_tt"] == 0, "replay must subtract nothing"
-    assert len(_list_tombstones(deleted_index)) == 2
+    assert len(store.tombstones(deleted_index, "scalars")) == 2
     assert _bm25(spark, deleted_index) == before
 
 
 def test_compaction_after_delete_shrinks_postings_and_serves_identically(
     spark, deleted_index, tmp_path
 ):
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
-        _list_tombstones,
         _union_pruned,
         compact_segments,
     )
 
-    segs = _list_segments(deleted_index)
+    segs = store.members(deleted_index, "seg", "scalars")
     n_before = _union_pruned(spark, segs, "postings", []).count()
     before = _bm25(spark, deleted_index)
 
     out = str(tmp_path / "compacted")
     compact_segments(spark, deleted_index, out)
-    assert len(_list_segments(out)) == 1
-    assert not _list_tombstones(out), "compaction must not carry tombstones"
+    assert len(store.members(out, "seg", "scalars")) == 1
+    assert not store.tombstones(out, "scalars"), "compaction must not carry tombstones"
     n_after = spark.read.parquet(f"{out}/seg_00000/postings").count()
     assert n_after < n_before, "physical drop must shrink postings"
     # no tombstoned doc survives physically
@@ -141,10 +141,9 @@ def test_tokenless_doc_delete_decrements_n_exactly(spark, tmp_path):
     """A doc with no tokens has no postings rows — only the doclens
     relation can see it; deleting it must still shrink N (it weighted
     avgdl's denominator)."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
         _global_scalars,
-        _list_segments,
-        _list_tombstones,
         build_segmented_index,
         delete_docs,
     )
@@ -157,7 +156,7 @@ def test_tokenless_doc_delete_decrements_n_exactly(spark, tmp_path):
     build_segmented_index(docs, path)
     delete_docs(spark, path, spark.createDataFrame([(2,)], "doc_id bigint"))
     g = _global_scalars(
-        spark, _list_segments(path), _list_tombstones(path)
+        spark, store.members(path, "seg", "scalars"), store.tombstones(path, "scalars")
     ).first()
     assert g["_nd"] == 2
     assert abs(g["_avgdl"] - 2.5) < 1e-9  # (2 + 3) tokens / 2 docs
@@ -167,9 +166,8 @@ def test_tokenless_doc_delete_decrements_n_exactly(spark, tmp_path):
 
 
 def test_ivf_delete_and_compaction(spark, tmp_path):
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_delta_dirs,
-        _ivf_tomb_dirs,
         _read_ivf_cells,
         append_to_ivf_index,
         build_ivf_index,
@@ -197,7 +195,8 @@ def test_ivf_delete_and_compaction(spark, tmp_path):
     # compaction: one cells relation, no deltas/tombstones, identical serving
     out = str(tmp_path / "compacted")
     compact_ivf_index(spark, path, out)
-    assert not _ivf_delta_dirs(out) and not _ivf_tomb_dirs(out)
+    assert not store.members(out, "delta", "cells")
+    assert not store.tombstones(out, "ids")
     assert _read_ivf_cells(spark, out).count() == n_live
     assert (
         _read_ivf_cells(spark, out).filter(F.col("vec_id") % 7 == 3).count() == 0
@@ -223,8 +222,8 @@ def test_coded_ivf_maybe_compact_bounds_streaming_fanout(spark, tmp_path, codec)
 
 
 def _check_maybe_compact_bounds(spark, tmp_path, codec):
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_delta_dirs,
         append_to_ivf_index,
         build_ivf_index,
         ivf_topk_indexed,
@@ -245,7 +244,8 @@ def _check_maybe_compact_bounds(spark, tmp_path, codec):
             name=f"delta_e{epoch:09d}",
             skip_if_complete=True,
         )
-    assert len(_ivf_delta_dirs(path)) == 20
+    cells = ivf_codec(codec).cells
+    assert len(store.members(path, "delta", cells)) == 20
     q = emb.filter(F.col("vec_id") % 50 == 0).limit(5)
 
     def serve():
@@ -260,7 +260,7 @@ def _check_maybe_compact_bounds(spark, tmp_path, codec):
     assert maybe_compact_ivf(spark, path, max_deltas=32) is None  # under bound
     retired = maybe_compact_ivf(spark, path, max_deltas=8)
     assert retired is not None
-    assert len(_ivf_delta_dirs(path)) == 0, "fan-out must collapse"
+    assert len(store.members(path, "delta", cells)) == 0, "fan-out must collapse"
     assert serve() == before
 
     # custom swap hook: no filesystem mutation by maybe_compact itself
@@ -284,8 +284,8 @@ def _check_maybe_compact_bounds(spark, tmp_path, codec):
 def test_bigram_lm_segments_additive_and_compactable(spark, tmp_path):
     """build(80%) + append(20%) must score exactly like the direct
     corpus fit; epoch replays are no-ops; compaction is bit-identical."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.textqa import (
-        _bigram_segments,
         append_bigram_segment,
         bigram_logprob_score,
         bigram_logprob_score_segmented,
@@ -305,7 +305,7 @@ def test_bigram_lm_segments_additive_and_compactable(spark, tmp_path):
         docs.filter(F.col("doc_id") % 5 == 0), path,
         name="seg_s000000001", skip_if_complete=True,
     )
-    assert len(_bigram_segments(path)) == 2
+    assert len(store.members(path, "seg", "scalars")) == 2
 
     got = sorted(
         tuple(r) for r in bigram_logprob_score_segmented(spark, path, docs).collect()
@@ -315,7 +315,7 @@ def test_bigram_lm_segments_additive_and_compactable(spark, tmp_path):
 
     out = str(tmp_path / "compact")
     compact_bigram_lm(spark, path, out)
-    assert len(_bigram_segments(out)) == 1
+    assert len(store.members(out, "seg", "scalars")) == 1
     after = sorted(
         tuple(r) for r in bigram_logprob_score_segmented(spark, out, docs).collect()
     )
@@ -394,8 +394,8 @@ def test_lexical_maybe_compact_swap_hook(spark, tmp_path):
     """VERDICT r9 #7: on object stores rename is not atomic — a caller
     may supply the swap; maybe_compact then performs no filesystem
     mutation of its own."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         append_segment,
         build_segmented_index,
         maybe_compact,
@@ -417,8 +417,9 @@ def test_lexical_maybe_compact_swap_hook(spark, tmp_path):
     assert maybe_compact(spark, path, max_segments=2, swap=my_swap) == "retired-by-hook"
     assert seen["args"] == (f"{path}.compact", path)
     assert os.path.exists(f"{path}.compact"), "hook swap leaves dirs to the caller"
-    assert len(_list_segments(path)) == 3, "live index untouched by hook swap"
-    assert len(_list_segments(f"{path}.compact")) == 1
+    segs = store.members(path, "seg", "scalars")
+    assert len(segs) == 3, "live index untouched by hook swap"
+    assert len(store.members(f"{path}.compact", "seg", "scalars")) == 1
 
 
 def test_autocompact_preserves_exactly_once_across_replay(spark, tmp_path):
@@ -427,10 +428,9 @@ def test_autocompact_preserves_exactly_once_across_replay(spark, tmp_path):
     remembers what it absorbed. absorbed.json is that ledger — pinned
     here end-to-end: append epochs, compact via the size-bounded
     policy, replay every epoch, and serving must not move."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _absorbed_segments,
         _global_scalars,
-        _list_segments,
         append_segment,
         maybe_compact,
     )
@@ -443,11 +443,12 @@ def test_autocompact_preserves_exactly_once_across_replay(spark, tmp_path):
             name=f"seg_s{epoch:09d}", skip_if_complete=True,
         )
     before = _bm25(spark, path)
-    n_before = _global_scalars(spark, _list_segments(path), []).first()["_nd"]
+    segs = store.members(path, "seg", "scalars")
+    n_before = _global_scalars(spark, segs, []).first()["_nd"]
 
     assert maybe_compact(spark, path, max_segments=2) is not None
-    assert len(_list_segments(path)) == 1
-    assert _absorbed_segments(path) == {f"seg_s{e:09d}" for e in range(4)}
+    assert len(store.members(path, "seg", "scalars")) == 1
+    assert store.absorbed(path) == {f"seg_s{e:09d}" for e in range(4)}
 
     # at-least-once delivery: every epoch replays after the swap
     for epoch in range(4):
@@ -455,14 +456,14 @@ def test_autocompact_preserves_exactly_once_across_replay(spark, tmp_path):
             docs.filter(F.col("doc_id") % 4 == epoch), path,
             name=f"seg_s{epoch:09d}", skip_if_complete=True,
         )
-    assert len(_list_segments(path)) == 1, "replay of an absorbed epoch re-ingested"
-    segs = _list_segments(path)
+    segs = store.members(path, "seg", "scalars")
+    assert len(segs) == 1, "replay of an absorbed epoch re-ingested"
     assert _global_scalars(spark, segs, []).first()["_nd"] == n_before
     assert _bm25(spark, path) == before
 
     # a genuinely NEW epoch still lands
     append_segment(docs.limit(0), path, name="seg_s000000009")
-    assert len(_list_segments(path)) == 2
+    assert len(store.members(path, "seg", "scalars")) == 2
 
 
 def test_ivf_absorbed_ledger_preserves_exactly_once(spark, tmp_path):
@@ -475,8 +476,8 @@ def test_coded_ivf_absorbed_ledger_preserves_exactly_once(spark, tmp_path, codec
 
 
 def _check_absorbed_ledger(spark, tmp_path, codec):
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_absorbed,
         _read_ivf_cells,
         append_to_ivf_index,
         build_ivf_index,
@@ -497,7 +498,7 @@ def _check_absorbed_ledger(spark, tmp_path, codec):
         )
     n = _read_ivf_cells(spark, path).count()
     assert maybe_compact_ivf(spark, path, max_deltas=1) is not None
-    assert _ivf_absorbed(path) == {"delta_e000000001", "delta_e000000002"}
+    assert store.absorbed(path) == {"delta_e000000001", "delta_e000000002"}
     for epoch in (1, 2):  # replay after swap
         append_to_ivf_index(
             emb.filter(F.col("vec_id") % 3 == epoch), path,
@@ -511,8 +512,8 @@ def test_bigram_lm_delete_cancels_exactly(spark, tmp_path):
     survivors against the deleted LM == a fresh fit on the survivors;
     fully-cancelled bigrams/tokens vanish; compaction folds the debt
     physically; an epoch-keyed delete replays as a no-op."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.textqa import (
-        _bigram_segments,
         _merged_bigram_counts,
         append_bigram_segment,
         bigram_logprob_score,
@@ -530,7 +531,8 @@ def test_bigram_lm_delete_cancels_exactly(spark, tmp_path):
     append_bigram_segment(docs.filter(F.col("doc_id") % 5 == 0), path)
     delete_bigram_docs(gone, path, name="seg_d000000001", skip_if_complete=True)
     delete_bigram_docs(gone, path, name="seg_d000000001", skip_if_complete=True)
-    assert len(_bigram_segments(path)) == 3, "delete replay must be a no-op"
+    segs = store.members(path, "seg", "scalars")
+    assert len(segs) == 3, "delete replay must be a no-op"
 
     got = sorted(
         tuple(r) for r in bigram_logprob_score_segmented(spark, path, kept).collect()
@@ -539,7 +541,7 @@ def test_bigram_lm_delete_cancels_exactly(spark, tmp_path):
     assert got == want and got
 
     # no zero/negative residue survives the merge
-    bgc, uni, sc = _merged_bigram_counts(spark, _bigram_segments(path))
+    bgc, uni, sc = _merged_bigram_counts(spark, segs)
     assert bgc.filter(F.col("_c12") <= 0).count() == 0
     assert uni.filter(F.col("_c") <= 0).count() == 0
 

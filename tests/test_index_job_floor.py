@@ -3,7 +3,8 @@
 Each index request pays a fixed cost per Spark job, so these tests pin
 job counts (load-independent, unlike walls) on a tiny index: a segment
 append tokenizes its delta once and runs at most 10 jobs, an IVF append
-is one write job, the action of a tombstoned segmented BM25 serve runs
+is one write job, an LM append reads its delta twice in at most 5 jobs,
+the action of a tombstoned segmented BM25 serve runs
 at most 6 jobs, a newly written relation is read with no
 schema-inference job, and the shared top-k tail crosses one exchange."""
 
@@ -75,6 +76,28 @@ def test_ivf_append_is_one_job(spark, tmp_path):
         lambda: append_to_ivf_index(emb.filter("vec_id >= 100 AND vec_id < 120"), path),
     )
     assert jobs == 1
+
+
+def test_lm_append_job_floor(spark, docs, tmp_path):
+    """An LM append reads its delta twice, once per count relation
+    (``bgc`` and ``uni``), and sums the token total from the written
+    ``uni``: 5 jobs. Before the total was derived from ``uni`` it was a
+    third pass over the delta: 6 jobs and three reads."""
+    from plumberapp_spark.llm.textqa import append_bigram_segment, build_bigram_lm
+
+    path = str(tmp_path / "lm")
+    build_bigram_lm(docs.filter("doc_id < 200"), path)
+    calls = spark.sparkContext.accumulator(0)
+
+    def text(t):
+        calls.add(1)
+        return t
+
+    udf = F.udf(text, "string")
+    delta = docs.filter("doc_id >= 200 AND doc_id < 220").withColumn("text", udf("text"))
+    _, jobs = _jobs(spark, lambda: append_bigram_segment(delta, path))
+    assert calls.value == 40
+    assert jobs <= 5
 
 
 def test_tombstoned_bm25_action_job_floor(spark, docs, lex):

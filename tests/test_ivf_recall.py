@@ -256,8 +256,8 @@ def test_ivf_append_idempotent_and_half_written_invisible(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_delta_dirs,
         _read_ivf_cells,
         append_to_ivf_index,
         build_ivf_index,
@@ -271,11 +271,11 @@ def test_ivf_append_idempotent_and_half_written_invisible(spark, tmp_path):
     n1 = _read_ivf_cells(spark, path).count()
     append_to_ivf_index(d, path, name="delta_e0", skip_if_complete=True)
     assert _read_ivf_cells(spark, path).count() == n1, "replay double-ingested"
-    assert len(_ivf_delta_dirs(path)) == 1
+    assert len(store.members(path, "delta", "cells")) == 1
 
     # a torn append (no _SUCCESS) must be invisible, not an exception
     os.makedirs(os.path.join(path, "delta_dead", "cells"))
-    assert len(_ivf_delta_dirs(path)) == 1
+    assert len(store.members(path, "delta", "cells")) == 1
     assert _read_ivf_cells(spark, path).count() == n1
 
 
@@ -309,8 +309,8 @@ def test_streaming_ivf_ingest_via_foreachbatch(spark, tmp_path):
     serving equals the all-at-once append."""
     import pyspark.sql.functions as F
 
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_delta_dirs,
         append_to_ivf_index,
         build_ivf_index,
         ivf_topk_indexed,
@@ -346,7 +346,7 @@ def test_streaming_ivf_ingest_via_foreachbatch(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
-    assert len(_ivf_delta_dirs(idx)) == 3
+    assert len(store.members(idx, "delta", "cells")) == 3
 
     ref = str(tmp_path / "ref")
     build_ivf_index(base, ref, n_centroids=8)

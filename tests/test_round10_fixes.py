@@ -9,8 +9,8 @@ def test_ivf_append_empty_delta_does_not_poison_index(spark, tmp_path):
     _read_ivf_cells then died on parquet schema inference. The guard
     writes a schema-preserving plain parquet instead, so the index keeps
     serving."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_delta_dirs,
         _read_ivf_cells,
         append_to_ivf_index,
         build_ivf_index,
@@ -23,7 +23,8 @@ def test_ivf_append_empty_delta_does_not_poison_index(spark, tmp_path):
     n0 = _read_ivf_cells(spark, path).count()
 
     append_to_ivf_index(emb.filter(F.lit(False)), path, name="delta_empty")
-    assert len(_ivf_delta_dirs(path)) == 1  # complete (marker landed) ...
+    # complete (marker landed) ...
+    assert len(store.members(path, "delta", "cells")) == 1
     assert _read_ivf_cells(spark, path).count() == n0  # ... but contributes 0
 
     # and a later real append over the empty one still unions cleanly

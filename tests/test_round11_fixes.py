@@ -34,8 +34,8 @@ def test_swap_crash_between_renames_rolls_forward(spark, tmp_path):
     but before rename(.compact, path) used to leave `path` absent — a
     restarted sink would recreate it holding only the replayed epoch.
     With the intent marker, the next index touch completes the swap."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         append_segment,
         build_segmented_index,
         compact_segments,
@@ -56,7 +56,7 @@ def test_swap_crash_between_renames_rolls_forward(spark, tmp_path):
     assert not os.path.exists(path)
 
     # first touch recovers: the compacted index is swapped in
-    segs = _list_segments(path)
+    segs = store.members(path, "seg", "scalars")
     assert len(segs) == 1, "recovery must roll the compacted index forward"
     assert not os.path.exists(f"{path}.swapintent")
     assert _serve(spark, path) == before
@@ -66,10 +66,8 @@ def test_swap_crash_before_first_rename_rolls_back(spark, tmp_path):
     """Intent marker present but the live path intact (crash before the
     first rename, or after full completion): the live index serves;
     recovery just discards the stale marker."""
-    from plumberapp_spark.llm.segments import (
-        _list_segments,
-        build_segmented_index,
-    )
+    from plumberapp_spark.llm import store
+    from plumberapp_spark.llm.segments import build_segmented_index
 
     docs = _docs(spark)
     path = str(tmp_path / "idx")
@@ -77,7 +75,7 @@ def test_swap_crash_before_first_rename_rolls_back(spark, tmp_path):
     before = _serve(spark, path)
     with open(f"{path}.swapintent", "w") as fh:
         fh.write(f"{path}.old.0")
-    assert len(_list_segments(path)) == 1
+    assert len(store.members(path, "seg", "scalars")) == 1
     assert not os.path.exists(f"{path}.swapintent")
     assert _serve(spark, path) == before
 
@@ -85,20 +83,20 @@ def test_swap_crash_before_first_rename_rolls_back(spark, tmp_path):
 def test_swap_crash_with_nothing_left_refuses(spark, tmp_path):
     """Marker present but neither the live path nor .compact survived —
     refuse loudly rather than serve an empty index."""
-    from plumberapp_spark.llm.segments import _list_segments
+    from plumberapp_spark.llm import store
 
     path = str(tmp_path / "idx")
     with open(f"{path}.swapintent", "w") as fh:
         fh.write(f"{path}.old.0")
     with pytest.raises(RuntimeError, match="interrupted compaction swap"):
-        _list_segments(path)
+        store.members(path, "seg", "scalars")
 
 
 def test_maybe_compact_leaves_no_intent_marker(spark, tmp_path):
     """The happy path: maybe_compact's default swap cleans up its own
     marker, and the compacted index serves identically."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         append_segment,
         build_segmented_index,
         maybe_compact,
@@ -113,7 +111,7 @@ def test_maybe_compact_leaves_no_intent_marker(spark, tmp_path):
     retired = maybe_compact(spark, path, max_segments=1)
     assert retired is not None
     assert not os.path.exists(f"{path}.swapintent")
-    assert len(_list_segments(path)) == 1
+    assert len(store.members(path, "seg", "scalars")) == 1
     assert _serve(spark, path) == before
 
 
@@ -249,8 +247,8 @@ def test_unkeyed_double_delete_fails_loudly(spark, tmp_path):
 def test_epoch_keyed_double_delete_stays_idempotent(spark, tmp_path):
     """The documented replay contract: the SAME delete replayed with its
     epoch key is a no-op, and serving equals a fresh fit on survivors."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.textqa import (
-        _bigram_segments,
         bigram_logprob_score,
         bigram_logprob_score_segmented,
         build_bigram_lm,
@@ -263,7 +261,7 @@ def test_epoch_keyed_double_delete_stays_idempotent(spark, tmp_path):
     takedown = docs.filter(F.col("doc_id") % 7 == 3)
     delete_bigram_docs(takedown, path, name="seg_del1", skip_if_complete=True)
     delete_bigram_docs(takedown, path, name="seg_del1", skip_if_complete=True)
-    assert len(_bigram_segments(path)) == 2  # build + ONE delete
+    assert len(store.members(path, "seg", "scalars")) == 2  # build + ONE delete
     survivors = docs.filter(F.col("doc_id") % 7 != 3)
     served = {
         r["doc_id"]: (r["n_bigrams"], r["mean_logprob"])
@@ -327,9 +325,8 @@ def test_rebuild_recovers_drift_recall(spark, tmp_path):
     corpus and the SAME monitor must observe recall recover."""
     import math
 
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_delta_dirs,
-        _ivf_tomb_dirs,
         append_to_ivf_index,
         build_ivf_index,
         codebook_drift_advice,
@@ -361,7 +358,8 @@ def test_rebuild_recovers_drift_recall(spark, tmp_path):
 
     retired = rebuild_ivf_index(spark, path)
     assert retired is not None
-    assert _ivf_delta_dirs(path) == [] and _ivf_tomb_dirs(path) == []
+    assert store.members(path, "delta", "cells") == []
+    assert store.tombstones(path, "ids") == []
     after = codebook_drift_advice(
         spark, path, queries, k=5, nprobe=1, min_recall=0.9
     ).first()
@@ -406,8 +404,8 @@ def test_rebuild_equals_build_on_live_corpus(spark, tmp_path):
 def test_rebuild_preserves_exactly_once_replay(spark, tmp_path):
     """Epoch-keyed appends absorbed by a rebuild must stay no-ops when
     replayed after the swap (the absorbed.json ledger contract)."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_delta_dirs,
         _read_ivf_cells,
         append_to_ivf_index,
         build_ivf_index,
@@ -432,7 +430,7 @@ def test_rebuild_preserves_exactly_once_replay(spark, tmp_path):
         name="delta_e000000001",
         skip_if_complete=True,
     )
-    assert _ivf_delta_dirs(path) == []
+    assert store.members(path, "delta", "cells") == []
     assert _read_ivf_cells(spark, path).count() == n
 
 
@@ -553,16 +551,16 @@ def test_unigram_segments_serve_equals_direct_fit(spark, tmp_path):
     bit-identical to the direct fit on the union (same vocabulary
     selection, same totals, same per-doc means)."""
     from plumberapp_spark.llm.textqa import (
-        append_unigram_segment,
-        build_segmented_unigram_lm,
+        append_bigram_segment,
+        build_bigram_lm,
         unigram_logprob_score,
         unigram_logprob_score_segmented,
     )
 
     docs = _docs(spark)
     path = str(tmp_path / "lm")
-    build_segmented_unigram_lm(docs.filter(F.col("doc_id") % 5 > 1), path)
-    append_unigram_segment(docs.filter(F.col("doc_id") % 5 <= 1), path)
+    build_bigram_lm(docs.filter(F.col("doc_id") % 5 > 1), path)
+    append_bigram_segment(docs.filter(F.col("doc_id") % 5 <= 1), path)
     got = sorted(
         tuple(r)
         for r in unigram_logprob_score_segmented(spark, path, docs).collect()
@@ -577,9 +575,9 @@ def test_unigram_delete_reshapes_vocabulary(spark, tmp_path):
     vocabulary itself — serving equals a fresh fit on survivors, and
     the compacted LM physically forgets the deleted counts."""
     from plumberapp_spark.llm.textqa import (
-        build_segmented_unigram_lm,
-        compact_unigram_lm,
-        delete_unigram_docs,
+        build_bigram_lm,
+        compact_bigram_lm,
+        delete_bigram_docs,
         unigram_logprob_score,
         unigram_logprob_score_segmented,
     )
@@ -587,8 +585,8 @@ def test_unigram_delete_reshapes_vocabulary(spark, tmp_path):
     rows = [(1, "zebra zebra zebra"), (2, "apple pie"), (3, "apple tart")]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     path = str(tmp_path / "lm")
-    build_segmented_unigram_lm(docs, path)
-    delete_unigram_docs(docs.filter(F.col("doc_id") == 1), path)
+    build_bigram_lm(docs, path)
+    delete_bigram_docs(docs.filter(F.col("doc_id") == 1), path)
 
     survivors = docs.filter(F.col("doc_id") != 1)
     got = sorted(
@@ -604,7 +602,7 @@ def test_unigram_delete_reshapes_vocabulary(spark, tmp_path):
     assert got == want
 
     out = str(tmp_path / "compacted")
-    compact_unigram_lm(spark, path, out)
+    compact_bigram_lm(spark, path, out)
     uni = {r["tk"]: r["_c"] for r in spark.read.parquet(f"{out}/seg_00000/uni").collect()}
     assert "zebra" not in uni, "compaction must physically drop zeroed tokens"
     assert uni == {"apple": 2, "pie": 1, "tart": 1}
@@ -621,18 +619,18 @@ def test_unigram_unkeyed_double_delete_fails_loudly(spark, tmp_path):
     """The shared non-negative invariant applies to the unigram merge
     too: an un-keyed replayed takedown raises the pinned message."""
     from plumberapp_spark.llm.textqa import (
-        build_segmented_unigram_lm,
-        delete_unigram_docs,
+        build_bigram_lm,
+        delete_bigram_docs,
         unigram_logprob_score_segmented,
     )
 
     rows = [(1, "zebra zebra"), (2, "apple pie"), (3, "apple tart")]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     path = str(tmp_path / "lm")
-    build_segmented_unigram_lm(docs, path)
+    build_bigram_lm(docs, path)
     takedown = docs.filter(F.col("doc_id") == 1)  # the only zebra-carrier
-    delete_unigram_docs(takedown, path)
-    delete_unigram_docs(takedown, path)  # un-keyed replay: zebra -> -2
+    delete_bigram_docs(takedown, path)
+    delete_bigram_docs(takedown, path)  # un-keyed replay: zebra -> -2
     with pytest.raises(Exception, match="negative count"):
         unigram_logprob_score_segmented(
             spark, path, docs.filter(F.col("doc_id") != 1)
@@ -642,28 +640,28 @@ def test_unigram_unkeyed_double_delete_fails_loudly(spark, tmp_path):
 def test_unigram_epoch_keyed_replays_are_noops(spark, tmp_path):
     """Epoch-keyed appends AND deletes replay as no-ops (the streaming
     sink contract the bigram tier already carries)."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.textqa import (
-        _unigram_segments,
-        append_unigram_segment,
-        build_segmented_unigram_lm,
-        delete_unigram_docs,
+        append_bigram_segment,
+        build_bigram_lm,
+        delete_bigram_docs,
     )
 
     docs = _docs(spark, 100)
     path = str(tmp_path / "lm")
-    build_segmented_unigram_lm(docs.filter(F.col("doc_id") % 2 == 0), path)
+    build_bigram_lm(docs.filter(F.col("doc_id") % 2 == 0), path)
     for _ in range(2):
-        append_unigram_segment(
+        append_bigram_segment(
             docs.filter(F.col("doc_id") % 2 == 1),
             path,
             name="seg_e1",
             skip_if_complete=True,
         )
     for _ in range(2):
-        delete_unigram_docs(
+        delete_bigram_docs(
             docs.filter(F.col("doc_id") % 7 == 3),
             path,
             name="seg_d1",
             skip_if_complete=True,
         )
-    assert len(_unigram_segments(path)) == 3
+    assert len(store.members(path, "seg", "scalars")) == 3

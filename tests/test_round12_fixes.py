@@ -51,9 +51,8 @@ def test_parquet_dir_rows_counts_and_guards(spark, tmp_path):
 def test_tombstone_local_ids_match_anti_join(spark, tmp_path):
     """The IN-set tombstone fast path must exclude exactly the ids the
     broadcast anti-join excluded."""
-    from plumberapp_spark.llm.segments import _tomb_local_ids
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.similarity import (
-        _ivf_tomb_dirs,
         _read_ivf_cells,
         build_ivf_index,
         delete_from_ivf_index,
@@ -64,7 +63,7 @@ def test_tombstone_local_ids_match_anti_join(spark, tmp_path):
     build_ivf_index(emb, path, n_centroids=4)
     dead = emb.filter(F.col("vec_id") % 5 == 1).select("vec_id")
     delete_from_ivf_index(spark, path, dead)
-    local = _tomb_local_ids(_ivf_tomb_dirs(path))
+    local = store.tomb_local_ids(store.tombstones(path, "ids"))
     assert local is not None
     col_name, vals = local
     assert col_name == "vec_id"

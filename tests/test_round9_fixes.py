@@ -73,7 +73,7 @@ def test_lexical_serving_uses_recorded_bucket_modulus(spark, tmp_path):
     scalars, and serve-time pruning reads it back — so an index built
     under n_buckets=8 serves complete results even though the module
     constant says 64."""
-    from plumberapp_spark.llm import segments
+    from plumberapp_spark.llm import segments, store
     from plumberapp_spark.llm.dedup import tfidf_topk
     from plumberapp_spark.llm.scoring import DEFAULT_BUCKETS
     from plumberapp_spark.session import load_table
@@ -81,7 +81,7 @@ def test_lexical_serving_uses_recorded_bucket_modulus(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents").limit(80)
     path = str(tmp_path / "lex8")
     segments.build_segmented_index(docs, path, n_buckets=8)
-    n_buckets = segments._seg_buckets(spark, segments._list_segments(path)[0])
+    n_buckets = segments._seg_buckets(spark, store.members(path, "seg", "scalars")[0])
     assert n_buckets == 8
     assert DEFAULT_BUCKETS != 8, "test needs a modulus != the constant"
     segments.refresh_tfidf_norms(spark, path)

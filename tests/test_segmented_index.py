@@ -87,8 +87,8 @@ def test_append_matches_direct_operator(spark, tmp_path):
 
 
 def test_compaction_is_lossless(spark, tmp_path):
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         append_segment,
         bm25_topk_segmented,
         build_segmented_index,
@@ -100,13 +100,13 @@ def test_compaction_is_lossless(spark, tmp_path):
     build_segmented_index(docs.filter(F.col("doc_id") % 3 == 0), seg_path)
     append_segment(docs.filter(F.col("doc_id") % 3 == 1), seg_path)
     append_segment(docs.filter(F.col("doc_id") % 3 == 2), seg_path)
-    assert len(_list_segments(seg_path)) == 3
+    assert len(store.members(seg_path, "seg", "scalars")) == 3
 
     out_path = str(tmp_path / "compacted")
     compact_segments(spark, seg_path, out_path)
-    assert len(_list_segments(out_path)) == 1
+    assert len(store.members(out_path, "seg", "scalars")) == 1
     # source untouched — compaction runs beside serving
-    assert len(_list_segments(seg_path)) == 3
+    assert len(store.members(seg_path, "seg", "scalars")) == 3
 
     q = _queries(spark)
     assert _rows(bm25_topk_segmented(spark, out_path, q, k=10)) == _rows(
@@ -116,12 +116,15 @@ def test_compaction_is_lossless(spark, tmp_path):
 
 def test_half_written_segment_is_invisible(spark, tmp_path):
     """A segment that died before its postings landed (no _SUCCESS)
-    must not serve — and must not AnalysisException either."""
+    must not serve — and must not AnalysisException either. The same
+    holds for an LM segment whose counts landed but whose scalars
+    marker did not."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         bm25_topk_segmented,
         build_segmented_index,
     )
+    from plumberapp_spark.llm.textqa import bigram_logprob_score_segmented, build_bigram_lm
 
     docs = _docs(spark)
     seg_path = str(tmp_path / "inc")
@@ -130,17 +133,30 @@ def test_half_written_segment_is_invisible(spark, tmp_path):
 
     dead = os.path.join(seg_path, "seg_00001")
     os.makedirs(os.path.join(dead, "postings"))
-    assert _list_segments(seg_path) == [os.path.join(seg_path, "seg_00000")]
+    listed = store.members(seg_path, "seg", "scalars")
+    assert listed == [os.path.join(seg_path, "seg_00000")]
     after = _rows(bm25_topk_segmented(spark, seg_path, _queries(spark), k=10))
     assert after == before
+
+    lm = str(tmp_path / "lm")
+    build_bigram_lm(docs.filter(F.col("doc_id") % 2 == 0), lm)
+    lm_before = _rows(bigram_logprob_score_segmented(spark, lm, docs))
+    # a torn LM append: counts written, the scalars marker never landed
+    torn = os.path.join(lm, "seg_00001")
+    build_bigram_lm(docs.filter(F.col("doc_id") % 2 == 1), str(tmp_path / "other"))
+    for rel in ("bgc", "uni"):
+        shutil.copytree(os.path.join(tmp_path, "other", "seg_00000", rel), f"{torn}/{rel}")
+    os.makedirs(os.path.join(torn, "scalars"))
+    assert store.members(lm, "seg", "scalars") == [os.path.join(lm, "seg_00000")]
+    assert _rows(bigram_logprob_score_segmented(spark, lm, docs)) == lm_before
 
 
 def test_append_reads_modulus_from_index(spark, tmp_path):
     """Segments of one index must share the bucket layout: an index
     built under a non-default modulus appends under THAT modulus (read
     back from seg_00000's scalars), never the current constant."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         _seg_buckets,
         append_segment,
         bm25_topk_segmented,
@@ -151,7 +167,7 @@ def test_append_reads_modulus_from_index(spark, tmp_path):
     seg_path = str(tmp_path / "inc")
     build_segmented_index(docs.filter(F.col("doc_id") % 2 == 0), seg_path, n_buckets=7)
     append_segment(docs.filter(F.col("doc_id") % 2 == 1), seg_path)
-    segs = _list_segments(seg_path)
+    segs = store.members(seg_path, "seg", "scalars")
     assert [_seg_buckets(spark, s) for s in segs] == [7, 7]
 
     full_path = str(tmp_path / "full")
@@ -166,8 +182,8 @@ def test_serving_scan_prunes_to_query_buckets(spark, tmp_path):
     """The pruned read is partition pruning (the IN filter reaches the
     scan's partition filters), not a post-scan row filter — every
     segment's scan carries it."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         _union_pruned,
         append_segment,
         build_segmented_index,
@@ -177,7 +193,7 @@ def test_serving_scan_prunes_to_query_buckets(spark, tmp_path):
     seg_path = str(tmp_path / "inc")
     build_segmented_index(docs.filter(F.col("doc_id") % 2 == 0), seg_path)
     append_segment(docs.filter(F.col("doc_id") % 2 == 1), seg_path)
-    segs = _list_segments(seg_path)
+    segs = store.members(seg_path, "seg", "scalars")
     n_parts = [
         d
         for d in os.listdir(os.path.join(segs[0], "postings"))
@@ -210,6 +226,7 @@ def test_ensure_rebuilds_on_format_bump(spark, tmp_path, monkeypatch):
     serving an incompatible layout (the session.ensure_fixture sidecar
     contract); unchanged source + format is a no-op."""
     import plumberapp_spark.llm.segments as seg_mod
+    from plumberapp_spark.llm import store
 
     sf_dir = str(tmp_path / "sfSeg")
     os.makedirs(sf_dir)
@@ -219,7 +236,7 @@ def test_ensure_rebuilds_on_format_bump(spark, tmp_path, monkeypatch):
     else:
         shutil.copy(src, f"{sf_dir}/documents.parquet")
     path = seg_mod.ensure_segmented_index(spark, sf_dir, "documents")
-    assert len(seg_mod._list_segments(path)) == 2
+    assert len(store.members(path, "seg", "scalars")) == 2
     marker = os.path.join(path, "seg_00000", "postings", "_SUCCESS")
     built1 = os.stat(marker).st_mtime
 
@@ -236,8 +253,8 @@ def test_streaming_ingest_multibatch_equals_batch_build(spark, tmp_path):
     """A multi-micro-batch stream (maxFilesPerTrigger=1 over a 3-file
     source) must produce an index that serves exactly what one batch
     build over the same docs serves — segment-per-epoch is lossless."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         bm25_topk_segmented,
         build_segmented_index,
         streaming_segment_ingest,
@@ -256,7 +273,7 @@ def test_streaming_ingest_multibatch_equals_batch_build(spark, tmp_path):
     idx = str(tmp_path / "streamed")
     q = streaming_segment_ingest(stream, idx, str(tmp_path / "ckpt"))
     q.awaitTermination()
-    assert len(_list_segments(idx)) == 3
+    assert len(store.members(idx, "seg", "scalars")) == 3
 
     full = str(tmp_path / "full")
     build_segmented_index(docs, full)
@@ -270,8 +287,8 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     """A replayed foreachBatch epoch (at-least-once delivery) must not
     double-ingest: the epoch-keyed name + skip_if_complete makes the
     second delivery a no-op, for the FIRST segment too."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         append_segment,
         bm25_topk_segmented,
     )
@@ -286,7 +303,7 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     rest = docs.filter(F.col("doc_id") % 2 == 1)
     append_segment(rest, idx, name="seg_s000000001", skip_if_complete=True)
     append_segment(rest, idx, name="seg_s000000001", skip_if_complete=True)
-    assert len(_list_segments(idx)) == 2
+    assert len(store.members(idx, "seg", "scalars")) == 2
     assert _rows(bm25_topk_segmented(spark, idx, _queries(spark), k=10)) != before
     # and the doubled deliveries changed nothing vs a clean two-segment build
     clean = str(tmp_path / "clean")
@@ -328,7 +345,8 @@ def test_segment_scalars_exact_with_repeated_doc_id(spark, tmp_path):
     """A delta that repeats a doc id still gets exact scalars: _nd counts
     every delta row and _tt every token, whichever copy's length the
     doclens row keeps. Built twice, the segment gives the same values."""
-    from plumberapp_spark.llm.segments import _list_segments, append_segment
+    from plumberapp_spark.llm import store
+    from plumberapp_spark.llm.segments import append_segment
 
     idx = str(tmp_path / "idx")
     delta = spark.createDataFrame(
@@ -338,7 +356,8 @@ def test_segment_scalars_exact_with_repeated_doc_id(spark, tmp_path):
     got = []
     for _ in range(2):
         append_segment(delta, idx)
-        sc = spark.read.parquet(f"{_list_segments(idx)[-1]}/scalars").first()
+        seg = store.members(idx, "seg", "scalars")[-1]
+        sc = spark.read.parquet(f"{seg}/scalars").first()
         got.append((sc["_nd"], sc["_tt"]))
     assert got == [(3, 6), (3, 6)]
 
@@ -347,8 +366,8 @@ def test_maybe_compact_swaps_when_over_budget(spark, tmp_path):
     """Above max_segments the policy compacts into a sibling and swaps
     it in atomically; serving results are unchanged and the retired
     copy is returned for deferred removal."""
+    from plumberapp_spark.llm import store
     from plumberapp_spark.llm.segments import (
-        _list_segments,
         append_segment,
         bm25_topk_segmented,
         build_segmented_index,
@@ -364,8 +383,9 @@ def test_maybe_compact_swaps_when_over_budget(spark, tmp_path):
 
     assert maybe_compact(spark, idx, max_segments=8) is None, "compacted early"
     retired = maybe_compact(spark, idx, max_segments=3)
-    assert retired is not None and len(_list_segments(retired)) == 4
-    assert len(_list_segments(idx)) == 1
+    assert retired is not None
+    assert len(store.members(retired, "seg", "scalars")) == 4
+    assert len(store.members(idx, "seg", "scalars")) == 1
     assert _rows(bm25_topk_segmented(spark, idx, _queries(spark), k=10)) == before
 
 
