@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from plumberapp_spark.functions.hashing import MERSENNE61, md5_long, minhash_perm_params
 from plumberapp_spark.functions.text import tokenize, word_ngrams
-from plumberapp_spark.llm.scoring import bm25_weight, tfidf_weight
+from plumberapp_spark.llm.scoring import _two_stage_topk, bm25_weight, tfidf_weight
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -730,11 +730,11 @@ def tfidf_topk(
     weight) — queries × vocabulary, broadcast by the same small-side
     contract as ANN query matrices — so each corpus token row meets its
     matching query terms map-side, and the only corpus-sized exchange is
-    the (query_id, doc) partial-sum aggregate whose width is bounded by
-    |queries| · k after the two-stage top-k: a per-partition rank prunes
-    to ≤ k rows per (query, partition) BEFORE the global rank, so no
-    single task ever sorts the whole corpus (the naive
-    ``Window.partitionBy(query_id)`` is one task per query).
+    the (query_id, doc) partial-sum aggregate. The ranking is the
+    engine's one top-k tail, :func:`~plumberapp_spark.llm.scoring._two_stage_topk`:
+    a Partial ``WindowGroupLimit`` caps each partition at k rows per
+    query before its single exchange on ``query_id``, so no task ever
+    ranks the whole corpus.
 
     Cosine is rounded to 6 decimals BEFORE ranking with ties broken by
     neighbor id — deterministic across engines and summation orders
@@ -772,22 +772,7 @@ def tfidf_topk(
             F.round(F.col("_dot") / (F.col("_nrm") * F.col("_qn")), 6).alias("cos_sim"),
         )
     )
-    # two-stage top-k: local (query, partition) rank caps the rows the
-    # global rank ever sees at k · partitions per query
-    w_local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
-    )
-    pruned = scored.withColumn("_lr", F.row_number().over(w_local)).filter(
-        F.col("_lr") <= k
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), "neighbor_id"
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w_global))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _two_stage_topk(scored, k, "cos_sim")
 
 
 def tfidf_cosine_pairs(
@@ -1414,8 +1399,8 @@ def bm25_topk(
     groupBy-count joined back on the token (skew-safe vs the window
     form; :func:`_doc_frequencies`); the query side reduces to
     (query, DISTINCT term) and broadcasts under the ANN small-side
-    contract; the two-stage partial top-k caps what the global rank sees
-    at k rows per (query, partition). Scores are rounded to 6 decimals
+    contract; the ranking is the same one-exchange top-k tail
+    (``scoring._two_stage_topk``). Scores are rounded to 6 decimals
     BEFORE ranking, ties broken by neighbor id — deterministic across
     engines and summation orders. Not lazy: the call materializes the
     persisted tf pass and collects N and Σtf (the corpus scalars) on
@@ -1476,24 +1461,9 @@ def bm25_topk(
         .filter(F.col(id_col) != F.col("query_id"))
         .groupBy("query_id", id_col)
         .agg(F.round(F.sum("_w"), 6).alias("bm25"))
+        .select("query_id", F.col(id_col).alias("neighbor_id"), "bm25")
     )
-    w_local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(
-        F.col("bm25").desc(), id_col
-    )
-    pruned = scored.withColumn("_lr", F.row_number().over(w_local)).filter(
-        F.col("_lr") <= k
-    )
-    w_global = Window.partitionBy("query_id").orderBy(F.col("bm25").desc(), id_col)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w_global))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            "bm25",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _two_stage_topk(scored, k, "bm25")
 
 
 def remove_duplicate_spans(

@@ -13,7 +13,7 @@ plan-bounded, never corpus-sized. Both routes exclude a query's own
 doc (``neighbor_id != query_id``); free-text query ids live in their
 own id space. :func:`query_vectors` builds the dense route's query
 side for query docs drawn from the corpus. The fusion itself is one
-union + one aggregate + the family's shared two-stage top-k. Nothing
+union + one aggregate + the engine's one two-stage top-k. Nothing
 here adds a corpus-sized exchange to what the routes already pay.
 
 RRF score: ``sum over routes of 1 / (k_rrf + rank_route)``, rounded to

@@ -1,5 +1,5 @@
-"""The lexical family's shared scoring pieces: the two weight
-expressions, the token bucket key and the top-k ranking tail.
+"""Shared ranking pieces: the lexical weight expressions, the token
+bucket key, and the engine's one top-k ranking tail.
 
 Every lexical ranking in the engine builds its weights here, so the
 direct operators (``dedup.tfidf_topk``/``bm25_topk``, which pass
@@ -10,8 +10,10 @@ the columns ``segments._with_globals`` adds) evaluate one formula:
 * BM25 (Robertson/Lucene): ``ln(1 + (N - df + 0.5)/(df + 0.5)) ·
   tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))``.
 
-Both functions take Columns and return the same expression tree the
-inline copies they replace produced, so no plan changes.
+Every retrieval ranking — lexical (direct and segmented), dense (brute
+force, LSH multi-probe, direct and indexed IVF, the coded shortlist)
+and the RRF hybrid fusion — ends in :func:`_two_stage_topk`, the one
+``row_number`` window over ``query_id`` in the engine.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ def bm25_weight(
 
 
 def _two_stage_topk(scored: DataFrame, k: int, score_col: str) -> DataFrame:
-    """The family's shared ranking tail: top ``k`` rows per ``query_id``
+    """The engine's one ranking tail: top ``k`` rows per ``query_id``
     by ``score_col`` descending, ties to the smaller ``neighbor_id``,
     ranked 1..k. One ``row_number`` window filtered to ``rank <= k``,
     which Spark plans in two stages around ONE exchange on
@@ -55,7 +57,8 @@ def _two_stage_topk(scored: DataFrame, k: int, score_col: str) -> DataFrame:
     partition at k rows per query before the shuffle, and the final
     window ranks those survivors. That inference holds while
     ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)
-    is at least ``k``; every registered query asks for k = 10. Above
+    is at least ``k``; every registered query asks for k = 10 (a coded
+    IVF shortlist for its rerank depth, 20 by default). Above
     the threshold the result is the same but every scored row crosses
     the exchange."""
     w = Window.partitionBy("query_id").orderBy(F.col(score_col).desc(), "neighbor_id")

@@ -1,16 +1,30 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
-Two paths:
+Every dense search here is built from one kernel of private helpers:
+
+* :func:`_query_matrix` — the bounded query collect
+  (``session.collect_bounded``) as ids, matrix and norms;
+* :func:`_cos_matrix` — round-6 cosines, 0 for a zero vector;
+* :func:`_nearest_cell` — the argmax cell assignment;
+* :func:`_probe` — each query's ``nprobe`` cells, inverted to
+  cell → queries;
+* :func:`_partial_topk` — the per-query partial top-k of one candidate
+  block (self excluded, ties to the smaller id);
+* :func:`_probe_search` — the per-cell IVF search, direct or indexed;
+
+and every ranking ends in :func:`~plumberapp_spark.llm.scoring._two_stage_topk`
+(one exchange on ``query_id``). The operators:
 
 * :func:`brute_force_topk` — exact cosine top-k; the oracle-checkable
-  baseline. The query set is broadcast, so the scan is one narrow pass over
-  the corpus and the only exchange is the per-query top-k
-  (TakeOrdered-style partial top-k, NOT a global sort).
+  baseline. The query set is broadcast, so the scan is one narrow pass
+  over the corpus and the only exchange is the per-query top-k.
 * :func:`lsh_bucketed_topk` — random-hyperplane LSH: corpus and queries
-  hash to sign-pattern buckets; candidates = bucket collisions, then exact
-  cosine re-rank. The scale path: the cross product shrinks from |Q|×|C|
-  to collisions only. Hyperplanes are md5-derived (deterministic, no state
-  to ship).
+  hash to sign-pattern buckets; candidates = bucket collisions, then
+  exact cosine re-rank. Hyperplanes are md5-derived (deterministic, no
+  state to ship).
+* :func:`ivf_topk` — IVF over md5-drawn centroids, cells assigned
+  in-batch; :func:`ivf_topk_indexed` runs the same per-cell search over
+  a persisted index.
 
 The persisted IVF index (:func:`build_ivf_index` onward) keeps its
 appends as ``delta_*`` members and its deletes as ``tomb_*`` members of
@@ -20,13 +34,116 @@ absorbed ledger, compaction swap, tombstone splice and streaming sink.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from plumberapp_spark.functions.vectors import cosine
 from plumberapp_spark.llm import store
-from plumberapp_spark.session import write_partitioned
+from plumberapp_spark.llm.scoring import _two_stage_topk
+from plumberapp_spark.session import collect_bounded, write_partitioned
+
+
+def _query_matrix(queries: DataFrame, id_col: str, vec_col: str, what: str):
+    """``(q_ids, q_mat, q_norm)`` of the query side, collected under the
+    bounded-collect contract: queries are the SMALL side, broadcast to
+    every corpus task, and a larger set raises instead of reaching the
+    driver."""
+    import numpy as np
+
+    rows = collect_bounded(queries.select(F.col(id_col), F.col(vec_col)), what)
+    q_ids = np.array([r[0] for r in rows])
+    q_mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    return q_ids, q_mat, np.sqrt((q_mat * q_mat).sum(axis=1))
+
+
+def _cos_matrix(a, a_norm, b, b_norm):
+    """Round-6 cosines between the rows of ``a`` and ``b`` (norms
+    precomputed), 0 where either norm is 0 (the ``cosine()`` rule) —
+    the value every dense choice ranks on: cell assignment, probe order
+    and the candidate cut."""
+    import numpy as np
+
+    denom = a_norm[:, None] * b_norm[None, :]
+    out = np.zeros((a.shape[0], b.shape[0]))
+    np.divide(a @ b.T, denom, out=out, where=denom > 0)
+    return np.round(out, 6)
+
+
+def _nearest_cell(vecs, c_mat, c_norm):
+    """Cell assignment: the argmax of round-6 cosines against the
+    c_id-ascending centroid matrix, so a tie goes to the smaller
+    centroid id (np.argmax returns the first max). The one rule behind
+    the direct search, the index build and append, and semantic dedup —
+    and the one the oracles replay."""
+    import numpy as np
+
+    v_norm = np.sqrt((vecs * vecs).sum(axis=1))
+    return np.argmax(_cos_matrix(vecs, v_norm, c_mat, c_norm), axis=1)
+
+
+def _probe(q_mat, q_norm, c_mat, c_norm, nprobe: int) -> dict:
+    """Each query's ``nprobe`` nearest cells (round-6 cosine, a stable
+    sort: ties to the smaller c_id), inverted to cell -> query
+    positions — the map a per-cell search walks."""
+    import numpy as np
+
+    q_cell_sims = _cos_matrix(q_mat, q_norm, c_mat, c_norm)
+    cell_to_qpos: dict = {}
+    for qi in range(len(q_mat)):
+        for ci in np.argsort(-q_cell_sims[qi], kind="stable")[:nprobe]:
+            cell_to_qpos.setdefault(int(ci), []).append(qi)
+    return cell_to_qpos
+
+
+def _partial_topk(ids, sims, q_ids, cut: int):
+    """The per-query partial top-``cut`` of one candidate block:
+    ``sims[i, j]`` is candidate ``ids[i]``'s similarity to query
+    ``q_ids[j]``. Each query keeps its best ``cut`` candidates, score
+    descending, ties to the smaller id, itself excluded. Self-exclusion
+    needs id kinds that can be equal (numpy's cross-kind != is
+    unreliable): numbers compare with numbers and strings with strings,
+    any other pair of kinds skips the mask. Returns the concatenated
+    (query, neighbor, score, rank) arrays, or None when no query kept a
+    candidate."""
+    import numpy as np
+
+    kinds = {ids.dtype.kind, q_ids.dtype.kind}
+    comparable = len(kinds) == 1 or kinds <= {"i", "u", "f"} or kinds <= {"O", "U", "S"}
+    out_q, out_n, out_s, out_r = [], [], [], []
+    for j, q in enumerate(q_ids):
+        mask = (ids != q) if comparable else np.ones(len(ids), dtype=bool)
+        cand_ids = ids[mask]
+        cand_sims = sims[mask, j]
+        if not len(cand_ids):
+            continue
+        # lexsort keys apply last-key-primary: sims desc, then id asc
+        top = np.lexsort((cand_ids, -cand_sims))[:cut]
+        out_q.append(np.full(len(top), q))
+        out_n.append(cand_ids[top])
+        out_s.append(cand_sims[top])
+        out_r.append(np.arange(1, len(top) + 1, dtype=np.int64))
+    if not out_q:
+        return None
+    return tuple(np.concatenate(a) for a in (out_q, out_n, out_s, out_r))
+
+
+def _topk_frame(parts, score_col: str):
+    """One pandas frame of ``(query_id, neighbor_id, score_col)`` from
+    :func:`_partial_topk` results (None entries skipped), or None."""
+    import numpy as np
+    import pandas as pd
+
+    parts = [p for p in parts if p is not None]
+    if not parts:
+        return None
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate([p[0] for p in parts]),
+            "neighbor_id": np.concatenate([p[1] for p in parts]),
+            score_col: np.concatenate([p[2] for p in parts]),
+        }
+    )
 
 
 def brute_force_topk(
@@ -35,8 +152,6 @@ def brute_force_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_broadcast_queries: int = 100_000,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
@@ -44,8 +159,8 @@ def brute_force_topk(
     makes the ranking deterministic across engines/summation orders;
     cosine is 0 for zero vectors.
 
-    The query matrix is collected (bounded by ``max_broadcast_queries`` —
-    same enforced small-side contract as IVF) and broadcast; each Arrow
+    The query matrix is collected under the bounded-collect contract
+    (:func:`_query_matrix`, same as IVF) and broadcast; each Arrow
     batch of the corpus scores against it with one numpy matmul and
     emits only its local per-query top-k, so the exchange carries ≤ k
     rows per query per partition. One corpus pass, no interpreted
@@ -55,30 +170,17 @@ def brute_force_topk(
     tests/test_ivf_recall.py.
     """
     import numpy as np
-    import pandas as pd
 
     spark = corpus.sparkSession
-    q_rows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(max_broadcast_queries + 1)
-        .collect()
+    bc = spark.sparkContext.broadcast(
+        _query_matrix(queries, id_col, vec_col, "brute_force_topk: query side")
     )
-    if len(q_rows) > max_broadcast_queries:
-        raise ValueError(
-            f"brute_force_topk: query side exceeds the broadcastable "
-            f"contract (> {max_broadcast_queries} rows); swap sides or "
-            f"use the IVF/LSH paths"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
     # output id types derive from EACH side's own schema (ADVICE r3: the
     # query_id column previously borrowed the corpus id's DDL, corrupting
     # results when the two id types differ)
     c_id_ddl = corpus.schema[id_col].dataType.simpleString()
     q_id_ddl = queries.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {q_id_ddl}, neighbor_id {c_id_ddl}, cos_sim double"
+    out_schema = f"query_id {q_id_ddl}, neighbor_id {c_id_ddl}, cos_sim double"
 
     def score(batches):
         q_ids_, q_mat_, q_norm_ = bc.value
@@ -86,49 +188,17 @@ def brute_force_topk(
             if not len(pdf):
                 continue
             vecs = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
             v_norm = np.sqrt((vecs * vecs).sum(axis=1))
-            denom = v_norm[:, None] * q_norm_[None, :]
-            sims = np.zeros((len(ids), len(q_ids_)))
-            np.divide(vecs @ q_mat_.T, denom, out=sims, where=denom > 0)
-            sims = np.round(sims, 6)
-            # self-exclusion only makes sense when the id kinds can even
-            # be equal; numpy's cross-kind != (int array vs str scalar)
-            # is unreliable, so skip the mask when kinds differ
-            comparable = ids.dtype.kind == q_ids_.dtype.kind or {
-                ids.dtype.kind,
-                q_ids_.dtype.kind,
-            } <= {"i", "u", "f"}
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(q_ids_)):
-                mask = (ids != q_ids_[j]) if comparable else np.ones(len(ids), dtype=bool)
-                cand_ids = ids[mask]
-                cand_sims = sims[mask, j]
-                if not len(cand_ids):
-                    continue
-                top = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(top), q_ids_[j]))
-                out_n.append(cand_ids[top])
-                out_s.append(cand_sims[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cos_sim": np.concatenate(out_s),
-                    }
-                )
+            sims = _cos_matrix(vecs, v_norm, q_mat_, q_norm_)
+            out = _topk_frame([_partial_topk(pdf[id_col].to_numpy(), sims, q_ids_, k)], "cos_sim")
+            if out is not None:
+                yield out
 
     par = spark.sparkContext.defaultParallelism
     partial = (
         corpus.select(F.col(id_col), F.col(vec_col)).repartition(par).mapInPandas(score, out_schema)
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _two_stage_topk(partial, k, "cos_sim")
 
 
 def lsh_bucketed_topk(
@@ -139,7 +209,6 @@ def lsh_bucketed_topk(
     num_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     nprobe_flips: int = 0,
 ) -> DataFrame:
     """LSH-bucketed ANN: sign pattern over ``num_planes`` hyperplanes is the
@@ -228,9 +297,7 @@ def lsh_bucketed_topk(
             f"lsh_bucketed_topk: corpus id type {c_id_ddl} != query id "
             f"type {q_id_ddl}; cast one side before calling"
         )
-    out_schema = (
-        f"{query_id_col} {q_id_ddl}, neighbor_id {c_id_ddl}, cos_sim double, rank bigint"
-    )
+    out_schema = f"query_id {q_id_ddl}, neighbor_id {c_id_ddl}, cos_sim double, rank bigint"
 
     c = bucket(corpus).select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), "_bucket", F.lit(0).alias("_side")
@@ -264,60 +331,23 @@ def lsh_bucketed_topk(
         ids = pdf["_id"].to_numpy()
         mat = np.vstack(pdf["_vec"].to_numpy()).astype(np.float64)
         cm, qm = side == 0, side == 1
-        c_ids, q_ids = ids[cm], ids[qm]
-        if len(c_ids) == 0 or len(q_ids) == 0:
-            return pd.DataFrame(
-                {query_id_col: [], "neighbor_id": [], "cos_sim": [], "rank": []}
+        top = None
+        if cm.any() and qm.any():
+            cv, qv = mat[cm], mat[qm]
+            sims = _cos_matrix(
+                cv, np.sqrt((cv * cv).sum(axis=1)), qv, np.sqrt((qv * qv).sum(axis=1))
             )
-        cv, qv = mat[cm], mat[qm]
-        c_norm = np.sqrt((cv * cv).sum(axis=1))
-        q_norm = np.sqrt((qv * qv).sum(axis=1))
-        denom = c_norm[:, None] * q_norm[None, :]
-        sims = np.zeros((len(c_ids), len(q_ids)))
-        np.divide(cv @ qv.T, denom, out=sims, where=denom > 0)
-        sims = np.round(sims, 6)
-        out_q, out_n, out_s, out_r = [], [], [], []
-        for j in range(len(q_ids)):
-            mask = c_ids != q_ids[j]
-            cand_ids = c_ids[mask]
-            cand_sims = sims[mask, j]
-            if not len(cand_ids):
-                continue
-            top = np.lexsort((cand_ids, -cand_sims))[:k]
-            out_q.append(np.full(len(top), q_ids[j]))
-            out_n.append(cand_ids[top])
-            out_s.append(cand_sims[top])
-            out_r.append(np.arange(1, len(top) + 1, dtype=np.int64))
-        if not out_q:
-            return pd.DataFrame(
-                {query_id_col: [], "neighbor_id": [], "cos_sim": [], "rank": []}
-            )
-        return pd.DataFrame(
-            {
-                query_id_col: np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cos_sim": np.concatenate(out_s),
-                "rank": np.concatenate(out_r),
-            }
-        )
+            top = _partial_topk(ids[cm], sims, ids[qm], k)
+        if top is None:
+            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos_sim": [], "rank": []})
+        return pd.DataFrame(dict(zip(("query_id", "neighbor_id", "cos_sim", "rank"), top)))
 
     res = c.unionByName(q).groupBy("_bucket").applyInPandas(bucket_topk, out_schema)
     if nprobe_flips:
         # per-bucket top-k is complete per PROBE; merge the disjoint
         # probe candidate sets into the final per-query top-k (a
         # window over <= (num_planes+1)*k rows per query)
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-        res = (
-            res.drop("rank")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                query_id_col, "neighbor_id", "cos_sim",
-                F.col("rank").cast("bigint").alias("rank"),
-            )
-        )
+        res = _two_stage_topk(res.drop("rank"), k, "cos_sim")
     return res
 
 
@@ -442,7 +472,6 @@ def ann_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exact_max_candidates: int = 10_000_000,
     **ivf_kwargs,
 ) -> DataFrame:
@@ -459,15 +488,54 @@ def ann_topk(
     n_c = corpus.count()
     n_q = queries.count()
     if n_c * n_q <= exact_max_candidates:
-        return brute_force_topk(corpus, queries, k, id_col, vec_col, query_id_col)
-    return ivf_topk(
-        corpus,
-        queries,
-        k,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        **ivf_kwargs,
+        return brute_force_topk(corpus, queries, k, id_col, vec_col)
+    return ivf_topk(corpus, queries, k, id_col=id_col, vec_col=vec_col, **ivf_kwargs)
+
+
+def _probe_search(
+    cells: DataFrame, codec, qstate, q_ids, cell_to_qpos, cut: int, id_col: str,
+    vec_col: str, centroids=None,
+) -> DataFrame:
+    """The per-cell search every IVF serve runs: one ``mapInPandas``
+    pass in which the rows of each probed cell meet only the queries
+    that probe it, and each query keeps its partial top-``cut``
+    (:func:`_partial_topk`), so the exchange after it carries at most
+    ``cut`` rows per query per partition. Returns ``(query_id,
+    neighbor_id, cos_sim)``, or ``approx_sim`` for a codec that
+    reranks. Stored cells carry ``_cell`` and score through ``codec``'s
+    batch scorer; with ``centroids`` (``(c_mat, c_norm)``, the direct
+    :func:`ivf_topk`) the rows are raw vectors, decoded once per batch
+    for both the in-batch cell assignment and the scoring."""
+    import numpy as np
+
+    bc = cells.sparkSession.sparkContext.broadcast((qstate, q_ids, cell_to_qpos, centroids))
+    score_col = "approx_sim" if codec.rerank else "cos_sim"
+
+    def search(batches):
+        qstate_, q_ids_, cell_to_qpos_, centroids_ = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            if centroids_ is None:
+                score = codec.batch_scorer(pdf, vec_col, qstate_)
+                cells = pdf["_cell"].to_numpy()
+            else:
+                vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+                score = _vector_scorer(vecs, *qstate_)
+                cells = _nearest_cell(vecs, *centroids_)
+            ids = pdf[id_col].to_numpy()
+            parts = []
+            for ci, qpos in cell_to_qpos_.items():
+                rows = np.nonzero(cells == ci)[0]
+                if len(rows):
+                    parts.append(_partial_topk(ids[rows], score(rows, qpos), q_ids_[qpos], cut))
+            out = _topk_frame(parts, score_col)
+            if out is not None:
+                yield out
+
+    id_ddl = cells.schema[id_col].dataType.simpleString()
+    return cells.mapInPandas(
+        search, f"query_id {id_ddl}, neighbor_id {id_ddl}, {score_col} double"
     )
 
 
@@ -479,8 +547,6 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_broadcast_queries: int = 100_000,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: partition the corpus into ``n_centroids``
     cells, search only each query's ``nprobe`` nearest cells, exact cosine
@@ -493,114 +559,37 @@ def ivf_topk(
     centroids changes recall, not the plan shape); cell assignment is
     argmax cosine rounded to 6 decimals, ties to the smaller centroid id.
 
-    100 TB posture: the centroid table is k rows — broadcast. Cell
-    assignment is one narrow pass over the corpus. The only data that
-    scales with the corpus stays distributed; queries are assumed small
-    and broadcast.
+    100 TB posture: the centroid table is k rows — broadcast. The only
+    data that scales with the corpus stays distributed; queries are the
+    bounded small side (:func:`_query_matrix`) and broadcast.
 
-    One ``mapInPandas`` pass — block matmul against the broadcast
-    centroid and query matrices, cell assignment + candidate scoring +
-    per-partition partial top-k all inside the task, so the exchange
-    carries at most k rows per query per partition. ~6x faster than an
-    expression form (interpreted HOF dot products) and the shape that
-    survives 100 TB. Cosines are rounded to 6 decimals before every
-    discrete choice; cell ties go to the smaller centroid id (np.argmax
-    returns the first max over the c_id-ascending matrix); probe and rank
-    ties go through a stable argsort over the same ordering. The DuckDB
-    oracle (q54) replays it clause for clause.
+    The search is :func:`ivf_topk_indexed`'s per-cell search over raw
+    cells (:func:`_probe_search`), with each cell assigned inside the
+    same Arrow pass instead of read from disk: one ``mapInPandas`` pass
+    decodes each batch once, assigns its cells, scores each probed
+    cell's rows against the queries that probe it and keeps the partial
+    top-k, so the exchange carries at most k rows per query per
+    partition. The DuckDB oracle (q54) replays it clause for clause.
     """
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     _, c_mat, c_norm = _centroid_matrix(
         _md5_draw(corpus.select(F.col(id_col), F.col(vec_col)), n_centroids, id_col)
     )
-
-    # Enforced contract (not just assumed): queries are the SMALL side —
-    # they are collected and broadcast. limit(n+1) keeps the probe itself
-    # bounded; exceeding it is a caller error (route the big side as the
-    # corpus, or use brute_force_topk with the corpus broadcast instead).
-    max_q = max_broadcast_queries
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).limit(max_q + 1).collect()
-    if len(q_rows) > max_q:
-        raise ValueError(
-            f"ivf_topk: query side exceeds the broadcastable contract "
-            f"(> {max_q} rows); swap sides or pre-partition the queries"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    # query -> nprobe cells, inverted to cell -> query positions
-    q_cell_sims = _cos_matrix(q_mat, q_norm, c_mat, c_norm)
-    cell_to_qpos: dict = {}
-    for qi in range(len(q_ids)):
-        probes = np.argsort(-q_cell_sims[qi], kind="stable")[:nprobe]
-        for ci in probes:
-            cell_to_qpos.setdefault(int(ci), []).append(qi)
-
-    bc = spark.sparkContext.broadcast(
-        (c_mat, c_norm, q_mat, q_norm, q_ids, cell_to_qpos)
+    q_ids, q_mat, q_norm = _query_matrix(queries, id_col, vec_col, "ivf_topk: query side")
+    partial = _probe_search(
+        corpus.select(F.col(id_col), F.col(vec_col)).repartition(
+            spark.sparkContext.defaultParallelism
+        ),
+        RAW,
+        RAW.query_state(None, q_mat, q_norm),
+        q_ids,
+        _probe(q_mat, q_norm, c_mat, c_norm, nprobe),
+        k,
+        id_col,
+        vec_col,
+        centroids=(c_mat, c_norm),
     )
-    id_ddl = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {id_ddl}, neighbor_id {id_ddl}, cos_sim double"
-
-    def search(batches):
-        c_mat_, c_norm_, q_mat_, q_norm_, q_ids_, cell_to_qpos_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            v_norm = np.sqrt((vecs * vecs).sum(axis=1))
-            cells = np.argmax(_cos_matrix(vecs, v_norm, c_mat_, c_norm_), axis=1)
-            out_q, out_n, out_s = [], [], []
-            for ci, qpos in cell_to_qpos_.items():
-                rows = np.nonzero(cells == ci)[0]
-                if not len(rows):
-                    continue
-                sims = _cos_matrix(vecs[rows], v_norm[rows], q_mat_[qpos], q_norm_[qpos])
-                for j, qi in enumerate(qpos):
-                    mask = ids[rows] != q_ids_[qi]
-                    cand_ids = ids[rows][mask]
-                    cand_sims = sims[:, j][mask]
-                    if not len(cand_ids):
-                        continue
-                    # partial top-k: sims desc, neighbor id asc (lexsort
-                    # keys are applied last-key-primary)
-                    top = np.lexsort((cand_ids, -cand_sims))[:k]
-                    out_q.append(np.full(len(top), q_ids_[qi]))
-                    out_n.append(cand_ids[top])
-                    out_s.append(cand_sims[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cos_sim": np.concatenate(out_s),
-                    }
-                )
-
-    par = spark.sparkContext.defaultParallelism
-    partial = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .repartition(par)
-        .mapInPandas(search, out_schema)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            "cos_sim",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _two_stage_topk(partial, k, "cos_sim")
 
 
 def near_dup_pairs_cosine(
@@ -661,7 +650,6 @@ def ann_recall_report(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     methods: tuple = ("ivf", "lsh"),
     ivf_kwargs: dict | None = None,
     lsh_kwargs: dict | None = None,
@@ -712,8 +700,8 @@ def ann_recall_report(
     semdedup_kwargs = {"tau": 0.32, "n_centroids": 16, **(semdedup_kwargs or {})}
 
     exact_ids = (
-        brute_force_topk(corpus, queries, k, id_col, vec_col, query_id_col)
-        .select(query_id_col, "neighbor_id")
+        brute_force_topk(corpus, queries, k, id_col, vec_col)
+        .select("query_id", "neighbor_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     _RECALL_CACHES.append(exact_ids)
@@ -722,16 +710,15 @@ def ann_recall_report(
     rows = []
     for method in methods:
         if method == "ivf":
-            approx = ivf_topk(corpus, queries, k, id_col=id_col, vec_col=vec_col,
-                              query_id_col=query_id_col, **ivf_kwargs)
+            approx = ivf_topk(corpus, queries, k, id_col=id_col, vec_col=vec_col, **ivf_kwargs)
             param = f"centroids={ivf_kwargs['n_centroids']},nprobe={ivf_kwargs['nprobe']}"
         elif method == "lsh":
             approx = lsh_bucketed_topk(corpus, queries, k, id_col=id_col, vec_col=vec_col,
-                                       query_id_col=query_id_col, **lsh_kwargs)
+                                       **lsh_kwargs)
             param = f"planes={lsh_kwargs['num_planes']}"
         elif method == "lsh_mp":
             approx = lsh_bucketed_topk(corpus, queries, k, id_col=id_col, vec_col=vec_col,
-                                       query_id_col=query_id_col, nprobe_flips=1, **lsh_kwargs)
+                                       nprobe_flips=1, **lsh_kwargs)
             param = f"planes={lsh_kwargs['num_planes']},flips=1"
         elif method == "semdedup":
             tau = semdedup_kwargs["tau"]
@@ -764,8 +751,8 @@ def ann_recall_report(
         else:
             raise ValueError(f"unknown ANN method {method!r}")
         n_hit = (
-            approx.select(query_id_col, "neighbor_id")
-            .join(exact_ids, on=[query_id_col, "neighbor_id"])
+            approx.select("query_id", "neighbor_id")
+            .join(exact_ids, on=["query_id", "neighbor_id"])
             .agg(F.count("*").alias("n_hit"))
         )
         rows.append(
@@ -829,14 +816,9 @@ def semantic_dedup(
             if not len(pdf):
                 continue
             vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            v_norm = np.sqrt((vecs * vecs).sum(axis=1))
             out = pdf[[id_col, vec_col]].copy()
-            # argmax over the c_id-ascending matrix = cell ties to the
-            # SMALLER centroid id; emit the centroid's own id (the
-            # oracle's cell label)
-            out["cell"] = c_ids_[
-                np.argmax(_cos_matrix(vecs, v_norm, c_mat_, c_norm_), axis=1)
-            ]
+            # the label is the centroid's own id (the oracle's cell label)
+            out["cell"] = c_ids_[_nearest_cell(vecs, c_mat_, c_norm_)]
             yield out
 
     cells = corpus.select(id_col, vec_col).mapInPandas(
@@ -895,19 +877,6 @@ def semantic_dedup(
 IVF_INDEX_FORMAT = 1
 SQ_IVF_FORMAT = 1
 
-def _cos_matrix(a, a_norm, b, b_norm):
-    """Round-6 cosines between the rows of ``a`` and ``b`` (norms
-    precomputed), 0 where either norm is 0 (the ``cosine()`` rule) —
-    the value every IVF choice ranks on: cell assignment, probe order
-    and the per-cell candidate cut."""
-    import numpy as np
-
-    denom = a_norm[:, None] * b_norm[None, :]
-    out = np.zeros((a.shape[0], b.shape[0]))
-    np.divide(a @ b.T, denom, out=out, where=denom > 0)
-    return np.round(out, 6)
-
-
 def _md5_draw(narrow: DataFrame, n: int, id_col: str, salt: str = "") -> list:
     """The first ``n`` rows of ``narrow`` in ``md5(salt || id)`` order,
     ties to the smaller id — the deterministic, oracle-replayable sample
@@ -933,11 +902,11 @@ def _centroid_matrix(rows):
 def _assign_to_cells(
     narrow: DataFrame, c_mat, c_norm, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Cell assignment against a FIXED centroid matrix — the argmax of
-    round-6 cosines, ties to the smaller c_id (bit-identical to
-    ``ivf_topk``'s rule). Shared by the initial build and the append
-    path, which is what makes append-time assignments provably the
-    same function the oracle replays."""
+    """Cell assignment against a FIXED centroid matrix
+    (:func:`_nearest_cell`, the rule ``ivf_topk`` applies in-batch).
+    Shared by the initial build and the append path, which is what
+    makes append-time assignments provably the same function the oracle
+    replays."""
     import numpy as np
     import pandas as pd
 
@@ -951,9 +920,9 @@ def _assign_to_cells(
         for pdf in batches:
             if not len(pdf):
                 continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            v_norm = np.sqrt((vecs * vecs).sum(axis=1))
-            cells = np.argmax(_cos_matrix(vecs, v_norm, c_mat_, c_norm_), axis=1)
+            cells = _nearest_cell(
+                np.array(pdf[vec_col].tolist(), dtype=np.float64), c_mat_, c_norm_
+            )
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
@@ -1504,7 +1473,6 @@ def codebook_drift_advice(
     min_recall: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Close the monitoring→maintenance loop for the frozen-codebook
     index (VERDICT r9 #6): appends assign against centroids that never
@@ -1528,15 +1496,15 @@ def codebook_drift_advice(
     codec = _open_index(path)
     _require_raw(codec, "codebook_drift_advice")
     corpus = _read_ivf_cells(spark, path, codec).drop("_cell")
-    exact = brute_force_topk(
-        corpus, queries, k, id_col, vec_col, query_id_col
-    ).select(query_id_col, "neighbor_id")
-    approx = ivf_topk_indexed(
-        spark, path, queries, k, nprobe, id_col, vec_col, query_id_col
-    ).select(query_id_col, "neighbor_id")
+    exact = brute_force_topk(corpus, queries, k, id_col, vec_col).select(
+        "query_id", "neighbor_id"
+    )
+    approx = ivf_topk_indexed(spark, path, queries, k, nprobe, id_col, vec_col).select(
+        "query_id", "neighbor_id"
+    )
     n_true = exact.groupBy().agg(F.count("*").alias("n_true"))
     n_hit = (
-        exact.join(approx, [query_id_col, "neighbor_id"], "left_semi")
+        exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
         .groupBy()
         .agg(F.count("*").alias("n_hit"))
     )
@@ -1574,8 +1542,6 @@ def ivf_topk_indexed(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_broadcast_queries: int = 100_000,
     id_filter: DataFrame | None = None,
     corpus: DataFrame | None = None,
     rerank: int = 20,
@@ -1616,9 +1582,6 @@ def ivf_topk_indexed(
     relation by projecting the id from any attribute predicate (e.g.
     ``emb.filter("label % 4 = 0").select("vec_id")``); no forced
     broadcast — AQE picks the strategy by filter size."""
-    import numpy as np
-    import pandas as pd
-
     codec = _open_index(path)
     if codec.rerank and corpus is None:
         raise ValueError(
@@ -1627,26 +1590,10 @@ def ivf_topk_indexed(
         )
     c_mat, c_norm = _load_centroids(spark, path)
     state = codec.load(spark, path)
-
-    q_rows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(max_broadcast_queries + 1)
-        .collect()
+    q_ids, q_mat, q_norm = _query_matrix(
+        queries, id_col, vec_col, "ivf_topk_indexed: query side"
     )
-    if len(q_rows) > max_broadcast_queries:
-        raise ValueError(
-            f"ivf_topk_indexed: query side exceeds the broadcastable contract "
-            f"(> {max_broadcast_queries} rows); swap sides or pre-partition"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    q_cell_sims = _cos_matrix(q_mat, q_norm, c_mat, c_norm)
-    cell_to_qpos: dict = {}
-    for qi in range(len(q_ids)):
-        for ci in np.argsort(-q_cell_sims[qi], kind="stable")[:nprobe]:
-            cell_to_qpos.setdefault(int(ci), []).append(qi)
+    cell_to_qpos = _probe(q_mat, q_norm, c_mat, c_norm, nprobe)
     probed = sorted(cell_to_qpos)
 
     # base + complete delta segments; the IN filter pushes through the
@@ -1667,63 +1614,26 @@ def ivf_topk_indexed(
     )
     # a raw probe's per-query top-k is final; a coded probe's cut is the
     # rerank shortlist, scored approximately
-    cut = int(rerank) if codec.rerank else int(k)
-    score_col = "approx_sim" if codec.rerank else "cos_sim"
-    bc = spark.sparkContext.broadcast(
-        (codec.query_state(state, q_mat, q_norm), q_ids, cell_to_qpos)
+    scored = _probe_search(
+        cells_df,
+        codec,
+        codec.query_state(state, q_mat, q_norm),
+        q_ids,
+        cell_to_qpos,
+        int(rerank) if codec.rerank else int(k),
+        id_col,
+        vec_col,
     )
-    id_ddl = cells_df.schema[id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {id_ddl}, neighbor_id {id_ddl}, {score_col} double"
-
-    def search(batches):
-        qstate_, q_ids_, cell_to_qpos_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            score = codec.batch_scorer(pdf, vec_col, qstate_)
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["_cell"].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for ci, qpos in cell_to_qpos_.items():
-                rows = np.nonzero(cells == ci)[0]
-                if not len(rows):
-                    continue
-                sims = score(rows, qpos)
-                for j, qi in enumerate(qpos):
-                    mask = ids[rows] != q_ids_[qi]
-                    cand_ids = ids[rows][mask]
-                    cand_sims = sims[:, j][mask]
-                    if not len(cand_ids):
-                        continue
-                    top = np.lexsort((cand_ids, -cand_sims))[:cut]
-                    out_q.append(np.full(len(top), q_ids_[qi]))
-                    out_n.append(cand_ids[top])
-                    out_s.append(cand_sims[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        score_col: np.concatenate(out_s),
-                    }
-                )
-
-    scored = cells_df.mapInPandas(search, out_schema)
     if codec.rerank:
         from plumberapp_spark.session import local_relation
 
-        w_short = Window.partitionBy(query_id_col).orderBy(
-            F.col("approx_sim").desc(), F.col("neighbor_id")
-        )
-        shortlist = (
-            scored.withColumn("_rn", F.row_number().over(w_short))
-            .filter(F.col("_rn") <= rerank)
-            .select(query_id_col, "neighbor_id")
+        shortlist = _two_stage_topk(scored, rerank, "approx_sim").select(
+            "query_id", "neighbor_id"
         )
         qvec_df = local_relation(
             spark,
-            [(r[0], list(r[1])) for r in q_rows],
-            f"{query_id_col} {id_ddl}, _qvec array<double>",
+            list(zip(q_ids.tolist(), q_mat.tolist())),
+            f"query_id {cells_df.schema[id_col].dataType.simpleString()}, _qvec array<double>",
         )
         full = corpus.select(
             F.col(id_col).alias("neighbor_id"),
@@ -1731,22 +1641,10 @@ def ivf_topk_indexed(
         )
         scored = (
             shortlist.join(full, "neighbor_id")
-            .join(F.broadcast(qvec_df), query_id_col)
+            .join(F.broadcast(qvec_df), "query_id")
             .withColumn("cos_sim", F.round(cosine(F.col("_qvec"), F.col("_nvec")), 6))
         )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            "cos_sim",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _two_stage_topk(scored, k, "cos_sim")
 
 
 def sq_compression_stats(

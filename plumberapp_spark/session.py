@@ -574,16 +574,21 @@ def write_partitioned(df, out: str, col: str) -> None:
     df.coalesce(1).write.mode("overwrite").parquet(out)
 
 
+# the bounded-collect contract's row bound: the most rows a small-side
+# relation may bring to the driver
+MAX_COLLECT_ROWS = 100_000
+
+
 def collect_bounded(df, what: str) -> list:
     """Collect a small-side relation (query terms, phrase pairs, query
-    vectors) under the bounded-collect contract: at most 100k rows
-    reach the driver, and a larger relation raises with guidance
-    instead of collecting it."""
-    rows = df.limit(100_001).collect()
-    if len(rows) > 100_000:
+    vectors) under the bounded-collect contract: at most
+    ``MAX_COLLECT_ROWS`` reach the driver, and a larger relation raises
+    with guidance instead of collecting it."""
+    rows = df.limit(MAX_COLLECT_ROWS + 1).collect()
+    if len(rows) > MAX_COLLECT_ROWS:
         raise ValueError(
-            f"{what} exceeds the broadcastable contract (> 100000 rows); "
-            "batch the queries"
+            f"{what} exceeds the broadcastable contract "
+            f"(> {MAX_COLLECT_ROWS} rows); batch the queries"
         )
     return rows
 

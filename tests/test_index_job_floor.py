@@ -6,11 +6,13 @@ append tokenizes its delta once and runs at most 10 jobs, an IVF append
 is one write job, an LM append reads its delta twice in at most 5 jobs,
 the action of a tombstoned segmented BM25 serve runs
 at most 6 jobs, a newly written relation is read with no
-schema-inference job, and the shared top-k tail crosses one exchange."""
+schema-inference job, and the shared top-k tail (the direct lexical
+searches' included) crosses one exchange."""
 
 from __future__ import annotations
 
 import itertools
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,24 +136,39 @@ def test_new_relation_read_runs_no_job(spark, tmp_path):
     assert df.filter("_b = 1").count() == 10
 
 
+def _assert_one_exchange_tail(top):
+    """One ranking window, and the first exchange under it partitions
+    on query_id alone above a Partial WindowGroupLimit. Returns the
+    executed plan's lines."""
+    lines = top._jdf.queryExecution().executedPlan().toString().splitlines()
+    windows = [i for i, ln in enumerate(lines) if ln.lstrip(" :+-*").startswith("Window ")]
+    assert len(windows) == 1
+    below = next(ln for ln in lines[windows[0]:] if "Exchange" in ln)
+    assert re.search(r"hashpartitioning\(query_id#\d+L?, \d+\)", below)
+    after = lines[lines.index(below) + 1]
+    assert "WindowGroupLimit" in after and "Partial" in after
+    return lines
+
+
 def test_topk_tail_is_one_exchange(spark):
     """One row_number window: a Partial WindowGroupLimit caps each map
     partition at k rows per query, under the single exchange on
-    query_id."""
+    query_id. The direct lexical searches (q80 tf-idf, q83 BM25) end in
+    the same tail: no per-(query, partition) window and its extra
+    exchange ahead of it."""
     from plumberapp_spark.llm.scoring import _two_stage_topk
+    from plumberapp_spark.queries_llm import q80_tfidf_search, q83_bm25_search
 
+    for query in (q80_tfidf_search, q83_bm25_search):
+        _assert_one_exchange_tail(query(spark, SF_DIR))
     scored = spark.range(0, 2000, 1, 4).select(
         (F.col("id") % 5).alias("query_id"),
         F.col("id").alias("neighbor_id"),
         ((F.col("id") * 7919) % 1000).cast("double").alias("score"),
     )
     top = _two_stage_topk(scored, 10, "score")
-    plan = top._jdf.queryExecution().executedPlan().toString()
-    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    assert len(exchanges) == 1
-    assert "hashpartitioning(query_id" in exchanges[0]
-    below = plan.splitlines()[plan.splitlines().index(exchanges[0]) + 1]
-    assert "WindowGroupLimit" in below and "Partial" in below
+    lines = _assert_one_exchange_tail(top)
+    assert len([ln for ln in lines if "Exchange" in ln]) == 1
     rows = top.collect()
     assert len(rows) == 50
     expect = {

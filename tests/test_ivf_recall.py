@@ -101,28 +101,55 @@ def test_brute_force_vectorized_matches_expression_form(spark, duck):
     assert len(fast) > 0
 
 
-def test_brute_force_query_broadcast_contract_enforced(spark):
+def test_brute_force_query_broadcast_contract_enforced(spark, monkeypatch):
     import pytest
+
+    from plumberapp_spark import session
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") % 50 == 0)  # 10 rows
+    monkeypatch.setattr(session, "MAX_COLLECT_ROWS", 5)
     with pytest.raises(ValueError, match="broadcastable contract"):
-        brute_force_topk(emb, q, k=3, max_broadcast_queries=5).collect()
+        brute_force_topk(emb, q, k=3).collect()
 
 
-def test_ivf_query_broadcast_contract_enforced(spark):
+def test_ivf_query_broadcast_contract_enforced(spark, monkeypatch):
     # The vectorized path collects the query side — a documented
-    # small-side contract that is now ENFORCED: exceeding
-    # max_broadcast_queries raises instead of silently materializing an
-    # unbounded query set on the driver.
+    # small-side contract that is now ENFORCED: a query set above the
+    # bounded-collect bound (session.MAX_COLLECT_ROWS) raises instead of
+    # silently materializing an unbounded query set on the driver.
     import pytest
+
+    from plumberapp_spark import session
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0)  # 10 rows
+    monkeypatch.setattr(session, "MAX_COLLECT_ROWS", 5)
     with pytest.raises(ValueError, match="broadcastable contract"):
-        ivf_topk(emb, queries, k=3, max_broadcast_queries=5).collect()
+        ivf_topk(emb, queries, k=3).collect()
     # at-the-limit query sets still work
-    assert len(ivf_topk(emb, queries, k=3, max_broadcast_queries=10).collect()) > 0
+    monkeypatch.setattr(session, "MAX_COLLECT_ROWS", 10)
+    assert len(ivf_topk(emb, queries, k=3).collect()) > 0
+
+
+def test_string_ids_exclude_self_in_every_dense_search(spark):
+    """One self-exclusion rule for every dense search: with string ids
+    on both sides, no query lists its own id among its neighbors."""
+    from plumberapp_spark.llm.similarity import lsh_bucketed_topk
+
+    emb = (
+        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        .filter(F.col("vec_id") < 200)
+        .withColumn("vec_id", F.concat(F.lit("v"), F.col("vec_id").cast("string")))
+    )
+    q = emb.filter(F.col("vec_id").isin("v0", "v1", "v2", "v3", "v4"))
+    for out in (
+        brute_force_topk(emb, q, k=3),
+        ivf_topk(emb, q, k=3, n_centroids=4),
+        lsh_bucketed_topk(emb, q, k=3, dim=64, num_planes=2),
+    ):
+        rows = out.collect()
+        assert rows and all(r["query_id"] != r["neighbor_id"] for r in rows)
 
 
 def test_ann_router_ivf_above_threshold(spark):

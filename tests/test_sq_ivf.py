@@ -187,13 +187,14 @@ def test_sq_rebuild_on_source_change(spark, tmp_path):
     assert m3 >= m1  # stale source: rebuilt
 
 
-def test_sq_query_contract_cap(spark):
+def test_sq_query_contract_cap(spark, monkeypatch):
+    from plumberapp_spark import session
+
     emb = load_table(spark, SF_DIR, "embeddings")
     path = ensure_ivf_index(spark, SF_DIR, "embeddings", n_centroids=4, codec=SQ)
+    monkeypatch.setattr(session, "MAX_COLLECT_ROWS", 10)
     with pytest.raises(ValueError, match="broadcastable"):
-        ivf_topk_indexed(
-            spark, path, emb, k=3, corpus=emb, max_broadcast_queries=10
-        )
+        ivf_topk_indexed(spark, path, emb, k=3, corpus=emb)
 
 
 def test_sq_lifecycle_delete_and_compact_parity(spark):
